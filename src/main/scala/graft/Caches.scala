@@ -25,10 +25,10 @@ import org.apache.spark.storage.StorageLevel
   * Scale note: a ledger entry is a plan reference (driver-side, KB), not
   * data; entries for frames the caller already unpersisted are harmless
   * (`unpersist` on a non-persisted frame is a no-op) and are dropped with
-  * the rest on release. [[drain]] is the end-of-run form Bench/Verify use:
-  * ledger + the Tables/Meta memo caches, then a count of whatever is STILL
-  * persisted in the SparkContext (0 = the run left no graft residue;
-  * asserted in CachesSpec and printed by Bench).
+  * the rest on release. [[drain]] is the end-of-run form Verify and the
+  * benchmark use: ledger + the Tables/Meta memo caches, then a count of
+  * whatever is STILL persisted in the SparkContext (0 = the run left no
+  * graft residue; asserted in CachesSpec and printed by Verify).
   */
 object Caches {
 

@@ -37,10 +37,9 @@ object Session {
     * metastore db some catalog paths boot) resolves RELATIVE database
     * paths and drops `derby.log` under `derby.system.home`; pointing it at
     * `target/` moves both `metastore_db/` and `derby.log` there.
-    * `spark.sql.warehouse.dir` (set in [[builder]] and the driver mains)
-    * moves `spark-warehouse/`. Must run before Derby first boots in the
-    * JVM — builder() and tune() both call it, so every graft entry point
-    * is covered.
+    * `spark.sql.warehouse.dir` (set in [[get]]) moves `spark-warehouse/`.
+    * Must run before Derby first boots in the JVM — get() and tune() both
+    * call it, so every graft entry point is covered.
     */
   def quietResidue(): Unit = {
     val t = new java.io.File("target")
@@ -49,19 +48,62 @@ object Session {
       System.setProperty("derby.system.home", t.getAbsolutePath)
   }
 
-  def builder(cores: Int = 32): SparkSession.Builder = {
+  /** The one session factory: a minimal `local[cores]` builder (the
+    * settings that only take effect at construction), then [[tune]] for
+    * graft's runtime confs, optimizer rules and `graft_*` SQL functions.
+    */
+  def get(cores: Int = 32): SparkSession = {
     quietResidue()
-    SparkSession.builder()
+    val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    tune(s)
+  }
+
+  /** Run `body` with runtime confs temporarily overridden, restoring the
+    * prior values (or unsetting) afterwards. The override only affects
+    * jobs EXECUTED inside `body` — Spark reads runtime confs at execution,
+    * not at DataFrame construction — so wrap the ACTION (count/write/
+    * collect), not the operator call. Built for the
+    * objectHashAggregate.fallbackThreshold hazard documented on
+    * [[tune]]: e.g.
+    * `Session.withConf(spark, "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128") { df.write.parquet(p) }`
+    * restores sort-fallback safety around an unbounded-buffer collect on
+    * a high-cardinality grouping.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) =>
+      k -> (try Option(spark.conf.get(k)) catch { case _: Exception => None })
+    }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => try spark.conf.unset(k) catch { case _: Exception => () }
+    }
+  }
+
+  /** Apply graft's runtime-settable defaults to a session: [[get]]'s own,
+    * or one built outside graft (the library's adaptation point — see
+    * `Tables.events`). Static confs are skipped by Spark automatically when
+    * already fixed. Also registers graft's optimizer rules and the `graft_*`
+    * SQL functions (idempotent — re-registration overwrites in place), so
+    * a tuned session plans the same shapes and has the same SQL surface as
+    * [[get]]. (`spark.sql.extensions=graft.plans.GraftExtensions` installs
+    * the rules and functions, not the confs.)
+    */
+  def tune(spark: SparkSession): SparkSession = {
+    quietResidue()
+    val runtime = Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // ObjectHashAggregate falls back to SORT-BASED aggregation once a
       // task's hash map passes this many keys (default 128) — for graft's
       // typed aggregates that means sorting the ENTIRE input stream
@@ -85,67 +127,6 @@ object Session {
       // bounded-buffer sketches with their own unbounded collects on
       // hot keys should bracket the latter with [[withConf]] restoring
       // the 128 default (see ExactMedian's scaladoc).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2048")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-  }
-
-  /** Library entry point: the session comes with the whole engine wired —
-    * graft's optimizer rule (user-written window-argmax rewrites to the
-    * partial-aggregating max_by form) and the `graft_*` SQL functions.
-    * Sessions built elsewhere opt in via `spark.sql.extensions=
-    * graft.plans.GraftExtensions` or `GraftExtensions.registerFunctions`.
-    */
-  def get(cores: Int = 32): SparkSession = {
-    val s = builder(cores).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Seq(graft.plans.ArgmaxRewrite, graft.plans.CseFilterProject).foreach { r =>
-      if (!s.experimental.extraOptimizations.contains(r))
-        s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ r
-    }
-    graft.plans.GraftExtensions.registerFunctions(s)
-    s
-  }
-
-  /** Run `body` with runtime confs temporarily overridden, restoring the
-    * prior values (or unsetting) afterwards. The override only affects
-    * jobs EXECUTED inside `body` — Spark reads runtime confs at execution,
-    * not at DataFrame construction — so wrap the ACTION (count/write/
-    * collect), not the operator call. Built for the
-    * objectHashAggregate.fallbackThreshold hazard documented on
-    * [[builder]]: e.g.
-    * `Session.withConf(spark, "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128") { df.write.parquet(p) }`
-    * restores sort-fallback safety around an unbounded-buffer collect on
-    * a high-cardinality grouping.
-    */
-  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
-    val prior = kvs.map { case (k, _) =>
-      k -> (try Option(spark.conf.get(k)) catch { case _: Exception => None })
-    }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => try spark.conf.unset(k) catch { case _: Exception => () }
-    }
-  }
-
-  /** Apply graft's runtime-settable defaults to an externally-built session
-    * (the Verify/Bench drivers build their own). Static confs are skipped by
-    * Spark automatically when already fixed. Also registers the `graft_*`
-    * SQL functions (idempotent — re-registration overwrites in place), so
-    * a tuned session has the same SQL surface as [[get]]: the SQL-text
-    * rows (s5l, x12c, q_*_sql) must resolve them under any driver.
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    quietResidue()
-    val runtime = Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      // bounded-buffer typed aggregates must hash-aggregate, not sort
-      // (see builder note: 128-key fallback sorted the corpus at 1000×)
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2048",
       "spark.sql.session.timeZone" -> "UTC")
     runtime.foreach { case (k, v) =>
@@ -164,10 +145,8 @@ object Session {
       try spark.conf.set("spark.sql.optimizer.excludedRules",
         (merged :+ inferRule).mkString(","))
       catch { case _: org.apache.spark.sql.AnalysisException => () }
-    // the graft optimizer rules travel with tuning too: a driver-built
-    // session (Verify/Bench) must plan the same shapes as Session.get —
-    // r14 found the verify-kernel CSE absent from benched plans because
-    // only get() registered the experimental rules
+    // the graft optimizer rules travel with tuning too: a session built
+    // outside graft must plan the same shapes as Session.get
     Seq(graft.plans.ArgmaxRewrite, graft.plans.CseFilterProject).foreach { r =>
       if (!spark.experimental.extraOptimizations.contains(r))
         spark.experimental.extraOptimizations =

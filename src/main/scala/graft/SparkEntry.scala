@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StringType,
   *
   * Oracle-parity conventions (every query follows them):
   *   - deterministic trailing ORDER BY on both sides (Catalyst's
-  *     EliminateSorts removes it under Bench's count());
+  *     EliminateSorts removes it under a caller's count());
   *   - float aggregates rounded identically on both sides (avg/std/median/
   *     corr → 4dp, cosine/jaccard → 6dp, double sums → 2dp); money sums
   *     computed in DECIMAL(38,2) (exact, associative, order-independent);
@@ -307,7 +307,6 @@ object SparkEntry {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
 
   private def e8Sink(s: SparkSession, d: String, which: String): Option[DataFrame] = {
-    Session.tune(s)
     import s.implicits._
     val widthUs = 3600000000L
     val wmUs = 60000000L
@@ -1267,7 +1266,7 @@ object SparkEntry {
     // advice weighed and rejected with a measurement): unpersisting it
     // here poisons the sibling consumers — measured r13: d6c 0.53→2.30 s,
     // s5j 0.50→1.97 s with the unpersist in place — exactly the
-    // dead-entry recompute the Bench cache policy documents. It is
+    // dead-entry recompute the Caches loan convention documents. It is
     // LEDGERED (Caches.loan), so Caches.drain at end of run calls the
     // loan in — intra-run sharing without session-lifetime residue.
     "d6c_components_incremental" -> ((s, d) => {
@@ -2712,7 +2711,6 @@ object SparkEntry {
     // calls read the routed sinks (parquet appends are not idempotent
     // across replays)
     "e9_stream_route" -> ((s, d) => {
-      Session.tune(s)
       val docs = Tables.documents(s, d)
       val srcFile = new java.io.File(s"$d/documents.parquet")
       val key = stageKey(srcFile, "nchars300")
@@ -2729,7 +2727,7 @@ object SparkEntry {
         // SAME checkpoint+sink trio and duplicate rows (parquet appends
         // are at-least-once across replays) — absent marker means the trio
         // is unfinished, so always restart it from empty
-        graft.sources.ParquetSink.rmRf(new java.io.File(routeBase))
+        graft.sources.ParquetSink.deleteRecursively(new java.io.File(routeBase))
         val schema = s.read.parquet(stageDir).schema
         val src = s.readStream.schema(schema).parquet(stageDir)
         StreamOps.routeToSinks(src, col("n_chars") >= 300,
@@ -3288,7 +3286,6 @@ object SparkEntry {
     // comparable to a batch oracle). window.start maps back to the batch
     // form's epoch-hour bucket.
     "e1b_stream_window" -> ((s, d) => {
-      Session.tune(s)
       val schema = s.read.parquet(s"$d/events.parquet").schema
       val src = s.readStream.schema(schema)
         .parquet(s"$d/events.*")
@@ -3306,7 +3303,6 @@ object SparkEntry {
     // join against a user-cohort dim (stateless — no watermark needed),
     // aggregated per cohort and compared to the batch oracle.
     "e5_stream_enrich" -> ((s, d) => {
-      Session.tune(s)
       val schema = s.read.parquet(s"$d/events.parquet").schema
       val src = s.readStream.schema(schema)
         .parquet(s"$d/events.*")
@@ -3333,7 +3329,6 @@ object SparkEntry {
     // streaming engine does not assign). Single AvailableNow batch over
     // the staged files, so in-batch per-user sort fixes event order.
     "e2b_stream_sessionize" -> ((s, d) => {
-      Session.tune(s)
       import s.implicits._
       val gapUs = 1800000000L
       val ev = Tables.events(s, d).select("user_id", "ts_us", "event_id")
@@ -3372,7 +3367,6 @@ object SparkEntry {
     // (as e1b), window.start mapped back to the batch form's epoch-us
     // win_start — must reproduce e4's batch relation exactly
     "e4b_stream_hopping" -> ((s, d) => {
-      Session.tune(s)
       val schema = s.read.parquet(s"$d/events.parquet").schema
       val src = s.readStream.schema(schema)
         .parquet(s"$d/events.*")
@@ -3406,7 +3400,6 @@ object SparkEntry {
     // matches no click → its row carries a null click side → the
     // isNotNull filter drops it, exactly as the inner join never emits it.
     "e6_stream_stream_asof" -> ((s, d) => {
-      Session.tune(s)
       import s.implicits._
       e6SharedAsof(s, d) match {
         case None =>
@@ -3426,7 +3419,6 @@ object SparkEntry {
     // staged source, same oracle SQL as e6: the mitigation is gated to be
     // relation-identical, not just plausible.
     "e6c_stream_asof_sliced" -> ((s, d) => {
-      Session.tune(s)
       import s.implicits._
       e6cSlicedAsof(s, d) match {
         case None =>
@@ -3442,7 +3434,6 @@ object SparkEntry {
     // e6b's oracle verbatim (both sliced join types are hash-gated, not
     // just the inner one)
     "e6d_stream_asof_sliced_left" -> ((s, d) => {
-      Session.tune(s)
       import s.implicits._
       e6cSlicedAsof(s, d) match {
         case None =>
@@ -3472,7 +3463,6 @@ object SparkEntry {
     // sliced join is width-invariant by construction; this row gates it
     // at a measured, non-default width)
     "e6f_stream_asof_derived" -> ((s, d) => {
-      Session.tune(s)
       import s.implicits._
       e6fDerivedAsof(s, d) match {
         case None =>
@@ -3490,7 +3480,6 @@ object SparkEntry {
     // (user -1, which matches nothing) is filtered by event_id >= 0 —
     // in left mode it WOULD emit.
     "e6b_stream_asof_left" -> ((s, d) => {
-      Session.tune(s)
       import s.implicits._
       e6SharedAsof(s, d) match {
         case None =>
@@ -3509,7 +3498,6 @@ object SparkEntry {
     // updateFingerprintIndex), so this is the streaming face of the whole
     // materialized-index story. Same oracle as d8/d8c.
     "e7_stream_ingest_dedup" -> ((s, d) => {
-      Session.tune(s)
       val docs = Tables.documents(s, d)
       val srcFile = new java.io.File(s"$d/documents.parquet")
       val idxDir = s"${scratchDir(d)}/d8c_fp_index_${stageKey(srcFile, "mod10")}"
@@ -3537,7 +3525,6 @@ object SparkEntry {
     // satisfy the t27 full-corpus guarantee: the sketch union's bound is
     // associative over ANY batch split, which is exactly what this gates
     "e10_stream_heavy_hitters" -> ((s, d) => {
-      Session.tune(s)
       val docs = Tables.documents(s, d)
       val srcFile = new java.io.File(s"$d/documents.parquet")
       val stageDir = s"${scratchDir(d)}/e10_docs_${stageKey(srcFile, "seg4")}"
@@ -3573,7 +3560,6 @@ object SparkEntry {
     // already advanced) replay only the pure-read segment-2 pass. Oracle =
     // the batch two-day screen: s1 = seg1 \ base, s2 = seg2 \ (base ∪ s1).
     "e7b_stream_day_boundary" -> ((s, d) => {
-      Session.tune(s)
       val docs = Tables.documents(s, d)
       val srcFile = new java.io.File(s"$d/documents.parquet")
       val key = stageKey(srcFile, "mod9e7b")

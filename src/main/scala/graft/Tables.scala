@@ -50,15 +50,9 @@ object Tables {
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       val target = spark.sparkContext.defaultParallelism
       if (raw.rdd.getNumPartitions >= target) raw
-      else sys.env.getOrElse("SPARK_GRAFT_TABLE_STORAGE", "MEMORY_AND_DISK") match {
-        // probe knob (the r17 #6 storage A/B): NONE = plain parquet rescan
-        // (still repartitioned for exchange-width parity), or any
-        // StorageLevel name. Default unchanged — MEMORY_AND_DISK, the
-        // measured winner at 1000× (BENCH_SCALE r18).
-        case "NONE" => raw.repartition(target)
-        case lvl => raw.repartition(target)
-          .persist(org.apache.spark.storage.StorageLevel.fromString(lvl))
-      }
+      // MEMORY_AND_DISK: the measured winner at 1000× (BENCH_SCALE r18)
+      else raw.repartition(target)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     })
   }
 

@@ -2828,7 +2828,7 @@ object Dedup {
       ParquetSink.compactShardedWith(spark, s"$path/df", "sk", shards)(
         d => d.groupBy("sk").agg(sum("df").as("df")))
     ParquetSink.compactSharded(spark, s"$path/sets", idCol, shards)
-    ParquetSink.rmRf(tombDir)
+    ParquetSink.deleteRecursively(tombDir)
   }
 
   /** Delta-shard folds for the plain index families — no semantic rewrite

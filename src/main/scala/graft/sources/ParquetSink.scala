@@ -218,11 +218,11 @@ object ParquetSink {
     writeSharded(transform(spark.read.parquet(path)), tmp, idCol, shards)
     val live = new java.io.File(path)
     val oldF = new java.io.File(path + ".old")
-    rmRf(oldF)
+    deleteRecursively(oldF)
     require(live.renameTo(oldF), s"compactSharded: could not move $path aside")
     require(new java.io.File(tmp).renameTo(live),
       s"compactSharded: could not swap in $tmp")
-    rmRf(oldF)
+    deleteRecursively(oldF)
   }
 
   /** The two-rename swap has a crash window where the live directory does
@@ -237,10 +237,5 @@ object ParquetSink {
     val oldF = new java.io.File(path + ".old")
     if (!live.exists() && oldF.exists())
       require(oldF.renameTo(live), s"compact: could not restore $path from .old")
-  }
-
-  private[graft] def rmRf(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmRf))
-    f.delete()
   }
 }

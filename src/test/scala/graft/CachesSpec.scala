@@ -4,7 +4,7 @@ import graft.operators.{Dedup, TermStats}
 
 /** The cache-loan ledger: every persist graft leaves alive past its
   * creating call must be registered, and [[Caches.drain]] must call them
-  * ALL in — a full run (Bench/Verify end with drain) leaves zero
+  * ALL in — a full run (Verify and perfbench end with drain) leaves zero
   * graft-owned persisted RDDs. Other suites in this JVM persist frames of
   * their own, so residue is measured against a pre-snapshot, not globally.
   */

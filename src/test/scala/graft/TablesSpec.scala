@@ -16,7 +16,7 @@ class TablesSpec extends SparkTestBase {
     */
   private def stageCorrupted(bad: String): String = {
     val dir = Paths.get(s"target/tmp/tables_spec_corrupt_$bad")
-    graft.sources.ParquetSink.rmRf(dir.toFile)
+    graft.sources.ParquetSink.deleteRecursively(dir.toFile)
     Files.createDirectories(dir)
     Tables.AllNames.foreach { n =>
       val dst = dir.resolve(s"$n.parquet")
