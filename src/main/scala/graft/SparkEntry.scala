@@ -27,10 +27,12 @@ object SparkEntry {
     * files (CSV/JSONL round-trips, streaming staging): two concurrent runs
     * at different scale factors must not race on one shared path. Scratch
     * cannot live under `d` itself — the testdata tree is read-only — so the
-    * data dir is folded into a path under the repo's target dir.
+    * data dir is folded into a path under `target/tmp` of the working
+    * directory (as [[Session.get]] places the warehouse dir), and two
+    * checkouts never share staged artifacts.
     */
   private def scratchDir(d: String): String =
-    "/root/repo/target/tmp/" + d.replaceAll("[^A-Za-z0-9._-]", "_")
+    new java.io.File("target/tmp", d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
 
   /** Directory key for a staged/materialized artifact: the source file's
     * identity (mtime, size) PLUS a literal fingerprint of every build
@@ -228,19 +230,19 @@ object SparkEntry {
         val schema = s.read.parquet(stageDir).schema
         def slice(t: String) =
           s.readStream.schema(schema).parquet(stageDir).filter(col("event_type") === t)
-        // sliced = false PINS the plain two-operator reference plan: the
-        // e6/e6b rows exist to gate that regime (the library's plain name
-        // defaults to the sliced form, which e6c gates)
-        val joined = StreamOps.asofJoinStreaming(
+        // the plain two-operator reference plan: the e6/e6b rows exist to
+        // gate that regime (the public entry is the sliced plan, which e6c
+        // gates)
+        val joined = StreamOps.asofJoinStreamingPlain(
           slice("purchase"), slice("click"), E6HorizonUs, "1 minute",
-          joinType = "left_outer", sliced = false)
+          joinType = "left_outer")
         StreamOps.runToMemoryTable(s, joined, "e6_shared_asof_sink",
           stateWidth = stateWidthFor(stageDir))
       })
     }
 
   /** The e6c/e6d shared replay: [[graft.streaming.StreamOps
-    * .asofJoinStreamingSliced]] over the SAME staged source as e6, in the
+    * .asofJoinStreaming]] over the SAME staged source as e6, in the
     * left-outer form (the e6SharedAsof trick: the inner relation = the
     * left-outer rows with a non-null click side, so ONE checkpointed pass
     * serves both gates). The key-dense mitigation's oracle gates share
@@ -254,7 +256,7 @@ object SparkEntry {
         val schema = s.read.parquet(stageDir).schema
         def slice(t: String) =
           s.readStream.schema(schema).parquet(stageDir).filter(col("event_type") === t)
-        val joined = StreamOps.asofJoinStreamingSliced(
+        val joined = StreamOps.asofJoinStreaming(
           slice("purchase"), slice("click"), E6HorizonUs, "1 minute",
           joinType = "left_outer")
         StreamOps.runToMemoryTable(s, joined, "e6c_sliced_asof_sink",
@@ -284,7 +286,7 @@ object SparkEntry {
         val schema = s.read.parquet(stageDir).schema
         def slice(t: String) =
           s.readStream.schema(schema).parquet(stageDir).filter(col("event_type") === t)
-        val joined = StreamOps.asofJoinStreamingSliced(
+        val joined = StreamOps.asofJoinStreaming(
           slice("purchase"), slice("click"), E6HorizonUs, "1 minute",
           joinType = "left_outer", sliceUs = derived)
         StreamOps.runToMemoryTable(s, joined, "e6f_derived_asof_sink",
@@ -1155,9 +1157,10 @@ object SparkEntry {
     "d1_dedup_exact" -> ((s, d) =>
       Dedup.exact(Tables.documents(s, d), "doc_id", "text").orderBy("fingerprint")),
 
-    // D2: MinHash+LSH near-dup candidates, exact-Jaccard verified
+    // D2: MinHash+LSH near-dup candidates, exact-Jaccard verified — the
+    // plain plan, called directly (d2g gates the public entry's choice)
     "d2_minhash_lsh" -> ((s, d) =>
-      Dedup.minhashNearDups(Tables.documents(s, d), "doc_id", "text", 0.5)
+      Dedup.minhashNearDupsPlain(Tables.documents(s, d), "doc_id", "text", 0.5)
         .orderBy("id_1", "id_2")),
 
     // D2f: collapse-before-LSH — the minhash entry for corpora carrying a
@@ -1174,17 +1177,17 @@ object SparkEntry {
         .orderBy("id_1", "id_2")
     }),
 
-    // D2g: the AUTO entry — the measured dup share (one 16-byte-fp
-    // aggregate) picks collapse-first vs plain; this fixture's share is
-    // 1/11 ≈ 9.1%, the 5% gate fires the collapsed branch, and the result
-    // bit-matches the exact oracle either way (the branches are
-    // result-identical by construction, DedupSpec-pinned)
+    // D2g: the public gated entry — the measured dup share (one
+    // 16-byte-fp aggregate) picks collapse-first vs plain; this fixture's
+    // share is 1/11 ≈ 9.1%, under the 0.2 gate, so the plain branch fires
+    // (d2f gates the collapsed body), and the result bit-matches the exact
+    // oracle either way (the branches are result-identical by
+    // construction, DedupSpec-pinned)
     "d2g_minhash_auto" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val dups = docs.filter(col("doc_id") % 10 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L)
-      Dedup.minhashNearDupsAuto(docs.unionByName(dups), "doc_id", "text", 0.5,
-        dupFracGate = 0.05)
+      Dedup.minhashNearDups(docs.unionByName(dups), "doc_id", "text", 0.5)
         .orderBy("id_1", "id_2")
     }),
 
@@ -1205,13 +1208,13 @@ object SparkEntry {
         .orderBy("id_1", "id_2")),
 
     // D4b: inverted-index sparse variant with a FIXED document-frequency
-    // cap — the pinned reference regime, reached via the explicit
-    // unbounded escape (r17: the plain name now prices the cap against
-    // the df histogram and refuses a volume that explodes at scale — the
-    // d9/d5 plain-name pattern). Cap mirrored exactly in the oracle.
+    // cap — the pinned reference regime, the unguarded plan called
+    // directly (r17: the public name prices the cap against the df
+    // histogram and refuses a volume that explodes at scale — the d9/d5
+    // pattern). Cap mirrored exactly in the oracle.
     "d4b_jaccard_sparse" -> ((s, d) =>
-      Dedup.ngramJaccardPairsSparse(Tables.documents(s, d), "doc_id", "text", 3, 0.2, maxDf = 50,
-        unbounded = true)
+      Dedup.ngramJaccardPairsSparseUnguarded(Tables.documents(s, d), "doc_id", "text", 3, 0.2,
+        maxDf = 50)
         .orderBy("id_1", "id_2")),
 
     // D4f: the GUARDED plain fixed-cap name — same cap, same relation as
@@ -1510,12 +1513,10 @@ object SparkEntry {
 
     // D9: typo-level duplicates — SimHash banding candidates verified by
     // edit distance (token-set similarity can't see character edits).
-    // unbounded = true: this row PINS the reference (full within-sketch
-    // recall) relation its oracle replays; the plain name defaults into
-    // the d9e auto gate
+    // This row PINS the full-admission (full within-sketch recall) plan
+    // its oracle replays; the public name's d9e gate is the d9e row
     "d9_fuzzy_pairs" -> ((s, d) =>
-      Dedup.fuzzyNearDups(Tables.documents(s, d), "doc_id", "text", maxDist = 40,
-        unbounded = true)
+      Dedup.fuzzyNearDupsBanded(Tables.documents(s, d), "doc_id", "text", maxDist = 40)
         .orderBy("id_1", "id_2")),
 
     // D9d: incremental FUZZY ingest — the fourth incremental mode (after
@@ -1551,14 +1552,14 @@ object SparkEntry {
     // D9e: the fuzzy AUTO gate — the last diagnostic-without-a-derived-
     // plan-choice retired: budget = pairsPerDoc × nDocs (corpus-
     // proportional, so candidate volume stays linear), one histogram
-    // collect picks unbounded (cost fits) vs capped admission (cost
+    // collect picks full admission (cost fits) vs capped admission (cost
     // exceeds). At sf0.001/0.01 the total within-cell cost (~4k) fits
-    // 64×500 → unbounded branch; at sf0.1 (~371k vs 320k) the capped
+    // 64×500 → full-admission branch; at sf0.1 (~371k vs 320k) the capped
     // branch binds — the driver's SFs gate BOTH branches. The oracle
     // re-derives budget, cap, and admission in SQL; a non-binding budget
     // derives cap = max cell size, so the one capped SQL covers both.
     "d9e_fuzzy_auto" -> ((s, d) =>
-      Dedup.fuzzyNearDupsAuto(Tables.documents(s, d), "doc_id", "text",
+      Dedup.fuzzyNearDups(Tables.documents(s, d), "doc_id", "text",
         maxDist = 40, pairsPerDoc = 64L)
         .orderBy("id_1", "id_2")),
 
@@ -1603,13 +1604,12 @@ object SparkEntry {
     // cosine 0.45 under 32×4 banding; measured in DedupSpec) but ZERO float
     // arithmetic, so the sketch is bit-identical in DuckDB and the whole
     // path is hash-checkable against the oracle.
-    // unbounded = true: this row PINS the banded (S-curve recall)
-    // relation its oracle replays; the plain name defaults into the
-    // d5f/d5g auto gate (which at 0.45 under 32×4 picks the exact branch)
+    // This row PINS the banded (S-curve recall) plan its oracle replays;
+    // the public name's d5f/d5g gate (which at 0.45 under 32×4 picks the
+    // exact branch) is the d5f/d5g rows
     "d5b_embed_lsh" -> ((s, d) =>
-      Dedup.embeddingNearDupsLSH(Tables.embeddings(s, d), "vec_id", "embedding",
-        0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true,
-        unbounded = true)
+      Dedup.embeddingLshBanded(Tables.embeddings(s, d), "vec_id", "embedding",
+        0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true)
         .orderBy("id_1", "id_2")),
 
     // D5e: the LSH band-bucket diagnostic (j6/d4c pattern) — per band:
@@ -1630,7 +1630,7 @@ object SparkEntry {
     // comparison from the same counts, so the CHOICE is gated, not
     // assumed
     "d5f_embed_auto" -> ((s, d) =>
-      Dedup.embedNearDupAuto(Tables.embeddings(s, d), "vec_id", "embedding",
+      Dedup.embeddingNearDupsLSH(Tables.embeddings(s, d), "vec_id", "embedding",
         0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true)
         .orderBy("id_1", "id_2")),
 
@@ -1638,7 +1638,7 @@ object SparkEntry {
     // all-pairs (under the 1/10 gate), so the LSH branch must fire; the
     // result is the banded-candidate + exact-verify set (S-curve recall)
     "d5g_embed_auto_lsh" -> ((s, d) =>
-      Dedup.embedNearDupAuto(Tables.embeddings(s, d), "vec_id", "embedding",
+      Dedup.embeddingNearDupsLSH(Tables.embeddings(s, d), "vec_id", "embedding",
         0.45, dim = 64, bands = 16, bitsPerBand = 8, ordinal = true)
         .orderBy("id_1", "id_2")),
 
@@ -1647,14 +1647,14 @@ object SparkEntry {
     // ordinal-banded corpus index probed by batch band keys only (the d5b
     // recipe in the cross-corpus shape), exact-cosine verify before the
     // anti join
-    // unbounded = true: this row PINS the banded-probe relation its
-    // oracle replays; the plain name defaults into the d5h/d5i auto gate
+    // This row PINS the banded-probe plan its oracle replays; the public
+    // name's d5h/d5i gate is the d5h/d5i rows
     "d5c_embed_incremental" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      Dedup.embeddingIncremental(
+      Dedup.embeddingIncrementalBanded(
         emb.filter(col("vec_id") % 11 === 0), emb.filter(col("vec_id") % 11 =!= 0),
         "vec_id", "embedding", 0.45, dim = 64, bands = 32, bitsPerBand = 4,
-        ordinal = true, unbounded = true)
+        ordinal = true)
         .select("vec_id", "label").orderBy("vec_id")
     }),
 
@@ -1666,7 +1666,7 @@ object SparkEntry {
     // the gate, and both branch pipelines in SQL
     "d5h_embed_incr_auto" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      Dedup.embeddingIncrementalAuto(
+      Dedup.embeddingIncremental(
         emb.filter(col("vec_id") % 11 === 0), emb.filter(col("vec_id") % 11 =!= 0),
         "vec_id", "embedding", 0.45, dim = 64, bands = 32, bitsPerBand = 4,
         ordinal = true)
@@ -1678,7 +1678,7 @@ object SparkEntry {
     // batch rows with no RECALLED corpus match)
     "d5i_embed_incr_auto_lsh" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      Dedup.embeddingIncrementalAuto(
+      Dedup.embeddingIncremental(
         emb.filter(col("vec_id") % 11 === 0), emb.filter(col("vec_id") % 11 =!= 0),
         "vec_id", "embedding", 0.45, dim = 64, bands = 16, bitsPerBand = 8,
         ordinal = true)
@@ -4376,9 +4376,9 @@ object SparkEntry {
     * parameters, like a seed; the sketch/bucketing/ranking computation
     * itself is expressed independently in SQL). DuckDB lists are 1-based.
     */
-  /** The d5f/d5g gated-choice oracle: re-derives embedNearDupAuto's plan
-    * decision in SQL — the banded bucket pricing, the integer admission
-    * comparison (× 10 = the default 1/admissionDenom gate), and BOTH
+  /** The d5f/d5g gated-choice oracle: re-derives embeddingNearDupsLSH's
+    * plan decision in SQL — the banded bucket pricing, the integer
+    * admission comparison (× 10 = the 1/10 admission gate), and BOTH
     * branch pipelines, with the unchosen branch filtered out by the gate —
     * so the CHOICE arithmetic is what the hash compare verifies.
     */
@@ -4804,8 +4804,8 @@ object SparkEntry {
   private val trigramShCte: String = trigramShCteOver("documents")
 
   /** The fixed-cap (maxDf = 50) sparse-Jaccard oracle — shared VERBATIM by
-    * d4b (the explicit `unbounded = true` reference regime) and d4f (the
-    * guarded plain name): the guard prices and refuses, never alters the
+    * d4b (the unguarded reference plan) and d4f (the guarded public
+    * name): the guard prices and refuses, never alters the
     * admitted candidate set, so one SQL text gating both rows is what
     * proves that.
     */
@@ -5158,8 +5158,8 @@ object SparkEntry {
 
     // the auto gate's FULL derivation in SQL: budget = 64 × |documents|,
     // cap from the same histogram (non-binding budget ⇒ cap = max cell
-    // size ⇒ admits everything ⇒ identical to the unbounded plan, which
-    // is exactly the Spark gate's unbounded branch) — one capped
+    // size ⇒ admits everything ⇒ identical to the full-admission plan,
+    // which is exactly the Spark gate's uncapped branch) — one capped
     // formulation gates both branches of the plan choice
     "d9e_fuzzy_auto" ->
       (s"WITH $fuzzyCellsCte, " +

@@ -104,7 +104,7 @@ object Dedup {
 
   /** Banded MinHash keys over a prepared shingle-set frame: one row per
     * (id aliased to `as`, band, bkey). The ONE definition of the banding
-    * scheme — shared by the self-join ([[minhashNearDups]]) and the
+    * scheme — shared by the self-join ([[minhashNearDupsPlain]]) and the
     * cross-corpus probe ([[minhashIncremental]]) so the two can never
     * silently diverge on signature slicing or band hashing.
     */
@@ -137,7 +137,7 @@ object Dedup {
   /** The one banding EXPLODE over a frame already carrying `_sigs` — the
     * band/bkey scheme's single definition. Consumers: [[bandKeysCarrying]]
     * (signatures computed inline) and, through it, the big-corpus path in
-    * [[minhashNearDups]] that persists the exploded (id, band, bkey) frame
+    * [[minhashNearDupsPlain]] that persists the exploded (id, band, bkey) frame
     * so both self-join sides share one signature pass.
     */
   private def explodeBands(base: DataFrame, keep: Seq[org.apache.spark.sql.Column],
@@ -304,7 +304,7 @@ object Dedup {
       math.min(8192L, pricedRows / rowsPerTask)).toInt
 
   /** Repartition a kernel-heavy frame by `keys` at [[kernelWidth]] — the
-    * call-site form of the width rule ([[minhashNearDups]]' band exchange,
+    * call-site form of the width rule ([[minhashNearDupsPlain]]'s band exchange,
     * [[fuzzyVerify]]'s candidate/text exchanges ride it).
     */
   def spreadKernel(df: DataFrame, pricedRows: Long, rowsPerTask: Long,
@@ -323,12 +323,17 @@ object Dedup {
       spreadKernel(df, pricedRows, rowsPerTask, keys: _*)
     else df
 
-  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
+  /** The plain MinHash+LSH plan behind [[minhashNearDups]]: band self-join
+    * candidates over every document, exact-Jaccard verify. The gate's
+    * branch for an already-unique corpus, the collapsed plan's rep-pair
+    * step, and the reference the d2 row and the specs call directly.
+    */
+  private[graft] def minhashNearDupsPlain(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double, n: Int = 3,
                       bands: Int = 32, rowsPerBand: Int = 2,
                       releaseSets: Boolean = false,
                       pruneVerifyMinRows: Long = 1L << 20): DataFrame = {
-    // candidate persist follows the Auto path's loan: internal, dropped
+    // candidate persist follows the gated path's loan: internal, dropped
     // once the result can no longer recompute it
     var candCache: Option[DataFrame] = None
     // the shared banded-keys persist (big-corpus path — one signature
@@ -480,7 +485,7 @@ object Dedup {
     }
   }
 
-  /** D2f — [[minhashNearDups]] with EXACT-DUPLICATE PRE-COLLAPSE: group
+  /** D2f — [[minhashNearDupsPlain]] with EXACT-DUPLICATE PRE-COLLAPSE: group
     * the corpus by its whitespace-normalized text, run the LSH pipeline
     * over one REPRESENTATIVE per class (min id), then expand class
     * members back into the pair relation. Result-identical to the plain
@@ -492,7 +497,7 @@ object Dedup {
     * Jaccard equals its representatives' Jaccard (attached by two
     * equi-joins on the rep ids).
     *
-    * WHY this is the production entry for real corpora: web-scale text is
+    * WHY this is the plan for real corpora: web-scale text is
     * 30–50% exact duplicates, and an exact-dup class of size g is the
     * degenerate LSH regime — all `bands` band keys agree for every
     * member, so the band self-join pays g(g−1)/2 candidate pairs PER BAND
@@ -502,26 +507,25 @@ object Dedup {
     * found by one (16-byte md5, id) shuffle — no text moves — and the
     * quadratic reappears only as output cardinality (the within-class
     * pairs genuinely are the answer), as two narrow equi-joins with no
-    * verify work and no band multiplication. `expand = false` returns
-    * just the representative pairs — the form a dedup pipeline actually
-    * consumes (members join their rep's fate), and the one that keeps the
-    * output linear when classes are huge.
+    * verify work and no band multiplication.
     *
-    * The member frame persists for the call (it feeds the rep filter and
+    * [[minhashNearDups]] takes this plan when its measured dup share
+    * clears the gate; the d2f row and the specs call it directly. The
+    * member frame persists for the call (it feeds the rep filter and
     * both expansion sides); `releaseSets` extends the
     * [[withPersistedSets]] loan to it and to the inner LSH call's caches.
     */
-  def minhashNearDupsCollapsed(df: DataFrame, idCol: String, textCol: String,
-                               threshold: Double, n: Int = 3,
-                               bands: Int = 32, rowsPerBand: Int = 2,
-                               expand: Boolean = true,
-                               releaseSets: Boolean = false): DataFrame =
+  private[graft] def minhashNearDupsCollapsed(df: DataFrame, idCol: String,
+                                              textCol: String, threshold: Double,
+                                              n: Int = 3, bands: Int = 32,
+                                              rowsPerBand: Int = 2,
+                                              releaseSets: Boolean = false): DataFrame =
     minhashNearDupsCollapsedFromNorm(df, idCol, textCol,
       normalizedClasses(df, idCol, textCol), threshold, n, bands, rowsPerBand,
-      expand, releaseSets)
+      releaseSets)
 
   /** The (id, _fp, _ntok, _hasw) normalized-class frame shared by the
-    * collapse and [[minhashNearDupsAuto]]'s pricing aggregate. `_fp` is md5
+    * collapse and [[minhashNearDups]]' pricing aggregate. `_fp` is md5
     * of the space-joined token sequence — exactly the normalization
     * [[shingleSets]] applies, so fp-equal ⇒ identical shingle sets (NOT
     * Text.fingerprint, whose strip-all-punctuation normalization is
@@ -543,7 +547,6 @@ object Dedup {
                                                textCol: String, norm0: DataFrame,
                                                threshold: Double, n: Int,
                                                bands: Int, rowsPerBand: Int,
-                                               expand: Boolean,
                                                releaseSets: Boolean): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       "minhashNearDupsCollapsed: threshold must be in (0, 1]")
@@ -565,36 +568,35 @@ object Dedup {
     withPersistedSets(membersFrame, releaseSets) { members =>
       val reps = df.join(members.filter(col(idCol) === col("_rep"))
         .select(col(idCol)), Seq(idCol), "left_semi")
-      val repPairs = minhashNearDups(reps, idCol, textCol, threshold, n,
+      val repPairs = minhashNearDupsPlain(reps, idCol, textCol, threshold, n,
         bands, rowsPerBand, releaseSets)
-      if (!expand) repPairs
-      else {
-        val m1 = members.select(col("_rep").as("_r1"), col(idCol).as("_m1"))
-        val m2 = members.select(col("_rep").as("_r2"), col(idCol).as("_m2"))
-        // member ids interleave across classes, so the expanded pair is
-        // re-oriented (least, greatest); rep pairs are their own classes'
-        // members, so they re-emerge here unchanged
-        val cross = repPairs
-          .join(m1, col("id_1") === col("_r1"))
-          .join(m2, col("id_2") === col("_r2"))
-          .select(least(col("_m1"), col("_m2")).as("id_1"),
-            greatest(col("_m1"), col("_m2")).as("id_2"), col("jaccard"))
-        val within = members.select(col("_fp"), col(idCol).as("_m1"), col("_ntok"))
-          .join(members.select(col("_fp"), col(idCol).as("_m2")), Seq("_fp"))
-          .filter(col("_m1") < col("_m2") && col("_ntok") >= n)
-          .select(col("_m1").as("id_1"), col("_m2").as("id_2"),
-            lit(1.0).as("jaccard"))
-        cross.unionByName(within)
-      }
+      val m1 = members.select(col("_rep").as("_r1"), col(idCol).as("_m1"))
+      val m2 = members.select(col("_rep").as("_r2"), col(idCol).as("_m2"))
+      // member ids interleave across classes, so the expanded pair is
+      // re-oriented (least, greatest); rep pairs are their own classes'
+      // members, so they re-emerge here unchanged
+      val cross = repPairs
+        .join(m1, col("id_1") === col("_r1"))
+        .join(m2, col("id_2") === col("_r2"))
+        .select(least(col("_m1"), col("_m2")).as("id_1"),
+          greatest(col("_m1"), col("_m2")).as("id_2"), col("jaccard"))
+      val within = members.select(col("_fp"), col(idCol).as("_m1"), col("_ntok"))
+        .join(members.select(col("_fp"), col(idCol).as("_m2")), Seq("_fp"))
+        .filter(col("_m1") < col("_m2") && col("_ntok") >= n)
+        .select(col("_m1").as("id_1"), col("_m2").as("id_2"),
+          lit(1.0).as("jaccard"))
+      cross.unionByName(within)
     }
   }
 
-  /** D2g — the d4d/d5f pattern applied to the d2 entry point: MEASURE the
+  /** D2 — MinHash+LSH near-duplicate pairs at Jaccard ≥ `threshold`
+    * (banded signature candidates, exact-Jaccard verify), with the plan
+    * chosen from the input (d2g, the d4d/d5f pattern): MEASURE the
     * exact-duplicate share with one cheap aggregate, then pick
     * [[minhashNearDupsCollapsed]] (the crawl-corpus plan: at 100× under a
     * size-9-class load it is 2.8× the wall and the only zero-spill path)
-    * when duplication clears `dupFracGate`, else the plain
-    * [[minhashNearDups]] (whose collapse step would be a pure extra
+    * when duplication reaches [[DupFracGate]], else
+    * [[minhashNearDupsPlain]] (whose collapse step would be a pure extra
     * exchange on an already-unique corpus). Result-identical either way —
     * the collapsed form is spec-pinned equal to the plain one — so the
     * gate trades only plan shape, never answers. The diagnostic is ONE
@@ -602,13 +604,10 @@ object Dedup {
     * the collapse itself uses (md5 of the space-joined token sequence):
     * two longs to the driver, the s5i-total bounded-collect pattern.
     */
-  def minhashNearDupsAuto(df: DataFrame, idCol: String, textCol: String,
-                          threshold: Double, n: Int = 3,
-                          bands: Int = 32, rowsPerBand: Int = 2,
-                          dupFracGate: Double = 0.2,
-                          releaseSets: Boolean = false): DataFrame = {
-    require(dupFracGate >= 0.0 && dupFracGate <= 1.0,
-      "minhashNearDupsAuto: dupFracGate must be in [0, 1]")
+  def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
+                      threshold: Double, n: Int = 3,
+                      bands: Int = 32, rowsPerBand: Int = 2,
+                      releaseSets: Boolean = false): DataFrame = {
     // The pricing aggregate and the collapse's class formation hash the
     // SAME normalization (md5 of the space-joined token sequence) — until
     // r21 the gate ran that tokenize+md5 corpus pass twice, once per
@@ -628,16 +627,23 @@ object Dedup {
       count_distinct(col("_fp")).as("_u")).head()
     val nDocs = row.getLong(0)
     val dupFrac = if (nDocs == 0L) 0.0 else 1.0 - row.getLong(1).toDouble / nDocs
-    if (dupFrac >= dupFracGate)
+    if (dupFrac >= DupFracGate)
       minhashNearDupsCollapsedFromNorm(df, idCol, textCol, norm0, threshold,
-        n, bands, rowsPerBand, expand = true, releaseSets)
+        n, bands, rowsPerBand, releaseSets)
     else {
       norm0.unpersist()
       graft.Caches.settled(norm0)
-      minhashNearDups(df, idCol, textCol, threshold, n, bands,
+      minhashNearDupsPlain(df, idCol, textCol, threshold, n, bands,
         rowsPerBand, releaseSets)
     }
   }
+
+  /** The exact-duplicate share at which [[minhashNearDups]] collapses
+    * classes before banding: web crawls carry 30–50%, where the collapse
+    * is the measured winner, while a near-unique corpus pays only its
+    * extra exchange.
+    */
+  private val DupFracGate = 0.2
 
   /** Exact word-n-gram Jaccard for ALL pairs above `threshold`, on the
     * block-partitioned all-pairs plan: every pair is evaluated exactly once
@@ -701,13 +707,13 @@ object Dedup {
     * (shingle, df) aggregate the pipeline pays anyway — and REFUSES a
     * `maxDf` whose cumulative candidate cost exceeds `guardPairs`,
     * naming the priced volume, the largest cap that would fit, and the
-    * escapes ([[ngramJaccardPairsSparseAuto]] for a budget-derived cap,
-    * `unbounded = true` to pin the reference regime and own the cost).
+    * escapes ([[ngramJaccardPairsSparseAuto]] for a budget-derived cap, a
+    * lower `maxDf`, or a `guardPairs` sized to the cluster's budget).
     * When the guard passes, the histogram evidence is reused: the rare
     * keys broadcast when their exact count fits the measured budget, and
     * the verify prune engages when the priced candidate volume does —
-    * the relation is IDENTICAL either way (spec-pinned against the
-    * unbounded form).
+    * the relation is IDENTICAL either way (spec-pinned against
+    * [[ngramJaccardPairsSparseUnguarded]], the d4b reference).
     *
     * TWO-STAGE PRICING (the d4e ladder in front of the exact histogram):
     * a hopeless cap must not cost the corpus-wide (shingle, df) aggregate
@@ -736,103 +742,109 @@ object Dedup {
   def ngramJaccardPairsSparse(df: DataFrame, idCol: String, textCol: String,
                               n: Int, threshold: Double, maxDf: Int,
                               releaseSets: Boolean = false,
-                              unbounded: Boolean = false,
                               guardPairs: Long = FixedCapGuardPairs,
-                              quickPriceMinDocs: Long = 1L << 20): DataFrame =
-    if (unbounded)
-      // The reduced sets feed FIVE plan positions (df-count, both sides of
-      // the candidate self-join via inv, both verify sides); without a cache
-      // boundary Spark re-evaluates the shingling subtree for each. The sets
-      // table is the corpus reduced to 8-byte keys (~1-2% of text size) —
-      // persisting it is the standard inverted-index-build trade.
-      withPersistedSets(shingleSets(df, idCol, textCol, n), releaseSets) { sets =>
-        sparseJaccardFromSets(sets, idCol, threshold, maxDf)
-      }
-    else {
-      val rate = 0.0625 // 1/16, the d4e binary fraction
-      val sampledCap = (maxDf * rate).toLong
-      // Corpus-size evidence for the quickPriceMinDocs gate must not cost
-      // a dedicated full pass over a DERIVED input (the r17 advisory: the
-      // count() job re-evaluates the whole derivation just to decide
-      // whether the sampled stage arms). So the count runs only where it
-      // is genuinely cheap — a bare file scan (parquet footer counts) or
-      // an already-cached frame — and a derived input skips the size gate
-      // and prices from the sample unconditionally: one 1/16-cost pass in
-      // place of the full counting pass, and the 4× refusal margin does
-      // not depend on corpus size (small corpora cannot inflate a
-      // sub-guard bill past 4× the guard — the flukes are low-df keys
-      // whose absolute cost is tiny), so the verdict stays safe.
-      val cheapDocs: Option[Long] = {
-        import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
-        // A count is "cheap" when the plan is a leaf (parquet footer
-        // counts / cached frame) OR a projection/filter stack over one —
-        // after pushdown those count() jobs scan at most the filter
-        // columns, far below the sampled pricing pass they gate (r18
-        // ADVICE: keying on LeafNode alone sent every trivially-derived
-        // small corpus to the 1/16-sample estimate, re-introducing the
-        // +1.3 s overhead quickPriceMinDocs exists to avoid and trading
-        // the exact histogram for a higher-variance sample). Failing
-        // that, Catalyst plan statistics' rowCount (exact for cached
-        // relations) serves as gate evidence WITHOUT a job — an estimate
-        // can only mis-route between two GUARDED paths, never unguard.
-        // A Filter qualifies only when its predicate is deterministic and
-        // UDF-free (r19 ADVICE): a Scala-closure or non-deterministic
-        // predicate cannot push to the scan, so df.count() would evaluate
-        // the full filter over the whole corpus — the exact full pre-pass
-        // the r17 advisory removed. Such plans fall through to the
-        // stats-based estimate below.
-        def cheapPredicate(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-          e.deterministic && e.find {
-            case _: org.apache.spark.sql.catalyst.expressions.ScalaUDF => true
-            case _: org.apache.spark.sql.catalyst.expressions.objects.Invoke => true
-            case _ => false
-          }.isEmpty
-        def nearLeaf(p: LogicalPlan): Boolean = p match {
-          case _: LeafNode => true
-          case Project(_, child) => nearLeaf(child)
-          case Filter(cond, child) => cheapPredicate(cond) && nearLeaf(child)
+                              quickPriceMinDocs: Long = 1L << 20): DataFrame = {
+    val rate = 0.0625 // 1/16, the d4e binary fraction
+    val sampledCap = (maxDf * rate).toLong
+    // Corpus-size evidence for the quickPriceMinDocs gate must not cost
+    // a dedicated full pass over a DERIVED input (the r17 advisory: the
+    // count() job re-evaluates the whole derivation just to decide
+    // whether the sampled stage arms). So the count runs only where it
+    // is genuinely cheap — a bare file scan (parquet footer counts) or
+    // an already-cached frame — and a derived input skips the size gate
+    // and prices from the sample unconditionally: one 1/16-cost pass in
+    // place of the full counting pass, and the 4× refusal margin does
+    // not depend on corpus size (small corpora cannot inflate a
+    // sub-guard bill past 4× the guard — the flukes are low-df keys
+    // whose absolute cost is tiny), so the verdict stays safe.
+    val cheapDocs: Option[Long] = {
+      import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
+      // A count is "cheap" when the plan is a leaf (parquet footer
+      // counts / cached frame) OR a projection/filter stack over one —
+      // after pushdown those count() jobs scan at most the filter
+      // columns, far below the sampled pricing pass they gate (r18
+      // ADVICE: keying on LeafNode alone sent every trivially-derived
+      // small corpus to the 1/16-sample estimate, re-introducing the
+      // +1.3 s overhead quickPriceMinDocs exists to avoid and trading
+      // the exact histogram for a higher-variance sample). Failing
+      // that, Catalyst plan statistics' rowCount (exact for cached
+      // relations) serves as gate evidence WITHOUT a job — an estimate
+      // can only mis-route between two GUARDED paths, never unguard.
+      // A Filter qualifies only when its predicate is deterministic and
+      // UDF-free (r19 ADVICE): a Scala-closure or non-deterministic
+      // predicate cannot push to the scan, so df.count() would evaluate
+      // the full filter over the whole corpus — the exact full pre-pass
+      // the r17 advisory removed. Such plans fall through to the
+      // stats-based estimate below.
+      def cheapPredicate(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
+        e.deterministic && e.find {
+          case _: org.apache.spark.sql.catalyst.expressions.ScalaUDF => true
+          case _: org.apache.spark.sql.catalyst.expressions.objects.Invoke => true
           case _ => false
-        }
-        val plan = df.queryExecution.optimizedPlan
-        if (nearLeaf(plan)) Some(df.count())
-        else plan.stats.rowCount.map(_.longValue)
+        }.isEmpty
+      def nearLeaf(p: LogicalPlan): Boolean = p match {
+        case _: LeafNode => true
+        case Project(_, child) => nearLeaf(child)
+        case Filter(cond, child) => cheapPredicate(cond) && nearLeaf(child)
+        case _ => false
       }
-      if (sampledCap >= 2 && cheapDocs.forall(_ >= quickPriceMinDocs)) {
-        // one tiny collect over the ≤|distinct sampled dfs|-row frame; the
-        // est_cum column is the unbiased full-corpus pair bill
-        val est = shingleDfStatsSampled(df, idCol, textCol, n, rate)
-          .filter(col("df") <= sampledCap)
-          .agg(max("est_cum_pair_cost")).head()
-        val estBill = if (est.isNullAt(0)) 0.0 else est.getDouble(0)
-        if (estBill > 4.0 * guardPairs) {
-          val estL = estBill.toLong
+      val plan = df.queryExecution.optimizedPlan
+      if (nearLeaf(plan)) Some(df.count())
+      else plan.stats.rowCount.map(_.longValue)
+    }
+    if (sampledCap >= 2 && cheapDocs.forall(_ >= quickPriceMinDocs)) {
+      // one tiny collect over the ≤|distinct sampled dfs|-row frame; the
+      // est_cum column is the unbiased full-corpus pair bill
+      val est = shingleDfStatsSampled(df, idCol, textCol, n, rate)
+        .filter(col("df") <= sampledCap)
+        .agg(max("est_cum_pair_cost")).head()
+      val estBill = if (est.isNullAt(0)) 0.0 else est.getDouble(0)
+      if (estBill > 4.0 * guardPairs) {
+        val estL = estBill.toLong
+        throw new IllegalArgumentException(
+          s"ngramJaccardPairsSparse: maxDf=$maxDf prices an ESTIMATED " +
+            s"$estL candidate pairs (>4x the $guardPairs guard) from the " +
+            "1/16 document sample; refused before the corpus-wide " +
+            "histogram (the exact bill could only confirm it). Use " +
+            "ngramJaccardPairsSparseAuto to derive the cap from a pair " +
+            "budget, lower maxDf, or raise guardPairs to the cluster's " +
+            "candidate budget.")
+      }
+    }
+    sparseCappedFromHistogram(df, idCol, textCol, n, threshold, releaseSets,
+      hist => {
+        // cum at the cap = the exact candidate-pair bill this maxDf buys
+        val priced = hist.filter(_._1 <= maxDf).map(_._3).maxOption.getOrElse(0L)
+        if (priced > guardPairs) {
+          val fitting = math.max(2L,
+            hist.filter(_._3 <= guardPairs).map(_._1).maxOption.getOrElse(2L))
           throw new IllegalArgumentException(
-            s"ngramJaccardPairsSparse: maxDf=$maxDf prices an ESTIMATED " +
-              s"$estL candidate pairs (>4x the $guardPairs guard) from the " +
-              "1/16 document sample; refused before the corpus-wide " +
-              "histogram (the exact bill could only confirm it). Use " +
-              "ngramJaccardPairsSparseAuto to derive the cap from a pair " +
-              "budget, lower maxDf, or pass unbounded = true to pin the " +
-              "fixed-cap reference regime and own its cost.")
+            s"ngramJaccardPairsSparse: maxDf=$maxDf prices $priced candidate " +
+              s"pairs on this corpus, over the $guardPairs guard (largest " +
+              s"fitting cap: $fitting). Use ngramJaccardPairsSparseAuto to " +
+              "derive the cap from a pair budget, lower maxDf, or raise " +
+              "guardPairs to the cluster's candidate budget.")
         }
-      }
-      sparseCappedFromHistogram(df, idCol, textCol, n, threshold, releaseSets,
-        hist => {
-          // cum at the cap = the exact candidate-pair bill this maxDf buys
-          val priced = hist.filter(_._1 <= maxDf).map(_._3).maxOption.getOrElse(0L)
-          if (priced > guardPairs) {
-            val fitting = math.max(2L,
-              hist.filter(_._3 <= guardPairs).map(_._1).maxOption.getOrElse(2L))
-            throw new IllegalArgumentException(
-              s"ngramJaccardPairsSparse: maxDf=$maxDf prices $priced candidate " +
-                s"pairs on this corpus, over the $guardPairs guard (largest " +
-                s"fitting cap: $fitting). Use ngramJaccardPairsSparseAuto to " +
-                "derive the cap from a pair budget, lower maxDf, or pass " +
-                "unbounded = true to pin the fixed-cap reference regime and " +
-                "own its cost.")
-          }
-          (maxDf.toLong, priced <= BroadcastRareKeyLimit)
-        })
+        (maxDf.toLong, priced <= BroadcastRareKeyLimit)
+      })
+  }
+
+  /** The fixed-cap sparse plan with no pricing guard: the d4b reference
+    * regime [[ngramJaccardPairsSparse]] is spec-pinned against, which the
+    * d4b row and the specs call directly. Nothing bounds its candidate
+    * volume (the r16 sweep: >60 GB of disk at the 100× probe).
+    */
+  private[graft] def ngramJaccardPairsSparseUnguarded(df: DataFrame, idCol: String,
+                                                      textCol: String, n: Int,
+                                                      threshold: Double, maxDf: Int,
+                                                      releaseSets: Boolean = false): DataFrame =
+    // The reduced sets feed FIVE plan positions (df-count, both sides of
+    // the candidate self-join via inv, both verify sides); without a cache
+    // boundary Spark re-evaluates the shingling subtree for each. The sets
+    // table is the corpus reduced to 8-byte keys (~1-2% of text size) —
+    // persisting it is the standard inverted-index-build trade.
+    withPersistedSets(shingleSets(df, idCol, textCol, n), releaseSets) { sets =>
+      sparseJaccardFromSets(sets, idCol, threshold, maxDf)
     }
 
   /** The df-capped candidate+verify body over prepared sets — shared by
@@ -1104,9 +1116,7 @@ object Dedup {
     * spill — a FIXED df ceiling admits ~quadratically more candidates as
     * every shingle's df grows with the corpus) is refused in the
     * histogram pass alone (measured 9.8 s, zero spill, BENCH_SCALE r17).
-    * Override per call when the cluster's budget genuinely differs;
-    * `unbounded = true` bypasses pricing entirely and pins the reference
-    * regime.
+    * Override per call when the cluster's budget genuinely differs.
     */
   private[graft] val FixedCapGuardPairs: Long = 50000000L
 
@@ -1804,36 +1814,16 @@ object Dedup {
     * documents travel once per surviving candidate, not per chunk
     * collision.
     *
-    * By default this plain name ROUTES THROUGH the measured auto gate
-    * ([[fuzzyNearDupsAuto]], d9e): one bounded histogram collect prices
-    * the within-cell quadratic and the call takes the unbounded plan only
-    * when its candidate volume fits a corpus-proportional budget
-    * (`pairsPerDoc × nDocs`), else the capped-admission plan — so a plain
-    * call at 100× runs zero-spill with no caller input. Candidate
-    * admission WITHOUT the gate goes quadratic on a low-entropy corpus
-    * (measured: 6.2 GB candidate-distinct spill at 100×); that reference
-    * regime stays reachable via `unbounded = true` — the exact banded
-    * relation, full within-sketch recall, caller owns the spill. When the
-    * pair budget is a stated SLO use [[fuzzyNearDupsBudget]] directly
-    * (zero spill 1×→1000× under a binding budget, measured r13).
-    *
-    * Parameter interaction: `pairsPerDoc` and `release` apply ONLY to the
-    * gated default — `unbounded = true` runs the exact banded relation
-    * with no admission budget and no loan to materialize-and-drop, so a
-    * call combining `unbounded = true` with a non-default `pairsPerDoc`
-    * or `release = true` is REJECTED (a require, not a silent ignore:
-    * the caller asked for a budget or a cache release the unbounded plan
-    * cannot honor).
+    * This is the full-admission plan: every banded candidate is verified,
+    * so recall is full within the sketch, and nothing bounds the
+    * candidate volume — on a low-entropy corpus it goes quadratic
+    * (measured: 6.2 GB candidate-distinct spill at 100×).
+    * [[fuzzyNearDups]] takes it only when the priced volume fits its
+    * budget; the d9 row and the specs call it directly as the reference.
     */
-  def fuzzyNearDups(df: DataFrame, idCol: String, textCol: String,
-                    maxDist: Int, maxHamming: Int = 3,
-                    unbounded: Boolean = false, pairsPerDoc: Long = 64,
-                    release: Boolean = false): DataFrame = {
-    require(maxDist >= 0, "fuzzyNearDups: maxDist must be >= 0")
-    require(!unbounded || (pairsPerDoc == 64 && !release),
-      "fuzzyNearDups: pairsPerDoc/release apply only to the gated default " +
-        "— the unbounded plan has no admission budget and persists nothing " +
-        "it could release; drop unbounded = true or the conflicting argument")
+  private[graft] def fuzzyNearDupsBanded(df: DataFrame, idCol: String, textCol: String,
+                                         maxDist: Int, maxHamming: Int = 3): DataFrame = {
+    require(maxDist >= 0, "fuzzyNearDupsBanded: maxDist must be >= 0")
     require(maxHamming <= 3, "4-chunk banding guarantees recall only for maxHamming <= 3")
     // LENGTH-SLICED banding: candidates join on (chunk, ckey, lenBucket)
     // with the right side replicated into the adjacent buckets (width
@@ -1846,20 +1836,14 @@ object Dedup {
     // verify; the earlier narrow length POST-filter still materialized
     // every pair first). Join payloads stay 32 bytes (id, sketch, len);
     // texts ship only for pairs that already passed hamming + length.
-    if (unbounded)
-      // Persist the banded sketch rows (r20): the verify's two join sides
-      // each re-evaluated the simhash pipeline (md5 per token + 60-bit
-      // fold) without a cache boundary — the same double-evaluation the
-      // budget/auto entries already avoid via their chunked persist. Loan
-      // convention (lazy result, Caches.drain settles); this is a plan
-      // cache, not the admission budget or releasable result persist the
-      // `require` above rejects for the unbounded form.
-      fuzzyVerify(df, idCol, textCol, maxDist, maxHamming,
-        graft.Caches.persistLoaned(fuzzyChunked(df, idCol, textCol, maxDist)),
-        chunkDedup = true)
-    else
-      fuzzyNearDupsAuto(df, idCol, textCol, maxDist, maxHamming, pairsPerDoc,
-        release)
+    // Persist the banded sketch rows (r20): the verify's two join sides
+    // each re-evaluated the simhash pipeline (md5 per token + 60-bit
+    // fold) without a cache boundary — the same double-evaluation the
+    // budget/gated entries already avoid via their chunked persist. Loan
+    // convention (lazy result, Caches.drain settles).
+    fuzzyVerify(df, idCol, textCol, maxDist, maxHamming,
+      graft.Caches.persistLoaned(fuzzyChunked(df, idCol, textCol, maxDist)),
+      chunkDedup = true)
   }
 
   /** D9d — incremental FUZZY ingest, completing the incremental family's
@@ -1867,7 +1851,7 @@ object Dedup {
     * [[minhashIncremental]], embedding: [[embeddingIncremental]], and now
     * edit distance): keep only batch documents with NO corpus document
     * within Levenshtein ≤ `maxDist` — the typo-level variant of the
-    * daily-ingest near-dup filter. Cross form of [[fuzzyNearDups]]'
+    * daily-ingest near-dup filter. Cross form of [[fuzzyNearDupsBanded]]'
     * length-sliced banding: the batch side sits in its home length
     * bucket, the corpus side replicates ±1 (any |Δlen| ≤ maxDist pair
     * still meets — same pigeonhole recall at hamming ≤ 3), candidates
@@ -1941,7 +1925,7 @@ object Dedup {
     * exchange and the ≤4× duplicate rows it absorbed — measured 4.1× on
     * the 1× row (5.7 → 1.4 s; candidate shuffle 836 KB → 1.9 KB); recall
     * is unchanged (every pair still surfaces, just at one chunk). At
-    * 100× the unbounded path still spills ~6 GB — the residue lives in
+    * 100× the full-admission path still spills ~6 GB — the residue lives in
     * the banded JOIN's sort of the low-entropy buckets themselves, not
     * the dedup — which is exactly what [[fuzzyNearDupsBudget]]'s
     * admission cap exists to bound (3.5 s, zero spill, same probe).
@@ -2062,7 +2046,7 @@ object Dedup {
     */
   private val BroadcastOverCapCellLimit = 1L << 19
 
-  /** D9b — [[fuzzyNearDups]] with candidate admission CAPPED by a pair
+  /** D9b — [[fuzzyNearDupsBanded]] with candidate admission CAPPED by a pair
     * budget (the d4d pattern applied to the fuzzy family): one aggregate
     * prices the (chunk, ckey, lenBucket) cell sizes ([[fuzzyCellStats]]),
     * the cap is derived as the largest cell size whose cumulative
@@ -2158,20 +2142,18 @@ object Dedup {
       chunkDedup = false, pricedRows = 3 * admittedPairs)
   }
 
-  /** D9e — the AUTO entry for the fuzzy family, closing the d4d→d4e /
-    * d5e→d5f / d2g arc: the one family whose diagnostic
-    * ([[fuzzyCellStats]]) previously had NO derived plan choice, so a
-    * plain [[fuzzyNearDups]] call on a low-entropy corpus landed in the
-    * measured 6.2 GB candidate-spill regime with no guardrail. One
-    * bounded histogram collect prices the within-cell quadratic, the
-    * budget derives from CORPUS SIZE (`pairsPerDoc × nDocs` — candidate
-    * volume stays linear in the corpus, the property every scale-safe
-    * entry here maintains), and the gate picks:
+  /** D9 — fuzzy near-dup pairs at edit distance ≤ `maxDist`, with the
+    * plan chosen from the input (d9e, closing the d4d→d4e / d5e→d5f /
+    * d2g arc): one bounded histogram collect over the banded cells
+    * ([[fuzzyCellStats]]' arithmetic) prices the within-cell quadratic,
+    * the budget derives from CORPUS SIZE (`pairsPerDoc × nDocs` —
+    * candidate volume stays linear in the corpus, the property every
+    * scale-safe entry here maintains), and the gate picks:
     *
-    *   - total cost ≤ budget → the UNBOUNDED plan (first-agreeing-chunk
-    *     dedup, no candidate distinct — the fastest plan, and admission
-    *     would not have excluded anything: result-identical by
-    *     construction, spec-pinned);
+    *   - total cost ≤ budget → [[fuzzyNearDupsBanded]]'s full-admission
+    *     plan (first-agreeing-chunk dedup, no candidate distinct — the
+    *     fastest plan, and admission would not have excluded anything:
+    *     result-identical by construction, spec-pinned);
     *   - total cost > budget → [[fuzzyNearDupsBudget]]'s capped admission
     *     at the derived budget (zero spill 1×→1000× under a stated
     *     budget, per the r12/r13 probes).
@@ -2182,15 +2164,17 @@ object Dedup {
     * only generation is restricted, lost pairs live entirely inside
     * over-cap (degenerate near-identical) cells. The oracle re-derives
     * budget, cap, and admission in SQL, so the gate arithmetic itself is
-    * hash-gated.
+    * hash-gated. When the pair budget is a stated SLO use
+    * [[fuzzyNearDupsBudget]] directly (zero spill 1×→1000× under a
+    * binding budget, measured r13).
     */
-  def fuzzyNearDupsAuto(df: DataFrame, idCol: String, textCol: String,
-                        maxDist: Int, maxHamming: Int = 3,
-                        pairsPerDoc: Long = 64,
-                        release: Boolean = false): DataFrame = {
-    require(maxDist >= 0, "fuzzyNearDupsAuto: maxDist must be >= 0")
+  def fuzzyNearDups(df: DataFrame, idCol: String, textCol: String,
+                    maxDist: Int, maxHamming: Int = 3,
+                    pairsPerDoc: Long = 64,
+                    release: Boolean = false): DataFrame = {
+    require(maxDist >= 0, "fuzzyNearDups: maxDist must be >= 0")
     require(maxHamming <= 3, "4-chunk banding guarantees recall only for maxHamming <= 3")
-    require(pairsPerDoc >= 1, "fuzzyNearDupsAuto: pairsPerDoc must be >= 1")
+    require(pairsPerDoc >= 1, "fuzzyNearDups: pairsPerDoc must be >= 1")
     withPersistedSetsExtras(fuzzyChunked(df, idCol, textCol, maxDist), release) { chunked =>
       val cells = graft.Caches.persistLoaned(fuzzyCells(chunked))
       val hist = fuzzyCellHist(cells)
@@ -2198,7 +2182,7 @@ object Dedup {
       val budget = pairsPerDoc * nDocs
       val total = hist.lastOption.map(_._3).getOrElse(0L)
       if (total <= budget) {
-        // the unbounded branch never reads the cells again — settle the
+        // the full-admission branch never reads the cells again — settle the
         // loan now instead of at session drain
         cells.unpersist()
         graft.Caches.settled(cells)
@@ -2377,43 +2361,67 @@ object Dedup {
     * correctness. Recall follows the band/bit S-curve exactly as in
     * [[embeddingNearDupsLSH]] — pick parameters for the target threshold.
     *
-    * By default this plain name ROUTES THROUGH the measured admission
-    * gate ([[embeddingIncrementalAuto]], d5h/d5i): near the cosine
-    * background the bands stop pruning and the banded probe OOM'd an
-    * 8 GB JVM outright at 100× (measured r13) — the gate prices the
-    * admission with one integer diagnostic and routes to the
-    * blocked-exact cross form ([[embeddingIncrementalExact]], flat 17 MB
-    * tasks, zero spill: pay compute, never memory) when the bands would
-    * degenerate. `unbounded = true` forces the banded probe regardless —
-    * the reference regime whose kept-set can be a strict SUPERSET of the
-    * default's (the exact branch catches duplicates the band S-curve
-    * misses, so it removes more).
+    * The plan is chosen from the measured cross-admission (d5h/d5i, the
+    * [[embeddingNearDupsLSH]] gate in its cross-corpus form): near the
+    * cosine background the bands stop pruning and the banded probe
+    * OOM'd an 8 GB JVM outright at 100× (measured r13). Both sides'
+    * band-bucket counts ([[Similarity.lshBucketCounts]] — one narrow
+    * aggregate each) join on the tiny bucket key space and Σ
+    * n_batch·n_corpus prices the probe join's candidate evaluations
+    * against |batch|·|corpus|. Bands admitting at most a tenth of that
+    * → the banded probe ([[embeddingIncrementalBanded]], sub-linear in
+    * the corpus); more → the bounded-broadcast exact scan
+    * ([[embeddingIncrementalExact]], flat 17 MB tasks, zero spill: pay
+    * compute, never memory). Same decision arithmetic as
+    * [[embeddingNearDupsLSH]] (BigInt, no float ties), so the oracle
+    * re-derives the choice from the same counts. The exact branch's
+    * kept-set can be a strict SUBSET of the banded one's (it catches
+    * duplicates the band S-curve misses, so it removes more).
     */
   def embeddingIncremental(newVecs: DataFrame, corpus: DataFrame, idCol: String,
                            vecCol: String, threshold: Double, dim: Int,
                            bands: Int = 16, bitsPerBand: Int = 8,
-                           ordinal: Boolean = false,
-                           unbounded: Boolean = false,
-                           admissionDenom: Long = 10L): DataFrame =
-    if (unbounded)
-      embeddingIncrementalBanded(newVecs, corpus, idCol, vecCol, threshold,
-        dim, bands, bitsPerBand, ordinal)
-    else
-      embeddingIncrementalAuto(newVecs, corpus, idCol, vecCol, threshold, dim,
-        bands, bitsPerBand, ordinal, admissionDenom)
+                           ordinal: Boolean = false): DataFrame = {
+    // ONE sketch pass per side (r20, the d2 treatment in cross form): the
+    // pricing bucket counts, the side counts, and — when the banded branch
+    // is chosen — the probe join all read the two persisted sketch frames;
+    // before this each side's sketch pipeline evaluated twice per call.
+    // The counts double as the persists' materialization points.
+    val skB = graft.Caches.persistLoaned(Similarity.sketchedVecs(
+      newVecs, idCol, vecCol, dim, bands, bitsPerBand, ordinal))
+    val skC = graft.Caches.persistLoaned(Similarity.sketchedVecs(
+      corpus, idCol, vecCol, dim, bands, bitsPerBand, ordinal))
+    val allPairs = BigInt(skB.count()) * BigInt(skC.count())
+    val nb = Similarity.lshBucketCountsFromSketched(skB).withColumnRenamed("n", "n_b")
+    val cb = Similarity.lshBucketCountsFromSketched(skC).withColumnRenamed("n", "n_c")
+    val pairCost = nb.join(cb, Seq("band", "bkey"))
+      .agg(sum(col("n_b") * col("n_c"))).head.getAs[Any](0) match {
+        case null => 0L
+        case l: Long => l
+      }
+    if (BigInt(pairCost) * BigInt(AdmissionDenom) <= allPairs)
+      // the sketch loans stay live for the (lazy) probe — Caches.drain settles
+      embeddingIncrementalBandedSketched(newVecs, skB, skC, idCol, threshold,
+        pricedRows = pairCost)
+    else {
+      // the exact scan never reads the sketches again — settle both now
+      skB.unpersist(); graft.Caches.settled(skB)
+      skC.unpersist(); graft.Caches.settled(skC)
+      embeddingIncrementalExact(newVecs, corpus, idCol, vecCol, threshold)
+    }
+  }
 
-  /** The banded cross-probe body ([[embeddingIncremental]]'s
-    * `unbounded = true` plan; [[embeddingIncrementalAuto]]'s under-gate
-    * branch).
-    */
-  /** `pricedRows` (the d5h/d5i gate's Σ n_batch·n_corpus bucket pricing,
+  /** The banded cross-probe body: [[embeddingIncremental]]'s under-gate
+    * branch, and the reference the d5c row and the specs call directly.
+    *
+    * `pricedRows` (the d5h/d5i gate's Σ n_batch·n_corpus bucket pricing,
     * 0 = unknown) switches to the VERIFY-IN-JOIN shape — the
     * [[embeddingLshBanded]] fix in the cross-corpus form: corpus vectors
     * ride their band rows (linear) instead of shipping once per
     * candidate, the cosine evaluates inside the band join, and only
     * matched batch ids reach the distinct.
     */
-  private def embeddingIncrementalBanded(newVecs: DataFrame, corpus: DataFrame,
+  private[graft] def embeddingIncrementalBanded(newVecs: DataFrame, corpus: DataFrame,
                                          idCol: String, vecCol: String,
                                          threshold: Double, dim: Int,
                                          bands: Int, bitsPerBand: Int,
@@ -2469,7 +2477,7 @@ object Dedup {
     * or spill — the matched-id set partial-aggregates to ≤ |batch| rows
     * per partition before its (tiny) distinct exchange.
     *
-    * This is the branch [[embeddingIncrementalAuto]] takes when the band
+    * This is the branch [[embeddingIncremental]] takes when the band
     * buckets are NOT discriminating (thresholds near the cosine
     * background): there the LSH probe admits ~everything and its
     * candidate-distinct exchange is what dies — measured at 100×
@@ -2485,55 +2493,6 @@ object Dedup {
       .join(batch, round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold)
       .select("id_1").distinct()
     newVecs.join(matched, newVecs(idCol) === matched("id_1"), "left_anti")
-  }
-
-  /** D5h — incremental embedding ingest with the physical plan CHOSEN
-    * from the measured cross-admission ([[embedNearDupAuto]]'s gate in
-    * its cross-corpus form): both sides' band-bucket counts
-    * ([[Similarity.lshBucketCounts]] — one narrow aggregate each) join on
-    * the tiny bucket key space and Σ n_batch·n_corpus prices the probe
-    * join's candidate evaluations; compared against |batch|·|corpus|
-    * under the same integer `1/admissionDenom` gate. Discriminating
-    * bands → the banded [[embeddingIncremental]] probe (sub-linear in the
-    * corpus); bands admitting more than the gate → the bounded-broadcast
-    * [[embeddingIncrementalExact]] scan. Same decision arithmetic as
-    * d5f/d5g (BigInt, no float ties), so the oracle re-derives the choice
-    * from the same counts.
-    */
-  def embeddingIncrementalAuto(newVecs: DataFrame, corpus: DataFrame,
-                               idCol: String, vecCol: String,
-                               threshold: Double, dim: Int,
-                               bands: Int = 16, bitsPerBand: Int = 8,
-                               ordinal: Boolean = false,
-                               admissionDenom: Long = 10L): DataFrame = {
-    require(admissionDenom >= 1, "embeddingIncrementalAuto: admissionDenom must be >= 1")
-    // ONE sketch pass per side (r20, the d2 treatment in cross form): the
-    // pricing bucket counts, the side counts, and — when the banded branch
-    // is chosen — the probe join all read the two persisted sketch frames;
-    // before this each side's sketch pipeline evaluated twice per call.
-    // The counts double as the persists' materialization points.
-    val skB = graft.Caches.persistLoaned(Similarity.sketchedVecs(
-      newVecs, idCol, vecCol, dim, bands, bitsPerBand, ordinal))
-    val skC = graft.Caches.persistLoaned(Similarity.sketchedVecs(
-      corpus, idCol, vecCol, dim, bands, bitsPerBand, ordinal))
-    val allPairs = BigInt(skB.count()) * BigInt(skC.count())
-    val nb = Similarity.lshBucketCountsFromSketched(skB).withColumnRenamed("n", "n_b")
-    val cb = Similarity.lshBucketCountsFromSketched(skC).withColumnRenamed("n", "n_c")
-    val pairCost = nb.join(cb, Seq("band", "bkey"))
-      .agg(sum(col("n_b") * col("n_c"))).head.getAs[Any](0) match {
-        case null => 0L
-        case l: Long => l
-      }
-    if (BigInt(pairCost) * BigInt(admissionDenom) <= allPairs)
-      // the sketch loans stay live for the (lazy) probe — Caches.drain settles
-      embeddingIncrementalBandedSketched(newVecs, skB, skC, idCol, threshold,
-        pricedRows = pairCost)
-    else {
-      // the exact scan never reads the sketches again — settle both now
-      skB.unpersist(); graft.Caches.settled(skB)
-      skC.unpersist(); graft.Caches.settled(skC)
-      embeddingIncrementalExact(newVecs, corpus, idCol, vecCol, threshold)
-    }
   }
 
   // ------------------------------------------------------------------ //
@@ -3026,32 +2985,37 @@ object Dedup {
     newVecs.join(matched, newVecs(idCol) === matched("id_1"), "left_anti")
   }
 
-  /** D5f — embedding near-dup with the physical plan CHOSEN from the
-    * measured band-bucket structure (the d4c→d4d pattern closing the d5e
-    * diagnostic loop): run [[Similarity.lshBandStats]] — one narrow
-    * aggregate, never a join — and compare its priced candidate
-    * evaluations Σ b(b−1)/2 (summed over bands: an upper bound that
-    * counts a cross-band duplicate once per band) against all-pairs
-    * n(n−1)/2. If the bands admit more than `1/admissionDenom` of all
-    * pairs they are NOT discriminating at this parameterization — LSH
+  /** D5b — embedding near-dup pairs at cosine ≥ `threshold` for HIGH
+    * thresholds: banded sketch LSH candidates ([[Similarity.lshCandidates]])
+    * + exact cosine verification. Sub-quadratic candidate generation;
+    * recall follows the sign-LSH S-curve 1-(1-p^r)^L with p = 1 -
+    * acos(cos)/π — pick bands/bits for the target threshold (e.g. 16×8
+    * gives recall ≈ 0.98 at cosine 0.9, and essentially 0 admission of
+    * the ~0.2-background pairs).
+    *
+    * The plan is chosen from the measured band-bucket structure (d5f/d5g,
+    * the d4c→d4d pattern closing the d5e diagnostic loop): one narrow
+    * aggregate ([[Similarity.lshBandStats]]' arithmetic, never a join)
+    * prices the candidate evaluations Σ b(b−1)/2 (summed over bands: an
+    * upper bound that counts a cross-band duplicate once per band)
+    * against all-pairs n(n−1)/2. If the bands admit more than a tenth of
+    * all pairs they are NOT discriminating at this parameterization — LSH
     * there is quadratic-with-extra-steps plus a 28 GB candidate spill
     * (measured at 10×, cosine 0.45 under 32×4 banding) — so the operator
-    * takes [[embeddingNearDups]]'s blocked-exact plan (flat per-task
-    * memory, zero spill at the same probe). Below the ratio the banded
-    * [[embeddingNearDupsLSH]] path wins (sub-quadratic candidates, the
-    * documented S-curve recall).
+    * takes [[embeddingNearDups]]'s blocked-exact plan (full recall, flat
+    * per-task memory, zero spill at the same probe). Otherwise the banded
+    * [[embeddingLshBanded]] plan runs (sub-quadratic candidates, the
+    * S-curve recall), so its result can be a strict SUBSET of the exact
+    * branch's.
     *
-    * The decision is integer arithmetic (`pairCost · admissionDenom ≤
-    * allPairs`, BigInt — no float ties), so an oracle can re-derive the
-    * same choice from the same counts; recall follows the chosen branch:
-    * full for exact, the band S-curve for LSH.
+    * The decision is integer arithmetic (`pairCost · 10 ≤ allPairs`,
+    * BigInt — no float ties), so an oracle can re-derive the same choice
+    * from the same counts.
     */
-  def embedNearDupAuto(df: DataFrame, idCol: String, vecCol: String,
-                       threshold: Double, dim: Int,
-                       bands: Int = 16, bitsPerBand: Int = 8,
-                       ordinal: Boolean = false,
-                       admissionDenom: Long = 10L): DataFrame = {
-    require(admissionDenom >= 1, "embedNearDupAuto: admissionDenom must be >= 1")
+  def embeddingNearDupsLSH(df: DataFrame, idCol: String, vecCol: String,
+                           threshold: Double, dim: Int,
+                           bands: Int = 16, bitsPerBand: Int = 8,
+                           ordinal: Boolean = false): DataFrame = {
     // ONE sketch pass for the whole call (r20, the d2 signature-sharing
     // treatment): the gate's pricing aggregate, the corpus count, and —
     // when the banded branch is chosen — BOTH band-join sides read the
@@ -3075,7 +3039,7 @@ object Dedup {
     val pairCost = if (row.isNullAt(0)) 0L else row.getLong(0)
     val n = if (row.isNullAt(1)) 0L else row.getLong(1) / bands
     val allPairs = BigInt(n) * BigInt(n - 1) / 2
-    if (BigInt(pairCost) * BigInt(admissionDenom) <= allPairs)
+    if (BigInt(pairCost) * BigInt(AdmissionDenom) <= allPairs)
       // the banded branch rides the gate's own pricing: pairCost IS the
       // admitted candidate volume, so the verify exchanges run at the
       // kernel width it implies instead of the session default. The sketch
@@ -3088,41 +3052,18 @@ object Dedup {
     }
   }
 
-  /** High-threshold variant: banded sign-sketch LSH candidates
-    * ([[Similarity.lshCandidates]]) + exact cosine verification. Sub-
-    * quadratic candidate generation; recall follows the sign-LSH S-curve
-    * 1-(1-p^r)^L with p = 1 - acos(cos)/π — pick bands/bits for the target
-    * threshold (e.g. 16×8 gives recall ≈ 0.98 at cosine 0.9, and
-    * essentially 0 admission of the ~0.2-background pairs).
-    *
-    * By default this plain name ROUTES THROUGH the measured admission gate
-    * ([[embedNearDupAuto]], d5f/d5g): near the cosine background the bands
-    * stop pruning and the banded path degenerates (28 GB candidate spill
-    * measured at 10×, cosine 0.45 under 32×4) — the gate prices the
-    * admission with one narrow aggregate and falls back to the
-    * blocked-exact plan (full recall, flat task memory) when the bands
-    * would not discriminate. `unbounded = true` forces the banded plan
-    * regardless — the S-curve-recall reference regime for callers who
-    * know their threshold sits on the pruning side; its result can be a
-    * strict SUBSET of the default's (the exact branch has full recall).
+  /** The LSH gates' admission bound: the banded plan runs only when its
+    * priced candidate evaluations are at most 1/AdmissionDenom of the
+    * exact plan's (all-pairs for [[embeddingNearDupsLSH]], batch×corpus
+    * for [[embeddingIncremental]]).
     */
-  def embeddingNearDupsLSH(df: DataFrame, idCol: String, vecCol: String,
-                           threshold: Double, dim: Int,
-                           bands: Int = 16, bitsPerBand: Int = 8,
-                           ordinal: Boolean = false,
-                           unbounded: Boolean = false,
-                           admissionDenom: Long = 10L): DataFrame =
-    if (unbounded)
-      embeddingLshBanded(df, idCol, vecCol, threshold, dim, bands, bitsPerBand, ordinal)
-    else
-      embedNearDupAuto(df, idCol, vecCol, threshold, dim, bands, bitsPerBand,
-        ordinal, admissionDenom)
+  private val AdmissionDenom = 10L
 
-  /** The banded self-join LSH body ([[embeddingNearDupsLSH]]'s
-    * `unbounded = true` plan; [[embedNearDupAuto]]'s under-gate branch).
+  /** The banded self-join LSH body: [[embeddingNearDupsLSH]]'s under-gate
+    * branch, and the reference the d5b row and the specs call directly.
     *
     * Two physical shapes, same relation:
-    *   - `pricedRows = 0` (the unbounded reference regime): distinct the
+    *   - `pricedRows = 0` (the reference regime): distinct the
     *     candidate pairs first, then join both vectors on — each cosine
     *     evaluates exactly once, but EVERY candidate carries two 256-byte
     *     vectors through id-keyed exchanges.
@@ -3140,7 +3081,7 @@ object Dedup {
     *     and the band exchanges spread at [[kernelWidth]] so per-task
     *     in-join work stays at the quantum.
     */
-  private def embeddingLshBanded(df: DataFrame, idCol: String, vecCol: String,
+  private[graft] def embeddingLshBanded(df: DataFrame, idCol: String, vecCol: String,
                                  threshold: Double, dim: Int, bands: Int,
                                  bitsPerBand: Int, ordinal: Boolean,
                                  pricedRows: Long = 0L): DataFrame =

@@ -319,6 +319,38 @@ object StreamOps {
       .withColumn("fingerprint", graft.functions.Text.fingerprint(col(textCol)))
       .join(index.select("fingerprint"), Seq("fingerprint"), "left_anti")
 
+  /** The plain two-operator plan behind [[asofJoinStreaming]]: the same
+    * relation with `user_id` alone as the join key. Its per-key state scan
+    * ran 88 min without completing on the 1000× key-dense probe, where
+    * the sliced plan finishes in ~91 s (and is 8.6× faster even at 100×),
+    * so the public entry always slices. The e6/e6b rows and the specs call
+    * this plan directly as the reference the sliced one is pinned against.
+    */
+  private[graft] def asofJoinStreamingPlain(purchases: DataFrame, clicks: DataFrame,
+                                            horizonUs: Long, watermark: String,
+                                            joinType: String = "inner"): DataFrame = {
+    require(horizonUs > 0, "asofJoinStreaming: horizon must be positive")
+    require(joinType == "inner" || joinType == "left_outer",
+      s"asofJoinStreaming: unsupported join type '$joinType'")
+    val p = purchases.select(col("event_id").as("p_event_id"), col("user_id"),
+        col("ts_us").as("p_ts_us"), timestamp_micros(col("ts_us")).as("p_time"))
+      .withWatermark("p_time", watermark)
+    val c = clicks.select(col("event_id").as("c_event_id"),
+        col("user_id").as("c_user_id"), col("ts_us").as("c_ts_us"),
+        timestamp_micros(col("ts_us")).as("c_time"))
+      .withWatermark("c_time", watermark)
+    p.join(c,
+        col("user_id") === col("c_user_id") &&
+          col("c_time") <= col("p_time") &&
+          col("c_time") >= col("p_time") - expr(s"INTERVAL $horizonUs MICROSECOND"),
+        joinType)
+      .groupBy(col("p_time"), col("p_event_id"), col("user_id"), col("p_ts_us"))
+      .agg(max(struct(col("c_ts_us"), col("c_event_id"))).as("_best"))
+      .select(col("p_event_id").as("event_id"), col("user_id"),
+        col("p_ts_us").as("ts_us"), col("_best.c_event_id").as("r_event_id"),
+        col("_best.c_ts_us").as("r_ts_us"))
+  }
+
   /** E6 — STREAM-STREAM AS-OF JOIN: for each left-stream (purchase) event,
     * the LATEST right-stream (click) event of the same user at or before
     * it, looking back at most `horizonUs` — the j3 as-of shape as two
@@ -351,59 +383,10 @@ object StreamOps {
     * still arrive (emit-on-timeout — the join holds the row, the
     * downstream aggregate sees its single null-click row and max() of the
     * one all-null struct passes the nulls through).
-    */
-  /** By default this plain name ROUTES THROUGH the key-dense-safe sliced
-    * form ([[asofJoinStreamingSliced]], e6c) — the two are bit-identical
-    * (spec-pinned, shared oracle), and the sliced plan is the one with a
-    * measured completion at every probed scale (the plain form's per-key
-    * state scan ran 88 min without completing on the 1000× key-dense
-    * probe; the sliced form finishes it in ~91 s and is 8.6× faster even
-    * at 100×). `sliced = false` pins the plain two-operator reference
-    * plan — the regime the e6/e6b gate rows deliberately exercise.
     *
-    * CHECKPOINT COMPATIBILITY: the sliced plan has a DIFFERENT stateful
-    * topology than the plain one (purchase-side slice explode, an extra
-    * slice column in the join key, different join/aggregate state
-    * schemas), so a query checkpointed under the pre-sliced default (or
-    * under `sliced = false`) CANNOT resume onto the sliced plan — Spark's
-    * state-schema validation rejects the restart (and a validation gap
-    * would silently mis-join). To restart an existing query from its
-    * checkpoint, pin `sliced = false`; to migrate to the sliced plan,
-    * start a fresh checkpoint (replay the source — the relation is
-    * bit-identical, so the sink contents carry over unchanged).
-    */
-  def asofJoinStreaming(purchases: DataFrame, clicks: DataFrame,
-                        horizonUs: Long, watermark: String,
-                        joinType: String = "inner",
-                        sliced: Boolean = true): DataFrame = {
-    if (sliced)
-      return asofJoinStreamingSliced(purchases, clicks, horizonUs, watermark,
-        joinType)
-    require(horizonUs > 0, "asofJoinStreaming: horizon must be positive")
-    require(joinType == "inner" || joinType == "left_outer",
-      s"asofJoinStreaming: unsupported join type '$joinType'")
-    val p = purchases.select(col("event_id").as("p_event_id"), col("user_id"),
-        col("ts_us").as("p_ts_us"), timestamp_micros(col("ts_us")).as("p_time"))
-      .withWatermark("p_time", watermark)
-    val c = clicks.select(col("event_id").as("c_event_id"),
-        col("user_id").as("c_user_id"), col("ts_us").as("c_ts_us"),
-        timestamp_micros(col("ts_us")).as("c_time"))
-      .withWatermark("c_time", watermark)
-    p.join(c,
-        col("user_id") === col("c_user_id") &&
-          col("c_time") <= col("p_time") &&
-          col("c_time") >= col("p_time") - expr(s"INTERVAL $horizonUs MICROSECOND"),
-        joinType)
-      .groupBy(col("p_time"), col("p_event_id"), col("user_id"), col("p_ts_us"))
-      .agg(max(struct(col("c_ts_us"), col("c_event_id"))).as("_best"))
-      .select(col("p_event_id").as("event_id"), col("user_id"),
-        col("p_ts_us").as("ts_us"), col("_best.c_event_id").as("r_event_id"),
-        col("_best.c_ts_us").as("r_ts_us"))
-  }
-
-  /** E6c — the KEY-DENSE form of [[asofJoinStreaming]]: same relation,
-    * join key sub-bucketed by a TIME SLICE so per-key state stays bounded
-    * on streams whose hot keys accumulate many in-horizon values.
+    * E6c — the join key is sub-bucketed by a TIME SLICE so per-key state
+    * stays bounded on streams whose hot keys accumulate many in-horizon
+    * values.
     *
     * Why: Spark's stream-stream join state
     * (`SymmetricHashJoinStateManager`) keeps one value LIST per join key
@@ -427,8 +410,8 @@ object StreamOps {
     * (no duplicates to the downstream latest-click aggregate, which also
     * collapses the exploded purchase rows back to one output row). The
     * time-interval condition is unchanged, so the relation bit-matches
-    * [[asofJoinStreaming]] — spec-pinned, and the e6c oracle row gates it
-    * against the same SQL as e6.
+    * [[asofJoinStreamingPlain]] — spec-pinned, and the e6c oracle row
+    * gates it against the same SQL as e6.
     *
     * Cost: the left stream amplifies `horizonUs/sliceUs + 1`× (2× at the
     * default `sliceUs = horizonUs`); the right stream adds one bigint
@@ -439,14 +422,14 @@ object StreamOps {
     * truncation — pre-1970 timestamps slice consistently with the window
     * family's FLOOR semantics.
     */
-  def asofJoinStreamingSliced(purchases: DataFrame, clicks: DataFrame,
-                              horizonUs: Long, watermark: String,
-                              joinType: String = "inner",
-                              sliceUs: Long = 0L): DataFrame = {
-    require(horizonUs > 0, "asofJoinStreamingSliced: horizon must be positive")
+  def asofJoinStreaming(purchases: DataFrame, clicks: DataFrame,
+                        horizonUs: Long, watermark: String,
+                        joinType: String = "inner",
+                        sliceUs: Long = 0L): DataFrame = {
+    require(horizonUs > 0, "asofJoinStreaming: horizon must be positive")
     require(joinType == "inner" || joinType == "left_outer",
-      s"asofJoinStreamingSliced: unsupported join type '$joinType'")
-    require(sliceUs >= 0, "asofJoinStreamingSliced: sliceUs must be >= 0")
+      s"asofJoinStreaming: unsupported join type '$joinType'")
+    require(sliceUs >= 0, "asofJoinStreaming: sliceUs must be >= 0")
     val s = if (sliceUs > 0) sliceUs else horizonUs
     // exact long floor-div, PURE integer arithmetic: (x - pmod(x, s)) is
     // divisible by s, and SQL `div` is integral division on longs — no
@@ -476,7 +459,7 @@ object StreamOps {
         col("_best.c_ts_us").as("r_ts_us"))
   }
 
-  /** E6e — the KEY-DENSITY diagnostic behind [[asofJoinStreamingSliced]]'s
+  /** E6e — the KEY-DENSITY diagnostic behind [[asofJoinStreaming]]'s
     * slice width (the d4c/d9c/d5e pattern applied to streaming state: a
     * cheap measured relation the plan choice consumes, instead of a
     * guessed knob): for each rung of a halving slice ladder starting at
@@ -531,7 +514,7 @@ object StreamOps {
       .filter(s => s > 0 && horizonUs % s == 0)
       .map(s => (s, horizonUs / s + 1))
 
-  /** Derive [[asofJoinStreamingSliced]]'s `sliceUs` from measured key
+  /** Derive [[asofJoinStreaming]]'s `sliceUs` from measured key
     * density instead of guessing: the LARGEST ladder rung whose maximum
     * per-(key, slice) occupancy stays within `maxPerSlot` — widest slice
     * (least left-stream amplification) that still bounds the per-key

@@ -70,8 +70,8 @@ class DedupSpec extends SparkTestBase {
       df.select("id_1", "id_2", "jaccard").as[(Long, Long, Double)].collect().toSet
     // the guard prices and admits — it must never change the relation
     val guarded = rows(Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2, maxDf = 50))
-    val reference = rows(Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2, maxDf = 50,
-      unbounded = true))
+    val reference = rows(Dedup.ngramJaccardPairsSparseUnguarded(docs, "doc_id", "text", 3, 0.2,
+      maxDf = 50))
     assert(guarded == reference, "guard admission must be relation-neutral")
     // STAGE 1 (sampled quick refusal): guardPairs = 0 puts any non-zero
     // estimate past the 4x escalation band, so the refusal comes from the
@@ -83,7 +83,9 @@ class DedupSpec extends SparkTestBase {
         guardPairs = 0L, quickPriceMinDocs = 0L).count()
     }
     assert(e.getMessage.contains("ESTIMATED"), s"quick stage refuses: ${e.getMessage}")
-    assert(e.getMessage.contains("unbounded"), "escape hatch named in message")
+    Seq("ngramJaccardPairsSparseAuto", "lower maxDf", "guardPairs").foreach { escape =>
+      assert(e.getMessage.contains(escape), s"escape '$escape' named in message")
+    }
     // STAGE 2 (exact refusal): a guard just below the true bill keeps the
     // estimate inside the 4x band, so the call escalates to the exact
     // histogram and refuses on the exact number
@@ -102,6 +104,9 @@ class DedupSpec extends SparkTestBase {
     assert(e2.getMessage.contains(s"prices $cum candidate"),
       s"exact stage refuses with the exact bill: ${e2.getMessage}")
     assert(!e2.getMessage.contains("ESTIMATED"), "exact refusal, not the sampled stage")
+    Seq("ngramJaccardPairsSparseAuto", "lower maxDf", "guardPairs").foreach { escape =>
+      assert(e2.getMessage.contains(escape), s"escape '$escape' named in message")
+    }
     // either refusal releases its evidence caches — a refused call must
     // leave no new persists behind
     assert((spark.sparkContext.getPersistentRDDs.keySet -- baseline).isEmpty,
@@ -112,27 +117,27 @@ class DedupSpec extends SparkTestBase {
     // the loan-pattern contract lives on the >=3-read consumers; the
     // blocked two-read path (ngramJaccardPairs) deliberately builds its
     // sets inline with NO cache — BENCH_SCALE.md round 11. Pinned on the
-    // unbounded reference plan: the guarded default adds its own
+    // unguarded reference plan: the guarded entry adds its own
     // evidence caches whose settle recompiles the result's cache entry
     // (the d4d lifecycle, covered by its own tests).
     spark.sparkContext.getPersistentRDDs.size // force lazy init
     def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
     val baseline = cachedIds
-    val res = Dedup.ngramJaccardPairsSparse(corpus, "doc_id", "text", 2, 0.1,
-      maxDf = 1000, releaseSets = true, unbounded = true)
+    val res = Dedup.ngramJaccardPairsSparseUnguarded(corpus, "doc_id", "text", 2, 0.1,
+      maxDf = 1000, releaseSets = true)
     val afterBuild = cachedIds -- baseline
     // exactly the result's own persist remains, never the sets'
     assert(afterBuild.size == 1,
       s"one owned persist (the materialized pairs) expected, got ${afterBuild.size}")
     // the eager materialization means the result survives the release
     assert(res.count() ==
-      Dedup.ngramJaccardPairsSparse(corpus, "doc_id", "text", 2, 0.1, maxDf = 1000,
-        unbounded = true).count())
+      Dedup.ngramJaccardPairsSparseUnguarded(corpus, "doc_id", "text", 2, 0.1,
+        maxDf = 1000).count())
     res.unpersist(blocking = true)
     assert((cachedIds -- baseline).isEmpty, "no lingering cache after the caller unpersists")
     // lazy default still leaves the sets cache in place (documented trade)
-    Dedup.ngramJaccardPairsSparse(corpus, "doc_id", "text", 2, 0.1, maxDf = 1000,
-      unbounded = true).count()
+    Dedup.ngramJaccardPairsSparseUnguarded(corpus, "doc_id", "text", 2, 0.1,
+      maxDf = 1000).count()
     assert((cachedIds -- baseline).nonEmpty)
     spark.sharedState.cacheManager.clearCache()
   }
@@ -180,7 +185,7 @@ class DedupSpec extends SparkTestBase {
 
   test("minhashNearDups: bloom-pruned verify branch equals the plain verify (D2 1000× regime)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    def run(minRows: Long) = Dedup.minhashNearDups(docs, "doc_id", "text", 0.5,
+    def run(minRows: Long) = Dedup.minhashNearDupsPlain(docs, "doc_id", "text", 0.5,
       pruneVerifyMinRows = minRows)
       .select("id_1", "id_2", "jaccard").as[(Long, Long, Double)].collect().toSet
     // minRows = 0 forces the WHOLE big-corpus path a >=1M-doc corpus
@@ -202,30 +207,17 @@ class DedupSpec extends SparkTestBase {
     val union = docs.unionByName(dups)
     def pairs(frame: org.apache.spark.sql.DataFrame) =
       frame.select("id_1", "id_2", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val plain = pairs(Dedup.minhashNearDups(union, "doc_id", "text", 0.5))
+    val plain = pairs(Dedup.minhashNearDupsPlain(union, "doc_id", "text", 0.5))
     val collapsed = pairs(Dedup.minhashNearDupsCollapsed(union, "doc_id", "text", 0.5))
     assert(collapsed == plain,
       "collapse-then-expand must be result-identical to the plain LSH")
-  }
-
-  test("minhashNearDupsCollapsed: expand=false returns class representatives only (D2f)") {
-    val reps = Dedup.minhashNearDupsCollapsed(corpus, "doc_id", "text", 0.5, n = 2,
-      expand = false)
-      .select("id_1", "id_2").as[(Long, Long)].collect().toSet
-    // 1 and 6 are the same normalized token sequence (class rep = 1), so 6
-    // never appears; the 1↔2 near-dup survives between representatives
-    assert(reps.forall { case (a, b) => a != 6L && b != 6L },
-      "non-representative members must not appear in the collapsed relation")
-    assert(reps.contains((1L, 2L)), "cross-class near-dup pairs must survive")
-    // note doc 3 differs from doc 1 in the shingle view (case-only dup but
-    // punctuated), so it is its own class
   }
 
   test("minhashNearDupsCollapsed: identical short texts (< n words) emit no pair, like the plain path (D2f)") {
     val shorts = Seq((1L, "two words"), (2L, "two words"), (3L, "")).toDF("doc_id", "text")
     assert(Dedup.minhashNearDupsCollapsed(shorts, "doc_id", "text", 0.5).count() == 0L,
       "empty shingle sets score 0 in the plain verify — the expansion must agree")
-    assert(Dedup.minhashNearDups(shorts, "doc_id", "text", 0.5).count() == 0L)
+    assert(Dedup.minhashNearDupsPlain(shorts, "doc_id", "text", 0.5).count() == 0L)
   }
 
   test("minhashNearDups: no false positives; full recall on high-jaccard pairs (D2)") {
@@ -317,7 +309,7 @@ class DedupSpec extends SparkTestBase {
     for (n <- Seq(1, 3)) {
       val got = Dedup.minhashNearDupsCollapsed(docs, "doc_id", "text", 0.5, n = n)
         .select("id_1", "id_2").as[(Long, Long)].collect().toSet
-      val want = Dedup.minhashNearDups(docs, "doc_id", "text", 0.5, n = n)
+      val want = Dedup.minhashNearDupsPlain(docs, "doc_id", "text", 0.5, n = n)
         .select("id_1", "id_2").as[(Long, Long)].collect().toSet
       // pre-fix, the null doc shared the empty doc's md5("") fingerprint and
       // n=1 emitted (3,4) at jaccard 1.0 — a pair the plain path scores 0
@@ -448,8 +440,8 @@ class DedupSpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val exact = Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.45)
       .select("id_1", "id_2").as[(Long, Long)].collect().toSet
-    val lsh = Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding", 0.45,
-      dim = 64, bands = 32, bitsPerBand = 4, unbounded = true)
+    val lsh = Dedup.embeddingLshBanded(emb, "vec_id", "embedding", 0.45,
+      dim = 64, bands = 32, bitsPerBand = 4, ordinal = false)
       .select("id_1", "id_2").as[(Long, Long)].collect().toSet
     assert(lsh.subsetOf(exact), "exact verification stage forbids false positives")
     val recall = if (exact.isEmpty) 1.0 else lsh.size.toDouble / exact.size
@@ -458,8 +450,8 @@ class DedupSpec extends SparkTestBase {
 
     // the ordinal (oracle-checkable) sketch family shares the same
     // collision S-curve — same banding must deliver comparable recall
-    val ord = Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding", 0.45,
-      dim = 64, bands = 32, bitsPerBand = 4, ordinal = true, unbounded = true)
+    val ord = Dedup.embeddingLshBanded(emb, "vec_id", "embedding", 0.45,
+      dim = 64, bands = 32, bitsPerBand = 4, ordinal = true)
       .select("id_1", "id_2").as[(Long, Long)].collect().toSet
     assert(ord.subsetOf(exact), "ordinal path: exact verify forbids false positives")
     val ordRecall = if (exact.isEmpty) 1.0 else ord.size.toDouble / exact.size
@@ -507,47 +499,26 @@ class DedupSpec extends SparkTestBase {
     assert(cand.contains((1L, 3L)), "reordered doc collides in token space")
   }
 
-  test("fuzzyNearDups: unbounded = true rejects gated-only arguments instead of ignoring them") {
-    val docs = Seq((1L, "one document"), (2L, "two document")).toDF("doc_id", "text")
-    // pairsPerDoc and release parameterize the gated default only — the
-    // unbounded plan has no admission budget and persists nothing it could
-    // release, so silently accepting them would misrepresent what ran
-    val e1 = intercept[IllegalArgumentException] {
-      Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 5,
-        unbounded = true, release = true)
-    }
-    assert(e1.getMessage.contains("gated default"))
-    val e2 = intercept[IllegalArgumentException] {
-      Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 5,
-        unbounded = true, pairsPerDoc = 8)
-    }
-    assert(e2.getMessage.contains("gated default"))
-    // the defaults stay accepted on the unbounded branch (the pinned
-    // reference regime the d9b gate rows exercise)
-    assert(Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 5,
-      unbounded = true).columns.contains("edit_dist"))
-  }
-
   test("embedNearDupAuto picks the branch the measured admission dictates (D5f/D5g)") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id_1", "id_2", "cosine").as[(Long, Long, Double)].collect().toSet
     // 32×4 bands price above the 1/10 admission gate → the blocked-exact
     // branch (full recall) must come back bit-for-bit
-    val auto = rows(Dedup.embedNearDupAuto(emb, "vec_id", "embedding", 0.45,
+    val auto = rows(Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding", 0.45,
       dim = 64, bands = 32, bitsPerBand = 4, ordinal = true))
     val exact = rows(Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.45))
     assert(auto == exact, "over-gate admission must take the exact branch")
     // 16×8 bands price under the gate → the LSH branch (S-curve recall)
-    val autoLsh = rows(Dedup.embedNearDupAuto(emb, "vec_id", "embedding", 0.45,
+    val autoLsh = rows(Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding", 0.45,
       dim = 64, bands = 16, bitsPerBand = 8, ordinal = true))
-    val lsh = rows(Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding", 0.45,
-      dim = 64, bands = 16, bitsPerBand = 8, ordinal = true, unbounded = true))
+    val lsh = rows(Dedup.embeddingLshBanded(emb, "vec_id", "embedding", 0.45,
+      dim = 64, bands = 16, bitsPerBand = 8, ordinal = true))
     assert(autoLsh == lsh, "under-gate admission must take the LSH branch")
     assert(lsh.subsetOf(exact) && lsh != exact,
       "the two branches are genuinely different plans on this fixture")
     // degenerate frames choose without crashing
-    assert(Dedup.embedNearDupAuto(emb.limit(1), "vec_id", "embedding", 0.45,
+    assert(Dedup.embeddingNearDupsLSH(emb.limit(1), "vec_id", "embedding", 0.45,
       dim = 64, bands = 4, bitsPerBand = 4, ordinal = true).count() == 0)
   }
 
@@ -604,15 +575,15 @@ class DedupSpec extends SparkTestBase {
       df.select("vec_id").as[Long].collect().toSet
     // 32×4: cross-admission over the gate → the bounded-broadcast exact
     // scan; its result is definitionally the exact kept-set
-    val auto = ids(Dedup.embeddingIncrementalAuto(batch, corp, "vec_id", "embedding",
+    val auto = ids(Dedup.embeddingIncremental(batch, corp, "vec_id", "embedding",
       0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true))
     val exact = ids(Dedup.embeddingIncrementalExact(batch, corp, "vec_id", "embedding", 0.45))
     assert(auto == exact, "over-gate cross-admission must take the exact branch")
     // 16×8: under the gate → the banded probe (S-curve recall)
-    val autoLsh = ids(Dedup.embeddingIncrementalAuto(batch, corp, "vec_id", "embedding",
+    val autoLsh = ids(Dedup.embeddingIncremental(batch, corp, "vec_id", "embedding",
       0.45, dim = 64, bands = 16, bitsPerBand = 8, ordinal = true))
-    val lsh = ids(Dedup.embeddingIncremental(batch, corp, "vec_id", "embedding",
-      0.45, dim = 64, bands = 16, bitsPerBand = 8, ordinal = true, unbounded = true))
+    val lsh = ids(Dedup.embeddingIncrementalBanded(batch, corp, "vec_id", "embedding",
+      0.45, dim = 64, bands = 16, bitsPerBand = 8, ordinal = true))
     assert(autoLsh == lsh, "under-gate cross-admission must take the banded probe")
     // the exact scan is the recall ceiling: every exact-kept id survives
     // the (possibly recall-lossy) banded probe too
@@ -635,8 +606,7 @@ class DedupSpec extends SparkTestBase {
 
   test("fuzzyNearDupsBudget: unbounded budget reproduces fuzzyNearDups bit-for-bit (D9b)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val full = Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 40,
-        unbounded = true)
+    val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect().toSet
     val unbounded = Dedup.fuzzyNearDupsBudget(docs, "doc_id", "text",
       maxDist = 40, budgetPairs = Long.MaxValue)
@@ -646,8 +616,7 @@ class DedupSpec extends SparkTestBase {
 
   test("fuzzyNearDupsBudget: a binding budget prunes a subset, keeps exact distances (D9b)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val full = Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 40,
-        unbounded = true)
+    val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect()
       .map(t => ((t._1, t._2), t._3)).toMap
     val capped = Dedup.fuzzyNearDupsBudget(docs, "doc_id", "text",
@@ -662,30 +631,28 @@ class DedupSpec extends SparkTestBase {
 
   test("fuzzyNearDupsAuto: non-binding gate takes the unbounded plan, identical result (D9e)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val full = Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 40,
-        unbounded = true)
+    val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect().toSet
     // fixture: total within-cell cost ~4k ≤ 64 × 500 docs — the gate must
-    // pick the unbounded branch and the result must be bit-identical
-    val auto = Dedup.fuzzyNearDupsAuto(docs, "doc_id", "text", maxDist = 40,
+    // pick the full-admission branch and the result must be bit-identical
+    val auto = Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 40,
       pairsPerDoc = 64L)
       .as[(Long, Long, Long)].collect().toSet
-    assert(auto == full, "non-binding budget ⇒ identical to the unbounded plan")
+    assert(auto == full, "non-binding budget ⇒ identical to the full-admission plan")
   }
 
   test("fuzzyNearDupsAuto: binding gate equals fuzzyNearDupsBudget at the derived budget (D9e)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val nDocs = docs.count()
     // pairsPerDoc = 1 forces the capped branch (total cost ~4k > 500)
-    val auto = Dedup.fuzzyNearDupsAuto(docs, "doc_id", "text", maxDist = 40,
+    val auto = Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 40,
       pairsPerDoc = 1L)
       .as[(Long, Long, Long)].collect().toSet
     val budget = Dedup.fuzzyNearDupsBudget(docs, "doc_id", "text",
       maxDist = 40, budgetPairs = nDocs)
       .as[(Long, Long, Long)].collect().toSet
     assert(auto == budget, "binding branch must equal the budget entry at pairsPerDoc × nDocs")
-    val full = Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 40,
-        unbounded = true)
+    val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect().toSet
     assert(auto.subsetOf(full) && auto != full,
       "the binding cap must actually prune on the fixture (subset, not equal)")
@@ -807,8 +774,8 @@ class DedupSpec extends SparkTestBase {
       Dedup.readEmbeddingIndex(spark, s"$dir/emb"), "vec_id", "embedding",
       0.9, dim = 4, bands = 16, bitsPerBand = 2)
       .select("vec_id").as[Long].collect().toSet
-    val embDirect = Dedup.embeddingIncremental(vbatch, vcorp, "vec_id", "embedding",
-      0.9, dim = 4, bands = 16, bitsPerBand = 2, unbounded = true)
+    val embDirect = Dedup.embeddingIncrementalBanded(vbatch, vcorp, "vec_id", "embedding",
+      0.9, dim = 4, bands = 16, bitsPerBand = 2, ordinal = false)
       .select("vec_id").as[Long].collect().toSet
     assert(emb == embDirect && emb == Set(2L), s"embedding replay diverged: $emb vs $embDirect")
   }
@@ -898,9 +865,9 @@ class DedupSpec extends SparkTestBase {
       Dedup.readEmbeddingIndex(spark, em), "vec_id", "embedding", 0.9, dim = 4,
       bands = 16, bitsPerBand = 2)
       .select("vec_id").as[Long].collect().toSet
-    val vRebuilt = Dedup.embeddingIncremental(v3,
+    val vRebuilt = Dedup.embeddingIncrementalBanded(v3,
       v1.union(v2.filter(col("vec_id") === 202L)), "vec_id", "embedding", 0.9,
-      dim = 4, bands = 16, bitsPerBand = 2, unbounded = true)
+      dim = 4, bands = 16, bitsPerBand = 2, ordinal = false)
       .select("vec_id").as[Long].collect().toSet
     assert(vUpdated == vRebuilt && vUpdated == Set(302L),
       s"embedding updated-index probe $vUpdated != rebuild $vRebuilt")
@@ -1057,7 +1024,7 @@ class DedupSpec extends SparkTestBase {
 
   test("minhashNearDupPairsFromIndex bit-matches the one-shot self-join (S5j2 input)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val oneShot = Dedup.minhashNearDups(docs, "doc_id", "text", 0.5)
+    val oneShot = Dedup.minhashNearDupsPlain(docs, "doc_id", "text", 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val fromIndex = Dedup.minhashNearDupPairsFromIndex(
       Dedup.buildMinhashIndex(docs, "doc_id", "text"), "doc_id", 0.5)
@@ -1106,23 +1073,24 @@ class DedupSpec extends SparkTestBase {
 
   test("minhashNearDupsAuto: both branches equal the plain result; the gate picks by measured dup share (D2g)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val dups = docs.filter(col("doc_id") % 4 === 0)
-      .withColumn("doc_id", col("doc_id") + 1000000L)
-    val corpus = docs.unionByName(dups) // dup share 1/5 = 0.2
+    // every doc re-enters twice: dup share 2/3, well above the 0.2 gate
+    val dups = docs.withColumn("doc_id", col("doc_id") + 1000000L)
+      .unionByName(docs.withColumn("doc_id", col("doc_id") + 2000000L))
+    val corpus = docs.unionByName(dups)
     def pairs(df: DataFrame) = df.select("id_1", "id_2", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
-    val plain = pairs(Dedup.minhashNearDups(corpus, "doc_id", "text", 0.5))
-    // gate below the share -> collapsed branch; above -> plain branch;
-    // both must equal the plain relation exactly
-    val viaCollapsed = pairs(Dedup.minhashNearDupsAuto(corpus, "doc_id", "text", 0.5,
-      dupFracGate = 0.1))
-    val viaPlain = pairs(Dedup.minhashNearDupsAuto(corpus, "doc_id", "text", 0.5,
-      dupFracGate = 0.9))
-    assert(viaCollapsed == plain, "collapsed branch must bit-match the plain relation")
-    assert(viaPlain == plain, "plain branch is the plain relation")
-    // the unique-corpus case takes the plain branch and stays correct
-    assert(pairs(Dedup.minhashNearDupsAuto(docs, "doc_id", "text", 0.5)) ==
-      pairs(Dedup.minhashNearDups(docs, "doc_id", "text", 0.5)))
+    // the branch is read off the plan: only the collapsed body carries the
+    // class fingerprint (`_fp`) through the query
+    def collapsed(df: DataFrame) =
+      df.queryExecution.analyzed.toString.contains("_fp")
+    val heavy = Dedup.minhashNearDups(corpus, "doc_id", "text", 0.5)
+    assert(collapsed(heavy), "a dup share over the gate must take the collapsed branch")
+    assert(pairs(heavy) == pairs(Dedup.minhashNearDupsPlain(corpus, "doc_id", "text", 0.5)),
+      "collapsed branch must bit-match the plain relation")
+    // the unique corpus takes the plain branch and stays correct
+    val unique = Dedup.minhashNearDups(docs, "doc_id", "text", 0.5)
+    assert(!collapsed(unique), "a near-unique corpus must take the plain branch")
+    assert(pairs(unique) == pairs(Dedup.minhashNearDupsPlain(docs, "doc_id", "text", 0.5)))
   }
 
   test("shingleDfStatsSampled: rate=1 equals the exact histogram; sampled rate equals the histogram of the sample (D4e)") {
@@ -1190,38 +1158,38 @@ class DedupSpec extends SparkTestBase {
   test("plain names default into their auto gates (r14 #1): plain == auto bit-for-bit; unbounded = true restores the reference plan") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    // d9: plain == auto (the gate, not the raw banded join, is the default)
+    // each public name returns one of its reference plans, picked by its
+    // gate from the input; the reference plans stay callable in graft
+    // d9: the fixture's within-cell cost fits the budget → full admission
     def fz(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
     assert(fz(Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 40)) ==
-      fz(Dedup.fuzzyNearDupsAuto(docs, "doc_id", "text", maxDist = 40)),
-      "plain fuzzyNearDups must be the d9e auto gate")
+      fz(Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)),
+      "fuzzyNearDups under a non-binding budget is the full-admission plan")
     // d5: at 0.45 under 32x4 the gate prices OVER 1/10 admission, so the
-    // plain name must return the exact branch — a strict SUPERSET of the
-    // unbounded banded relation on this fixture
+    // public name must return the exact branch — a strict SUPERSET of the
+    // banded relation on this fixture
     def pr(df: org.apache.spark.sql.DataFrame) =
       df.select("id_1", "id_2").as[(Long, Long)].collect().toSet
-    val plainLsh = pr(Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding",
+    val gatedLsh = pr(Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding",
       0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true))
-    assert(plainLsh == pr(Dedup.embedNearDupAuto(emb, "vec_id", "embedding",
-      0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true)),
-      "plain embeddingNearDupsLSH must be the d5f/d5g auto gate")
-    val banded = pr(Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding",
-      0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true,
-      unbounded = true))
-    assert(banded.subsetOf(plainLsh),
-      "unbounded banded recall can never exceed the exact branch")
-    assert(plainLsh == pr(Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.45)),
+    val banded = pr(Dedup.embeddingLshBanded(emb, "vec_id", "embedding",
+      0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true))
+    assert(banded.subsetOf(gatedLsh),
+      "banded recall can never exceed the exact branch")
+    assert(gatedLsh == pr(Dedup.embeddingNearDups(emb, "vec_id", "embedding", 0.45)),
       "at 0.45 under 32x4 the gate must have taken the exact branch")
-    // d5 incremental: plain == auto; unbounded restores the banded probe
+    // d5 incremental: same gate in cross form → the exact scan, whose
+    // kept-set is contained in the banded probe's
     val batch = emb.filter(col("vec_id") % 11 === 0)
     val corp = emb.filter(col("vec_id") % 11 =!= 0)
     def ks(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id").as[Long].collect().toSet
-    assert(ks(Dedup.embeddingIncremental(batch, corp, "vec_id", "embedding",
-      0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true)) ==
-      ks(Dedup.embeddingIncrementalAuto(batch, corp, "vec_id", "embedding",
-        0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true)),
-      "plain embeddingIncremental must be the d5h/d5i auto gate")
+    val gatedIncr = ks(Dedup.embeddingIncremental(batch, corp, "vec_id", "embedding",
+      0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true))
+    assert(gatedIncr == ks(Dedup.embeddingIncrementalExact(batch, corp, "vec_id",
+      "embedding", 0.45)), "at 0.45 under 32x4 the gate must take the exact scan")
+    assert(gatedIncr.subsetOf(ks(Dedup.embeddingIncrementalBanded(batch, corp, "vec_id",
+      "embedding", 0.45, dim = 64, bands = 32, bitsPerBand = 4, ordinal = true))))
   }
 }

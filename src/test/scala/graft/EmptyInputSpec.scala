@@ -279,9 +279,9 @@ class EmptyInputSpec extends SparkTestBase {
     // the sampled df diagnostic
     assert(Dedup.shingleDfStatsSampled(emptySrc, "doc_id", "text", 3,
       rate = 0.25).count() == 0)
-    // the fuzzy auto gate: empty histogram -> nDocs 0, budget 0, total 0
-    // -> unbounded branch over nothing (must not divide, throw, or emit)
-    assert(Dedup.fuzzyNearDupsAuto(emptySrc, "doc_id", "text", maxDist = 40)
+    // the fuzzy gate: empty histogram -> nDocs 0, budget 0, total 0
+    // -> full-admission branch over nothing (must not divide, throw, or emit)
+    assert(Dedup.fuzzyNearDups(emptySrc, "doc_id", "text", maxDist = 40)
       .count() == 0)
   }
 
@@ -294,9 +294,9 @@ class EmptyInputSpec extends SparkTestBase {
     // the gated embedding LSH branches with an empty corpus: the gate's
     // pairCost/allPairs are both 0 -> banded branch over nothing
     val emptyVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    assert(Dedup.embedNearDupAuto(emptyVecs, "vec_id", "embedding", 0.45,
+    assert(Dedup.embeddingNearDupsLSH(emptyVecs, "vec_id", "embedding", 0.45,
       dim = 4, bands = 4, bitsPerBand = 2).count() == 0)
-    assert(Dedup.embeddingIncrementalAuto(emptyVecs, emptyVecs, "vec_id",
+    assert(Dedup.embeddingIncremental(emptyVecs, emptyVecs, "vec_id",
       "embedding", 0.45, dim = 4, bands = 4, bitsPerBand = 2).count() == 0)
     // simhash pairs (first-agreeing-chunk form) over nothing
     assert(Dedup.simhashNearDups(emptyDocs, "doc_id", "text").count() == 0)

@@ -295,7 +295,7 @@ class PlanSpec extends SparkTestBase {
     // over the gate → blocked-exact; under → banded LSH; neither may
     // degenerate into an unbounded broadcast loop
     Seq((32, 4), (16, 8)).foreach { case (bands, bits) =>
-      val p = plan(Dedup.embedNearDupAuto(emb, "vec_id", "embedding", 0.45,
+      val p = plan(Dedup.embeddingNearDupsLSH(emb, "vec_id", "embedding", 0.45,
         dim = 64, bands = bands, bitsPerBand = bits, ordinal = true))
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"auto branch at ${bands}x$bits must be blocked or banded:\n$p")

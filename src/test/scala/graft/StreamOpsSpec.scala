@@ -454,10 +454,10 @@ class StreamOpsSpec extends SparkTestBase {
     // groups flush within the AvailableNow run (non-joining users)
     purchases.addData((-1L, -100L, base + 100000000L))
     clicks.addData((-2L, -200L, base + 100000000L))
-    val out = StreamOps.asofJoinStreaming(
+    val out = StreamOps.asofJoinStreamingPlain(
       purchases.toDF().toDF("event_id", "user_id", "ts_us"),
       clicks.toDF().toDF("event_id", "user_id", "ts_us"),
-      horizonUs = 100L, watermark = "1 second", sliced = false)
+      horizonUs = 100L, watermark = "1 second")
     val q = out.writeStream.format("memory").queryName("e6_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     try {
@@ -480,11 +480,10 @@ class StreamOpsSpec extends SparkTestBase {
     purchases.addData((1L, 1L, base + 25), (2L, 1L, base + 500), (3L, 2L, base + 5))
     purchases.addData((-1L, -100L, base + 100000000L))
     clicks.addData((-2L, -200L, base + 100000000L))
-    val out = StreamOps.asofJoinStreaming(
+    val out = StreamOps.asofJoinStreamingPlain(
       purchases.toDF().toDF("event_id", "user_id", "ts_us"),
       clicks.toDF().toDF("event_id", "user_id", "ts_us"),
-      horizonUs = 100L, watermark = "1 second", joinType = "left_outer",
-      sliced = false)
+      horizonUs = 100L, watermark = "1 second", joinType = "left_outer")
     val q = out.writeStream.format("memory").queryName("e6b_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     try {
@@ -533,10 +532,10 @@ class StreamOpsSpec extends SparkTestBase {
       val (pDf, cDf) = (purchases.toDF().toDF("event_id", "user_id", "ts_us"),
         clicks.toDF().toDF("event_id", "user_id", "ts_us"))
       val df = if (slicedForm)
-        StreamOps.asofJoinStreamingSliced(pDf, cDf, horizonUs = 100L,
+        StreamOps.asofJoinStreaming(pDf, cDf, horizonUs = 100L,
           watermark = "1 second", joinType = jt)
-      else StreamOps.asofJoinStreaming(pDf, cDf, horizonUs = 100L,
-        watermark = "1 second", joinType = jt, sliced = false)
+      else StreamOps.asofJoinStreamingPlain(pDf, cDf, horizonUs = 100L,
+        watermark = "1 second", joinType = jt)
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       try q.processAllAvailable() finally q.stop()
@@ -565,7 +564,7 @@ class StreamOpsSpec extends SparkTestBase {
     purchases.addData((-1L, -100L, base + 100000000L))
     clicks.addData((-2L, -200L, base + 100000000L))
     // slice 30 with horizon 100 → ceil(100/30)+1 = 5 probed slices/purchase
-    val out = StreamOps.asofJoinStreamingSliced(
+    val out = StreamOps.asofJoinStreaming(
       purchases.toDF().toDF("event_id", "user_id", "ts_us"),
       clicks.toDF().toDF("event_id", "user_id", "ts_us"),
       horizonUs = 100L, watermark = "1 second", sliceUs = 30L)
@@ -653,7 +652,7 @@ class StreamOpsSpec extends SparkTestBase {
       purchases.addData(purchRows: _*)
       purchases.addData((-1L, -100L, a + 100000000L))
       clicks.addData((-2L, -200L, a + 100000000L))
-      val df = StreamOps.asofJoinStreamingSliced(
+      val df = StreamOps.asofJoinStreaming(
         purchases.toDF().toDF("event_id", "user_id", "ts_us"),
         clicks.toDF().toDF("event_id", "user_id", "ts_us"),
         horizonUs = horizon, watermark = "1 second", sliceUs = sliceUs)

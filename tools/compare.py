@@ -6,9 +6,13 @@ with the Spark result parquet written by graft.Verify.
 Canonicalization: columns sorted by name, rows sorted by all columns,
 values compared exactly (floats too — both sides round identically).
 
+A query that threw in Verify (an entry in <verifyOutDir>/errors.json) and a
+result dir with no oracle entry each count as a failure, so a stale result
+left by an earlier run cannot pass for a row that failed or went unchecked.
+
 Usage: tools/compare.py <sfDir> <verifyOutDir>
 """
-import json, math, sys
+import json, math, os, sys
 
 import duckdb
 
@@ -34,8 +38,18 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    errors_path = f"{out_dir}/errors.json"
+    errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
     n_ok = n_bad = 0
-    for name in sorted(oracle):
+    for name in sorted(errors):
+        print(f"FAIL {name}: query threw in Verify: {errors[name]}")
+        n_bad += 1
+    for name in sorted(d for d in os.listdir(out_dir)
+                       if os.path.isdir(f"{out_dir}/{d}")
+                       and d not in oracle and d not in errors):
+        print(f"FAIL {name}: result has no oracle entry")
+        n_bad += 1
+    for name in sorted(set(oracle) - set(errors)):
         sql = oracle[name]
         try:
             want = con.execute(sql)
