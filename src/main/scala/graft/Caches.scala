@@ -5,22 +5,23 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-wide ledger of every persist GRAFT created — the release half of
-  * the repo's cache-loan convention.
+/** Session-wide ledger of every persist GRAFT created, and the one rule for
+  * how long it lives: a graft-internal persist is a LOAN that lives until
+  * [[releaseAll]] (one session's loans) or [[drain]] (end of run) calls it
+  * in. No operator takes a per-call switch to end its caches early.
   *
-  * The loan convention (see [[graft.operators.Dedup]]'s `withPersistedSets`)
-  * deliberately leaves some persists alive past the call that created them:
-  * a shared pair cache that three sibling queries re-read, a
-  * budget-bounded result frame whose persist replaces the internal
-  * candidate cache it was materialized from. That is the right trade
-  * DURING a run — unpersisting a shared frame mid-run poisons its sibling
-  * consumers (measured: d6c 0.53→2.30 s with an eager unpersist) — but in a
-  * long-lived session the loans are residue unless someone can call them
-  * all in. This ledger is that someone: every graft-internal
-  * `persist()` whose lifetime extends past its creating call registers via
-  * [[loan]], and [[releaseAll]] unpersists exactly those frames — never a
-  * frame the USER persisted, which a blunt `spark.catalog.clearCache()`
-  * would also destroy.
+  * Operators leave some persists alive past the call that created them: a
+  * shingle-set cache that every verify side re-reads, a shared pair cache
+  * that three sibling queries re-read, a budget-bounded result frame whose
+  * persist replaces the internal candidate cache it was materialized from.
+  * That is the right trade DURING a run — unpersisting a shared frame
+  * mid-run poisons its sibling consumers (measured: d6c 0.53→2.30 s with
+  * an eager unpersist). Every such `persist()` registers via [[loan]] (or
+  * [[persistLoaned]]), and [[releaseAll]] unpersists exactly those frames
+  * — never a frame the USER persisted, which a blunt
+  * `spark.catalog.clearCache()` would also destroy. An operator may still
+  * settle an internal cache early ([[settled]]) once nothing it returns
+  * can recompute through it.
   *
   * Scale note: a ledger entry is a plan reference (driver-side, KB), not
   * data; entries for frames the caller already unpersisted are harmless

@@ -139,11 +139,12 @@ object SparkEntry {
   }
 
   /** Per-stage-dir build locks: a stage dir shared by SEVERAL memos (e6's
-    * replay source feeds both the plain e6Memo and the sliced e6cMemo) has
-    * a check-then-act `_SUCCESS` probe that two first-callers could race —
-    * one overwriting the dir while the other reads it. Serializing the
-    * probe+write per dir closes that window; steady-state calls see the
-    * marker and pay only an uncontended lock hop.
+    * replay source feeds the plain e6Memo and the sliced e6cMemo, e8's the
+    * "users" and "counts" e8Memo keys) has a check-then-act `_SUCCESS`
+    * probe that two first-callers could race — one overwriting the dir
+    * while the other reads it. Serializing the probe+write per dir closes
+    * that window; steady-state calls see the marker and pay only an
+    * uncontended lock hop.
     */
   private val stageLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
@@ -321,12 +322,15 @@ object SparkEntry {
         s"${scratchDir(d)}/e8b_events_${stageKey(srcFile, s"w${widthUs}wm$wmUs")}"
       Tables.evictStopped(e8Memo)(_._1)
       Some(e8Memo.getOrElseUpdate((s, stageDir, which), {
-        if (!new java.io.File(s"$stageDir/_SUCCESS").exists()) {
-          val maxTs = maxTsRow.getLong(0)
-          val sentinel = Seq((-1L, maxTs + 2 * widthUs + wmUs + 1, -1L))
-            .toDF("user_id", "ts_us", "event_id")
-          ev.union(sentinel.select("user_id", "ts_us", "event_id"))
-            .coalesce(4).write.mode("overwrite").parquet(stageDir)
+        // "users" and "counts" share the stage dir: lock the probe+write
+        withStageLock(stageDir) {
+          if (!new java.io.File(s"$stageDir/_SUCCESS").exists()) {
+            val maxTs = maxTsRow.getLong(0)
+            val sentinel = Seq((-1L, maxTs + 2 * widthUs + wmUs + 1, -1L))
+              .toDF("user_id", "ts_us", "event_id")
+            ev.union(sentinel.select("user_id", "ts_us", "event_id"))
+              .coalesce(4).write.mode("overwrite").parquet(stageDir)
+          }
         }
         val src = s.readStream.schema(s.read.parquet(stageDir).schema).parquet(stageDir)
         which match {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{ArrayOps, Text, Vectors}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -150,68 +150,27 @@ object Dedup {
       .select(keep :+ col("bd.band") :+ col("bd.bkey"): _*)
 
 
-  /** Cache-hygiene loan pattern for the shingle-set persists: `build` runs
-    * against a persisted copy of `sets`; with `release = true` the result
-    * is eagerly materialized into ITS OWN persist (pairs above threshold —
-    * orders of magnitude smaller than the sets) and the sets cache is
-    * dropped before returning, so a long-lived session running many dedup
-    * calls doesn't accumulate set caches until LRU pressure. The caller
-    * owns the returned frame's persist (`unpersist()` when done). With
-    * `release = false` (the default) the result stays lazy and the sets
-    * cache lives until LRU eviction or `spark.catalog.clearCache()` — the
-    * right trade when the caller will re-derive more from the same sets.
+  /** A Catalyst bloom filter over `key` of `build` — the
+    * `BloomFilterAggregate`/`BloomFilterMightContain` pair behind Spark's
+    * `InjectRuntimeFilter` — sized for `n` items at `fpp` (-n·ln fpp /
+    * (ln 2)² bits, at least 64, at most `maxNumBits`), collected to the
+    * driver and returned as the might-contain test of `probe`. The filter
+    * is a literal, so the probe side drops rows at scan speed BEFORE its
+    * exchange; false positives only admit extra rows, and every caller
+    * follows with an exact join.
     */
-  private def withPersistedSets(sets: DataFrame, release: Boolean)
-                               (build: DataFrame => DataFrame): DataFrame =
-    withPersistedSetsExtras(sets, release)(c => (build(c), Nil))
-
-  /** [[withPersistedSets]] where `build` also returns the ALREADY-LOANED
-    * intermediate frames it persisted (e.g. the fuzzy cells aggregate):
-    * under `release = true` those settle together with the sets loan once
-    * the result is materialized — without this, a capped budget/auto call
-    * in a long-lived session retained its cells cache until session drain.
-    */
-  private def withPersistedSetsExtras(sets: DataFrame, release: Boolean)
-      (build: DataFrame => (DataFrame, Seq[DataFrame])): DataFrame = {
-    val cached = graft.Caches.loan(
-      sets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val (res, extras) = build(cached)
-    if (!release) res
-    else {
-      val out = graft.Caches.loan(
-        res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      out.count() // force: the result must never silently recompute the sets
-      (cached +: extras).foreach { c =>
-        c.unpersist()
-        graft.Caches.settled(c)
-      }
-      out
-    }
-  }
-
-  /** Two-frame form of the [[withPersistedSets]] loan pattern — for the
-    * cross-corpus operators (decontamination, incremental near-dup) whose
-    * build needs BOTH a train/corpus and a test/batch set frame persisted.
-    * Same contract: `release = true` eagerly materializes the (small)
-    * result into its own persist and drops both input caches; the caller
-    * owns the returned frame's persist.
-    */
-  private def withPersistedSets2(a: DataFrame, b: DataFrame, release: Boolean)
-                                (build: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val ca = graft.Caches.loan(
-      a.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val cb = graft.Caches.loan(
-      b.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val res = build(ca, cb)
-    if (!release) res
-    else {
-      val out = graft.Caches.loan(
-        res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      out.count()
-      ca.unpersist(); graft.Caches.settled(ca)
-      cb.unpersist(); graft.Caches.settled(cb)
-      out
-    }
+  private def bloomMightContain(build: DataFrame, key: Column, n: Long, fpp: Double,
+                                maxNumBits: Long, probe: Column): Column = {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.{graftshim => shim}
+    val optimalBits = math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2))).toLong
+    val numBits = math.min(math.max(optimalBits, 64L), maxNumBits)
+    val bloomAgg = new BloomFilterAggregate(shim.toExpression(key), Literal(n), Literal(numBits))
+    val bloomBytes = build.select(shim.toColumn(bloomAgg.toAggregateExpression()).as("bf"))
+      .head().getAs[Array[Byte]](0)
+    shim.toColumn(BloomFilterMightContain(
+      Literal(bloomBytes, org.apache.spark.sql.types.BinaryType), shim.toExpression(probe)))
   }
 
   /** The MinHash signature array over a prepared `shs` (sorted shingle-key)
@@ -331,11 +290,7 @@ object Dedup {
   private[graft] def minhashNearDupsPlain(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double, n: Int = 3,
                       bands: Int = 32, rowsPerBand: Int = 2,
-                      releaseSets: Boolean = false,
                       pruneVerifyMinRows: Long = 1L << 20): DataFrame = {
-    // candidate persist follows the gated path's loan: internal, dropped
-    // once the result can no longer recompute it
-    var candCache: Option[DataFrame] = None
     // the shared banded-keys persist (big-corpus path — one signature
     // pass for both join sides), settled the moment the candidates
     // materialize
@@ -350,138 +305,117 @@ object Dedup {
     val nDocs = df.count()
     val pruneVerifySides = nDocs >= pruneVerifyMinRows
     // sets feed the signature pipeline AND both verify sides — persist the
-    // reduced (8-byte-keys) form once (see [[withPersistedSets]] for the
-    // releaseSets cache-hygiene contract).
-    val res = withPersistedSets(shingleSets(df, idCol, textCol, n), releaseSets) { sets =>
-      // Band key = hash of the band's signature slice ([[bandKeys]] — the
-      // one banding definition; sigArrayExpr keeps the tree O(1) in
-      // perms). Any hash is candidate-correct: equal band tuples always
-      // collide, spurious collisions die in the exact verify stage.
-      //
-      // Past the big-corpus gate the band exchange is WIDENED IN-PLAN
-      // from corpus stats: the join plans as a SortMergeJoin whose two
-      // reduce-side sorts (bands × corpus rows EACH side, in one task)
-      // are where the third-decade spill lives — at a fixed partition
-      // count the per-task sort state grows linearly with the corpus and
-      // falls out of memory (measured: 23 GB at 5M docs / 32 partitions).
-      // Explicitly repartitioning both sides by the join keys at
-      // nDocs×bands / BandRowsPerPartition keeps each task's sort at a
-      // fixed row count — the cluster-proportional sizing a real
-      // deployment gets from more executors, derived here from the same
-      // corpus count the verify-prune gate already paid for. Both sides
-      // share the partitioning (same keys, same N), so the join adds no
-      // further exchange; AQE respects an explicit width. A SHUFFLE_HASH
-      // hint was measured instead and REJECTED: the build side is
-      // non-spillable and fails outright under the same memory share
-      // ("Can't acquire 64 MB to build hash relation") where SMJ
-      // degrades gracefully — exactly the wrong property at 100 TB.
-      // Past the big-corpus gate the BANDED KEYS are persisted and both
-      // join sides derive from the one frame: without a cache boundary
-      // Spark evaluates the 64-minhash signature pipeline once PER SIDE,
-      // and event-log stage attribution at 2000× (r19) put those two map
-      // stages at ~60-70% of the row's entire wall — the dominant cost
-      // was never an exchange. The cached relation is the EXPLODED
-      // (id, band, bkey) frame, all primitive columns, ~20 B × bands per
-      // doc: caching the signature ARRAYS instead was measured and
-      // rejected (each side's cache read cost ~half a full recompute —
-      // the r11 columnar array-deserialization penalty, which primitives
-      // don't pay). Settled as soon as the candidates materialize.
-      // Below the gate the inline double-compute stays: a persist on a
-      // ~100k-doc corpus is pure overhead against sub-second signature
-      // passes.
-      val (lk, rk) =
-        if (!pruneVerifySides)
-          (bandKeys(sets, idCol, "id_1", bands, rowsPerBand),
-           bandKeys(sets, idCol, "id_2", bands, rowsPerBand))
-        else {
-          val banded = graft.Caches.loan(
-            bandKeys(sets, idCol, "_bid", bands, rowsPerBand)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          sigCache = Some(banded)
-          (spreadKernel(banded.withColumnRenamed("_bid", "id_1"),
-            nDocs * bands, BandRowsPerPartition, col("band"), col("bkey")),
-           spreadKernel(banded.withColumnRenamed("_bid", "id_2"),
-            nDocs * bands, BandRowsPerPartition, col("band"), col("bkey")))
-        }
-      // The candidate DISTINCT is the one exchange between the (already
-      // spread) band join and the (already spread) verify joins — left at
-      // the session default it re-narrows the collision stream to a
-      // 32-wide sort whose per-task state grows with the corpus (r19
-      // measured at 2000×: the distinct was the residual 155 s between
-      // the derived-width run and the hand-tuned global-128 one). The
-      // collision stream is ≥ the band-row volume in any dup-carrying
-      // regime, so the band width rule is the evidence already in hand;
-      // partitioning by exactly the distinct's keys means the aggregate
-      // reuses the exchange rather than adding one.
-      val rawCand0 = lk.join(rk, Seq("band", "bkey"))
-        .filter(col("id_1") < col("id_2"))
-        .select("id_1", "id_2")
-      val rawCand =
-        (if (!pruneVerifySides) rawCand0
-         else spreadIfWide(rawCand0, nDocs * bands, BandRowsPerPartition,
-           col("id_1"), col("id_2"))).distinct()
-      if (!pruneVerifySides) verifyJaccard(rawCand, sets, idCol, threshold)
+    // reduced (8-byte-keys) form once
+    val sets = graft.Caches.persistLoaned(shingleSets(df, idCol, textCol, n))
+    // Band key = hash of the band's signature slice ([[bandKeys]] — the
+    // one banding definition; sigArrayExpr keeps the tree O(1) in
+    // perms). Any hash is candidate-correct: equal band tuples always
+    // collide, spurious collisions die in the exact verify stage.
+    //
+    // Past the big-corpus gate the band exchange is WIDENED IN-PLAN
+    // from corpus stats: the join plans as a SortMergeJoin whose two
+    // reduce-side sorts (bands × corpus rows EACH side, in one task)
+    // are where the third-decade spill lives — at a fixed partition
+    // count the per-task sort state grows linearly with the corpus and
+    // falls out of memory (measured: 23 GB at 5M docs / 32 partitions).
+    // Explicitly repartitioning both sides by the join keys at
+    // nDocs×bands / BandRowsPerPartition keeps each task's sort at a
+    // fixed row count — the cluster-proportional sizing a real
+    // deployment gets from more executors, derived here from the same
+    // corpus count the verify-prune gate already paid for. Both sides
+    // share the partitioning (same keys, same N), so the join adds no
+    // further exchange; AQE respects an explicit width. A SHUFFLE_HASH
+    // hint was measured instead and REJECTED: the build side is
+    // non-spillable and fails outright under the same memory share
+    // ("Can't acquire 64 MB to build hash relation") where SMJ
+    // degrades gracefully — exactly the wrong property at 100 TB.
+    // Past the big-corpus gate the BANDED KEYS are persisted and both
+    // join sides derive from the one frame: without a cache boundary
+    // Spark evaluates the 64-minhash signature pipeline once PER SIDE,
+    // and event-log stage attribution at 2000× (r19) put those two map
+    // stages at ~60-70% of the row's entire wall — the dominant cost
+    // was never an exchange. The cached relation is the EXPLODED
+    // (id, band, bkey) frame, all primitive columns, ~20 B × bands per
+    // doc: caching the signature ARRAYS instead was measured and
+    // rejected (each side's cache read cost ~half a full recompute —
+    // the r11 columnar array-deserialization penalty, which primitives
+    // don't pay). Settled as soon as the candidates materialize.
+    // Below the gate the inline double-compute stays: a persist on a
+    // ~100k-doc corpus is pure overhead against sub-second signature
+    // passes.
+    val (lk, rk) =
+      if (!pruneVerifySides)
+        (bandKeys(sets, idCol, "id_1", bands, rowsPerBand),
+         bandKeys(sets, idCol, "id_2", bands, rowsPerBand))
       else {
-        // Materialize the candidates and bloom-prune BOTH verify sides to
-        // their ids BEFORE the verify exchanges: AQE does not broadcast the
-        // candidate frame (plan-audited at 100× — all SortMergeJoin), so
-        // without the prune each verify join SORTS the full array-carrying
-        // sets frame; at 1000× those two streams dominate the row's 31 GB
-        // spill while candidates touch ~12% of ids. Ids feed the bloom as
-        // xxhash64 (type-generic); false positives only ADMIT extra rows —
-        // the equi-joins keep the result exact (the d8b pattern).
-        val cand = rawCand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val nCand = cand.count()
-        candCache = Some(cand)
-        // the candidates are materialized — nothing downstream reads the
-        // banded-keys frame again (verify consumes sets), so its loan
-        // settles here, not at call end
-        sigCache.foreach { f => f.unpersist(); graft.Caches.settled(f) }
-        sigCache = None
-        // size the filter by DISTINCT ids, not pairs: a dense candidate set
-        // shares ids heavily (5M pairs over ~600k ids at the 1000× probe),
-        // and the capacity drives the filter bytes every task carries. The
-        // distinct count is one cheap job over the persisted candidates.
-        val ids = cand.select(xxhash64(col("id_1")).as("_cid"))
-          .union(cand.select(xxhash64(col("id_2")).as("_cid")))
-        val nIds = if (nCand == 0L) 0L else ids.distinct().count()
-        // past ~16M distinct ids the filter is ~20 MB of task literal — fall
-        // back to the un-pruned verify rather than ship a monster
+        val banded = graft.Caches.loan(
+          bandKeys(sets, idCol, "_bid", bands, rowsPerBand)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        sigCache = Some(banded)
+        (spreadKernel(banded.withColumnRenamed("_bid", "id_1"),
+          nDocs * bands, BandRowsPerPartition, col("band"), col("bkey")),
+         spreadKernel(banded.withColumnRenamed("_bid", "id_2"),
+          nDocs * bands, BandRowsPerPartition, col("band"), col("bkey")))
+      }
+    // The candidate DISTINCT is the one exchange between the (already
+    // spread) band join and the (already spread) verify joins — left at
+    // the session default it re-narrows the collision stream to a
+    // 32-wide sort whose per-task state grows with the corpus (r19
+    // measured at 2000×: the distinct was the residual 155 s between
+    // the derived-width run and the hand-tuned global-128 one). The
+    // collision stream is ≥ the band-row volume in any dup-carrying
+    // regime, so the band width rule is the evidence already in hand;
+    // partitioning by exactly the distinct's keys means the aggregate
+    // reuses the exchange rather than adding one.
+    val rawCand0 = lk.join(rk, Seq("band", "bkey"))
+      .filter(col("id_1") < col("id_2"))
+      .select("id_1", "id_2")
+    val rawCand =
+      (if (!pruneVerifySides) rawCand0
+       else spreadIfWide(rawCand0, nDocs * bands, BandRowsPerPartition,
+         col("id_1"), col("id_2"))).distinct()
+    if (!pruneVerifySides) verifyJaccard(rawCand, sets, idCol, threshold)
+    else {
+      // Materialize the candidates and bloom-prune BOTH verify sides to
+      // their ids BEFORE the verify exchanges: AQE does not broadcast the
+      // candidate frame (plan-audited at 100× — all SortMergeJoin), so
+      // without the prune each verify join SORTS the full array-carrying
+      // sets frame; at 1000× those two streams dominate the row's 31 GB
+      // spill while candidates touch ~12% of ids. Ids feed the bloom as
+      // xxhash64 (type-generic); false positives only ADMIT extra rows —
+      // the equi-joins keep the result exact (the d8b pattern).
+      val cand = rawCand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val nCand = cand.count()
+      // the candidates are materialized — nothing downstream reads the
+      // banded-keys frame again (verify consumes sets), so its loan
+      // settles here, not at call end
+      sigCache.foreach { f => f.unpersist(); graft.Caches.settled(f) }
+      sigCache = None
+      // size the filter by DISTINCT ids, not pairs: a dense candidate set
+      // shares ids heavily (5M pairs over ~600k ids at the 1000× probe),
+      // and the capacity drives the filter bytes every task carries. The
+      // distinct count is one cheap job over the persisted candidates.
+      val ids = cand.select(xxhash64(col("id_1")).as("_cid"))
+        .union(cand.select(xxhash64(col("id_2")).as("_cid")))
+      val nIds = if (nCand == 0L) 0L else ids.distinct().count()
+      // past ~16M distinct ids the filter is ~20 MB of task literal — fall
+      // back to the un-pruned verify rather than ship a monster
+      val res =
         if (nIds == 0L || nIds > (1L << 24))
           verifyJaccard(cand, sets, idCol, threshold, spreadRows = Some(nCand))
         else {
-          import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-          import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-          import org.apache.spark.sql.{graftshim => shim}
-          val fpp = 0.01
-          val numBits = math.max(64L,
-            math.ceil(-nIds * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
-          val bloomAgg = new BloomFilterAggregate(shim.toExpression(col("_cid")),
-            Literal(nIds), Literal(numBits))
-          val bloomBytes = ids.select(shim.toColumn(bloomAgg.toAggregateExpression()).as("bf"))
-            .head().getAs[Array[Byte]](0)
-          val mightMatch = shim.toColumn(BloomFilterMightContain(
-            Literal(bloomBytes, org.apache.spark.sql.types.BinaryType),
-            shim.toExpression(xxhash64(col(idCol)))))
+          val mightMatch = bloomMightContain(ids, col("_cid"), nIds, fpp = 0.01,
+            maxNumBits = Long.MaxValue, probe = xxhash64(col(idCol)))
           verifyJaccard(cand, sets.filter(mightMatch), idCol, threshold,
             spreadRows = Some(nCand))
         }
-      }
-    }
-    candCache match {
-      // releaseSets: the loan already materialized the result
-      case Some(c) if releaseSets =>
-        c.unpersist(); graft.Caches.settled(c); res
-      // default: no caller handle for the candidate persist — materialize
-      // the (threshold-filtered, small) result and drop the candidates;
-      // the result's persist is ledgered (Caches.releaseAll calls it in)
-      case Some(c) =>
-        val out = graft.Caches.loan(
-          res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        out.count()
-        c.unpersist(); graft.Caches.settled(c)
-        out
-      case None => res
+      // no caller handle for the candidate persist — materialize the
+      // (threshold-filtered, small) result and drop the candidates; the
+      // result's persist is ledgered (Caches.releaseAll calls it in)
+      val out = graft.Caches.persistLoaned(res)
+      out.count()
+      cand.unpersist(); graft.Caches.settled(cand)
+      out
     }
   }
 
@@ -511,18 +445,15 @@ object Dedup {
     *
     * [[minhashNearDups]] takes this plan when its measured dup share
     * clears the gate; the d2f row and the specs call it directly. The
-    * member frame persists for the call (it feeds the rep filter and
-    * both expansion sides); `releaseSets` extends the
-    * [[withPersistedSets]] loan to it and to the inner LSH call's caches.
+    * member frame is a [[graft.Caches]] loan (it feeds the rep filter and
+    * both expansion sides).
     */
   private[graft] def minhashNearDupsCollapsed(df: DataFrame, idCol: String,
                                               textCol: String, threshold: Double,
                                               n: Int = 3, bands: Int = 32,
-                                              rowsPerBand: Int = 2,
-                                              releaseSets: Boolean = false): DataFrame =
+                                              rowsPerBand: Int = 2): DataFrame =
     minhashNearDupsCollapsedFromNorm(df, idCol, textCol,
-      normalizedClasses(df, idCol, textCol), threshold, n, bands, rowsPerBand,
-      releaseSets)
+      normalizedClasses(df, idCol, textCol), threshold, n, bands, rowsPerBand)
 
   /** The (id, _fp, _ntok, _hasw) normalized-class frame shared by the
     * collapse and [[minhashNearDups]]' pricing aggregate. `_fp` is md5
@@ -546,8 +477,7 @@ object Dedup {
   private def minhashNearDupsCollapsedFromNorm(df: DataFrame, idCol: String,
                                                textCol: String, norm0: DataFrame,
                                                threshold: Double, n: Int,
-                                               bands: Int, rowsPerBand: Int,
-                                               releaseSets: Boolean): DataFrame = {
+                                               bands: Int, rowsPerBand: Int): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       "minhashNearDupsCollapsed: threshold must be in (0, 1]")
     // Tokens cannot contain whitespace, so the space join behind `_fp` is
@@ -563,30 +493,28 @@ object Dedup {
     // one exchange of (16-byte fp, id, ntok) — texts never shuffle; the
     // rep is the min id of the class, attached by a window over the same
     // partitioning (no second shuffle, no join)
-    val membersFrame = norm.withColumn("_rep",
-      min(col(idCol)).over(Window.partitionBy("_fp")))
-    withPersistedSets(membersFrame, releaseSets) { members =>
-      val reps = df.join(members.filter(col(idCol) === col("_rep"))
-        .select(col(idCol)), Seq(idCol), "left_semi")
-      val repPairs = minhashNearDupsPlain(reps, idCol, textCol, threshold, n,
-        bands, rowsPerBand, releaseSets)
-      val m1 = members.select(col("_rep").as("_r1"), col(idCol).as("_m1"))
-      val m2 = members.select(col("_rep").as("_r2"), col(idCol).as("_m2"))
-      // member ids interleave across classes, so the expanded pair is
-      // re-oriented (least, greatest); rep pairs are their own classes'
-      // members, so they re-emerge here unchanged
-      val cross = repPairs
-        .join(m1, col("id_1") === col("_r1"))
-        .join(m2, col("id_2") === col("_r2"))
-        .select(least(col("_m1"), col("_m2")).as("id_1"),
-          greatest(col("_m1"), col("_m2")).as("id_2"), col("jaccard"))
-      val within = members.select(col("_fp"), col(idCol).as("_m1"), col("_ntok"))
-        .join(members.select(col("_fp"), col(idCol).as("_m2")), Seq("_fp"))
-        .filter(col("_m1") < col("_m2") && col("_ntok") >= n)
-        .select(col("_m1").as("id_1"), col("_m2").as("id_2"),
-          lit(1.0).as("jaccard"))
-      cross.unionByName(within)
-    }
+    val members = graft.Caches.persistLoaned(norm.withColumn("_rep",
+      min(col(idCol)).over(Window.partitionBy("_fp"))))
+    val reps = df.join(members.filter(col(idCol) === col("_rep"))
+      .select(col(idCol)), Seq(idCol), "left_semi")
+    val repPairs = minhashNearDupsPlain(reps, idCol, textCol, threshold, n,
+      bands, rowsPerBand)
+    val m1 = members.select(col("_rep").as("_r1"), col(idCol).as("_m1"))
+    val m2 = members.select(col("_rep").as("_r2"), col(idCol).as("_m2"))
+    // member ids interleave across classes, so the expanded pair is
+    // re-oriented (least, greatest); rep pairs are their own classes'
+    // members, so they re-emerge here unchanged
+    val cross = repPairs
+      .join(m1, col("id_1") === col("_r1"))
+      .join(m2, col("id_2") === col("_r2"))
+      .select(least(col("_m1"), col("_m2")).as("id_1"),
+        greatest(col("_m1"), col("_m2")).as("id_2"), col("jaccard"))
+    val within = members.select(col("_fp"), col(idCol).as("_m1"), col("_ntok"))
+      .join(members.select(col("_fp"), col(idCol).as("_m2")), Seq("_fp"))
+      .filter(col("_m1") < col("_m2") && col("_ntok") >= n)
+      .select(col("_m1").as("id_1"), col("_m2").as("id_2"),
+        lit(1.0).as("jaccard"))
+    cross.unionByName(within)
   }
 
   /** D2 — MinHash+LSH near-duplicate pairs at Jaccard ≥ `threshold`
@@ -606,8 +534,7 @@ object Dedup {
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double, n: Int = 3,
-                      bands: Int = 32, rowsPerBand: Int = 2,
-                      releaseSets: Boolean = false): DataFrame = {
+                      bands: Int = 32, rowsPerBand: Int = 2): DataFrame = {
     // The pricing aggregate and the collapse's class formation hash the
     // SAME normalization (md5 of the space-joined token sequence) — until
     // r21 the gate ran that tokenize+md5 corpus pass twice, once per
@@ -629,12 +556,12 @@ object Dedup {
     val dupFrac = if (nDocs == 0L) 0.0 else 1.0 - row.getLong(1).toDouble / nDocs
     if (dupFrac >= DupFracGate)
       minhashNearDupsCollapsedFromNorm(df, idCol, textCol, norm0, threshold,
-        n, bands, rowsPerBand, releaseSets)
+        n, bands, rowsPerBand)
     else {
       norm0.unpersist()
       graft.Caches.settled(norm0)
       minhashNearDupsPlain(df, idCol, textCol, threshold, n, bands,
-        rowsPerBand, releaseSets)
+        rowsPerBand)
     }
   }
 
@@ -659,8 +586,7 @@ object Dedup {
     * an inverted index before the same exact verification.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        n: Int, threshold: Double, blocks: Int = 0,
-                        releaseSets: Boolean = false): DataFrame = {
+                        n: Int, threshold: Double, blocks: Int = 0): DataFrame = {
     // blocks <= 0 → derive B from the corpus size: a fixed B at 10× the
     // corpus silently means 10× the per-task block memory
     val b = if (blocks > 0) blocks
@@ -674,10 +600,7 @@ object Dedup {
     // than inline recompute (340 s vs 140 s; cache-free cold = 137 s),
     // while inline stays flat across runs. The loan-pattern persist
     // remains right for the ≥3-read consumers (the sparse inverted-index
-    // and MinHash paths, which showed no such inversion); `releaseSets`
-    // is kept for API compatibility and is a no-op here — there is no
-    // cache to release.
-    val _ = releaseSets
+    // and MinHash paths, which showed no such inversion).
     Pairs.blockedPairs(shingleSets(df, idCol, textCol, n), idCol, b)
       .select(col("id_1"), col("id_2"),
         ArrayOps.sortedIntersectSize(col("s_1.shs"), col("s_2.shs")).cast("double").as("inter"),
@@ -741,7 +664,6 @@ object Dedup {
     */
   def ngramJaccardPairsSparse(df: DataFrame, idCol: String, textCol: String,
                               n: Int, threshold: Double, maxDf: Int,
-                              releaseSets: Boolean = false,
                               guardPairs: Long = FixedCapGuardPairs,
                               quickPriceMinDocs: Long = 1L << 20): DataFrame = {
     val rate = 0.0625 // 1/16, the d4e binary fraction
@@ -811,7 +733,7 @@ object Dedup {
             "candidate budget.")
       }
     }
-    sparseCappedFromHistogram(df, idCol, textCol, n, threshold, releaseSets,
+    sparseCappedFromHistogram(df, idCol, textCol, n, threshold,
       hist => {
         // cum at the cap = the exact candidate-pair bill this maxDf buys
         val priced = hist.filter(_._1 <= maxDf).map(_._3).maxOption.getOrElse(0L)
@@ -836,16 +758,15 @@ object Dedup {
     */
   private[graft] def ngramJaccardPairsSparseUnguarded(df: DataFrame, idCol: String,
                                                       textCol: String, n: Int,
-                                                      threshold: Double, maxDf: Int,
-                                                      releaseSets: Boolean = false): DataFrame =
+                                                      threshold: Double,
+                                                      maxDf: Int): DataFrame =
     // The reduced sets feed FIVE plan positions (df-count, both sides of
     // the candidate self-join via inv, both verify sides); without a cache
     // boundary Spark re-evaluates the shingling subtree for each. The sets
     // table is the corpus reduced to 8-byte keys (~1-2% of text size) —
     // persisting it is the standard inverted-index-build trade.
-    withPersistedSets(shingleSets(df, idCol, textCol, n), releaseSets) { sets =>
-      sparseJaccardFromSets(sets, idCol, threshold, maxDf)
-    }
+    sparseJaccardFromSets(graft.Caches.persistLoaned(shingleSets(df, idCol, textCol, n)),
+      idCol, threshold, maxDf)
 
   /** The df-capped candidate+verify body over prepared sets — shared by
     * the fixed-ceiling ([[ngramJaccardPairsSparse]]) and budget-derived
@@ -900,9 +821,6 @@ object Dedup {
         // comes free from the prepared histogram; otherwise the keys
         // frame persists so its aggregate runs once for (count, bloom,
         // probe side) and drops when candidates materialize.
-        import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-        import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-        import org.apache.spark.sql.{graftshim => shim}
         val (rk, nKeys) = rareKeysPrepared match {
           case Some((f, n)) => (f, n)
           case None =>
@@ -921,16 +839,8 @@ object Dedup {
         if (nKeys == 0L || nKeys > (1L << 24)) {
           inv.join(rk, "sk")
         } else {
-          val fpp = 0.01
-          val optimalBits = math.ceil(-nKeys * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-          val numBits = math.max(optimalBits, 64L)
-          val bloomAgg = new BloomFilterAggregate(shim.toExpression(col("sk")),
-            Literal(nKeys), Literal(numBits))
-          val bloomBytes = rk.select(shim.toColumn(bloomAgg.toAggregateExpression()).as("bf"))
-            .head().getAs[Array[Byte]](0)
-          val mightMatch = shim.toColumn(BloomFilterMightContain(
-            Literal(bloomBytes, org.apache.spark.sql.types.BinaryType),
-            shim.toExpression(col("sk"))))
+          val mightMatch = bloomMightContain(rk, col("sk"), nKeys, fpp = 0.01,
+            maxNumBits = Long.MaxValue, probe = col("sk"))
           inv.filter(mightMatch).join(rk, "sk")
         }
       }
@@ -1121,10 +1031,10 @@ object Dedup {
   private[graft] val FixedCapGuardPairs: Long = 50000000L
 
   def ngramJaccardPairsSparseAuto(df: DataFrame, idCol: String, textCol: String,
-                                  n: Int, threshold: Double, budgetPairs: Long,
-                                  releaseSets: Boolean = false): DataFrame = {
+                                  n: Int, threshold: Double,
+                                  budgetPairs: Long): DataFrame = {
     require(budgetPairs >= 0, "ngramJaccardPairsSparseAuto: budget must be >= 0")
-    sparseCappedFromHistogram(df, idCol, textCol, n, threshold, releaseSets,
+    sparseCappedFromHistogram(df, idCol, textCol, n, threshold,
       hist => {
         val ceiling = math.max(2L,
           hist.filter(_._3 <= budgetPairs).map(_._1).maxOption.getOrElse(2L))
@@ -1144,52 +1054,51 @@ object Dedup {
     * read off the exact qualifying-key count.
     */
   private def sparseCappedFromHistogram(df: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double, releaseSets: Boolean,
+      textCol: String, n: Int, threshold: Double,
       choose: IndexedSeq[(Long, Long, Long)] => (Long, Boolean)): DataFrame = {
-    // the pruneVerify candidate persist follows the same loan as the sets:
-    // it is internal (no caller handle), so it never outlives this call —
-    // both paths below drop it once the result can no longer recompute it
+    // the pruneVerify candidate persist is internal (no caller handle), so
+    // it never outlives this call — dropped below once the result can no
+    // longer recompute it
     var candCache: Option[DataFrame] = None
+    val sets = graft.Caches.persistLoaned(shingleSets(df, idCol, textCol, n))
     // the (shingle, df) aggregate persisted ONCE for three consumers: the
     // histogram collect (ceiling + key count), the rare-keys probe side,
     // and the bloom build — without it the corpus-wide distinct-key count
     // runs twice (measured at 1000×, 5M docs / ~500M distinct trigrams:
     // each pass sort-fallback-spills ~40 GB; this is the d4 family's
     // single biggest exchange and it must be paid exactly once)
-    var dfCache: Option[DataFrame] = None
-    val res = withPersistedSets(shingleSets(df, idCol, textCol, n), releaseSets) { sets =>
-      val skdf = graft.Caches.loan(
-        ArrayOps.explodeDense(sets, Seq.empty, col("shs"), "sk")
-          .groupBy("sk").agg(count(lit(1)).as("_df"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      dfCache = Some(skdf)
-      // one tiny collect serves BOTH derivations: the ceiling (from the
-      // cumulative candidate cost) and the count of qualifying keys
-      // (drives the broadcast-vs-shuffle pruning choice). Arithmetic
-      // identical to dfHistogram's — cum over ascending df.
-      val (ceiling, pruneVerify, rareKeyCount, pricedBill) =
-        try {
-          val strata = skdf.groupBy(col("_df").as("df"))
-            .agg(count(lit(1)).as("n_shingles"))
-            .collect().map(r => (r.getLong(0), r.getLong(1)))
-            .sortBy(_._1) // tiny frame: driver sort, not an exchange stage
-          var cum = 0L
-          val hist = strata.map { case (d0, n0) =>
-            cum += n0 * (d0 * (d0 - 1) / 2); (d0, n0, cum)
-          }.toIndexedSeq
-          val (c0, pv) = choose(hist)
-          (c0, pv, hist.filter(t => t._1 >= 2 && t._1 <= c0).map(_._2).sum,
-            // the cap's cum pair cost — verify-width evidence the
-            // histogram already priced (r18 VERDICT #2)
-            hist.filter(_._1 <= c0).map(_._3).maxOption)
-        } catch { case e: Throwable =>
-          // a refused cap returns nothing — the evidence caches must not
-          // outlive the refusal (the sets loan included: there is no
-          // lazy result left that could recompute through it)
-          skdf.unpersist(); graft.Caches.settled(skdf); dfCache = None
-          sets.unpersist(); graft.Caches.settled(sets)
-          throw e
-        }
+    val skdf = graft.Caches.loan(
+      ArrayOps.explodeDense(sets, Seq.empty, col("shs"), "sk")
+        .groupBy("sk").agg(count(lit(1)).as("_df"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // one tiny collect serves BOTH derivations: the ceiling (from the
+    // cumulative candidate cost) and the count of qualifying keys
+    // (drives the broadcast-vs-shuffle pruning choice). Arithmetic
+    // identical to dfHistogram's — cum over ascending df.
+    val (ceiling, pruneVerify, rareKeyCount, pricedBill) =
+      try {
+        val strata = skdf.groupBy(col("_df").as("df"))
+          .agg(count(lit(1)).as("n_shingles"))
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+          .sortBy(_._1) // tiny frame: driver sort, not an exchange stage
+        var cum = 0L
+        val hist = strata.map { case (d0, n0) =>
+          cum += n0 * (d0 * (d0 - 1) / 2); (d0, n0, cum)
+        }.toIndexedSeq
+        val (c0, pv) = choose(hist)
+        (c0, pv, hist.filter(t => t._1 >= 2 && t._1 <= c0).map(_._2).sum,
+          // the cap's cum pair cost — verify-width evidence the
+          // histogram already priced (r18 VERDICT #2)
+          hist.filter(_._1 <= c0).map(_._3).maxOption)
+      } catch { case e: Throwable =>
+        // a refused cap returns nothing — the evidence caches must not
+        // outlive the refusal (the sets loan included: there is no
+        // lazy result left that could recompute through it)
+        skdf.unpersist(); graft.Caches.settled(skdf)
+        sets.unpersist(); graft.Caches.settled(sets)
+        throw e
+      }
+    val res =
       sparseJaccardFromSets(sets, idCol, threshold,
         math.min(ceiling, Int.MaxValue.toLong).toInt,
         broadcastRareKeys = rareKeyCount <= BroadcastRareKeyLimit,
@@ -1199,43 +1108,14 @@ object Dedup {
           skdf.filter(col("_df") >= 2 && col("_df") <= ceiling).select("sk"),
           rareKeyCount)),
         pricedPairs = pricedBill)
-    }
-    candCache match {
-      // releaseSets path: the result was already materialized inside the
-      // loan, so the candidate and df caches can drop immediately
-      case Some(c) if releaseSets =>
-        c.unpersist(); graft.Caches.settled(c)
-        dfCache.foreach { k => k.unpersist(); graft.Caches.settled(k) }
-        res
-      // default path: the candidate persist has no caller-visible handle,
-      // so it must not outlive this call — materialize the (budget-bounded,
-      // small) result into its own persist and drop the candidates + the
-      // df aggregate. The caller owns the returned frame's persist; the
-      // SETS cache keeps the documented default-trade lifetime (LRU /
-      // clearCache).
-      case Some(c) =>
-        val out = graft.Caches.loan(
-          res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        out.count()
-        c.unpersist(); graft.Caches.settled(c)
-        dfCache.foreach { k => k.unpersist(); graft.Caches.settled(k) }
-        out
-      // no candidate materialization happened (lazy big-budget path): the
-      // df cache must follow the result's life — materialize-and-drop the
-      // same way so it cannot leak past this call
-      case None =>
-        dfCache match {
-          case Some(k) if releaseSets =>
-            k.unpersist(); graft.Caches.settled(k); res
-          case Some(k) =>
-            val out = graft.Caches.loan(
-              res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-            out.count()
-            k.unpersist(); graft.Caches.settled(k)
-            out
-          case None => res
-        }
-    }
+    // neither the candidate persist nor the df aggregate has a
+    // caller-visible handle, so neither may outlive this call: materialize
+    // the (budget-bounded, small) result into its own ledgered persist and
+    // drop both. The SETS cache stays a loan until Caches.releaseAll / drain.
+    val out = graft.Caches.persistLoaned(res)
+    out.count()
+    (candCache.toSeq :+ skdf).foreach { c => c.unpersist(); graft.Caches.settled(c) }
+    out
   }
 
   /** X13 — cross-source duplicate OVERLAP MATRIX: for every source pair
@@ -1299,47 +1179,24 @@ object Dedup {
     * [[exactIncremental]] is the right tool; this variant exists for the
     * common small-batch-vs-huge-corpus ingest.
     *
-    * `release` follows the loan contract ([[withPersistedSets]]): the
-    * batch frame must be persisted here (it is scanned for the count, the
-    * bloom build, and the anti join), and with `release = true` the
-    * (small) survivor result is materialized into its own persist and the
-    * batch cache is dropped before returning — repeated daily-ingest calls
-    * then leave no cache residue. Default keeps the result lazy.
+    * The batch frame is a [[graft.Caches]] loan: it is scanned for the
+    * count, the bloom build, and the anti join.
     */
   def exactIncrementalBloom(newDocs: DataFrame, corpus: DataFrame,
                             idCol: String, textCol: String,
                             fpp: Double = 0.01,
-                            maxNumBits: Long = 1L << 26,
-                            release: Boolean = false): DataFrame = {
+                            maxNumBits: Long = 1L << 26): DataFrame = {
     require(fpp > 0.0 && fpp < 1.0, "exactIncrementalBloom: fpp must be in (0,1)")
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.{graftshim => shim}
-    val nf = graft.Caches.loan(
-      newDocs.withColumn("fingerprint", Text.fingerprint(col(textCol)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val nf = graft.Caches.persistLoaned(
+      newDocs.withColumn("fingerprint", Text.fingerprint(col(textCol))))
     val batchCount = math.max(1L, nf.count()) // also materializes the persist
-    // optimal bits for n items at fpp: -n ln p / (ln 2)^2, clamped to the cap
-    val optimalBits = math.ceil(-batchCount * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val numBits = math.min(math.max(optimalBits, 64L), maxNumBits)
-    val fpHash = shim.toExpression(xxhash64(col("fingerprint")))
-    val bloomAgg = new BloomFilterAggregate(fpHash, Literal(batchCount), Literal(numBits))
-    val bloomBytes = nf.select(shim.toColumn(bloomAgg.toAggregateExpression()).as("bf"))
-      .head().getAs[Array[Byte]](0)
-    val mightMatchBatch = shim.toColumn(BloomFilterMightContain(
-      Literal(bloomBytes, org.apache.spark.sql.types.BinaryType), fpHash))
+    val fpHash = xxhash64(col("fingerprint"))
+    val mightMatchBatch = bloomMightContain(nf, fpHash, batchCount, fpp, maxNumBits,
+      probe = fpHash)
     val cf = corpus.select(Text.fingerprint(col(textCol)).as("fingerprint"))
       .filter(mightMatchBatch)
       .distinct()
-    val res = nf.join(cf, Seq("fingerprint"), "left_anti")
-    if (!release) res
-    else {
-      val out = graft.Caches.loan(
-        res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      out.count()
-      nf.unpersist(); graft.Caches.settled(nf)
-      out
-    }
+    nf.join(cf, Seq("fingerprint"), "left_anti")
   }
 
   /** Incremental NEAR-dup dedup — the daily-ingest analogue of
@@ -1360,27 +1217,22 @@ object Dedup {
     *      false positives; recall is the LSH S-curve — 32×2 banding ≈
     *      0.9999 at j = 0.5), and matched batch ids are anti-joined away.
     *
-    * Output: the surviving new-batch rows (original columns). `releaseSets`
-    * follows the [[withPersistedSets2]] loan contract.
+    * Output: the surviving new-batch rows (original columns). Both
+    * shingle-set frames are [[graft.Caches]] loans.
     */
   def minhashIncremental(newDocs: DataFrame, corpus: DataFrame, idCol: String,
                          textCol: String, threshold: Double, n: Int = 3,
-                         bands: Int = 32, rowsPerBand: Int = 2,
-                         releaseSets: Boolean = false): DataFrame =
-    // the loan wraps the WHOLE pipeline through the anti join: with
-    // releaseSets the materialized-and-persisted frame is the RESULT the
-    // caller receives (and owns), so no intermediate persist can outlive
-    // the call un-releasable
-    withPersistedSets2(shingleSets(newDocs, idCol, textCol, n),
-      shingleSets(corpus, idCol, textCol, n), releaseSets) { (bsets, csets) =>
-      val candidates = bandKeys(bsets, idCol, "id_1", bands, rowsPerBand)
-        .join(bandKeys(csets, idCol, "id_2", bands, rowsPerBand), Seq("band", "bkey"))
-        .select("id_1", "id_2").distinct()
-      // verify against the TRUE sets: batch side = id_1, corpus side = id_2
-      val matched = verifyJaccard2(candidates, bsets, csets, idCol, threshold)
-        .select(col("id_1")).distinct()
-      newDocs.join(matched, newDocs(idCol) === matched("id_1"), "left_anti")
-    }
+                         bands: Int = 32, rowsPerBand: Int = 2): DataFrame = {
+    val bsets = graft.Caches.persistLoaned(shingleSets(newDocs, idCol, textCol, n))
+    val csets = graft.Caches.persistLoaned(shingleSets(corpus, idCol, textCol, n))
+    val candidates = bandKeys(bsets, idCol, "id_1", bands, rowsPerBand)
+      .join(bandKeys(csets, idCol, "id_2", bands, rowsPerBand), Seq("band", "bkey"))
+      .select("id_1", "id_2").distinct()
+    // verify against the TRUE sets: batch side = id_1, corpus side = id_2
+    val matched = verifyJaccard2(candidates, bsets, csets, idCol, threshold)
+      .select(col("id_1")).distinct()
+    newDocs.join(matched, newDocs(idCol) === matched("id_1"), "left_anti")
+  }
 
   /** Benchmark DECONTAMINATION — the cross-corpus containment check every
     * training pipeline runs before shipping data: for each TEST (benchmark)
@@ -1398,33 +1250,30 @@ object Dedup {
     * corpora travel as 8-byte shingle keys, never text.
     *
     * Output: (test_id, train_id, containment) for pairs ≥ threshold,
-    * containment = |test ∩ train| / |test| rounded to 6.
-    * `releaseSets` follows the [[withPersistedSets2]] loan contract: both
-    * shingle-set caches are dropped once the (small) pair result is
-    * materialized, so a long session running many decontamination calls
-    * doesn't accumulate cache entries until LRU pressure.
+    * containment = |test ∩ train| / |test| rounded to 6. Both shingle-set
+    * frames are [[graft.Caches]] loans.
     */
   def decontaminationPairs(train: DataFrame, test: DataFrame, idCol: String,
                            textCol: String, n: Int, threshold: Double,
-                           maxDf: Int, releaseSets: Boolean = false): DataFrame =
-    withPersistedSets2(shingleSets(train, idCol, textCol, n),
-      shingleSets(test, idCol, textCol, n), releaseSets) { (tsets, xsets) =>
-      val ti = ArrayOps.explodeDense(tsets, Seq(col(idCol).as("train_id")), col("shs"), "sk")
-      val rare = ti.groupBy("sk").agg(count(lit(1)).as("_df"))
-        .filter(col("_df") <= maxDf).select("sk")
-      val xi = ArrayOps.explodeDense(xsets, Seq(col(idCol).as("test_id")), col("shs"), "sk")
-      val candidates = xi.join(rare, "sk").join(ti, "sk")
-        .select("test_id", "train_id").distinct()
-      val t1 = tsets.select(col(idCol).as("train_id"), col("shs").as("shs_t"))
-      val x1 = xsets.select(col(idCol).as("test_id"), col("n_sh").as("n_test"),
-        col("shs").as("shs_x"))
-      candidates.join(x1, "test_id").join(t1, "train_id")
-        .withColumn("containment",
-          round(ArrayOps.sortedIntersectSize(col("shs_x"), col("shs_t")).cast("double") /
-            col("n_test").cast("double"), 6))
-        .filter(col("containment") >= threshold)
-        .select("test_id", "train_id", "containment")
-    }
+                           maxDf: Int): DataFrame = {
+    val tsets = graft.Caches.persistLoaned(shingleSets(train, idCol, textCol, n))
+    val xsets = graft.Caches.persistLoaned(shingleSets(test, idCol, textCol, n))
+    val ti = ArrayOps.explodeDense(tsets, Seq(col(idCol).as("train_id")), col("shs"), "sk")
+    val rare = ti.groupBy("sk").agg(count(lit(1)).as("_df"))
+      .filter(col("_df") <= maxDf).select("sk")
+    val xi = ArrayOps.explodeDense(xsets, Seq(col(idCol).as("test_id")), col("shs"), "sk")
+    val candidates = xi.join(rare, "sk").join(ti, "sk")
+      .select("test_id", "train_id").distinct()
+    val t1 = tsets.select(col(idCol).as("train_id"), col("shs").as("shs_t"))
+    val x1 = xsets.select(col(idCol).as("test_id"), col("n_sh").as("n_test"),
+      col("shs").as("shs_x"))
+    candidates.join(x1, "test_id").join(t1, "train_id")
+      .withColumn("containment",
+        round(ArrayOps.sortedIntersectSize(col("shs_x"), col("shs_t")).cast("double") /
+          col("n_test").cast("double"), 6))
+      .filter(col("containment") >= threshold)
+      .select("test_id", "train_id", "containment")
+  }
 
   /** Connected components over near-duplicate PAIRS — the final dedup
     * stage: pairs → clusters → one canonical representative per cluster.
@@ -2070,22 +1919,19 @@ object Dedup {
     * the 4 chunks survive. The oracle re-derives the same cap from the
     * same histogram in SQL, so the derivation arithmetic itself is gated.
     *
-    * The chunked frame persists for the duration of the call (histogram +
-    * join both read it); `release = false` keeps it for session reuse,
-    * `release = true` materializes the (budget-bounded) result and drops
-    * it — the loan contract of [[withPersistedSets]].
+    * The chunked frame and its cells aggregate are [[graft.Caches]] loans
+    * (the histogram and the join both read them).
     */
   def fuzzyNearDupsBudget(df: DataFrame, idCol: String, textCol: String,
-                          maxDist: Int, budgetPairs: Long, maxHamming: Int = 3,
-                          release: Boolean = false): DataFrame = {
+                          maxDist: Int, budgetPairs: Long,
+                          maxHamming: Int = 3): DataFrame = {
     require(maxDist >= 0, "fuzzyNearDupsBudget: maxDist must be >= 0")
     require(maxHamming <= 3, "4-chunk banding guarantees recall only for maxHamming <= 3")
     require(budgetPairs >= 0, "fuzzyNearDupsBudget: budget must be >= 0")
-    withPersistedSetsExtras(fuzzyChunked(df, idCol, textCol, maxDist), release) { chunked =>
-      val cells = graft.Caches.persistLoaned(fuzzyCells(chunked))
-      (fuzzyCapped(df, idCol, textCol, maxDist, maxHamming, chunked, cells,
-        fuzzyCellHist(cells), budgetPairs), Seq(cells))
-    }
+    val chunked = graft.Caches.persistLoaned(fuzzyChunked(df, idCol, textCol, maxDist))
+    val cells = graft.Caches.persistLoaned(fuzzyCells(chunked))
+    fuzzyCapped(df, idCol, textCol, maxDist, maxHamming, chunked, cells,
+      fuzzyCellHist(cells), budgetPairs)
   }
 
   /** The (chunk, ckey, _hb) → cell_size aggregate, computed ONCE per
@@ -2170,30 +2016,28 @@ object Dedup {
     */
   def fuzzyNearDups(df: DataFrame, idCol: String, textCol: String,
                     maxDist: Int, maxHamming: Int = 3,
-                    pairsPerDoc: Long = 64,
-                    release: Boolean = false): DataFrame = {
+                    pairsPerDoc: Long = 64): DataFrame = {
     require(maxDist >= 0, "fuzzyNearDups: maxDist must be >= 0")
     require(maxHamming <= 3, "4-chunk banding guarantees recall only for maxHamming <= 3")
     require(pairsPerDoc >= 1, "fuzzyNearDups: pairsPerDoc must be >= 1")
-    withPersistedSetsExtras(fuzzyChunked(df, idCol, textCol, maxDist), release) { chunked =>
-      val cells = graft.Caches.persistLoaned(fuzzyCells(chunked))
-      val hist = fuzzyCellHist(cells)
-      val nDocs = hist.map(t => t._1 * t._2).sum / 4
-      val budget = pairsPerDoc * nDocs
-      val total = hist.lastOption.map(_._3).getOrElse(0L)
-      if (total <= budget) {
-        // the full-admission branch never reads the cells again — settle the
-        // loan now instead of at session drain
-        cells.unpersist()
-        graft.Caches.settled(cells)
-        // same width derivation as the capped branch: `total` IS the
-        // priced within-cell candidate volume this branch will verify
-        (fuzzyVerify(df, idCol, textCol, maxDist, maxHamming, chunked,
-          chunkDedup = true, pricedRows = 3 * total), Nil)
-      } else
-        (fuzzyCapped(df, idCol, textCol, maxDist, maxHamming, chunked, cells,
-          hist, budget), Seq(cells))
-    }
+    val chunked = graft.Caches.persistLoaned(fuzzyChunked(df, idCol, textCol, maxDist))
+    val cells = graft.Caches.persistLoaned(fuzzyCells(chunked))
+    val hist = fuzzyCellHist(cells)
+    val nDocs = hist.map(t => t._1 * t._2).sum / 4
+    val budget = pairsPerDoc * nDocs
+    val total = hist.lastOption.map(_._3).getOrElse(0L)
+    if (total <= budget) {
+      // the full-admission branch never reads the cells again — settle the
+      // loan now instead of at session drain
+      cells.unpersist()
+      graft.Caches.settled(cells)
+      // same width derivation as the capped branch: `total` IS the
+      // priced within-cell candidate volume this branch will verify
+      fuzzyVerify(df, idCol, textCol, maxDist, maxHamming, chunked,
+        chunkDedup = true, pricedRows = 3 * total)
+    } else
+      fuzzyCapped(df, idCol, textCol, maxDist, maxHamming, chunked, cells,
+        hist, budget)
   }
 
   /** Embedding-cosine near-duplicate pairs, EXACT threshold join on the
@@ -2605,24 +2449,22 @@ object Dedup {
     * text is never touched. `n`/`bands`/`rowsPerBand` describe the batch
     * side and MUST match the index build. Result is bit-identical to the
     * one-shot form on the same corpus (driver-gated, d2c_index_replay).
-    * `releaseSets` loans the BATCH shingle-set persist
-    * ([[withPersistedSets]] contract; the index frames are plain parquet
-    * scans, nothing to release).
+    * The BATCH shingle-set frame is a [[graft.Caches]] loan; the index
+    * frames are plain parquet scans.
     */
   def minhashIncrementalFromIndex(newDocs: DataFrame, index: MinhashIndex,
                                   idCol: String, textCol: String,
                                   threshold: Double, n: Int = 3,
-                                  bands: Int = 32, rowsPerBand: Int = 2,
-                                  releaseSets: Boolean = false): DataFrame =
-    withPersistedSets(shingleSets(newDocs, idCol, textCol, n), releaseSets) { bsets =>
-      val candidates = bandKeys(bsets, idCol, "id_1", bands, rowsPerBand)
-        .join(index.bands.select(col(idCol).as("id_2"), col("band"), col("bkey")),
-          Seq("band", "bkey"))
-        .select("id_1", "id_2").distinct()
-      val matched = verifyJaccard2(candidates, bsets, index.sets, idCol, threshold)
-        .select(col("id_1")).distinct()
-      newDocs.join(matched, newDocs(idCol) === matched("id_1"), "left_anti")
-    }
+                                  bands: Int = 32, rowsPerBand: Int = 2): DataFrame = {
+    val bsets = graft.Caches.persistLoaned(shingleSets(newDocs, idCol, textCol, n))
+    val candidates = bandKeys(bsets, idCol, "id_1", bands, rowsPerBand)
+      .join(index.bands.select(col(idCol).as("id_2"), col("band"), col("bkey")),
+        Seq("band", "bkey"))
+      .select("id_1", "id_2").distinct()
+    val matched = verifyJaccard2(candidates, bsets, index.sets, idCol, threshold)
+      .select(col("id_1")).distinct()
+    newDocs.join(matched, newDocs(idCol) === matched("id_1"), "left_anti")
+  }
 
   /** ALL near-dup pairs of the indexed corpus, from the materialized
     * [[MinhashIndex]] alone — the self-join form of
@@ -2823,27 +2665,26 @@ object Dedup {
     * sets — the train corpus is never re-shingled or scanned. `n` shapes
     * the test side and MUST match the index build (maxDf is frozen in the
     * index). Result is identical to the one-shot form built with the same
-    * parameters (driver-gated, d7b_decon_replay). `releaseSets` loans the
-    * TEST shingle-set persist.
+    * parameters (driver-gated, d7b_decon_replay). The TEST shingle-set
+    * frame is a [[graft.Caches]] loan.
     */
   def decontaminationFromIndex(index: ContainmentIndex, test: DataFrame,
                                idCol: String, textCol: String, n: Int,
-                               threshold: Double,
-                               releaseSets: Boolean = false): DataFrame =
-    withPersistedSets(shingleSets(test, idCol, textCol, n), releaseSets) { xsets =>
-      val xi = ArrayOps.explodeDense(xsets, Seq(col(idCol).as("test_id")), col("shs"), "sk")
-      val candidates = xi.join(index.rareInv.select("train_id", "sk"), "sk")
-        .select("test_id", "train_id").distinct()
-      val t1 = index.sets.select(col(idCol).as("train_id"), col("shs").as("shs_t"))
-      val x1 = xsets.select(col(idCol).as("test_id"), col("n_sh").as("n_test"),
-        col("shs").as("shs_x"))
-      candidates.join(x1, "test_id").join(t1, "train_id")
-        .withColumn("containment",
-          round(ArrayOps.sortedIntersectSize(col("shs_x"), col("shs_t")).cast("double") /
-            col("n_test").cast("double"), 6))
-        .filter(col("containment") >= threshold)
-        .select("test_id", "train_id", "containment")
-    }
+                               threshold: Double): DataFrame = {
+    val xsets = graft.Caches.persistLoaned(shingleSets(test, idCol, textCol, n))
+    val xi = ArrayOps.explodeDense(xsets, Seq(col(idCol).as("test_id")), col("shs"), "sk")
+    val candidates = xi.join(index.rareInv.select("train_id", "sk"), "sk")
+      .select("test_id", "train_id").distinct()
+    val t1 = index.sets.select(col(idCol).as("train_id"), col("shs").as("shs_t"))
+    val x1 = xsets.select(col(idCol).as("test_id"), col("n_sh").as("n_test"),
+      col("shs").as("shs_x"))
+    candidates.join(x1, "test_id").join(t1, "train_id")
+      .withColumn("containment",
+        round(ArrayOps.sortedIntersectSize(col("shs_x"), col("shs_t")).cast("double") /
+          col("n_test").cast("double"), 6))
+      .filter(col("containment") >= threshold)
+      .select("test_id", "train_id", "containment")
+  }
 
   /** D7e — EXACT n-gram overlap decontamination, the published-eval
     * convention (flag a train document sharing ANY word n-gram, n ≈ 13,
@@ -2864,19 +2705,14 @@ object Dedup {
     * the result exact. Output (train_id, n_hit_grams) — the hit count
     * ranks leaks for triage; threshold at ≥ 1 for the published gate.
     *
-    * `release` follows the loan contract: the benchmark gram-key persist
-    * (read twice — bloom build + verify join) is dropped after the
-    * (small) result materializes.
+    * The benchmark gram-key frame (read twice — bloom build + verify join)
+    * is a [[graft.Caches]] loan.
     */
   def decontaminationExactNgram(train: DataFrame, bench: DataFrame,
                                 idCol: String, textCol: String, n: Int = 13,
                                 fpp: Double = 0.01,
-                                maxNumBits: Long = 1L << 26,
-                                release: Boolean = false): DataFrame = {
+                                maxNumBits: Long = 1L << 26): DataFrame = {
     require(fpp > 0.0 && fpp < 1.0, "decontaminationExactNgram: fpp must be in (0,1)")
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.{graftshim => shim}
     // gram keys = chained xxhash64 fold of PER-WORD hashes over each
     // n-word window — each word hashes ONCE and a window costs n cheap
     // long-pair hashes, where hashing materialized n-word gram STRINGS
@@ -2895,33 +2731,17 @@ object Dedup {
                 (acc, h) => xxhash64(acc, h)))))
             .otherwise(array().cast("array<bigint>")).as("gks"))
     }
-    val bg = graft.Caches.loan(
-      ArrayOps.explodeDense(gramKeys(bench), Seq.empty, col("gks"), "gk")
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val bg = graft.Caches.persistLoaned(
+      ArrayOps.explodeDense(gramKeys(bench), Seq.empty, col("gks"), "gk").distinct())
     val gramCount = math.max(1L, bg.count()) // also materializes the persist
-    val optimalBits = math.ceil(-gramCount * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val numBits = math.min(math.max(optimalBits, 64L), maxNumBits)
-    val gkExpr = shim.toExpression(col("gk"))
-    val bloomAgg = new BloomFilterAggregate(gkExpr, Literal(gramCount), Literal(numBits))
-    val bloomBytes = bg.select(shim.toColumn(bloomAgg.toAggregateExpression()).as("bf"))
-      .head().getAs[Array[Byte]](0)
-    val mightMatch = shim.toColumn(BloomFilterMightContain(
-      Literal(bloomBytes, org.apache.spark.sql.types.BinaryType), gkExpr))
-    val res = ArrayOps.explodeDense(gramKeys(train), Seq(col(idCol)), col("gks"), "gk")
+    val mightMatch = bloomMightContain(bg, col("gk"), gramCount, fpp, maxNumBits,
+      probe = col("gk"))
+    ArrayOps.explodeDense(gramKeys(train), Seq(col(idCol)), col("gks"), "gk")
       .filter(mightMatch)
       .join(bg, Seq("gk"), "left_semi")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_hit_grams"))
       .select(col(idCol).as("train_id"), col("n_hit_grams"))
-    if (!release) res
-    else {
-      val out = graft.Caches.loan(
-        res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      out.count()
-      bg.unpersist(); graft.Caches.settled(bg)
-      out
-    }
   }
 
   /** The embedding-ingest probe structure: `vecs` = (id, vector) for exact

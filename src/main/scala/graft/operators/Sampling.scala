@@ -269,17 +269,10 @@ object Sampling {
     * [[mixtureSampleByWeight]]'s negative-weight enforcement.
     *
     * Cache lifecycle: the ranged frame's persist is REQUIRED for
-    * pid-consistency (see above). `release = false` (default) leaves it
-    * cached — right inside a query where the session ends with the job.
-    * `release = true` follows the repo's loan contract
-    * (`Dedup.withPersistedSets`): the (budget-bounded) selected prefix is
-    * materialized into its own persist and the ranged frame is unpersisted
-    * before returning, so repeated calls in a long-lived session leave no
-    * cache residue; the caller owns the returned frame's persist.
+    * pid-consistency (see above); it is a [[graft.Caches]] loan.
     */
   def tokenBudgetSelect(df: DataFrame, idCol: String, scoreCol: String,
-                        tokensCol: String, budgetTokens: Long,
-                        release: Boolean = false): DataFrame = {
+                        tokensCol: String, budgetTokens: Long): DataFrame = {
     require(budgetTokens >= 0, "tokenBudgetSelect: budget must be >= 0")
     val reserved = Set("_graft_pid", "_graft_run", "_graft_off")
     require(!df.columns.exists(reserved), s"tokenBudgetSelect: reserved column present")
@@ -300,17 +293,9 @@ object Sampling {
     val offsets = totals
       .withColumn("_graft_off", coalesce(sum("_graft_t").over(wOff), lit(0L)))
       .drop("_graft_t")
-    val res = run.join(broadcast(offsets), "_graft_pid")
+    run.join(broadcast(offsets), "_graft_pid")
       .filter(col("_graft_run") + col("_graft_off") <= budgetTokens)
       .drop("_graft_pid", "_graft_run", "_graft_off")
-    if (!release) res
-    else {
-      val out = graft.Caches.loan(
-        res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      out.count() // force: the prefix must never silently recompute the range
-      ranged.unpersist(); graft.Caches.settled(ranged)
-      out
-    }
   }
 
   /** Validated long token count: non-null and ≥ 0 or the job fails with a

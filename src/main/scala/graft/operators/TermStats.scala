@@ -33,37 +33,22 @@ object TermStats {
     * df aggregate itself exchanges vocabulary-sized partials, and the rank
     * window partitions per document over that document's own vocabulary,
     * never the corpus. Whitespace tokenization matches T7's vocabulary
-    * build.
-    *
-    * `release` follows the loan contract (see Dedup.withPersistedSets):
-    * default false leaves the tf cache to LRU (right when the session will
-    * re-derive more from it); true eagerly materializes the (k-per-doc)
-    * result into its own persist — owned by the caller — and drops the tf
-    * cache before returning.
+    * build. The tf frame is a [[graft.Caches]] loan.
     */
   def distinctiveTerms(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int, release: Boolean = false): DataFrame = {
+                       k: Int): DataFrame = {
     require(k >= 1, "distinctiveTerms: k must be >= 1")
     val toks = graft.functions.ArrayOps.explodeDense(docs, Seq(col(idCol)),
       split(lower(trim(col(textCol))), "\\s+"), "term")
-    val tf = graft.Caches.loan(
-      toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val tf = graft.Caches.persistLoaned(
+      toks.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col(idCol)).orderBy(col("score").desc, col("term").asc)
-    val res = tf.join(dfreq, "term")
+    tf.join(dfreq, "term")
       .withColumn("score", round(col("tf").cast("double") / col("df").cast("double"), 6))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col(idCol), col("term"), col("tf"), col("df"), col("score"), col("rank"))
-    if (!release) res
-    else {
-      val out = graft.Caches.loan(
-        res.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      out.count()
-      tf.unpersist(); graft.Caches.settled(tf)
-      out
-    }
   }
 
   /** T26 — quality BUCKETS (the CCNet head/middle/tail split): bin each

@@ -113,35 +113,6 @@ class DedupSpec extends SparkTestBase {
       "refusal must not leak persists")
   }
 
-  test("releaseSets drops the shingle-set cache once the pair frame is built (sparse path)") {
-    // the loan-pattern contract lives on the >=3-read consumers; the
-    // blocked two-read path (ngramJaccardPairs) deliberately builds its
-    // sets inline with NO cache — BENCH_SCALE.md round 11. Pinned on the
-    // unguarded reference plan: the guarded entry adds its own
-    // evidence caches whose settle recompiles the result's cache entry
-    // (the d4d lifecycle, covered by its own tests).
-    spark.sparkContext.getPersistentRDDs.size // force lazy init
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
-    val baseline = cachedIds
-    val res = Dedup.ngramJaccardPairsSparseUnguarded(corpus, "doc_id", "text", 2, 0.1,
-      maxDf = 1000, releaseSets = true)
-    val afterBuild = cachedIds -- baseline
-    // exactly the result's own persist remains, never the sets'
-    assert(afterBuild.size == 1,
-      s"one owned persist (the materialized pairs) expected, got ${afterBuild.size}")
-    // the eager materialization means the result survives the release
-    assert(res.count() ==
-      Dedup.ngramJaccardPairsSparseUnguarded(corpus, "doc_id", "text", 2, 0.1,
-        maxDf = 1000).count())
-    res.unpersist(blocking = true)
-    assert((cachedIds -- baseline).isEmpty, "no lingering cache after the caller unpersists")
-    // lazy default still leaves the sets cache in place (documented trade)
-    Dedup.ngramJaccardPairsSparseUnguarded(corpus, "doc_id", "text", 2, 0.1,
-      maxDf = 1000).count()
-    assert((cachedIds -- baseline).nonEmpty)
-    spark.sharedState.cacheManager.clearCache()
-  }
-
   test("ngramJaccardPairs (blocked) leaves NO cache behind — sets are built inline") {
     spark.sparkContext.getPersistentRDDs.size
     def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
@@ -559,10 +530,9 @@ class DedupSpec extends SparkTestBase {
       .as[(Long, Long)].collect().toMap
     assert(hits == Map(1L -> 3L),
       s"only doc 1 leaks, with exactly 3 distinct shared 13-grams: $hits")
-    // tight-fpp bloom changes bits, never the (exact) result; release
-    // path drops the benchmark-gram persist after materializing
+    // tight-fpp bloom changes bits, never the (exact) result
     val tight = Dedup.decontaminationExactNgram(train, bench, "doc_id", "text",
-      n = 13, fpp = 0.3, release = true)
+      n = 13, fpp = 0.3)
       .as[(Long, Long)].collect().toMap
     assert(tight == hits, "bloom fpp affects pruning, not the verified result")
   }
@@ -620,7 +590,7 @@ class DedupSpec extends SparkTestBase {
       .as[(Long, Long, Long)].collect()
       .map(t => ((t._1, t._2), t._3)).toMap
     val capped = Dedup.fuzzyNearDupsBudget(docs, "doc_id", "text",
-      maxDist = 40, budgetPairs = 3000L, release = true)
+      maxDist = 40, budgetPairs = 3000L)
       .as[(Long, Long, Long)].collect()
     assert(capped.nonEmpty, "budget 3000 must stay productive on the fixture")
     capped.foreach { case (a, b, dist) =>
@@ -681,22 +651,6 @@ class DedupSpec extends SparkTestBase {
       "doc_id", "text", 0.5, n = 2).count() == 2)
     assert(Dedup.minhashIncremental(corpus.filter(col("doc_id") < 0), corp,
       "doc_id", "text", 0.5, n = 2).count() == 0)
-  }
-
-  test("minhashIncremental releaseSets: survivors materialized, set caches dropped (D2b loan)") {
-    val batch = corpus.filter(col("doc_id").isin(1L, 4L))
-    val corp = corpus.filter(!col("doc_id").isin(1L, 4L))
-    spark.sparkContext.getPersistentRDDs.size
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
-    val baseline = cachedIds
-    val res = Dedup.minhashIncremental(batch, corp, "doc_id", "text",
-      threshold = 0.5, n = 2, releaseSets = true)
-    val afterBuild = cachedIds -- baseline
-    assert(afterBuild.size == 1,
-      s"only the materialized survivor result may stay cached, got ${afterBuild.size}")
-    assert(res.select("doc_id").as[Long].collect().toSet == Set(4L))
-    res.unpersist(blocking = true)
-    assert((cachedIds -- baseline).isEmpty, "no lingering cache after caller release")
   }
 
   test("embeddingIncremental keeps only batch vectors with no corpus near-dup (D5c)") {
@@ -954,48 +908,6 @@ class DedupSpec extends SparkTestBase {
       s"post-compaction update diverged from rebuild: $day3 != $rebuilt")
   }
 
-  test("decontaminationPairs releaseSets drops both shingle-set caches (D7 loan)") {
-    val train = Seq(
-      (100L, "preamble words here the quick brown fox jumps over the lazy dog and trailing text"),
-      (101L, "completely unrelated training material about query engines")
-    ).toDF("doc_id", "text")
-    val test_ = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "no overlap with anything at all whatsoever truly")
-    ).toDF("doc_id", "text")
-    spark.sparkContext.getPersistentRDDs.size // force lazy init
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
-    val baseline = cachedIds
-    val res = Dedup.decontaminationPairs(train, test_, "doc_id", "text", 3, 0.5,
-      maxDf = 10, releaseSets = true)
-    val afterBuild = cachedIds -- baseline
-    assert(afterBuild.size == 1,
-      s"only the materialized pair result may stay cached, got ${afterBuild.size}")
-    assert(res.count() ==
-      Dedup.decontaminationPairs(train, test_, "doc_id", "text", 3, 0.5, maxDf = 10).count())
-    res.unpersist(blocking = true)
-    spark.sharedState.cacheManager.clearCache()
-    assert((cachedIds -- baseline).isEmpty, "no lingering cache after caller release")
-  }
-
-  test("exactIncrementalBloom release drops the batch cache (D8b loan)") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    import org.apache.spark.sql.functions.col
-    spark.sparkContext.getPersistentRDDs.size
-    def cachedIds = spark.sparkContext.getPersistentRDDs.keySet
-    val baseline = cachedIds
-    val batch = docs.filter(col("doc_id") % 7 === 0)
-    val corp = docs.filter(col("doc_id") % 7 =!= 0)
-    val res = Dedup.exactIncrementalBloom(batch, corp, "doc_id", "text", release = true)
-    val afterBuild = cachedIds -- baseline
-    assert(afterBuild.size == 1,
-      s"only the materialized survivor result may stay cached, got ${afterBuild.size}")
-    assert(res.count() == Dedup.exactIncremental(batch, corp, "doc_id", "text").count(),
-      "released bloom path must still equal the plain incremental result")
-    res.unpersist(blocking = true)
-    assert((cachedIds -- baseline).isEmpty, "no lingering cache after caller release")
-  }
-
   test("connectedComponentsIncremental: label-contraction fold equals from-scratch (D6c)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 2, 0.1)
@@ -1032,23 +944,6 @@ class DedupSpec extends SparkTestBase {
     assert(oneShot.nonEmpty, "fixture must contain near-dup pairs")
     assert(fromIndex == oneShot,
       "index self-join must reproduce the one-shot banding relation exactly")
-  }
-
-  test("sparse-auto releaseSets drops BOTH the sets and the candidate caches (D4d loan)") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").repartition(9)
-    val baseline = spark.sparkContext.getPersistentRDDs.keySet
-    val res = Dedup.ngramJaccardPairsSparseAuto(docs, "doc_id", "text", 3, 0.2,
-      budgetPairs = 10000L, releaseSets = true)
-    val out = res.select("id_1", "id_2").as[(Long, Long)].collect().toSet
-    assert(out.nonEmpty)
-    // only the materialized RESULT may remain cached — the sets persist
-    // and the pruneVerify candidate persist were both released
-    val extra = spark.sparkContext.getPersistentRDDs.keySet -- baseline
-    assert(extra.size == 1,
-      s"exactly the result cache may remain, found ${extra.size} new entries")
-    res.unpersist(blocking = true)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- baseline).isEmpty,
-      "no cache residue after the caller releases the result")
   }
 
   test("shingleDfStats: histogram accounts for every posting; cost columns are exact (D4c)") {
@@ -1152,6 +1047,7 @@ class DedupSpec extends SparkTestBase {
     val fixed = Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2,
       maxDf = ceiling.toInt).select("id_1", "id_2").as[(Long, Long)].collect().toSet
     assert(auto == fixed, s"auto(budget=$budget) must equal fixed(maxDf=$ceiling)")
+    assert(auto.nonEmpty, "the binding budget must stay productive on the fixture")
     assert(auto.subsetOf(exact), "pruning may lose recall, never invent pairs")
   }
 

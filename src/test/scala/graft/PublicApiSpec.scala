@@ -18,18 +18,23 @@ class OracleCoverageSpec extends AnyFunSuite {
   }
 }
 
-/** Guard against plan switches creeping back onto the near-dup and as-of
-  * operators: each has one public name, and its measured gate picks the
-  * plan from the input. The reference plans stay `private[graft]`.
+/** Guard against plan and cache switches creeping back onto the operators:
+  * each near-dup and as-of operator has one public name, and its measured
+  * gate picks the plan from the input (the reference plans stay
+  * `private[graft]`); no operator takes a per-call cache-release switch,
+  * because graft's caches live until `Caches.releaseAll` / `Caches.drain`.
   */
 class OperatorApiSpec extends AnyFunSuite {
 
-  private val switches = Set("unbounded", "sliced", "dupFracGate", "expand", "admissionDenom")
+  private val switches = Set("unbounded", "sliced", "dupFracGate", "expand", "admissionDenom",
+    "release", "releaseSets")
   private val deletedNames = Set("minhashNearDupsAuto", "minhashNearDupsCollapsed",
     "fuzzyNearDupsAuto", "embedNearDupAuto", "embeddingIncrementalAuto",
     "asofJoinStreamingSliced")
   private val files = Seq("src/main/scala/graft/operators/Dedup.scala",
-    "src/main/scala/graft/streaming/StreamOps.scala")
+    "src/main/scala/graft/streaming/StreamOps.scala",
+    "src/main/scala/graft/operators/Sampling.scala",
+    "src/main/scala/graft/operators/TermStats.scala")
 
   // a def line with its modifiers; the parameter lists follow the name
   private val defLine =

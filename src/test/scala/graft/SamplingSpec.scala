@@ -314,33 +314,6 @@ class SamplingSpec extends SparkTestBase {
       s"both branches must read one materialized ranged frame:\n$plan")
   }
 
-  test("tokenBudgetSelect release=true drops the ranged-frame cache, same selection (ADVICE r11)") {
-    import org.apache.spark.sql.functions._
-    val toks = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select($"doc_id", $"n_chars".cast("double").as("score"),
-        graft.functions.Text.bpeTokens($"text").cast("long").as("n_tokens"))
-    val budget = toks.agg(sum("n_tokens")).head().getLong(0) / 4
-    // default path first (leaves its documented cache; gives the expected set)
-    val expected = Sampling.tokenBudgetSelect(toks, "doc_id", "score", "n_tokens", budget)
-      .select("doc_id").as[Long].collect().toSet
-    val baseline = spark.sparkContext.getPersistentRDDs.size
-    // distinct input plan (repartition count used NOWHERE else in this
-    // suite) so CacheManager cannot dedupe the release call's ranged frame
-    // onto another test's cache entry — the count below must isolate THIS
-    // call's residue
-    val out = Sampling.tokenBudgetSelect(toks.repartition(11), "doc_id", "score",
-      "n_tokens", budget, release = true)
-    assert(out.select("doc_id").as[Long].collect().toSet == expected,
-      "release variant must select the identical prefix")
-    // loan contract: only the materialized prefix remains cached — the
-    // ranged frame was unpersisted inside the call
-    assert(spark.sparkContext.getPersistentRDDs.size == baseline + 1,
-      "exactly one new cache entry (the materialized prefix) may remain")
-    out.unpersist(blocking = true)
-    assert(spark.sparkContext.getPersistentRDDs.size == baseline,
-      "after the caller releases the result, no cache residue remains")
-  }
-
   test("null or negative token counts fail the job loudly (ADVICE r11)") {
     import org.apache.spark.sql.functions._
     val base = spark.range(20).select($"id".as("doc_id"),
