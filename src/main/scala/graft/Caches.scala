@@ -27,7 +27,7 @@ import org.apache.spark.storage.StorageLevel
   * data; entries for frames the caller already unpersisted are harmless
   * (`unpersist` on a non-persisted frame is a no-op) and are dropped with
   * the rest on release. [[drain]] is the end-of-run form Verify and the
-  * benchmark use: ledger + the Tables/Meta memo caches, then a count of
+  * benchmark use: the ledger and the one Tables memo, then a count of
   * whatever is STILL persisted in the SparkContext (0 = the run left no
   * graft residue; asserted in CachesSpec and printed by Verify).
   */
@@ -87,16 +87,14 @@ object Caches {
   def outstanding(spark: SparkSession): Int =
     ledger.keys.count(df => (df.sparkSession eq spark) && isLive(df))
 
-  /** End-of-run drain: release the ledger, the Tables memo, and the Meta
-    * table memo, then report how many RDDs the SparkContext STILL holds
-    * persisted. 0 means the run left no cache residue at all; >0 means an
-    * unledgered persist leaked (a bug — CachesSpec pins 0 across the loan
-    * sites).
+  /** End-of-run drain: release the ledger and clear the one Tables memo,
+    * then report how many RDDs the SparkContext STILL holds persisted.
+    * 0 means the run left no cache residue at all; >0 means an unledgered
+    * persist leaked (a bug — CachesSpec pins 0 across the loan sites).
     */
   def drain(spark: SparkSession): Int = {
     releaseAll(spark)
     Tables.clearMemo()
-    Meta.clearCachedTables()
     spark.sparkContext.getPersistentRDDs.size
   }
 }

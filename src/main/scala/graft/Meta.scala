@@ -1,67 +1,23 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.apache.spark.storage.StorageLevel
 
-/** A15 caching + A16 execution log.
+/** A16 execution log.
   *
-  * Reference: `@st.cache_resource` memoizes the parsed table across UI
-  * reruns (`/root/reference/app.py:84-85`), and every operation appends a
-  * wall-clock entry to an execution log rendered in the UI
-  * (`/root/reference/app.py:913-918, 1387-1391`).
+  * Reference: every operation appends a wall-clock entry to an execution
+  * log rendered in the UI (the reference's `app.py:913-918, 1387-1391`).
   *
-  * Spark mapping: memoization = `persist()` + a process-wide memo so
-  * repeated loads of the same table return the SAME cached plan (Spark's
-  * CacheManager then substitutes the InMemoryRelation into every query that
-  * uses it); the execution log = a `QueryExecutionListener`, which sees
-  * every completed action with its DURATION and the full `QueryExecution`
-  * (logical + executed plan) — strictly more than the reference's
-  * wall-clock lines, with zero per-row overhead.
+  * Spark mapping: a `QueryExecutionListener`, which sees every completed
+  * action with its DURATION and the full `QueryExecution` (logical +
+  * executed plan) — strictly more than the reference's wall-clock lines,
+  * with zero per-row overhead.
   */
 object Meta {
-
-  // ------------------------------------------------------------------- A15
-
-  /** (dir, name) → (frame, weOwnThePersist). Keyed by session (a frame is
-    * bound to the session that planned it). Ownership matters: when
-    * `Tables.table` already persisted the frame (its small-scan pushdown
-    * barrier), unpersisting it here would silently strip that barrier for
-    * every later `Tables.table` call — so [[clearCachedTables]] only
-    * unpersists frames THIS memo persisted.
-    */
-  private val tableMemo =
-    TrieMap.empty[(SparkSession, String, String), (DataFrame, Boolean)]
-
-  /** Memoized, persisted table load — the reference's cached-load semantics
-    * (`app.py:84-85`). First call per (session, dir, name) ensures the
-    * frame is persisted MEMORY_AND_DISK (spill-safe: partitions that don't
-    * fit in executor memory go to disk instead of OOMing — the right
-    * default at 100 TB where "fits in memory" is never a given); later
-    * calls return the identical cached DataFrame.
-    */
-  def cachedTable(spark: SparkSession, dir: String, name: String): DataFrame = {
-    Tables.evictStopped(tableMemo)(_._1)
-    tableMemo.getOrElseUpdate((spark, dir, name), {
-      val df = Tables.table(spark, dir, name)
-      if (df.storageLevel == StorageLevel.NONE)
-        (df.persist(StorageLevel.MEMORY_AND_DISK), true)
-      else (df, false) // already persisted by Tables' small-scan path
-    })._1
-  }
-
-  /** Drop this memo's tables, unpersisting only the frames it persisted. */
-  def clearCachedTables(): Unit = {
-    tableMemo.values.foreach { case (df, owned) => if (owned) df.unpersist() }
-    tableMemo.clear()
-  }
-
-  // ------------------------------------------------------------------- A16
 
   /** One completed action: the action name (`count`, `collect`, ...), its
     * duration, and the physical plan that ran.
@@ -73,7 +29,7 @@ object Meta {
     * callbacks arrive on the listener bus thread). BOUNDED: beyond
     * `maxEntries` the oldest entries drop (each entry holds a full physical
     * plan string — an unbounded log in a long-lived session is a slow
-    * leak, the same hygiene class as the table memos).
+    * leak, the same hygiene class as the Tables memo).
     */
   final class ExecLog(maxEntries: Int = 10000) extends QueryExecutionListener {
     private val q = new ConcurrentLinkedQueue[ExecEntry]()

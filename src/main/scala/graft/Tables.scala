@@ -33,10 +33,10 @@ object Tables {
 
   /** Drop memo entries whose owning session has stopped — their cached
     * frames can never be reused or unpersisted on a dead context, only
-    * leaked. Shared cache hygiene for the Tables and Meta memos.
+    * leaked.
     */
-  private[graft] def evictStopped[K, V](m: scala.collection.concurrent.TrieMap[K, V])
-                                       (session: K => SparkSession): Unit =
+  private def evictStopped[K, V](m: scala.collection.concurrent.TrieMap[K, V])
+                                (session: K => SparkSession): Unit =
     m.keys.foreach { k => if (session(k).sparkContext.isStopped) m.remove(k) }
 
   // keyed by session too: a memoized frame is bound to the session that

@@ -272,16 +272,6 @@ object StreamOps {
     spark.read.parquet(s"$path/out")
   }
 
-  /** Batch-replay harness: run an already-wired streaming frame to a memory
-    * sink under `Trigger.AvailableNow` and block until the (finite) source
-    * drains, returning the sink table. This is how the streaming operators
-    * get DRIVER-GATED: replay the stream over a file source and compare the
-    * result to the batch oracle — same logic, incremental execution, same
-    * answer. AvailableNow processes the backlog in bounded batches and
-    * stops, which is also the production shape for a catch-up run over an
-    * ingest directory. The memory sink collects RESULT rows on the driver —
-    * fine for aggregate/dedup outputs, which are reduced, not raw data.
-    */
   /** E5 — STREAM–STATIC enrichment join: each micro-batch of the stream
     * hash-joins against a static (batch) dimension frame — the standard
     * "attach user/document metadata at ingest" shape. Spark keeps the
@@ -632,6 +622,16 @@ object StreamOps {
       (math.max(0L, backlogBytes) + bytesPerStore - 1) / bytesPerStore)).toInt
   }
 
+  /** Batch-replay harness: run an already-wired streaming frame to a memory
+    * sink under `Trigger.AvailableNow` and block until the (finite) source
+    * drains, returning the sink table. This is how the streaming operators
+    * get DRIVER-GATED: replay the stream over a file source and compare the
+    * result to the batch oracle — same logic, incremental execution, same
+    * answer. AvailableNow processes the backlog in bounded batches and
+    * stops, which is also the production shape for a catch-up run over an
+    * ingest directory. The memory sink collects RESULT rows on the driver —
+    * fine for aggregate/dedup outputs, which are reduced, not raw data.
+    */
   def runToMemoryTable(spark: SparkSession, streamed: DataFrame, name: String,
                        mode: String = "append", stateWidth: Int = 0): DataFrame = {
     spark.catalog.dropTempView(name)

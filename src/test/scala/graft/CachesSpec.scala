@@ -25,8 +25,8 @@ class CachesSpec extends SparkTestBase {
     // 2. the budget-bounded result persist handed back to the caller
     Dedup.ngramJaccardPairsSparseAuto(docs, "doc_id", "text", 3, 0.2,
       budgetPairs = 12000L).count()
-    // 3. the A15 memoized table persist
-    Meta.cachedTable(spark, sf, "region").count()
+    // 3. the Tables small-scan persist (a memo entry, not a ledger loan)
+    Tables.table(spark, sf, "region").count()
 
     assert(Caches.outstanding(spark) > 0,
       "the loan sites above must register in the ledger")

@@ -1,21 +1,7 @@
 package graft
 
-/** A15 caching + A16 execution log. */
+/** A16 execution log. */
 class MetaSpec extends SparkTestBase {
-
-  test("cachedTable memoizes: same DataFrame instance, persisted storage level (A15)") {
-    Meta.clearCachedTables()
-    val a = Meta.cachedTable(spark, "/root/testdata/sf0.001", "nation")
-    val b = Meta.cachedTable(spark, "/root/testdata/sf0.001", "nation")
-    assert(a eq b, "second load must return the memoized frame")
-    assert(a.storageLevel.useMemory || a.storageLevel.useDisk, "frame must be persisted")
-    assert(a.count() == 25)
-    Meta.clearCachedTables()
-    // nation is a small scan that Tables.table itself persisted (pushdown
-    // barrier) — clearCachedTables must NOT strip a persist it doesn't own
-    assert(a.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-      "clear must leave Tables' own small-scan persist intact")
-  }
 
   test("ExecLog records completed actions with duration and physical plan (A16)") {
     val log = Meta.attachExecLog(spark)

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators._
 import graft.streaming.StreamOps
+import graft.verify.VerifyRows
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
@@ -120,14 +121,14 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("vocabulary top-N plans as TakeOrderedAndProject over a partial-agged count (T7)") {
-    val p = plan(SparkEntry.queries("t7_vocab")(spark, sf))
+    val p = plan(VerifyRows("t7_vocab").run(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), s"expected top-N heap in:\n$p")
     val aggs = "HashAggregate".r.findAllIn(p).length
     assert(aggs >= 2, s"expected partial+final count phases in:\n$p")
   }
 
   test("uniform frame sampling is narrow — no exchange between decode and explode (M3)") {
-    val p = plan(SparkEntry.queries("m3_frame_sample")(spark, sf))
+    val p = plan(VerifyRows("m3_frame_sample").run(spark, sf))
     // the only exchange allowed is the final orderBy's range partitioning
     // (formatted mode prints the partitioning on an Arguments: line)
     assert("Arguments: hashpartitioning".r.findAllIn(p).isEmpty,
@@ -576,7 +577,7 @@ class PlanSpec extends SparkTestBase {
     // execution, its driver-side build was the 0.88 s vs 2.95 s swing.
     // The explicit broadcast(big) hint pins the small side; this gate
     // reads the FINAL adaptive plan after execution.
-    val df = SparkEntry.queries("q18_large_orders")(spark, sf)
+    val df = VerifyRows("q18_large_orders").run(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     val line = p.linesIterator.find(_.contains("BroadcastHashJoin [o_orderkey"))
@@ -603,7 +604,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("q_quality_funnel: ONE corpus pass — single scan, single partial-agged aggregate, no joins") {
-    val p = plan(SparkEntry.queries("q_quality_funnel")(spark, sf))
+    val p = plan(VerifyRows("q_quality_funnel").run(spark, sf))
     // exactly one execution-time corpus scan, whatever the Tables cache
     // state is when this test runs (suite neighbors may or may not have
     // the documents persist live). Cached: one InMemoryTableScan, whose
@@ -663,7 +664,7 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("hybrid RRF: each candidate list is a TakeOrdered heap, never a global sort (H1)") {
-    val p = plan(SparkEntry.queries("h1_hybrid_rrf")(spark, sf))
+    val p = plan(VerifyRows("h1_hybrid_rrf").run(spark, sf))
     // two candidate lists → two top-k reductions; the only nested-loop is
     // the audited one-row query-vector broadcast
     assert("TakeOrderedAndProject".r.findAllIn(p).length >= 2,
@@ -682,7 +683,7 @@ class PlanSpec extends SparkTestBase {
   test("SQL-text token budget plans the keyed window — no global (empty-partition) window (S5l)") {
     Tables.registerAll(spark, sf)
     graft.plans.GraftExtensions.registerFunctions(spark)
-    val p = plan(SparkEntry.queries("s5l_sql_token_budget")(spark, sf))
+    val p = plan(VerifyRows("s5l_sql_token_budget").run(spark, sf))
     // the running sum must partition on source — a window with an empty
     // partitionBy would pull the corpus into one task
     assert(p.contains("Window"), s"expected a window operator:\n$p")

@@ -2,19 +2,32 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.verify.VerifyRows
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every Verify row is checked: each `SparkEntry.queries` entry has oracle
-  * SQL, and every oracle entry has a query to check. Builds no session and
-  * runs no Spark job.
+/** The Verify rows as records: each row is declared once, by name, and a
+  * subset run names only rows that exist. Builds no session and runs no
+  * Spark job.
   */
-class OracleCoverageSpec extends AnyFunSuite {
+class VerifyRowsSpec extends AnyFunSuite {
 
-  test("SparkEntry.queries and SparkEntry.oracleSql name the same rows") {
-    val queries = SparkEntry.queries.keySet
-    val oracle = SparkEntry.oracleSql.keySet
-    assert((queries -- oracle).isEmpty, s"queries without oracle SQL: ${(queries -- oracle).toSeq.sorted}")
-    assert((oracle -- queries).isEmpty, s"oracle SQL without a query: ${(oracle -- queries).toSeq.sorted}")
+  test("the 241 Verify row names are unique") {
+    val names = VerifyRows.all.map(_.name)
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, s"row names declared twice: ${dups.sorted}")
+    assert(names.size == 241, s"expected 241 rows, got ${names.size}")
+    assert(VerifyRows.all.forall(_.oracleSql.trim.nonEmpty), "every row carries oracle SQL")
+  }
+
+  test("SPARK_GRAFT_ONLY: unknown row names throw, naming each; known ones keep declared order") {
+    val e = intercept[IllegalArgumentException](
+      VerifyRows.select(Seq("s1_csv_scan", "s1_csv_scna", "no_such_row")))
+    assert(e.getMessage.contains("s1_csv_scna") && e.getMessage.contains("no_such_row"),
+      e.getMessage)
+    assert(!e.getMessage.contains("s1_csv_scan,"), e.getMessage)
+    assert(VerifyRows.select(Seq("a14_count", "s1_csv_scan")).map(_.name) ==
+      Seq("s1_csv_scan", "a14_count"))
+    assert(VerifyRows.select(Nil) == VerifyRows.all)
   }
 }
 

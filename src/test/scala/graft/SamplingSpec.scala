@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Sampling}
+import graft.verify.VerifyRows
 import org.apache.spark.sql.functions.lit
 
 /** Reproducible hash-based sampling. */
@@ -158,7 +159,7 @@ class SamplingSpec extends SparkTestBase {
   test("s5j group split: near-duplicate pairs never straddle a split boundary") {
     import graft.operators.Dedup
     val dir = "/root/testdata/sf0.001"
-    val split = SparkEntry.queries("s5j_group_split")(spark, dir)
+    val split = VerifyRows("s5j_group_split").run(spark, dir)
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     val pairs = Dedup.ngramJaccardPairs(Tables.documents(spark, dir),
       "doc_id", "text", 2, 0.1)
@@ -175,7 +176,7 @@ class SamplingSpec extends SparkTestBase {
   test("s5j2 indexed split: no straddling pairs over ITS index pair set (VERDICT r11 #2)") {
     import graft.operators.Dedup
     val dir = "/root/testdata/sf0.001"
-    val split = SparkEntry.queries("s5j2_group_split_indexed")(spark, dir)
+    val split = VerifyRows("s5j2_group_split_indexed").run(spark, dir)
       .select("doc_id", "split").as[(Long, String)].collect().toMap
     // the pair set this split must respect is the INDEX's own relation —
     // replay it from the staged index the query just built

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SemiStructured
+import graft.verify.VerifyRows
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** JSON-string field extraction (x12). */
@@ -71,7 +72,7 @@ class SemiStructuredSpec extends SparkTestBase {
   }
 
   test("x12 query row matches a hand-computed aggregate at sf0.001") {
-    val out = SparkEntry.queries("x12_json_extract")(spark, "/root/testdata/sf0.001")
+    val out = VerifyRows("x12_json_extract").run(spark, "/root/testdata/sf0.001")
       .collect()
     assert(out.nonEmpty)
     val events = Tables.events(spark, "/root/testdata/sf0.001")

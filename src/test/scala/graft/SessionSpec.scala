@@ -88,3 +88,42 @@ class EnvKnobSpec extends AnyFunSuite {
     assert(offending.isEmpty, offending.mkString("unexpected env reads:\n", "\n", ""))
   }
 }
+
+/** Guard against memo creep: a process-wide map keyed by session outlives
+  * the call that filled it. `src/main/scala` declares three — the
+  * `Tables` small-scan memo, the `Caches` loan ledger and the verify
+  * stage-dir locks (`stageLocks`) — and adding one means adding it here,
+  * deliberately.
+  */
+class MemoSpec extends AnyFunSuite {
+
+  // the stage locks are allowed by name wherever the verify helpers live
+  private val allowed = Set("Tables.memo", "Caches.ledger")
+  private val locks = "stageLocks"
+  // `val name = TrieMap...`, the initializer possibly on the next line
+  private val declared =
+    """(?:val|var)\s+(\w+)\s*(?::[^=\n]*)?=\s*(?:new\s+)?(?:scala\.collection\.concurrent\.)?TrieMap\b""".r
+  // a TrieMap built, named or not (a `TrieMap[K, V]` type is not)
+  private val built =
+    """\bnew\s+(?:scala\.collection\.concurrent\.)?TrieMap\b|\bTrieMap\s*(?:\[[^\]\n]*\]\s*)?(?:\.empty|\.from|\.apply|\()""".r
+
+  test("src/main/scala declares TrieMaps only for the Tables memo, the Caches ledger and the stage locks") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val files = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    assert(files.nonEmpty)
+    val offending = for {
+      f <- files
+      owner = f.getFileName.toString.stripSuffix(".scala")
+      // blank out comments, keeping offsets and line numbers
+      src = "(?s)/\\*.*?\\*/|//[^\n]*".r.replaceAllIn(Files.readString(f),
+        m => m.matched.replaceAll("[^\n]", " "))
+      names = declared.findAllMatchIn(src).map(m => (m.end - "TrieMap".length) -> m.group(1)).toMap
+      m <- built.findAllMatchIn(src).toSeq
+      name = names.get(src.indexOf("TrieMap", m.start))
+      if !name.exists(n => allowed(s"$owner.$n") || n == locks)
+    } yield s"$f:${src.substring(0, m.start).count(_ == '\n') + 1}: " +
+      name.fold("unnamed TrieMap")(n => s"$owner.$n")
+    assert(offending.isEmpty, offending.mkString("unexpected TrieMap declarations:\n", "\n", ""))
+  }
+}

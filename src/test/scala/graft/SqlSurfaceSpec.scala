@@ -1,5 +1,6 @@
 package graft
 
+import graft.verify.VerifyRows
 import org.apache.spark.sql.functions._
 
 /** The free SQL front-end: `Tables.registerAll` + `spark.sql` must agree
@@ -96,7 +97,7 @@ class SqlSurfaceSpec extends SparkTestBase {
         lit("spec").as("source"), length(col("text")).as("n_chars"))
     val dir = "target/tmp/sqlsurface_d7f"
     docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def run() = SparkEntry.queries("d7f_decon_lifecycle_sql")(spark, dir)
+    def run() = VerifyRows("d7f_decon_lifecycle_sql").run(spark, dir)
       .select("test_id", "train_id", "containment")
       .as[(Long, Long, Double)].collect().toSet
     val got = run()
@@ -131,7 +132,7 @@ class SqlSurfaceSpec extends SparkTestBase {
     val dir = "target/tmp/sqlsurface_d5k_dense"
     dense.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val e = intercept[IllegalArgumentException](
-      SparkEntry.queries("d5k_embed_index_guarded_sql")(spark, dir).collect())
+      VerifyRows("d5k_embed_index_guarded_sql").run(spark, dir).collect())
     assert(e.getMessage.contains("banded candidate") &&
       e.getMessage.contains("guard"),
       s"refusal must name the priced bill and the guard: ${e.getMessage}")
@@ -156,7 +157,7 @@ class SqlSurfaceSpec extends SparkTestBase {
   test("d5k guarded lifecycle is relation-identical to unguarded d5j where it admits") {
     import spark.implicits._
     graft.plans.GraftExtensions.registerFunctions(spark)
-    def rel(name: String) = SparkEntry.queries(name)(spark, sf)
+    def rel(name: String) = VerifyRows(name).run(spark, sf)
       .as[(Long, Int)].collect().toSeq
     val guarded = rel("d5k_embed_index_guarded_sql")
     val plain = rel("d5j_embed_index_update_sql")

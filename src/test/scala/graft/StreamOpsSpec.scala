@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.StreamOps
+import graft.verify.VerifyRows
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -275,7 +276,7 @@ class StreamOpsSpec extends SparkTestBase {
     // before the marker must NOT let a rerun double-append into the same
     // checkpoint+sink trio — absent marker ⇒ the whole trio restarts empty
     val d = "/root/testdata/sf0.001"
-    val fresh = SparkEntry.queries("e9_stream_route")(spark, d).collect()
+    val fresh = VerifyRows("e9_stream_route").run(spark, d).collect()
     val scratch = new java.io.File(
       "/root/repo/target/tmp/" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
     val routeBase = Option(scratch.listFiles()).toSeq.flatten
@@ -285,7 +286,7 @@ class StreamOpsSpec extends SparkTestBase {
     assert(new java.io.File(routeBase, "_ROUTED").delete())
     val junk = new java.io.File(routeBase, "pass/junk-from-crashed-run.txt")
     java.nio.file.Files.write(junk.toPath, "junk".getBytes)
-    val rerun = SparkEntry.queries("e9_stream_route")(spark, d).collect()
+    val rerun = VerifyRows("e9_stream_route").run(spark, d).collect()
     assert(!junk.exists(), "unfinished trio must be wiped before the replay")
     assert(rerun.map(_.toString).sorted.toSeq == fresh.map(_.toString).sorted.toSeq,
       "rerun after a simulated crash must reproduce the routed relation exactly")

@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Pins `Tables.registerAll`'s per-view isolation (the r9 failure mode):
   * one unloadable table must cost only queries that reference IT — the
-  * other views still register and still answer SQL.
+  * other views still register and still answer SQL. Also pins the
+  * `Tables.table` memo, graft's one table memo, and its end at
+  * `Caches.drain`.
   */
 class TablesSpec extends SparkTestBase {
 
@@ -52,5 +54,23 @@ class TablesSpec extends SparkTestBase {
     intercept[Throwable] {
       Tables.registerAll(spark, "target/tmp/tables_spec_definitely_missing")
     }
+  }
+
+  test("table memoizes per (session, dir, name); drain unpersists the small scan") {
+    // start from an empty memo: an earlier test may have dropped the cache
+    // entry under a memoized frame (the first test above drops the views
+    // `registerAll` made over the memo frames, which uncaches them)
+    Caches.drain(spark)
+    val a = Tables.table(spark, srcSf, "nation")
+    val b = Tables.table(spark, srcSf, "nation")
+    assert(a eq b, "a second load must return the memoized frame")
+    assert(!(Tables.table(spark, srcSf, "region") eq a), "another name is another frame")
+    assert(a.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+      s"the single-row-group scan must be persisted, got ${a.storageLevel}")
+    assert(a.count() == 25)
+    Caches.drain(spark)
+    assert(a.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "drain must unpersist the memoized small scan")
+    assert(!(Tables.table(spark, srcSf, "nation") eq a), "drain must forget the memo entry")
   }
 }
