@@ -55,13 +55,27 @@ object Caches {
 
   /** Persist-and-register in one step — MEMORY_AND_DISK, the repo default
     * (spill-safe: partitions that outgrow executor memory go to disk).
+    *
+    * A plan another owner already cached (the user, the Tables memo) is
+    * returned as it is, neither persisted nor loaned: the cache manager
+    * matches entries by plan, so a loan of it would be an unpersist of
+    * THEIR entry at [[releaseAll]].
     */
   def persistLoaned(df: DataFrame,
                     level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    loan(df.persist(level))
+    // storageLevel IS the cache manager's lookup of the plan
+    if (df.storageLevel != StorageLevel.NONE) df
+    else loan(df.persist(level))
 
   /** A caller settled a loan itself (explicit unpersist) — forget it. */
   def settled(df: DataFrame): Unit = ledger.remove(df)
+
+  /** End a loan early: unpersist `df` (non-blocking) if it is a loan, and
+    * forget it. A frame [[persistLoaned]] handed back unloaned is left
+    * cached for its owner.
+    */
+  private[graft] def endLoan(df: DataFrame): Unit =
+    if (ledger.remove(df).isDefined) df.unpersist(blocking = false)
 
   /** Unpersist every ledgered frame belonging to `spark` (blocking, so the
     * storage is actually gone when this returns) and drop the entries.

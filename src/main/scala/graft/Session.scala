@@ -48,9 +48,32 @@ object Session {
       System.setProperty("derby.system.home", t.getAbsolutePath)
   }
 
+  /** Generated classes Spark keeps per JVM (`spark.sql.codegen.cache.maxEntries`,
+    * default 100). A query whose classes were evicted recompiles its whole
+    * plan on its next run: at the default, one round of the benchmark's
+    * dashboard queries (about 240 distinct classes) evicted everything
+    * between rounds, and each query compiled 3-63 classes again on every
+    * call. Measured working sets under this size, with nothing evicted:
+    * ~260 classes for a dashboard run, 2,708 for a whole sf0.01 Verify run
+    * (all 241 rows in one JVM) — 4096 leaves ~1.5× headroom over the
+    * larger. What the retained classes cost: Verify ends with 242 MB of
+    * Metaspace used, against 225 MB when the cache held 100.
+    */
+  private[graft] val CodegenCacheEntries = 4096
+
   /** The one session factory: a minimal `local[cores]` builder (the
     * settings that only take effect at construction), then [[tune]] for
     * graft's runtime confs, optimizer rules and `graft_*` SQL functions.
+    *
+    * Two construction-time settings [[tune]] cannot apply to a running
+    * session:
+    *   - the codegen class cache size ([[CodegenCacheEntries]]). The conf
+    *     is static and read once per JVM, when the first class compiles, so
+    *     a session built outside graft must set it on its own builder
+    *     (before any query runs);
+    *   - [[graft.plans.GraftExtensions]], whose physical rule
+    *     ([[graft.plans.BindFilterLiterals]]) binds filter literals so a
+    *     query re-run with new parameters reuses its classes.
     */
   def get(cores: Int = 32): SparkSession = {
     quietResidue()
@@ -60,6 +83,8 @@ object Session {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     tune(s)
@@ -95,7 +120,9 @@ object Session {
     * SQL functions (idempotent — re-registration overwrites in place), so
     * a tuned session plans the same shapes and has the same SQL surface as
     * [[get]]. (`spark.sql.extensions=graft.plans.GraftExtensions` installs
-    * the rules and functions, not the confs.)
+    * the rules and functions, not the confs.) Two things only a session's
+    * builder can set stay out of reach here: the codegen class cache size
+    * and graft's physical rule — see [[get]].
     */
   def tune(spark: SparkSession): SparkSession = {
     quietResidue()

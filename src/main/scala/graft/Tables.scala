@@ -28,8 +28,8 @@ object Tables {
     * table (many row groups ≥ session parallelism) is returned untouched —
     * no shuffle, no cache.
     */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private val memo = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), (DataFrame, Boolean)] // (frame, small scan)
 
   /** Drop memo entries whose owning session has stopped — their cached
     * frames can never be reused or unpersisted on a dead context, only
@@ -43,22 +43,27 @@ object Tables {
   // planned it — returning it to another (or a stopped) session would
   // execute on the wrong SparkContext. Large tables memoize their RAW plan
   // (no persist — just skips re-probing partition count, which re-plans the
-  // df→RDD conversion on every call).
+  // df→RDD conversion on every call). A small scan whose cache entry is gone
+  // (a `dropTempView` over a `registerAll` view uncaches the view's plan) is
+  // persisted again on its next hit, so the memo never hands out the
+  // single-partition scan without its barrier.
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     evictStopped(memo)(_._1)
-    memo.getOrElseUpdate((spark, dir, name), {
+    // MEMORY_AND_DISK: the measured winner at 1000× (BENCH_SCALE r18)
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val (df, small) = memo.getOrElseUpdate((spark, dir, name), {
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       val target = spark.sparkContext.defaultParallelism
-      if (raw.rdd.getNumPartitions >= target) raw
-      // MEMORY_AND_DISK: the measured winner at 1000× (BENCH_SCALE r18)
-      else raw.repartition(target)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (raw.rdd.getNumPartitions >= target) (raw, false)
+      else (raw.repartition(target).persist(level), true)
     })
+    if (small && df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist(level)
+    df
   }
 
   /** Unpersist and forget every memoized small-scan table (all sessions). */
   def clearMemo(): Unit = {
-    memo.values.foreach(df => try df.unpersist() catch { case _: Exception => () })
+    memo.values.foreach { case (df, _) => try df.unpersist() catch { case _: Exception => () } }
     memo.clear()
   }
 

@@ -1,5 +1,8 @@
 package graft
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import graft.verify.VerifyRows
 /** Correctness dump: each Verify row's result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (`tools/compare.py`). */
@@ -54,6 +57,13 @@ object Verify {
     // persisted RDDs = the full dump left no cache residue.
     val leftover = Caches.drain(spark)
     System.err.println(s"[verify] cache drain: $leftover persisted RDDs remain")
+    // What the run compiled and what the JVM holds at its end: Metaspace
+    // carries the generated classes the codegen cache retains.
+    val metaspace = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum
+    val heap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
+    System.err.println(f"[verify] codegen: ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount}%d " +
+      f"classes compiled; used Metaspace ${metaspace / 1e6}%.1f MB, heap ${heap / 1e6}%.1f MB")
     spark.stop()
   }
 }

@@ -241,16 +241,16 @@ object Joins {
     * departure from fully-lazy construction — the lshTopK-guard trade): the
     * right side is persisted around the count so a derived/uncached right
     * pipeline computes its lineage once, and the same persisted frame feeds
-    * the join. Resource contract (a "defensive copy" cannot avoid this —
-    * Spark's CacheManager matches entries by canonical plan, so persisting
-    * any plan-equal copy IS persisting the caller's relation): the guard
-    * registers ONE cache entry for the right relation, released immediately
-    * when the guard trips; on the happy path it stays live so the join's
-    * materialization reuses it. Repeated calls on the same right frame
-    * share that single entry — they do not accumulate. The caller releases
-    * it with `right.unpersist()` once the join has run (plan-matched, works
-    * whether or not they persisted themselves); Spark's LRU reclaims it
-    * under storage pressure otherwise. Pass `maxExplodedRows = 0` to keep
+    * the join. Resource contract (Spark's CacheManager matches entries by
+    * canonical plan, so persisting any plan-equal copy IS persisting the
+    * caller's relation): a right side the caller or the Tables memo has
+    * already cached is used as it is and never unpersisted by graft;
+    * otherwise the guard persists it as ONE `Caches` loan, ended at once
+    * when the guard trips and on the happy path left live so the join's
+    * materialization reuses it, until `Caches.releaseAll` / `drain`.
+    * Repeated calls on the same right frame share that single entry — they
+    * do not accumulate. The caller may also release it early with
+    * `right.unpersist()` (plan-matched). Pass `maxExplodedRows = 0` to keep
     * construction fully lazy (and cache-free) when the right side's size is
     * known by contract.
     */
@@ -258,12 +258,9 @@ object Joins {
                  buckets: Int, maxExplodedRows: Long = 1L << 24): DataFrame = {
     require(buckets >= 1, "saltedJoin: buckets must be >= 1")
     val rightSide = if (maxExplodedRows > 0) {
-      val cached = graft.Caches.loan(
-        right.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val cached = graft.Caches.persistLoaned(right)
       val rc = cached.count()
-      if (rc * buckets > maxExplodedRows) {
-        cached.unpersist(false); graft.Caches.settled(cached)
-      }
+      if (rc * buckets > maxExplodedRows) graft.Caches.endLoan(cached)
       require(rc * buckets <= maxExplodedRows,
         s"saltedJoin: right side has $rc rows × $buckets buckets = " +
           s"${rc * buckets} exploded rows (limit $maxExplodedRows). saltedJoin " +

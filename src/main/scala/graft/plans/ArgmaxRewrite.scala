@@ -97,11 +97,22 @@ object ArgmaxRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** `spark.sql.extensions` entry point injecting graft's optimizer rules and
-  * SQL functions: the codegen'd vector/set kernels become callable from
-  * plain `spark.sql(...)` (`graft_cosine`, `graft_dot`, `graft_pack_int8`,
-  * `graft_byte_dot`, `graft_sorted_intersect_size`, `graft_nfc`) — SQL users get the
-  * same native Expressions the Scala API uses, not UDF wrappers.
+/** `spark.sql.extensions` entry point injecting graft's optimizer rules,
+  * its physical rule and its SQL functions: the codegen'd vector/set
+  * kernels become callable from plain `spark.sql(...)` (`graft_cosine`,
+  * `graft_dot`, `graft_pack_int8`, `graft_byte_dot`,
+  * `graft_sorted_intersect_size`, `graft_nfc`) — SQL users get the same
+  * native Expressions the Scala API uses, not UDF wrappers.
+  *
+  * The physical rule is [[BindFilterLiterals]]: filter comparisons against
+  * int, long, date and timestamp literals read the value from the compiled
+  * class instead of inlining it, so a dashboard query re-run with new
+  * parameters reuses its generated classes. A physical rule can only be
+  * injected while a session is built: `Session.get` builds with these
+  * extensions, and a session built elsewhere needs
+  * `spark.sql.extensions=graft.plans.GraftExtensions` (or `withExtensions`)
+  * at build time — `Session.tune` alone installs the optimizer rules and
+  * functions, not the physical rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -131,6 +142,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }
       ArgmaxRewrite
     }
+    ext.injectColumnar(_ => BindFilterLiterals.columnar)
     GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }

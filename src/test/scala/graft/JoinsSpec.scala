@@ -158,6 +158,19 @@ class JoinsSpec extends SparkTestBase {
       "repeated calls + one unpersist must leave no accumulated entries")
   }
 
+  test("saltedJoin never loans a right side the caller cached: it survives releaseAll") {
+    val userRight = spark.range(40).toDF("k").withColumn("rv", lit("u"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    userRight.count()
+    val loans = graft.Caches.outstanding(spark)
+    assert(Joins.saltedJoin(left, userRight, ("k", "k"), 4).count() == 4)
+    assert(graft.Caches.outstanding(spark) == loans, "the caller's cache must not become a loan")
+    graft.Caches.releaseAll(spark)
+    assert(userRight.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "releaseAll must leave the caller's cache alone")
+    userRight.unpersist(true)
+  }
+
   test("saltedJoin tolerates unhashable (map) columns by excluding them from the salt") {
     val l = left.withColumn("props", map(lit("a"), lit("b")))
     val base = Joins.hashJoin(left, right, ("k", "k")).count()

@@ -15,39 +15,99 @@ class SessionSpec extends SparkTestBase {
   private val inferRule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
   private val rules = Seq(graft.plans.ArgmaxRewrite, graft.plans.CseFilterProject)
 
-  test("tune gives a plain session every graft conf, optimizer rule and graft_* function") {
-    val plain = spark.newSession()
-    // start from values tune must overwrite, plus a caller exclusion it must keep
-    val callerRule = "org.apache.spark.sql.catalyst.optimizer.ConstantPropagation"
-    Seq(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.adaptive.skewJoin.enabled" -> "false",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "false",
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128",
-      "spark.sql.session.timeZone" -> "America/Los_Angeles",
-      "spark.sql.optimizer.excludedRules" -> callerRule
-    ).foreach { case (k, v) => plain.conf.set(k, v) }
-    val registry = plain.sessionState.functionRegistry
-    val names = graft.plans.GraftExtensions.functions.map(_._1)
-    assert(names.nonEmpty)
-    assert(!names.exists(registry.functionExists), "a new session starts without graft_* functions")
-    assert(!rules.exists(plain.experimental.extraOptimizations.contains))
+  /** Run `body` on a session built the way a caller outside graft builds
+    * one (a session derived from graft's would share graft's extensions),
+    * then make the shared test session current again.
+    */
+  private def outsideGraft[T](
+      extensions: Option[org.apache.spark.sql.SparkSessionExtensions => Unit] = None)(
+      body: org.apache.spark.sql.SparkSession => T): T = {
+    import org.apache.spark.sql.SparkSession
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val b = SparkSession.builder()
+      val s = extensions.fold(b)(b.withExtensions).getOrCreate()
+      assert(s ne shared, "must be a fresh session for extensions to apply")
+      body(s)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
 
-    Session.tune(plain)
-    Session.tune(plain) // idempotent: no duplicate rules or exclusions
-    Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2048",
-      "spark.sql.session.timeZone" -> "UTC"
-    ).foreach { case (k, v) => assert(plain.conf.get(k) == v, k) }
-    assert(plain.conf.get("spark.sql.optimizer.excludedRules").split(",").map(_.trim).toSeq ==
-      Seq(callerRule, inferRule), "the exclusion must merge with the caller's, once")
-    rules.foreach(r => assert(plain.experimental.extraOptimizations.count(_ == r) == 1, r.ruleName))
-    names.foreach(n => assert(registry.functionExists(n), n.funcName))
+  test("tune gives a plain session every graft conf, optimizer rule and graft_* function") {
+    outsideGraft() { plain =>
+      // start from values tune must overwrite, plus a caller exclusion it must keep
+      val callerRule = "org.apache.spark.sql.catalyst.optimizer.ConstantPropagation"
+      Seq(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.adaptive.skewJoin.enabled" -> "false",
+        "spark.sql.legacy.parquet.nanosAsLong" -> "false",
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128",
+        "spark.sql.session.timeZone" -> "America/Los_Angeles",
+        "spark.sql.optimizer.excludedRules" -> callerRule
+      ).foreach { case (k, v) => plain.conf.set(k, v) }
+      val registry = plain.sessionState.functionRegistry
+      val names = graft.plans.GraftExtensions.functions.map(_._1)
+      assert(names.nonEmpty)
+      assert(!names.exists(registry.functionExists), "a new session starts without graft_* functions")
+      assert(!rules.exists(plain.experimental.extraOptimizations.contains))
+
+      Session.tune(plain)
+      Session.tune(plain) // idempotent: no duplicate rules or exclusions
+      Seq(
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2048",
+        "spark.sql.session.timeZone" -> "UTC"
+      ).foreach { case (k, v) => assert(plain.conf.get(k) == v, k) }
+      assert(plain.conf.get("spark.sql.optimizer.excludedRules").split(",").map(_.trim).toSeq ==
+        Seq(callerRule, inferRule), "the exclusion must merge with the caller's, once")
+      rules.foreach(r => assert(plain.experimental.extraOptimizations.count(_ == r) == 1, r.ruleName))
+      names.foreach(n => assert(registry.functionExists(n), n.funcName))
+    }
+  }
+
+  private def bindsFilterLiterals(s: org.apache.spark.sql.SparkSession): Boolean = {
+    val df = s.range(10).filter(org.apache.spark.sql.functions.col("id") > 3)
+    assert(df.count() == 6)
+    df.queryExecution.executedPlan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[graft.plans.BoundLiteral])))
+  }
+
+  private def physicalRules(s: org.apache.spark.sql.SparkSession): Int =
+    s.sessionState.columnarRules.count(_ eq graft.plans.BindFilterLiterals.columnar)
+
+  test("get builds with the codegen cache size and graft's physical rule, registered once") {
+    assert(Session.get(4) eq spark)
+    assert(Session.get(4) eq spark)
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == Session.CodegenCacheEntries.toString)
+    assert(physicalRules(spark) == 1, "repeated get calls must not register the rule again")
+    assert(bindsFilterLiterals(spark))
+    // a session derived from get's shares its extensions
+    assert(physicalRules(spark.newSession()) == 1)
+  }
+
+  test("spark.sql.extensions=graft.plans.GraftExtensions installs the physical rule; tune alone does not") {
+    // this JVM shares one SparkContext, and Spark reads the extensions conf
+    // off the context when it starts; so build the class the conf names the
+    // way Spark does (by name, no-arg constructor) and hand it to the builder
+    val conf = Class.forName("graft.plans.GraftExtensions").getConstructor().newInstance()
+      .asInstanceOf[org.apache.spark.sql.SparkSessionExtensions => Unit]
+    outsideGraft(Some(conf)) { ext =>
+      assert(physicalRules(ext) == 1)
+      assert(bindsFilterLiterals(ext))
+    }
+    outsideGraft() { plain =>
+      Session.tune(plain)
+      assert(physicalRules(plain) == 0)
+      assert(!bindsFilterLiterals(plain))
+    }
   }
 
   test("get returns a session already carrying tune's settings") {

@@ -56,6 +56,15 @@ class TablesSpec extends SparkTestBase {
     }
   }
 
+  test("a memoized small scan whose view was dropped is persisted again on its next load") {
+    Tables.registerAll(spark, srcSf)
+    spark.catalog.dropTempView("nation") // uncaches the view's plan: the memo frame's
+    val nation = Tables.table(spark, srcSf, "nation")
+    assert(nation.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    assert(nation.count() == 25)
+    Tables.registerAll(spark, srcSf) // restore the view for later suites
+  }
+
   test("table memoizes per (session, dir, name); drain unpersists the small scan") {
     // start from an empty memo: an earlier test may have dropped the cache
     // entry under a memoized frame (the first test above drops the views
