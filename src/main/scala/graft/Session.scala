@@ -61,6 +61,30 @@ object Session {
     */
   private[graft] val CodegenCacheEntries = 4096
 
+  /** The two streaming confs, which cut the fixed cost of a streaming
+    * query. Every streaming query runs on a clone of its session
+    * (`cloneSession()`), and each clone has a new session UUID:
+    *   - `spark.sql.artifact.isolation.enabled=false`: with isolation on,
+    *     executors build one classloader per session UUID, and Spark's
+    *     codegen class cache is keyed by (context classloader, code), so
+    *     every query compiled its classes again in its tasks, byte-identical
+    *     to the last query's (3 per ingest batch). With it off, tasks use
+    *     the application's classloader and the cached classes. What this
+    *     gives up is per-session isolation of jars, files and classes added
+    *     to a session (`addArtifact`, a Spark Connect feature); graft adds
+    *     none.
+    *   - `spark.sql.streaming.checkpointFileManagerClass`:
+    *     [[graft.streaming.SchemeCheckpointFileManager]], which writes the
+    *     checkpoint logs of a `file:` path through Hadoop's `FileSystem`
+    *     instead of `FileContext`, whose rename forks a `stat` process per
+    *     call, and leaves every other scheme to Spark's default.
+    *     [[tune]] sets it only on a session that names no manager of its
+    *     own.
+    */
+  private[graft] val NoArtifactIsolation = "spark.sql.artifact.isolation.enabled" -> "false"
+  private[graft] val CheckpointManager = graft.streaming.SchemeCheckpointFileManager.ConfKey ->
+    classOf[graft.streaming.SchemeCheckpointFileManager].getName
+
   /** The one session factory: a minimal `local[cores]` builder (the
     * settings that only take effect at construction), then [[tune]] for
     * graft's runtime confs, optimizer rules and `graft_*` SQL functions.
@@ -74,6 +98,10 @@ object Session {
     *   - [[graft.plans.GraftExtensions]], whose physical rule
     *     ([[graft.plans.BindFilterLiterals]]) binds filter literals so a
     *     query re-run with new parameters reuses its classes.
+    *
+    * The builder also carries the two streaming confs [[tune]] sets
+    * ([[NoArtifactIsolation]], [[CheckpointManager]]), so the session has
+    * them from its first query.
     */
   def get(cores: Int = 32): SparkSession = {
     quietResidue()
@@ -84,6 +112,8 @@ object Session {
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config(NoArtifactIsolation._1, NoArtifactIsolation._2)
+      .config(CheckpointManager._1, CheckpointManager._2)
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -120,9 +150,12 @@ object Session {
     * SQL functions (idempotent — re-registration overwrites in place), so
     * a tuned session plans the same shapes and has the same SQL surface as
     * [[get]]. (`spark.sql.extensions=graft.plans.GraftExtensions` installs
-    * the rules and functions, not the confs.) Two things only a session's
-    * builder can set stay out of reach here: the codegen class cache size
-    * and graft's physical rule — see [[get]].
+    * the rules and functions, not the confs; on a session built with them,
+    * tune adds only what they leave out, so no rule runs twice.) Also sets
+    * the streaming confs ([[NoArtifactIsolation]], [[CheckpointManager]]);
+    * they apply to the streaming queries started after this call. Two
+    * things only a session's builder can set stay out of reach here: the
+    * codegen class cache size and graft's physical rule — see [[get]].
     */
   def tune(spark: SparkSession): SparkSession = {
     quietResidue()
@@ -155,11 +188,15 @@ object Session {
       // hot keys should bracket the latter with [[withConf]] restoring
       // the 128 default (see ExactMedian's scaladoc).
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2048",
-      "spark.sql.session.timeZone" -> "UTC")
+      "spark.sql.session.timeZone" -> "UTC",
+      NoArtifactIsolation)
     runtime.foreach { case (k, v) =>
       try spark.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
+    // a caller's own checkpoint manager (an object-store one, say) stays
+    if (spark.conf.getOption(CheckpointManager._1).isEmpty)
+      spark.conf.set(CheckpointManager._1, CheckpointManager._2)
     // MERGE the generate-filter exclusion into any exclusions the caller's
     // session already carries — a plain set() would silently re-enable
     // them (round-13 self-review)
@@ -173,13 +210,21 @@ object Session {
         (merged :+ inferRule).mkString(","))
       catch { case _: org.apache.spark.sql.AnalysisException => () }
     // the graft optimizer rules travel with tuning too: a session built
-    // outside graft must plan the same shapes as Session.get
-    Seq(graft.plans.ArgmaxRewrite, graft.plans.CseFilterProject).foreach { r =>
+    // outside graft must plan the same shapes as Session.get. A session
+    // built with GraftExtensions (its physical rule is the sign) already
+    // runs ArgmaxRewrite in the operator-optimization batches and has the
+    // functions; a second copy would run the rule in one more batch on
+    // every query.
+    val extended = spark.sessionState.columnarRules
+      .contains(graft.plans.BindFilterLiterals.columnar)
+    val rules = if (extended) Seq(graft.plans.CseFilterProject)
+      else Seq(graft.plans.ArgmaxRewrite, graft.plans.CseFilterProject)
+    rules.foreach { r =>
       if (!spark.experimental.extraOptimizations.contains(r))
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ r
     }
-    graft.plans.GraftExtensions.registerFunctions(spark)
+    if (!extended) graft.plans.GraftExtensions.registerFunctions(spark)
     spark
   }
 }

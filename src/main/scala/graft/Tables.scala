@@ -141,9 +141,16 @@ object Tables {
     * (epoch microseconds, bigint) column — the precision every downstream
     * operator and the DuckDB oracle (`epoch_us(ts)`) agree on — derived
     * adaptively from the column's actual type via [[tsUsColumn]].
+    *
+    * The read depends on two confs: `nanosAsLong` (a TIMESTAMP(NANOS)
+    * column fails to read without it) and the UTC session time zone (which
+    * makes the NTZ→LTZ cast the identity). A session that lacks either is
+    * tuned ([[Session.tune]]) once, here; a tuned one is left as it is, so
+    * a call does not reset the confs a caller changed since.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    Session.tune(s)
+    if (s.conf.get("spark.sql.legacy.parquet.nanosAsLong") != "true" ||
+        s.conf.get("spark.sql.session.timeZone") != "UTC") Session.tune(s)
     val raw = table(s, d, "events")
     raw.withColumn("ts_us", tsUsColumn(raw.schema("ts").dataType))
   }

@@ -15,28 +15,6 @@ class SessionSpec extends SparkTestBase {
   private val inferRule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
   private val rules = Seq(graft.plans.ArgmaxRewrite, graft.plans.CseFilterProject)
 
-  /** Run `body` on a session built the way a caller outside graft builds
-    * one (a session derived from graft's would share graft's extensions),
-    * then make the shared test session current again.
-    */
-  private def outsideGraft[T](
-      extensions: Option[org.apache.spark.sql.SparkSessionExtensions => Unit] = None)(
-      body: org.apache.spark.sql.SparkSession => T): T = {
-    import org.apache.spark.sql.SparkSession
-    val shared = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val b = SparkSession.builder()
-      val s = extensions.fold(b)(b.withExtensions).getOrCreate()
-      assert(s ne shared, "must be a fresh session for extensions to apply")
-      body(s)
-    } finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
-  }
-
   test("tune gives a plain session every graft conf, optimizer rule and graft_* function") {
     outsideGraft() { plain =>
       // start from values tune must overwrite, plus a caller exclusion it must keep
@@ -114,7 +92,51 @@ class SessionSpec extends SparkTestBase {
     assert(spark.conf.get("spark.sql.optimizer.excludedRules").split(",").contains(inferRule))
     assert(spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "2048")
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
-    rules.foreach(r => assert(spark.experimental.extraOptimizations.contains(r), r.ruleName))
+    Seq(Session.NoArtifactIsolation, Session.CheckpointManager)
+      .foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    rules.foreach(r => assert(batchesHolding(spark, r) > 0, r.ruleName))
+  }
+
+  /** How many of the session optimizer's batches hold `rule`. (`batches`
+    * and `Batch.rules` are protected in Scala, public in the bytecode.) */
+  private def batchesHolding(s: org.apache.spark.sql.SparkSession, rule: AnyRef): Int = {
+    val opt = s.sessionState.optimizer
+    opt.getClass.getMethod("batches").invoke(opt).asInstanceOf[Seq[AnyRef]].count { b =>
+      b.getClass.getMethod("rules").invoke(b).asInstanceOf[Seq[AnyRef]].exists(_ eq rule)
+    }
+  }
+
+  test("tune adds no second copy of a rule GraftExtensions installed") {
+    import graft.plans.{ArgmaxRewrite, CseFilterProject, GraftExtensions}
+    // an injected operator rule sits in both of Spark's operator-optimization
+    // batches (before and after filter inference)
+    val installed = outsideGraft(Some(new GraftExtensions))(batchesHolding(_, ArgmaxRewrite))
+    assert(installed > 0)
+    Session.tune(spark)
+    assert(batchesHolding(spark, ArgmaxRewrite) == installed, "get")
+    assert(batchesHolding(spark, CseFilterProject) == 1, "get")
+    outsideGraft(Some(new GraftExtensions)) { ext =>
+      Session.tune(ext)
+      assert(batchesHolding(ext, ArgmaxRewrite) == installed, "extensions + tune")
+      assert(batchesHolding(ext, CseFilterProject) == 1, "extensions + tune")
+      assert(GraftExtensions.functions.forall(f => ext.sessionState.functionRegistry.functionExists(f._1)))
+    }
+    outsideGraft() { plain =>
+      Session.tune(plain)
+      rules.foreach(r => assert(batchesHolding(plain, r) == 1, s"tune alone: ${r.ruleName}"))
+    }
+  }
+
+  test("tune keeps a checkpoint manager the caller chose") {
+    outsideGraft() { plain =>
+      val own = classOf[org.apache.spark.sql.execution.streaming.checkpointing
+        .FileContextBasedCheckpointFileManager].getName
+      plain.conf.set(Session.CheckpointManager._1, own)
+      plain.conf.set(Session.NoArtifactIsolation._1, "true")
+      Session.tune(plain)
+      assert(plain.conf.get(Session.CheckpointManager._1) == own)
+      assert(plain.conf.get(Session.NoArtifactIsolation._1) == "false")
+    }
   }
 }
 

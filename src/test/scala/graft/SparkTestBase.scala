@@ -18,4 +18,25 @@ trait SparkTestBase extends AnyFunSuite {
   def sortedSeq[T](xs: Seq[T])(implicit ord: Ordering[T]): Seq[T] = xs.sorted
 
   def approx(a: Double, b: Double, eps: Double = 1e-9): Boolean = math.abs(a - b) <= eps
+
+  /** Run `body` on a session built the way a caller outside graft builds
+    * one (a session derived from graft's would share graft's extensions),
+    * then make the shared test session current again.
+    */
+  def outsideGraft[T](
+      extensions: Option[org.apache.spark.sql.SparkSessionExtensions => Unit] = None)(
+      body: SparkSession => T): T = {
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val b = SparkSession.builder()
+      val s = extensions.fold(b)(b.withExtensions).getOrCreate()
+      assert(s ne shared, "must be a fresh session for extensions to apply")
+      body(s)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
 }

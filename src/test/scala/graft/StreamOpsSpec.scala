@@ -381,6 +381,65 @@ class StreamOpsSpec extends SparkTestBase {
       "day-2 replay must drop base-known AND day-1-survivor duplicates")
   }
 
+  /** One ingest batch as the library composes it: a JSONL arrival dir
+    * deduped against a parquet fingerprint index of `known` texts. Returns
+    * the streaming frame and a fresh `runToParquet` dir.
+    */
+  private def ingestBatch(s: org.apache.spark.sql.SparkSession, name: String,
+                          docs: Seq[(Long, String)], known: Seq[String])
+      : (org.apache.spark.sql.DataFrame, String) = {
+    import s.implicits._
+    val root = s"target/tmp/streamspec_rtp_$name"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    docs.toDF("doc_id", "text").write.json(s"$root/in")
+    graft.sources.ParquetSink.writeSharded(operators.Dedup.fingerprintIndex(
+      known.map(t => (0L, t)).toDF("doc_id", "text"), "text"), s"$root/idx", "fingerprint", 2)
+    val schema = "doc_id BIGINT, text STRING"
+    (StreamOps.ingestDedupStreaming(s.readStream.schema(schema).json(s"$root/in"),
+      s.read.parquet(s"$root/idx"), "text"), s"$root/run")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("runToParquet: its frame has the schema and rows of its parquet output, empty batch included") {
+    val (stream, path) = ingestBatch(spark, "rows",
+      Seq(1L -> "Known text!", 2L -> "fresh text", 3L -> "another one"), Seq("known text"))
+    val out = StreamOps.runToParquet(spark, stream, path)
+    val reread = spark.read.parquet(s"$path/out")
+    assert(out.schema == reread.schema)
+    assert(rows(out) == rows(reread))
+    assert(out.select("doc_id").as[Long].collect().toSet == Set(2L, 3L))
+    // a batch in which every document is already in the index
+    val (dupes, dupPath) = ingestBatch(spark, "none", Seq(1L -> "known text"), Seq("known text"))
+    val none = StreamOps.runToParquet(spark, dupes, dupPath)
+    val noneReread = spark.read.parquet(s"$dupPath/out")
+    assert(none.schema == noneReread.schema)
+    assert(none.count() == 0 && noneReread.count() == 0)
+  }
+
+  test("runToParquet: a second query of the same shape compiles no class, under get and under tune") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(s: org.apache.spark.sql.SparkSession, name: String): Long = {
+      val (stream, path) = ingestBatch(s, name, Seq(1L -> "known", 2L -> s"fresh $name"), Seq("known"))
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = StreamOps.runToParquet(s, stream, path)
+      val n = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      assert(out.count() == 1)
+      n
+    }
+    compiles(spark, "get_a")
+    assert(compiles(spark, "get_b") == 0)
+    outsideGraft() { plain =>
+      // start from Spark's defaults, which tune must change
+      plain.conf.set(Session.NoArtifactIsolation._1, "true")
+      plain.conf.unset(Session.CheckpointManager._1)
+      Session.tune(plain)
+      compiles(plain, "tune_a")
+      assert(compiles(plain, "tune_b") == 0)
+    }
+  }
+
   test("runToMemoryTable: parquet file-source replay equals the batch dedup (E3 replay)") {
     val dir = java.nio.file.Files.createTempDirectory("e3replay").toString
     val docs = Seq(

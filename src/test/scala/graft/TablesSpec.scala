@@ -65,6 +65,22 @@ class TablesSpec extends SparkTestBase {
     Tables.registerAll(spark, srcSf) // restore the view for later suites
   }
 
+  test("events tunes a session that lacks its read confs, and leaves a tuned one as it is") {
+    val threshold = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    Session.withConf(spark, threshold -> "128") {
+      assert(Tables.events(spark, srcSf).columns.contains("ts_us"))
+      assert(spark.conf.get(threshold) == "128", "a tuned session must keep the caller's conf")
+    }
+    outsideGraft() { plain =>
+      plain.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+      plain.conf.set(threshold, "128")
+      assert(Tables.events(plain, srcSf).count() > 0)
+      assert(plain.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      assert(plain.conf.get(threshold) == "2048")
+      Caches.drain(plain)
+    }
+  }
+
   test("table memoizes per (session, dir, name); drain unpersists the small scan") {
     // start from an empty memo: an earlier test may have dropped the cache
     // entry under a memoized frame (the first test above drops the views
