@@ -16,12 +16,12 @@ import org.apache.spark.storage.StorageLevel
   * persist replaces the internal candidate cache it was materialized from.
   * That is the right trade DURING a run — unpersisting a shared frame
   * mid-run poisons its sibling consumers (measured: d6c 0.53→2.30 s with
-  * an eager unpersist). Every such `persist()` registers via [[loan]] (or
-  * [[persistLoaned]]), and [[releaseAll]] unpersists exactly those frames
+  * an eager unpersist). Every such persist goes through [[persistLoaned]],
+  * the one way in, and [[releaseAll]] unpersists exactly those frames
   * — never a frame the USER persisted, which a blunt
   * `spark.catalog.clearCache()` would also destroy. An operator may still
-  * settle an internal cache early ([[settled]]) once nothing it returns
-  * can recompute through it.
+  * end an internal loan early ([[endLoan]], the one way out) once nothing
+  * it returns can recompute through it.
   *
   * Scale note: a ledger entry is a plan reference (driver-side, KB), not
   * data; entries for frames the caller already unpersisted are harmless
@@ -37,16 +37,15 @@ object Caches {
   // so a multi-session process releases per-session
   private val ledger = TrieMap.empty[DataFrame, SparkSession]
 
-  /** Register `df` (already persisted by the caller) as a graft-owned loan;
-    * returns it unchanged so call sites can wrap their `.persist(...)`.
+  /** Register `df` (just persisted by [[persistLoaned]]) as a graft-owned
+    * loan; returns it unchanged.
     *
-    * Settled-but-unremoved entries (a site that unpersisted without
-    * calling [[settled]]) are swept opportunistically once the ledger
-    * grows past a small bound, so a long-lived library session looping
-    * over loaning operators cannot retain plans without limit even if a
-    * call site misses its settle.
+    * Entries no longer persisted (a loan someone else unpersisted) are
+    * swept opportunistically once the ledger grows past a small bound, so
+    * a long-lived library session looping over loaning operators cannot
+    * retain plans without limit.
     */
-  def loan(df: DataFrame): DataFrame = {
+  private def loan(df: DataFrame): DataFrame = {
     if (ledger.size > 256)
       ledger.keys.foreach { k => if (!isLive(k)) ledger.remove(k) }
     ledger.put(df, df.sparkSession)
@@ -66,9 +65,6 @@ object Caches {
     // storageLevel IS the cache manager's lookup of the plan
     if (df.storageLevel != StorageLevel.NONE) df
     else loan(df.persist(level))
-
-  /** A caller settled a loan itself (explicit unpersist) — forget it. */
-  def settled(df: DataFrame): Unit = ledger.remove(df)
 
   /** End a loan early: unpersist `df` (non-blocking) if it is a loan, and
     * forget it. A frame [[persistLoaned]] handed back unloaned is left

@@ -54,9 +54,9 @@ object Session {
     * dashboard queries (about 240 distinct classes) evicted everything
     * between rounds, and each query compiled 3-63 classes again on every
     * call. Measured working sets under this size, with nothing evicted:
-    * ~260 classes for a dashboard run, 2,708 for a whole sf0.01 Verify run
-    * (all 241 rows in one JVM) — 4096 leaves ~1.5× headroom over the
-    * larger. What the retained classes cost: Verify ends with 242 MB of
+    * ~260 classes for a dashboard run, 2,631 for a whole sf0.01 Verify run
+    * (all 229 rows in one JVM) — 4096 leaves ~1.5× headroom over the
+    * larger. What the retained classes cost: Verify ends with 240 MB of
     * Metaspace used, against 225 MB when the cache held 100.
     */
   private[graft] val CodegenCacheEntries = 4096

@@ -68,10 +68,9 @@ object SparkEntry {
     val enriched = Joins.broadcastJoin(
       Ops.between(Tables.orders(s, d), "o_orderdate", "1995-01-01", "1996-12-31"),
       Tables.customer(s, d), ("o_custkey", "c_custkey"))
-    val filtered = graft.Caches.loan(enriched
+    val filtered = graft.Caches.persistLoaned(enriched
       .filter(col("r_c_mktsegment").isin(segs: _*))
-      .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
-      .persist())
+      .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM")))
     // metric tile: global decimal-exact average (A11)
     val tile = filtered.agg(
       round(sum(dec(col("o_totalprice"))).cast(D382).cast("double") / count(lit(1)), 4)
@@ -124,9 +123,8 @@ object SparkEntry {
     // regex gate extractions per row re-execute for every consumer
     // (measured: 12.1s → ~10s). The cache holds the post-gate post-dedup
     // subset only; spill-safe, LRU-evicted, droppable via clearCache.
-    val exactKeep = graft.Caches.loan(gated.join(
-      Dedup.exact(gated, "doc_id", "text").select("doc_id"), Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val exactKeep = graft.Caches.persistLoaned(gated.join(
+      Dedup.exact(gated, "doc_id", "text").select("doc_id"), Seq("doc_id"), "left_semi"))
     val nearKeep = Dedup.keepCanonical(exactKeep, "doc_id",
       Dedup.ngramJaccardPairs(exactKeep, "doc_id", "text", 2, 0.1))
     val sampled = Sampling.deterministicSample(nearKeep, "doc_id", 0.5)
@@ -154,15 +152,13 @@ object SparkEntry {
     val docs = Tables.documents(s, d)
     val bench = docs.filter(col("doc_id") % 17 === 0)
     val corpus = docs.filter(col("doc_id") % 17 =!= 0)
-    val exactKeep = graft.Caches.loan(corpus.join(
-      Dedup.exact(corpus, "doc_id", "text").select("doc_id"), Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val exactKeep = graft.Caches.persistLoaned(corpus.join(
+      Dedup.exact(corpus, "doc_id", "text").select("doc_id"), Seq("doc_id"), "left_semi"))
     val contaminated = Dedup.decontaminationPairs(exactKeep, bench, "doc_id", "text",
       3, 0.5, maxDf = 50)
       .select(col("train_id").as("doc_id")).distinct()
-    val clean = graft.Caches.loan(
-      exactKeep.join(contaminated, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val clean = graft.Caches.persistLoaned(
+      exactKeep.join(contaminated, Seq("doc_id"), "left_anti"))
     val mixed = Sampling.mixtureSample(clean, "doc_id", "source",
       Map("src0" -> 0.4, "src1" -> 0.3, "src2" -> 0.2, "src3" -> 0.1))
     val train = Sampling.datasetSplit(mixed, "doc_id", Seq("train" -> 0.9, "val" -> 0.1))

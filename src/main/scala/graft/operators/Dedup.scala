@@ -348,9 +348,8 @@ object Dedup {
         (bandKeys(sets, idCol, "id_1", bands, rowsPerBand),
          bandKeys(sets, idCol, "id_2", bands, rowsPerBand))
       else {
-        val banded = graft.Caches.loan(
-          bandKeys(sets, idCol, "_bid", bands, rowsPerBand)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val banded = graft.Caches.persistLoaned(
+          bandKeys(sets, idCol, "_bid", bands, rowsPerBand))
         sigCache = Some(banded)
         (spreadKernel(banded.withColumnRenamed("_bid", "id_1"),
           nDocs * bands, BandRowsPerPartition, col("band"), col("bkey")),
@@ -384,12 +383,12 @@ object Dedup {
       // spill while candidates touch ~12% of ids. Ids feed the bloom as
       // xxhash64 (type-generic); false positives only ADMIT extra rows —
       // the equi-joins keep the result exact (the d8b pattern).
-      val cand = rawCand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cand = graft.Caches.persistLoaned(rawCand)
       val nCand = cand.count()
       // the candidates are materialized — nothing downstream reads the
       // banded-keys frame again (verify consumes sets), so its loan
       // settles here, not at call end
-      sigCache.foreach { f => f.unpersist(); graft.Caches.settled(f) }
+      sigCache.foreach(graft.Caches.endLoan)
       sigCache = None
       // size the filter by DISTINCT ids, not pairs: a dense candidate set
       // shares ids heavily (5M pairs over ~600k ids at the 1000× probe),
@@ -414,7 +413,7 @@ object Dedup {
       // result's persist is ledgered (Caches.releaseAll calls it in)
       val out = graft.Caches.persistLoaned(res)
       out.count()
-      cand.unpersist(); graft.Caches.settled(cand)
+      graft.Caches.endLoan(cand)
       out
     }
   }
@@ -558,8 +557,7 @@ object Dedup {
       minhashNearDupsCollapsedFromNorm(df, idCol, textCol, norm0, threshold,
         n, bands, rowsPerBand)
     else {
-      norm0.unpersist()
-      graft.Caches.settled(norm0)
+      graft.Caches.endLoan(norm0)
       minhashNearDupsPlain(df, idCol, textCol, threshold, n, bands,
         rowsPerBand)
     }
@@ -824,8 +822,7 @@ object Dedup {
         val (rk, nKeys) = rareKeysPrepared match {
           case Some((f, n)) => (f, n)
           case None =>
-            val f = graft.Caches.loan(
-              rareKeys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            val f = graft.Caches.persistLoaned(rareKeys)
             val n = f.count() // also materializes the persist
             rareKeysCache = Some(f)
             (f, n)
@@ -870,12 +867,11 @@ object Dedup {
     val candidates =
       if (!pruneVerify) rawCandidates
       else {
-        val c = graft.Caches.loan(
-          rawCandidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val c = graft.Caches.persistLoaned(rawCandidates)
         verifyRows = Some(c.count())
         // the rare-keys cache fed (count, bloom, probe); candidates are
         // materialized past it now, so it owes nothing downstream
-        rareKeysCache.foreach { f => f.unpersist(); graft.Caches.settled(f) }
+        rareKeysCache.foreach(graft.Caches.endLoan)
         candidateCache.foreach(_(c)) // hand the persist to the caller's loan
         c
       }
@@ -1067,10 +1063,9 @@ object Dedup {
     // runs twice (measured at 1000×, 5M docs / ~500M distinct trigrams:
     // each pass sort-fallback-spills ~40 GB; this is the d4 family's
     // single biggest exchange and it must be paid exactly once)
-    val skdf = graft.Caches.loan(
+    val skdf = graft.Caches.persistLoaned(
       ArrayOps.explodeDense(sets, Seq.empty, col("shs"), "sk")
-        .groupBy("sk").agg(count(lit(1)).as("_df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .groupBy("sk").agg(count(lit(1)).as("_df")))
     // one tiny collect serves BOTH derivations: the ceiling (from the
     // cumulative candidate cost) and the count of qualifying keys
     // (drives the broadcast-vs-shuffle pruning choice). Arithmetic
@@ -1094,8 +1089,8 @@ object Dedup {
         // a refused cap returns nothing — the evidence caches must not
         // outlive the refusal (the sets loan included: there is no
         // lazy result left that could recompute through it)
-        skdf.unpersist(); graft.Caches.settled(skdf)
-        sets.unpersist(); graft.Caches.settled(sets)
+        graft.Caches.endLoan(skdf)
+        graft.Caches.endLoan(sets)
         throw e
       }
     val res =
@@ -1114,7 +1109,7 @@ object Dedup {
     // drop both. The SETS cache stays a loan until Caches.releaseAll / drain.
     val out = graft.Caches.persistLoaned(res)
     out.count()
-    (candCache.toSeq :+ skdf).foreach { c => c.unpersist(); graft.Caches.settled(c) }
+    (candCache.toSeq :+ skdf).foreach(graft.Caches.endLoan)
     out
   }
 
@@ -2029,8 +2024,7 @@ object Dedup {
     if (total <= budget) {
       // the full-admission branch never reads the cells again — settle the
       // loan now instead of at session drain
-      cells.unpersist()
-      graft.Caches.settled(cells)
+      graft.Caches.endLoan(cells)
       // same width derivation as the capped branch: `total` IS the
       // priced within-cell candidate volume this branch will verify
       fuzzyVerify(df, idCol, textCol, maxDist, maxHamming, chunked,
@@ -2249,8 +2243,8 @@ object Dedup {
         pricedRows = pairCost)
     else {
       // the exact scan never reads the sketches again — settle both now
-      skB.unpersist(); graft.Caches.settled(skB)
-      skC.unpersist(); graft.Caches.settled(skC)
+      graft.Caches.endLoan(skB)
+      graft.Caches.endLoan(skC)
       embeddingIncrementalExact(newVecs, corpus, idCol, vecCol, threshold)
     }
   }
@@ -2362,19 +2356,11 @@ object Dedup {
   /** The exact-ingest probe structure: the corpus' distinct normalized
     * fingerprints ([[exactIncremental]]'s corpus side, exposed). 16 bytes
     * per distinct document — the frame to [[ParquetSink.writeSharded]]
-    * once and probe every batch.
+    * once and probe every batch with
+    * [[graft.streaming.StreamOps.ingestDedupStreaming]].
     */
   def fingerprintIndex(corpus: DataFrame, textCol: String): DataFrame =
     corpus.select(Text.fingerprint(col(textCol)).as("fingerprint")).distinct()
-
-  /** [[exactIncremental]] against a prebuilt (typically parquet-loaded)
-    * [[fingerprintIndex]]: the corpus is not scanned at all — the anti
-    * join probes the index frame directly.
-    */
-  def exactIncrementalFromIndex(newDocs: DataFrame, index: DataFrame,
-                                idCol: String, textCol: String): DataFrame =
-    newDocs.withColumn("fingerprint", Text.fingerprint(col(textCol)))
-      .join(index.select("fingerprint"), Seq("fingerprint"), "left_anti")
 
   /** Fold a probe-surviving batch into the saved [[fingerprintIndex]] —
     * appends the survivors' DISTINCT fingerprints as delta shards (the
@@ -2565,18 +2551,16 @@ object Dedup {
   def updateContainmentIndex(newTrain: DataFrame, path: String, idCol: String,
                              textCol: String, n: Int, maxDf: Int,
                              shards: Int): Unit = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = newTrain.sparkSession
-    val bsets = shingleSets(newTrain, idCol, textCol, n).persist(lvl)
+    val bsets = graft.Caches.persistLoaned(shingleSets(newTrain, idCol, textCol, n))
     bsets.count()
     val bi = ArrayOps.explodeDense(bsets, Seq(col(idCol).as("train_id")), col("shs"), "sk")
     val bdf = bi.groupBy("sk").agg(count(lit(1)).as("df"))
     val oldDf = spark.read.parquet(s"$path/df")
       .groupBy("sk").agg(sum("df").as("_odf"))
-    val merged = bdf.join(oldDf, Seq("sk"), "left")
+    val merged = graft.Caches.persistLoaned(bdf.join(oldDf, Seq("sk"), "left")
       .withColumn("_odf", coalesce(col("_odf"), lit(0L)))
-      .withColumn("_ndf", col("_odf") + col("df"))
-      .persist(lvl)
+      .withColumn("_ndf", col("_odf") + col("df")))
     merged.count()
     graft.sources.ParquetSink.appendSharded(
       bi.join(merged.filter(col("_ndf") <= maxDf).select("sk"), "sk"),
@@ -2587,8 +2571,8 @@ object Dedup {
       s"$path/tomb", "sk", 1)
     graft.sources.ParquetSink.appendSharded(bdf, s"$path/df", "sk", shards)
     graft.sources.ParquetSink.appendSharded(bsets, s"$path/sets", idCol, shards)
-    merged.unpersist()
-    bsets.unpersist()
+    graft.Caches.endLoan(merged)
+    graft.Caches.endLoan(bsets)
   }
 
   /** Family-aware compaction for the containment index — the step that
@@ -2867,7 +2851,7 @@ object Dedup {
       embeddingLshBandedFromSketched(sk, threshold, pricedRows = pairCost)
     else {
       // the exact branch never reads the sketch again — settle now
-      sk.unpersist(); graft.Caches.settled(sk)
+      graft.Caches.endLoan(sk)
       embeddingNearDups(df, idCol, vecCol, threshold)
     }
   }

@@ -280,10 +280,9 @@ object Sampling {
     val toks = checkedTokens(tokensCol, "tokenBudgetSelect")
     val order = Seq(col(scoreCol).desc, col(idCol).asc)
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = graft.Caches.loan(
+    val ranged = graft.Caches.persistLoaned(
       df.repartitionByRange(parts, order: _*)
-        .withColumn("_graft_pid", spark_partition_id())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .withColumn("_graft_pid", spark_partition_id()))
     val wRun = Window.partitionBy("_graft_pid").orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val run = ranged.withColumn("_graft_run", sum(toks).over(wRun))

@@ -296,12 +296,15 @@ object StreamOps {
                        joinType: String = "inner"): DataFrame =
     stream.join(dim, Seq(key), joinType)
 
-  /** E7 — STREAMING INGEST DEDUP against a MATERIALIZED fingerprint
-    * index: the daily-ingest probe ([[graft.operators.Dedup
-    * .exactIncrementalFromIndex]]) as a live stream — each micro-batch of
-    * incoming documents fingerprints narrowly and stream-static ANTI-joins
-    * the parquet-loaded index, emitting only never-seen documents. The
-    * static side is a regular batch relation re-planned per micro-batch:
+  /** E7 — INGEST DEDUP against a MATERIALIZED fingerprint index
+    * ([[graft.operators.Dedup.fingerprintIndex]]): [[graft.operators.Dedup
+    * .exactIncremental]] with the corpus side prebuilt, so the corpus is
+    * not scanned at all. `stream` may be a batch frame (the daily-ingest
+    * probe) or a streaming one; the plan is the same anti join either way.
+    * Each (micro-)batch of incoming documents fingerprints narrowly and
+    * ANTI-joins the parquet-loaded index, emitting only never-seen
+    * documents with their `fingerprint` column. The static side is a
+    * regular batch relation re-planned per micro-batch:
     * NO streaming state at all (the index IS the state, owned by the
     * ingest pipeline and advanced between batches via
     * `updateFingerprintIndex`), so stream history costs no executor
@@ -556,11 +559,11 @@ object StreamOps {
                    checkpointPath: String): Unit = {
     val q = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.persist()
+        val b = graft.Caches.persistLoaned(batch)
         try {
           b.filter(pred).write.mode("append").parquet(passPath)
           b.filter(!coalesce(pred, lit(false))).write.mode("append").parquet(failPath)
-        } finally { b.unpersist(); () }
+        } finally graft.Caches.endLoan(b)
       }
       .option("checkpointLocation", checkpointPath)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

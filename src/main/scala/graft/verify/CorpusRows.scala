@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StringType,
 import OracleSql._
 import RowHelpers._
 
-/** Verify rows for the text, multimodal, vector, sampling and analytics
+/** Verify rows for the text, vector, sampling and analytics
   * operators. */
 private[verify] object CorpusRows {
 
@@ -235,337 +235,6 @@ private[verify] object CorpusRows {
         "sum(CASE WHEN gpass AND rpass AND lpass THEN 1 ELSE 0 END)::BIGINT AS n_english " +
         "FROM documents d JOIN fg USING (doc_id) JOIN fr USING (doc_id) " +
         "JOIN fl USING (doc_id) GROUP BY d.source ORDER BY d.source"),
-
-    // M1: multimodal binary payload metadata (oracle-checkable scalars)
-    VerifyRow("m1_multimodal_meta",
-      (s, d) =>
-        Multimodal.attachPayload(Tables.documents(s, d), "doc_id", "text")
-          .select(col("doc_id"), col("media_type"),
-            length(col("payload")).cast("long").as("byte_len"),
-            sha2(col("payload"), 256).as("sha256"))
-          .orderBy("doc_id"),
-      "SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' " +
-        "ELSE 'video' END AS media_type, octet_length(encode(text))::BIGINT AS byte_len, " +
-        "sha256(text) AS sha256 FROM documents ORDER BY doc_id"),
-
-    // M2: batch decode via mapPartitions. The stub decoder derives metadata
-    // from sha256 hex digits (Multimodal.stubDecode), so the whole decode
-    // is oracle-checkable in DuckDB. Struct flattened to scalars; ints cast
-    // to long to match the oracle's BIGINT arithmetic.
-    VerifyRow("m2_multimodal_decode",
-      (s, d) =>
-        Multimodal.decodeBatches(s,
-          Multimodal.attachPayload(Tables.documents(s, d), "doc_id", "text"), "doc_id")
-          .toDF()
-          .select(col("doc_id"), col("media_type"), col("byte_len"), col("sha256"),
-            col("meta.width").cast("long").as("width"),
-            col("meta.height").cast("long").as("height"),
-            col("meta.n_frames").cast("long").as("n_frames"),
-            col("meta.duration_ms").as("duration_ms"))
-          .orderBy("doc_id"),
-      "SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' " +
-        "ELSE 'video' END AS media_type, octet_length(encode(text))::BIGINT AS byte_len, " +
-        "sha256(text) AS sha256, " +
-        "(1 + ('0x' || substr(sha256(text),1,6))::BIGINT % 4096)::BIGINT AS width, " +
-        "(1 + ('0x' || substr(sha256(text),7,6))::BIGINT % 2160)::BIGINT AS height, " +
-        "(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 1 + ('0x' || substr(sha256(text),13,6))::BIGINT % 14400 END)::BIGINT AS n_frames, " +
-        "(CASE WHEN doc_id % 3 = 0 THEN 0 ELSE ('0x' || substr(sha256(text),19,12))::BIGINT % 600000 END)::BIGINT AS duration_ms " +
-        "FROM documents ORDER BY doc_id"),
-
-    // M3: uniform temporal frame sampling over video payloads — k evenly-
-    // spaced frame indices per clip, one row per sampled frame. The
-    // media-type filter runs BEFORE decode: media_type is already on the
-    // attachPayload frame, so 2/3 of payloads never reach the decoder.
-    VerifyRow("m3_frame_sample",
-      (s, d) => {
-        val videos = Multimodal.attachPayload(Tables.documents(s, d), "doc_id", "text")
-          .filter(col("media_type") === "video")
-        Multimodal.uniformFrameSample(Multimodal.decodeBatches(s, videos, "doc_id").toDF(),
-          "doc_id", 8)
-          .orderBy("doc_id", "frame_idx")
-      },
-      "WITH m AS (SELECT doc_id, " +
-        "(1 + ('0x' || substr(sha256(text),13,6))::BIGINT % 14400)::BIGINT AS n_frames " +
-        "FROM documents WHERE doc_id % 3 = 2) " +
-        "SELECT DISTINCT doc_id, (r.range * n_frames) // 8 AS frame_idx " +
-        "FROM m CROSS JOIN range(0, 8) r ORDER BY doc_id, frame_idx"),
-
-    // M4: aspect-preserving fit-to-box resize planning (integer-exact
-    // dimension math; stub digest lineage) over decoded visual media
-    VerifyRow("m4_resize",
-      (s, d) => {
-        val visual = Multimodal.attachPayload(Tables.documents(s, d), "doc_id", "text")
-          .filter(col("media_type") =!= "audio")
-        Multimodal.resizeToBox(Multimodal.decodeBatches(s, visual, "doc_id").toDF(),
-          640, 480)
-          .orderBy("doc_id")
-      },
-      "WITH m AS (SELECT doc_id, " +
-        "CASE WHEN doc_id % 3 = 0 THEN 'image' ELSE 'video' END AS media_type, " +
-        "sha256(text) AS sha, " +
-        "(1 + ('0x' || substr(sha256(text),1,6))::BIGINT % 4096)::BIGINT AS width, " +
-        "(1 + ('0x' || substr(sha256(text),7,6))::BIGINT % 2160)::BIGINT AS height " +
-        "FROM documents WHERE doc_id % 3 != 1) " +
-        "SELECT doc_id, media_type, width, height, " +
-        "CASE WHEN width <= 640 AND height <= 480 THEN width " +
-        "WHEN width * 480 >= height * 640 THEN 640 " +
-        "ELSE greatest(1, (width * 480) // height) END AS new_width, " +
-        "CASE WHEN width <= 640 AND height <= 480 THEN height " +
-        "WHEN width * 480 >= height * 640 THEN greatest(1, (height * 640) // width) " +
-        "ELSE 480 END AS new_height, " +
-        "CASE WHEN width <= 640 AND height <= 480 THEN sha " +
-        "ELSE sha256(sha || '->640x480') END AS resized_sha " +
-        "FROM m ORDER BY doc_id"),
-
-    // M2b: REAL image decode via JDK javax.imageio — deterministic PNG
-    // fixtures (ImageIO-encoded; dims and every pixel closed-form in
-    // doc_id) pushed through BOTH real decode paths: decodeBatches reads
-    // true dimensions off the PNG header, decodeImageBatches sums the
-    // raster. The oracle recomputes width/height/pixel-sum from the
-    // closed form — a genuine pixel-level decode check, no hash stub
-    // anywhere in this row.
-    //
-    // closed-form PNG round-trip: width/height/pixel-sum recomputed from
-    // the fixture formula (1+id%31, 1+id%17, gray = (7x+13y+id) mod 256)
-    VerifyRow("m2b_image_decode",
-      (s, d) => {
-        val ids = Tables.documents(s, d).filter(col("doc_id") < 100)
-        val png = Multimodal.encodePngBatches(s, ids, "doc_id")
-        val dims = Multimodal.decodeBatches(s, png, "doc_id").toDF()
-          .select(col("doc_id"), col("meta.width").cast("long").as("width"),
-            col("meta.height").cast("long").as("height"),
-            col("meta.n_frames").cast("long").as("n_frames"))
-        val px = Multimodal.decodeImageBatches(s, png, "doc_id").toDF()
-          .select(col("doc_id"), col("px_sum"))
-        dims.join(px, "doc_id").orderBy("doc_id")
-      },
-      "WITH px AS (SELECT d.doc_id, " +
-        "sum((x.range * 7 + y.range * 13 + d.doc_id) % 256) AS px_sum " +
-        "FROM documents d CROSS JOIN range(0, 31) x CROSS JOIN range(0, 17) y " +
-        "WHERE d.doc_id < 100 AND x.range < 1 + d.doc_id % 31 " +
-        "AND y.range < 1 + d.doc_id % 17 GROUP BY d.doc_id) " +
-        "SELECT doc_id, (1 + doc_id % 31)::BIGINT AS width, " +
-        "(1 + doc_id % 17)::BIGINT AS height, 1::BIGINT AS n_frames, " +
-        "px_sum::BIGINT AS px_sum FROM px ORDER BY doc_id"),
-
-    // M4b: REAL pixel resize — PNG fixtures pushed through the
-    // nearest-neighbor resampler into a deliberately SMALL box (8x6; the
-    // fixtures are up to 31x17, so most rows genuinely rescale, and the
-    // extreme strips exercise the >=1 clamp). The oracle recomputes the
-    // resampled px_sum from the closed-form source raster and the integer
-    // index mapping — the m2b recipe applied to the resized grid; no
-    // digest stub anywhere in this row.
-    //
-    // closed-form resized-raster oracle: target dims from the integer
-    // fit-to-box formula (>=1 clamp), source pixel for (x, y) =
-    // (x*w // nw, y*h // nh), gray = (7*sx + 13*sy + id) mod 256 — the
-    // m2b fixture formula sampled on the resized grid
-    VerifyRow("m4b_resize_pixels",
-      (s, d) => {
-        val ids = Tables.documents(s, d).filter(col("doc_id") < 100)
-        val png = Multimodal.encodePngBatches(s, ids, "doc_id")
-        Multimodal.resizePixelsToBox(s, png, "doc_id", 8, 6).toDF()
-          .select(col("doc_id"), col("width").cast("long").as("width"),
-            col("height").cast("long").as("height"),
-            col("new_width").cast("long").as("new_width"),
-            col("new_height").cast("long").as("new_height"),
-            col("px_sum"))
-          .orderBy("doc_id")
-      },
-      "WITH f AS (SELECT doc_id, 1 + doc_id % 31 AS w, 1 + doc_id % 17 AS h " +
-        "FROM documents WHERE doc_id < 100), " +
-        "dims AS (SELECT doc_id, w, h, " +
-        "CASE WHEN w <= 8 AND h <= 6 THEN w WHEN w * 6 >= h * 8 THEN 8 " +
-        "ELSE greatest(1, (w * 6) // h) END AS nw, " +
-        "CASE WHEN w <= 8 AND h <= 6 THEN h WHEN w * 6 >= h * 8 " +
-        "THEN greatest(1, (h * 8) // w) ELSE 6 END AS nh FROM f), " +
-        "px AS (SELECT dm.doc_id, " +
-        "sum((((x.range * dm.w) // dm.nw) * 7 + ((y.range * dm.h) // dm.nh) * 13 + dm.doc_id) % 256) AS s " +
-        "FROM dims dm CROSS JOIN range(0, 8) x CROSS JOIN range(0, 6) y " +
-        "WHERE x.range < dm.nw AND y.range < dm.nh GROUP BY dm.doc_id) " +
-        "SELECT dm.doc_id, dm.w::BIGINT AS width, dm.h::BIGINT AS height, " +
-        "dm.nw::BIGINT AS new_width, dm.nh::BIGINT AS new_height, " +
-        "p.s::BIGINT AS px_sum FROM dims dm JOIN px p USING (doc_id) " +
-        "ORDER BY doc_id"),
-
-    // M2c: REAL audio decode via JDK javax.sound.sampled — deterministic
-    // WAV fixtures (AudioSystem-encoded 16-bit PCM; rate/channels/frames
-    // and every sample closed-form in doc_id) pushed through BOTH real
-    // decode paths: decodeBatches reads the header (channels/sample_rate
-    // ride the MediaMeta width/height slots — documented contract),
-    // decodeAudioBatches sums the PCM body. The oracle recomputes all
-    // fields from the closed form — a genuine sample-level decode check,
-    // no hash stub anywhere in this row (the m2b recipe applied to audio).
-    VerifyRow("m2c_audio_decode",
-      (s, d) => {
-        val ids = Tables.documents(s, d).filter(col("doc_id") < 100)
-        val wav = Multimodal.encodeWavBatches(s, ids, "doc_id")
-        val meta = Multimodal.decodeBatches(s, wav, "doc_id").toDF()
-          .select(col("doc_id"), col("meta.width").cast("long").as("channels"),
-            col("meta.height").cast("long").as("sample_rate"),
-            col("meta.n_frames").cast("long").as("n_frames"),
-            col("meta.duration_ms").as("duration_ms"))
-        val pcm = Multimodal.decodeAudioBatches(s, wav, "doc_id").toDF()
-          .select(col("doc_id"), col("amp_sum"))
-        meta.join(pcm, "doc_id").orderBy("doc_id")
-      },
-      audioFixtureOracleSql),
-
-    // M2d: the m2c recipe over AIFF fixtures — same closed-form signal,
-    // BIG-endian PCM container (AudioSystem sniffs the FORM/AIFF header,
-    // the sample summer flips byte order): the sniff→decode dispatch
-    // generalizes past one format. Oracle = m2c's, verbatim.
-    //
-    // identical closed-form fixture, AIFF container — same oracle
-    VerifyRow("m2d_aiff_decode",
-      (s, d) => {
-        val ids = Tables.documents(s, d).filter(col("doc_id") < 100)
-        val aiff = Multimodal.encodeAiffBatches(s, ids, "doc_id")
-        val meta = Multimodal.decodeBatches(s, aiff, "doc_id").toDF()
-          .select(col("doc_id"), col("meta.width").cast("long").as("channels"),
-            col("meta.height").cast("long").as("sample_rate"),
-            col("meta.n_frames").cast("long").as("n_frames"),
-            col("meta.duration_ms").as("duration_ms"))
-        val pcm = Multimodal.decodeAudioBatches(s, aiff, "doc_id").toDF()
-          .select(col("doc_id"), col("amp_sum"))
-        meta.join(pcm, "doc_id").orderBy("doc_id")
-      },
-      audioFixtureOracleSql),
-
-    // M2g: PCM resample to 12 kHz over the WAV fixture — source rates span
-    // 8–15 kHz, so the same run exercises upsampling, downsampling, AND
-    // the identity rate (12 kHz sources: frac is always 0, output ==
-    // input samples). Exact integer interpolation means the oracle is a
-    // closed form over the fixture formula, not an ok-bit.
-    //
-    // exact-integer linear interpolation at 12 kHz: output frame j reads
-    // source position j·src/12000 as quotient i0 + remainder fr; with the
-    // fixture's sample+256 = (31·i + id) mod 512 the interpolated value is
-    // a pure integer expression, so the resample oracle is closed-form
-    // (floor == // throughout, every dividend non-negative)
-    VerifyRow("m2g_resample",
-      (s, d) => {
-        val ids = Tables.documents(s, d).filter(col("doc_id") < 100)
-        val wav = Multimodal.encodeWavBatches(s, ids, "doc_id")
-        Multimodal.resampleAudioBatches(s, wav, "doc_id", 12000).toDF()
-          .select(col("doc_id"), col("sample_rate").cast("long").as("sample_rate"),
-            col("channels").cast("long").as("channels"), col("n_frames"),
-            col("duration_ms"), col("amp_sum"))
-          .orderBy("doc_id")
-      },
-      "WITH p AS (SELECT doc_id, 8000 + (doc_id % 8) * 1000 AS src, " +
-        "1 + doc_id % 2 AS ch, 500 + doc_id % 251 AS frames " +
-        "FROM documents WHERE doc_id < 100), " +
-        "v AS (SELECT p.doc_id, p.ch, p.frames, (p.frames * 12000) // p.src AS n_out, " +
-        "j.range * p.src AS num FROM p CROSS JOIN range(0, 1125) j " +
-        "WHERE j.range < (p.frames * 12000) // p.src), " +
-        "o AS (SELECT doc_id, ch, n_out, " +
-        "((((num // 12000) * 31 + doc_id) % 512) * (12000 - num % 12000) " +
-        "+ ((LEAST(num // 12000 + 1, frames - 1) * 31 + doc_id) % 512) * (num % 12000)) " +
-        "// 12000 - 256 AS outv FROM v), " +
-        "a AS (SELECT doc_id, ch, n_out, sum(outv) AS s FROM o GROUP BY doc_id, ch, n_out) " +
-        "SELECT doc_id, 12000::BIGINT AS sample_rate, ch::BIGINT AS channels, " +
-        "n_out::BIGINT AS n_frames, ((n_out * 1000) // 12000)::BIGINT AS duration_ms, " +
-        "(ch * s)::BIGINT AS amp_sum FROM a ORDER BY doc_id"),
-
-    // M2e: REAL video decode over hand-built UNCOMPRESSED AVI fixtures —
-    // the last multimodal stub closed for the codec-free case: the RIFF
-    // walker reads avih width/height/frames/duration and sums every
-    // '00db' frame chunk's bytes; the oracle recomputes all fields from
-    // the closed-form pixel formula (the m2b/m2c recipe applied to video)
-    //
-    // closed-form uncompressed-AVI round-trip: header fields and the
-    // triple-range pixel-channel sum (3 identical BGR bytes per pixel,
-    // v = (7x + 13y + 31f + id) mod 256; stride padding is zero so the
-    // chunk-byte sum IS the pixel sum)
-    VerifyRow("m2e_video_decode",
-      (s, d) => {
-        val ids = Tables.documents(s, d).filter(col("doc_id") < 100)
-        val avi = Multimodal.encodeAviBatches(s, ids, "doc_id")
-        val meta = Multimodal.decodeBatches(s, avi, "doc_id").toDF()
-          .select(col("doc_id"), col("meta.width").cast("long").as("width"),
-            col("meta.height").cast("long").as("height"),
-            col("meta.n_frames").cast("long").as("n_frames"),
-            col("meta.duration_ms").as("duration_ms"))
-        val px = Multimodal.decodeVideoBatches(s, avi, "doc_id").toDF()
-          .select(col("doc_id"), col("px_sum"))
-        meta.join(px, "doc_id").orderBy("doc_id")
-      },
-      "WITH px AS (SELECT d.doc_id, " +
-        "sum(3 * ((x.range * 7 + y.range * 13 + f.range * 31 + d.doc_id) % 256)) AS s " +
-        "FROM documents d CROSS JOIN range(0, 8) x CROSS JOIN range(0, 6) y " +
-        "CROSS JOIN range(0, 7) f " +
-        "WHERE d.doc_id < 100 AND x.range < 1 + d.doc_id % 8 " +
-        "AND y.range < 1 + d.doc_id % 6 AND f.range < 2 + d.doc_id % 5 " +
-        "GROUP BY d.doc_id) " +
-        "SELECT doc_id, (1 + doc_id % 8)::BIGINT AS width, " +
-        "(1 + doc_id % 6)::BIGINT AS height, " +
-        "(2 + doc_id % 5)::BIGINT AS n_frames, " +
-        "(((2 + doc_id % 5) * 20000 * (1 + doc_id % 3)) // 1000)::BIGINT AS duration_ms, " +
-        "s::BIGINT AS px_sum FROM px ORDER BY doc_id"),
-
-    // M2f: REAL MJPEG video decode — the '00dc' chunks are complete JPEGs
-    // which the already-shipped ImageIO decodes, closing the codec stub
-    // for the one codec the JDK can handle. JPEG is lossy so px_sum has no
-    // closed form; the fixture generator records ground truth by
-    // round-tripping each frame at ENCODE time (whole-image decode), and
-    // px_ok asserts the independent RIFF-walk + per-chunk decode path
-    // reproduces it bit-for-bit. Header fields stay closed-form (m2e's
-    // geometry), so the oracle pins them plus px_ok = TRUE.
-    //
-    // MJPEG sibling: header fields are the same closed form; the pixel sum
-    // is codec-defined (lossy JPEG), so the gate is px_ok — the per-chunk
-    // ImageIO decode inside the RIFF walk must bit-match the generator's
-    // encode-time whole-image round trip
-    VerifyRow("m2f_mjpeg_decode",
-      (s, d) => {
-        val ids = Tables.documents(s, d).filter(col("doc_id") < 100)
-        val avi = Multimodal.encodeMjpegAviBatches(s, ids, "doc_id")
-        val px = Multimodal.decodeVideoBatches(s, avi, "doc_id").toDF()
-        px.join(avi.select(col("doc_id"), col("expected_px_sum")), "doc_id")
-          .select(col("doc_id"), col("width").cast("long").as("width"),
-            col("height").cast("long").as("height"), col("n_frames"),
-            col("duration_ms"),
-            (col("px_sum") === col("expected_px_sum")).as("px_ok"))
-          .orderBy("doc_id")
-      },
-      "SELECT doc_id, (1 + doc_id % 8)::BIGINT AS width, " +
-        "(1 + doc_id % 6)::BIGINT AS height, " +
-        "(2 + doc_id % 5)::BIGINT AS n_frames, " +
-        "(((2 + doc_id % 5) * 20000 * (1 + doc_id % 3)) // 1000)::BIGINT AS duration_ms, " +
-        "TRUE AS px_ok FROM documents WHERE doc_id < 100 ORDER BY doc_id"),
-
-    // M2h: REAL animated-GIF video decode — the second zero-codec video
-    // container next to RIFF/AVI, read and written by the JDK's own
-    // ImageIO. Palettized gray frames are lossless, so width/height/
-    // frames/duration AND the per-frame pixel sum are all closed-form in
-    // the id (single channel; the DIB fixture's sum is 3× per pixel)
-    //
-    // GIF sibling: lossless palettized frames, so the pixel sum is the
-    // raw formula (one channel) and the duration comes from the per-frame
-    // delay metadata — frames × 20 ms × (1 + id % 3)
-    VerifyRow("m2h_gif_decode",
-      (s, d) => {
-        val ids = Tables.documents(s, d).filter(col("doc_id") < 100)
-        val gif = Multimodal.encodeGifBatches(s, ids, "doc_id")
-        Multimodal.decodeVideoBatches(s, gif, "doc_id").toDF()
-          .select(col("doc_id"), col("width").cast("long").as("width"),
-            col("height").cast("long").as("height"), col("n_frames"),
-            col("duration_ms"), col("px_sum"))
-          .orderBy("doc_id")
-      },
-      "WITH px AS (SELECT d.doc_id, " +
-        "sum((x.range * 7 + y.range * 13 + f.range * 31 + d.doc_id) % 256) AS s " +
-        "FROM documents d CROSS JOIN range(0, 8) x CROSS JOIN range(0, 6) y " +
-        "CROSS JOIN range(0, 7) f " +
-        "WHERE d.doc_id < 100 AND x.range < 1 + d.doc_id % 8 " +
-        "AND y.range < 1 + d.doc_id % 6 AND f.range < 2 + d.doc_id % 5 " +
-        "GROUP BY d.doc_id) " +
-        "SELECT doc_id, (1 + doc_id % 8)::BIGINT AS width, " +
-        "(1 + doc_id % 6)::BIGINT AS height, " +
-        "(2 + doc_id % 5)::BIGINT AS n_frames, " +
-        "((2 + doc_id % 5) * 20 * (1 + doc_id % 3))::BIGINT AS duration_ms, " +
-        "s::BIGINT AS px_sum FROM px ORDER BY doc_id"),
 
     // V1: per-label embedding centroids (class prototypes) — map-side
     // partial aggregation of per-coordinate means, long-format output

@@ -223,7 +223,7 @@ private[verify] object DedupRows {
     // here poisons the sibling consumers — measured r13: d6c 0.53→2.30 s,
     // s5j 0.50→1.97 s with the unpersist in place — exactly the
     // dead-entry recompute the Caches loan convention documents. It is
-    // LEDGERED (Caches.loan), so Caches.drain at end of run calls the
+    // LEDGERED (Caches.persistLoaned), so Caches.drain at end of run calls the
     // loan in — intra-run sharing without session-lifetime residue.
     //
     // the incremental fold must reproduce the FROM-SCRATCH components over

@@ -809,26 +809,6 @@ private[verify] object OracleSql {
       "n.n_regionkey AS r_n_regionkey " +
       "FROM g JOIN nation n ON g.r_c_nationkey = n.n_nationkey ORDER BY r_c_nationkey"
 
-  /** Closed-form audio round-trip oracle (m2c WAV / m2d AIFF — the
-    * containers carry the SAME formula-derived signal, so one oracle
-    * serves both): rate/channels/frames/duration and the PCM amplitude
-    * sum recomputed from the fixture formula (rate = 8000 + (id%8)*1000,
-    * channels = 1 + id%2, frames = 500 + id%251,
-    * sample_i = ((31i + id) mod 512) − 256, every channel of a frame
-    * carries the same value).
-    */
-  val audioFixtureOracleSql: String =
-    "WITH amp AS (SELECT d.doc_id, " +
-      "sum(((r.range * 31 + d.doc_id) % 512) - 256) AS s " +
-      "FROM documents d CROSS JOIN range(0, 751) r " +
-      "WHERE d.doc_id < 100 AND r.range < 500 + d.doc_id % 251 " +
-      "GROUP BY d.doc_id) " +
-      "SELECT doc_id, (1 + doc_id % 2)::BIGINT AS channels, " +
-      "(8000 + (doc_id % 8) * 1000)::BIGINT AS sample_rate, " +
-      "(500 + doc_id % 251)::BIGINT AS n_frames, " +
-      "(((500 + doc_id % 251) * 1000) // (8000 + (doc_id % 8) * 1000))::BIGINT AS duration_ms, " +
-      "(s * (1 + doc_id % 2))::BIGINT AS amp_sum FROM amp ORDER BY doc_id"
-
   val trigramInvCtes: String =
     "sh AS (SELECT doc_id, list_distinct(list_transform(" +
       "range(1, len(regexp_split_to_array(lower(trim(text)), '\\s+')) - 1), " +

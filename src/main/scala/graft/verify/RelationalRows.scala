@@ -67,9 +67,8 @@ private[verify] object RelationalRows {
         // parsed frame first, exactly as the JsonlSource scaladoc
         // prescribes: the cache materializes the full schema and the
         // kind-count reads from it, not from the raw files
-        val parsed = graft.Caches.loan(
-          JsonlSource.readWithSchema(s, qDir, schema)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val parsed = graft.Caches.persistLoaned(
+          JsonlSource.readWithSchema(s, qDir, schema))
         parsed.count()
         parsed
           .select(when(col(JsonlSource.CorruptCol).isNull, "well")
@@ -649,9 +648,8 @@ private[verify] object RelationalRows {
         val orders = Ops.requireColumns(Tables.orders(s, d),
           Seq("o_custkey", "o_orderdate", "o_totalprice", "o_orderpriority"))
         val clean = Ops.dropNullRows(orders, "o_orderpriority")
-        graft.Caches.loan(
-          Agg.latestTable(clean, "o_custkey", Seq("o_orderdate", "o_totalprice"))
-            .persist())
+        graft.Caches.persistLoaned(
+          Agg.latestTable(clean, "o_custkey", Seq("o_orderdate", "o_totalprice")))
           .orderBy("o_custkey")
       },
       "SELECT o_custkey, max(o_orderdate) AS o_orderdate, " +

@@ -13,8 +13,9 @@ import SparkEntry.dec
 /** What the Verify rows share on the Spark side: scratch and stage
   * directories, the staged streaming replays, the row parameters the
   * oracle SQL reads too, and the SQL-text stages of the lifecycle rows.
+  * Visible to the rest of `graft` so the specs find what the rows staged.
   */
-private[verify] object RowHelpers {
+private[graft] object RowHelpers {
 
   /** Per-data-dir scratch root for queries that materialize intermediate
     * files (CSV/JSONL round-trips, streaming staging): two concurrent runs

@@ -839,8 +839,8 @@ private[verify] object StreamIndexRows {
             Dedup.fingerprintIndex(docs.filter(col("doc_id") % 10 =!= 0), "text"),
             idxDir, "fingerprint", shards = 4)
         }
-        Dedup.exactIncrementalFromIndex(
-          docs.filter(col("doc_id") % 10 === 0), s.read.parquet(idxDir), "doc_id", "text")
+        StreamOps.ingestDedupStreaming(
+          docs.filter(col("doc_id") % 10 === 0), s.read.parquet(idxDir), "text")
           .select("doc_id", "fingerprint").orderBy("doc_id")
       },
       d8OracleSql),
@@ -860,8 +860,8 @@ private[verify] object StreamIndexRows {
           ParquetSink.writeSharded(
             Dedup.fingerprintIndex(docs.filter(col("doc_id") % 8 >= 2), "text"),
             idxDir, "fingerprint", shards = 4)
-          val surv = Dedup.exactIncrementalFromIndex(
-            docs.filter(col("doc_id") % 8 === 0), s.read.parquet(idxDir), "doc_id", "text")
+          val surv = StreamOps.ingestDedupStreaming(
+            docs.filter(col("doc_id") % 8 === 0), s.read.parquet(idxDir), "text")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           surv.count()
           Dedup.updateFingerprintIndex(surv, idxDir, "text", shards = 4)
@@ -869,8 +869,8 @@ private[verify] object StreamIndexRows {
           Dedup.compactFingerprintIndex(s, idxDir, shards = 4)
           new java.io.File(s"$idxDir/_UPDATED").createNewFile()
         }
-        Dedup.exactIncrementalFromIndex(
-          docs.filter(col("doc_id") % 8 === 1), s.read.parquet(idxDir), "doc_id", "text")
+        StreamOps.ingestDedupStreaming(
+          docs.filter(col("doc_id") % 8 === 1), s.read.parquet(idxDir), "text")
           .select("doc_id", "fingerprint").orderBy("doc_id")
       },
       d8dOracleSql),

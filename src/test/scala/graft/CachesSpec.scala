@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.operators.{Dedup, TermStats}
+import org.apache.spark.storage.StorageLevel
+import org.scalatest.funsuite.AnyFunSuite
 
 /** The cache-loan ledger: every persist graft leaves alive past its
   * creating call must be registered, and [[Caches.drain]] must call them
@@ -56,15 +62,56 @@ class CachesSpec extends SparkTestBase {
     Caches.releaseAll(spark)
   }
 
-  test("settled loans are forgotten; unpersisted entries are harmless") {
-    val df = spark.range(100).toDF("id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.loan(df)
+  test("endLoan ends and forgets a loan; stale entries are harmless") {
+    val df = Caches.persistLoaned(spark.range(100).toDF("id"))
+    df.count()
     assert(Caches.outstanding(spark) >= 1)
+    Caches.endLoan(df)
+    assert(df.storageLevel == StorageLevel.NONE, "endLoan unpersists the loan")
+    assert(Caches.outstanding(spark) == 0)
+    // forgotten: the same frame persisted again by its user is theirs, and
+    // releaseAll leaves it cached
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    Caches.releaseAll(spark)
+    assert(df.storageLevel != StorageLevel.NONE, "an ended loan must leave the ledger")
     df.unpersist(blocking = true)
-    // still ledgered but no longer persisted — outstanding counts live only
+    // a loan unpersisted behind the ledger's back stays ledgered but is no
+    // longer persisted — outstanding counts live only
+    val stale = Caches.persistLoaned(spark.range(200).toDF("id"))
+    stale.unpersist(blocking = true)
     assert(Caches.outstanding(spark) == 0)
     // releaseAll on the stale entry is a no-op, not an error
     Caches.releaseAll(spark)
+  }
+}
+
+/** Guard for the one way into a loan: library code caches a frame only
+  * through [[Caches.persistLoaned]], so every graft cache is a ledgered loan
+  * that [[Caches.endLoan]] or [[Caches.releaseAll]] ends, and a plan another
+  * owner cached is never loaned. `Caches` itself and the `Tables` memo
+  * (which owns its small scans) persist directly, and so may the Verify
+  * rows in `graft.verify`, which are fixtures rather than operators.
+  */
+class PersistGateSpec extends AnyFunSuite {
+
+  private val exempt = Set("Caches.scala", "Tables.scala")
+  private val rawPersist = """\.persist\b|\.cache\s*\(""".r
+
+  test("library code persists only through Caches.persistLoaned") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val verify = root.resolve("graft/verify")
+    val files = Files.walk(root).iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.startsWith(verify) &&
+        !exempt(f.getFileName.toString))
+      .toList
+    assert(files.nonEmpty)
+    val offending = for {
+      f <- files
+      src = SourceScan.blankComments(Files.readString(f))
+      m <- rawPersist.findAllMatchIn(src).toSeq
+    } yield s"$f:${src.substring(0, m.start).count(_ == '\n') + 1}"
+    assert(offending.isEmpty,
+      offending.mkString("raw persists outside Caches.persistLoaned:\n", "\n", ""))
   }
 }

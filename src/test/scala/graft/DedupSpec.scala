@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.Text
 import graft.operators.{Dedup, Sampling, Similarity}
+import graft.streaming.StreamOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -691,8 +692,8 @@ class DedupSpec extends SparkTestBase {
     // exact: fingerprint index round-trip == one-shot
     graft.sources.ParquetSink.writeSharded(Dedup.fingerprintIndex(corp, "text"),
       s"$dir/fp", "fingerprint", shards = 2)
-    val ex = Dedup.exactIncrementalFromIndex(batch, spark.read.parquet(s"$dir/fp"),
-      "doc_id", "text").select("doc_id").as[Long].collect().toSet
+    val ex = StreamOps.ingestDedupStreaming(batch, spark.read.parquet(s"$dir/fp"),
+      "text").select("doc_id").as[Long].collect().toSet
     val exDirect = Dedup.exactIncremental(batch, corp, "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
     assert(ex == exDirect, s"exact replay diverged: $ex vs $exDirect")
@@ -782,12 +783,11 @@ class DedupSpec extends SparkTestBase {
       (303L, "something else entirely again")).toDF("doc_id", "text")
     graft.sources.ParquetSink.writeSharded(Dedup.fingerprintIndex(day1, "text"),
       fp, "fingerprint", shards = 2)
-    val fsurv = Dedup.exactIncrementalFromIndex(day2, spark.read.parquet(fp),
-      "doc_id", "text")
+    val fsurv = StreamOps.ingestDedupStreaming(day2, spark.read.parquet(fp), "text")
     assert(fsurv.select("doc_id").as[Long].collect().toSet == Set(201L, 202L))
     Dedup.updateFingerprintIndex(fsurv, fp, "text", shards = 2)
-    val fUpdated = Dedup.exactIncrementalFromIndex(e3, spark.read.parquet(fp),
-      "doc_id", "text").select("doc_id").as[Long].collect().toSet
+    val fUpdated = StreamOps.ingestDedupStreaming(e3, spark.read.parquet(fp),
+      "text").select("doc_id").as[Long].collect().toSet
     val fRebuilt = Dedup.exactIncremental(e3, day1.union(day2), "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
     assert(fUpdated == fRebuilt && fUpdated == Set(301L, 303L),

@@ -37,10 +37,6 @@ class EmptyInputSpec extends SparkTestBase {
     assert(bm.columns.toSeq == Seq("doc_id", "dl", "bm25") && bm.count() == 0)
     // incremental minhash: empty batch and/or empty corpus
     assert(Dedup.minhashIncremental(emptyDocs, emptyDocs, "doc_id", "text", 0.5).count() == 0)
-    // image codecs: empty frames stay empty, schemas intact
-    val png = Multimodal.encodePngBatches(spark, emptyDocs, "doc_id")
-    assert(png.columns.toSeq == Seq("doc_id", "payload", "media_type") && png.count() == 0)
-    assert(Multimodal.decodeImageBatches(spark, png, "doc_id").count() == 0)
     // built-in session_window over no events
     val noEvents = Seq.empty[(Long, Long)].toDF("user_id", "ts_us")
     assert(graft.streaming.StreamOps.sessionizeWindow(noEvents, "30 minutes").count() == 0)
@@ -57,8 +53,8 @@ class EmptyInputSpec extends SparkTestBase {
     val mh = Dedup.buildMinhashIndex(emptyDocs, "doc_id", "text")
     assert(mh.sets.count() == 0 && mh.bands.count() == 0)
     assert(Dedup.minhashIncrementalFromIndex(batch, mh, "doc_id", "text", 0.5).count() == 1)
-    assert(Dedup.exactIncrementalFromIndex(batch,
-      Dedup.fingerprintIndex(emptyDocs, "text"), "doc_id", "text").count() == 1)
+    assert(graft.streaming.StreamOps.ingestDedupStreaming(batch,
+      Dedup.fingerprintIndex(emptyDocs, "text"), "text").count() == 1)
     val ci = Dedup.buildContainmentIndex(emptyDocs, "doc_id", "text", 3, 50)
     assert(Dedup.decontaminationFromIndex(ci, batch, "doc_id", "text", 3, 0.5).count() == 0)
     val noVecs7 = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
@@ -66,12 +62,6 @@ class EmptyInputSpec extends SparkTestBase {
     val ei = Dedup.buildEmbeddingIndex(noVecs7, "vec_id", "embedding", dim = 4)
     assert(Dedup.embeddingIncrementalFromIndex(vb, ei, "vec_id", "embedding",
       0.9, dim = 4).count() == 1)
-    // audio codecs: empty frames stay empty, schemas intact
-    val wav = Multimodal.encodeWavBatches(spark, emptyDocs, "doc_id")
-    assert(wav.columns.toSeq == Seq("doc_id", "payload", "media_type") && wav.count() == 0)
-    assert(Multimodal.decodeAudioBatches(spark, wav, "doc_id").count() == 0)
-    assert(Multimodal.resizePixelsToBox(spark,
-      Multimodal.encodePngBatches(spark, emptyDocs, "doc_id"), "doc_id", 8, 6).count() == 0)
     // exact median over an empty / all-null input yields a null (SQL agg)
     val med = Seq.empty[Double].toDF("v")
       .agg(graft.functions.ExactMedian.exactMedian(col("v"))).head
@@ -113,13 +103,6 @@ class EmptyInputSpec extends SparkTestBase {
     val ivf = Similarity.readIvfIndex(spark, s"$dir/ivf")
     assert(ivf.cells.count() == 1)
     assert(Similarity.ivfTopKFromIndex(ivf, noVecs, "vec_id", "embedding", k = 3).count() == 0)
-    // AVI codec: empty frames stay empty, schemas intact
-    val avi = Multimodal.encodeAviBatches(spark, emptyDocs, "doc_id")
-    assert(avi.columns.toSeq == Seq("doc_id", "payload", "media_type") && avi.count() == 0)
-    assert(Multimodal.decodeVideoBatches(spark, avi, "doc_id").count() == 0)
-    // AIFF: same contract as WAV
-    assert(Multimodal.decodeAudioBatches(spark,
-      Multimodal.encodeAiffBatches(spark, emptyDocs, "doc_id"), "doc_id").count() == 0)
   }
 
   test("dedup family: empty corpus -> empty outputs, schemas intact") {
@@ -197,11 +180,6 @@ class EmptyInputSpec extends SparkTestBase {
   }
 
   test("round-10 additions: empty inputs degrade to empty/zero, never throw") {
-    // PCM resample of an empty payload frame: no rows, typed schema intact
-    val emptyPayload = spark.emptyDataset[(Long, Array[Byte])]
-      .toDF("doc_id", "payload")
-    val rs = Multimodal.resampleAudioBatches(spark, emptyPayload, "doc_id", 12000)
-    assert(rs.count() == 0)
     // bucketed snapshot staging of an empty frame: table registers, diff
     // of two empty bucketed snapshots is empty
     graft.sources.ParquetSink.writeBucketedTable(emptyDocs, "empty_x8b_a",

@@ -127,14 +127,6 @@ class PlanSpec extends SparkTestBase {
     assert(aggs >= 2, s"expected partial+final count phases in:\n$p")
   }
 
-  test("uniform frame sampling is narrow — no exchange between decode and explode (M3)") {
-    val p = plan(VerifyRows("m3_frame_sample").run(spark, sf))
-    // the only exchange allowed is the final orderBy's range partitioning
-    // (formatted mode prints the partitioning on an Arguments: line)
-    assert("Arguments: hashpartitioning".r.findAllIn(p).isEmpty,
-      s"frame sampling must not hash-shuffle:\n$p")
-  }
-
   test("bloom incremental dedup: corpus side filters on the bloom BEFORE the distinct exchange (D8b)") {
     val docs = Tables.documents(spark, sf)
     val out = Dedup.exactIncrementalBloom(
@@ -451,14 +443,6 @@ class PlanSpec extends SparkTestBase {
       s"cell membership must equi-join in the SQL surface too:\n$p")
     assert(p.contains("planspec_ivf_sql_idx"),
       s"the SQL probe must scan the saved index:\n$p")
-  }
-
-  test("PNG encode/decode round-trip is narrow — no exchange anywhere (M2b)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet").filter(col("doc_id") < 100)
-    val p = plan(Multimodal.decodeImageBatches(spark,
-      Multimodal.encodePngBatches(spark, docs, "doc_id"), "doc_id").toDF())
-    assert(!p.contains("Exchange"),
-      s"encode and decode are per-row mapPartitions stages — payloads must not shuffle:\n$p")
   }
 
   test("bm25: ZERO corpus exchanges — dl/tf are narrow array projections, stats broadcast back (T17)") {

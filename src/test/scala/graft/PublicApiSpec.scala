@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.verify.VerifyRows
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class VerifyRowsSpec extends AnyFunSuite {
 
-  test("the 241 Verify row names are unique") {
+  test("the 229 Verify row names are unique") {
     val names = VerifyRows.all.map(_.name)
     val dups = names.diff(names.distinct).distinct
     assert(dups.isEmpty, s"row names declared twice: ${dups.sorted}")
-    assert(names.size == 241, s"expected 241 rows, got ${names.size}")
+    assert(names.size == 229, s"expected 229 rows, got ${names.size}")
     assert(VerifyRows.all.forall(_.oracleSql.trim.nonEmpty), "every row carries oracle SQL")
   }
 
@@ -43,7 +45,7 @@ class OperatorApiSpec extends AnyFunSuite {
     "release", "releaseSets")
   private val deletedNames = Set("minhashNearDupsAuto", "minhashNearDupsCollapsed",
     "fuzzyNearDupsAuto", "embedNearDupAuto", "embeddingIncrementalAuto",
-    "asofJoinStreamingSliced")
+    "asofJoinStreamingSliced", "exactIncrementalFromIndex")
   private val files = Seq("src/main/scala/graft/operators/Dedup.scala",
     "src/main/scala/graft/streaming/StreamOps.scala",
     "src/main/scala/graft/operators/Sampling.scala",
@@ -98,5 +100,17 @@ class OperatorApiSpec extends AnyFunSuite {
           .filter(switches).map(p => s"$name($p)")
     } yield s"$f:$line: $bad"
     assert(offending.isEmpty, offending.mkString("plan switches or deleted aliases:\n", "\n", ""))
+  }
+
+  test("no library or benchmark source mentions the deleted Multimodal module") {
+    val roots = Seq(Paths.get("src/main/scala"), Paths.get("perfbench/src"))
+    roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
+    val offending = for {
+      root <- roots
+      f <- Files.walk(root).iterator.asScala.filter(Files.isRegularFile(_)).toList
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("Multimodal")
+    } yield s"$f:${i + 1}"
+    assert(offending.isEmpty, offending.mkString("Multimodal is back:\n", "\n", ""))
   }
 }

@@ -182,8 +182,8 @@ class SamplingSpec extends SparkTestBase {
     // replay it from the staged index the query just built
     val idxDir = {
       val f = new java.io.File(s"$dir/documents.parquet")
-      s"/root/repo/target/tmp/${dir.replaceAll("[^A-Za-z0-9._-]", "_")}" +
-        s"/s5j2_minhash_index_${f.lastModified}_${f.length}_full_n3b32r2"
+      import graft.verify.RowHelpers.{scratchDir, stageKey}
+      s"${scratchDir(dir)}/s5j2_minhash_index_${stageKey(f, "full_n3b32r2")}"
     }
     val pairs = Dedup.minhashNearDupPairsFromIndex(
       Dedup.readMinhashIndex(spark, idxDir), "doc_id", 0.5)

@@ -197,9 +197,7 @@ class MemoSpec extends AnyFunSuite {
     val offending = for {
       f <- files
       owner = f.getFileName.toString.stripSuffix(".scala")
-      // blank out comments, keeping offsets and line numbers
-      src = "(?s)/\\*.*?\\*/|//[^\n]*".r.replaceAllIn(Files.readString(f),
-        m => m.matched.replaceAll("[^\n]", " "))
+      src = SourceScan.blankComments(Files.readString(f))
       names = declared.findAllMatchIn(src).map(m => (m.end - "TrieMap".length) -> m.group(1)).toMap
       m <- built.findAllMatchIn(src).toSeq
       name = names.get(src.indexOf("TrieMap", m.start))

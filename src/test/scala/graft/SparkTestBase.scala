@@ -11,6 +11,15 @@ object TestSpark {
   lazy val spark: SparkSession = Session.get(cores = 4)
 }
 
+/** The guard specs scan source text; a comment mentioning a banned call is
+  * not a call.
+  */
+object SourceScan {
+  /** `src` with its comments blanked, keeping offsets and line numbers. */
+  def blankComments(src: String): String =
+    "(?s)/\\*.*?\\*/|//[^\n]*".r.replaceAllIn(src, m => m.matched.replaceAll("[^\n]", " "))
+}
+
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 

@@ -277,8 +277,7 @@ class StreamOpsSpec extends SparkTestBase {
     // checkpoint+sink trio — absent marker ⇒ the whole trio restarts empty
     val d = "/root/testdata/sf0.001"
     val fresh = VerifyRows("e9_stream_route").run(spark, d).collect()
-    val scratch = new java.io.File(
-      "/root/repo/target/tmp/" + d.replaceAll("[^A-Za-z0-9._-]", "_"))
+    val scratch = new java.io.File(graft.verify.RowHelpers.scratchDir(d))
     val routeBase = Option(scratch.listFiles()).toSeq.flatten
       .find(_.getName.startsWith("e9_route_"))
       .getOrElse(fail("route dir not staged"))
