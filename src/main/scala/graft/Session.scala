@@ -189,6 +189,11 @@ object Session {
       // the 128 default (see ExactMedian's scaladoc).
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2048",
       "spark.sql.session.timeZone" -> "UTC",
+      // a whole-stage class is named after its codegen stage id, and AQE
+      // numbers a query's stages in the order they finish, which varies
+      // run to run: the same plan then compiles its stage classes again
+      // under new names (4-8 classes on a repeated dashboardChain call)
+      "spark.sql.codegen.useIdInClassName" -> "false",
       NoArtifactIsolation)
     runtime.foreach { case (k, v) =>
       try spark.conf.set(k, v)

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** The public chains: graft operators composed into the reference's
-  * entry-point pipelines (SURVEY §3) and the LLM-data funnels. `entry` is
-  * a smoke check over sf0.001. The Verify rows, which gate each chain and
-  * every operator against a DuckDB oracle, live in [[graft.verify]].
+  * entry-point pipelines (SURVEY §3) and the LLM-data funnels. The Verify
+  * rows, which gate each chain and every operator against a DuckDB oracle,
+  * live in [[graft.verify]].
   */
 object SparkEntry {
 
@@ -19,11 +19,8 @@ object SparkEntry {
   /** Flagship: the reference's entry-point-3 pipeline (SURVEY §3) re-expressed
     * on the testdata star schema — scan → broadcast-join dim → filter
     * (range + IN-set) → argmax-per-group → 7-fn grouped aggregate →
-    * broadcast-join meta. Driver smoke-checks rows>0 on sf0.001.
+    * broadcast-join meta.
     */
-  def entry(spark: SparkSession): DataFrame =
-    covidChain(spark, "/root/testdata/sf0.001")
-
   def covidChain(s: SparkSession, d: String): DataFrame = {
     val enriched = Joins.broadcastJoin(Tables.orders(s, d), Tables.customer(s, d),
       ("o_custkey", "c_custkey"))

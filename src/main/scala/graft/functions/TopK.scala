@@ -19,8 +19,10 @@ import org.apache.spark.sql.functions.udaf
   * k-element array (k is small by contract), merge is a bounded merge of
   * two sorted runs. Ordering ties on score break by ascending id, so
   * results are deterministic and identical to the window formulation.
+  * Internal to graft: [[graft.operators.Similarity]]'s top-k operators rank
+  * through it.
   */
-object TopK {
+private[graft] object TopK {
 
   case class Scored(score: Double, id: Long)
 

@@ -207,7 +207,7 @@ object Similarity {
       .select("id_1", "id_2").distinct()
 
   /** Banded sketch rows under the ORIGINAL id column name — the
-    * materialized-index form ([[graft.operators.Dedup.buildEmbeddingIndex]]
+    * materialized-index form ([[graft.operators.Dedup.EmbeddingIndex]]
     * shards this frame to parquet between ingest batches). Same single
     * banding definition as the candidate joins ([[bandRows]]), so a saved
     * index and a live probe can never drift on the sketch scheme.

@@ -297,7 +297,7 @@ object StreamOps {
     stream.join(dim, Seq(key), joinType)
 
   /** E7 — INGEST DEDUP against a MATERIALIZED fingerprint index
-    * ([[graft.operators.Dedup.fingerprintIndex]]): [[graft.operators.Dedup
+    * ([[graft.operators.Dedup.FingerprintIndex]]): [[graft.operators.Dedup
     * .exactIncremental]] with the corpus side prebuilt, so the corpus is
     * not scanned at all. `stream` may be a batch frame (the daily-ingest
     * probe) or a streaming one; the plan is the same anti join either way.
@@ -306,8 +306,8 @@ object StreamOps {
     * documents with their `fingerprint` column. The static side is a
     * regular batch relation re-planned per micro-batch:
     * NO streaming state at all (the index IS the state, owned by the
-    * ingest pipeline and advanced between batches via
-    * `updateFingerprintIndex`), so stream history costs no executor
+    * ingest pipeline and advanced between batches by appending the
+    * survivors), so stream history costs no executor
     * memory, and the index can be 100 TB-corpus-sized — everything the
     * batch probe's plan does (broadcast or shuffled anti join, bloom
     * pruning via Catalyst) applies per micro-batch.

@@ -1238,7 +1238,7 @@ private[verify] object CorpusRows {
     // group split, but the near-dup pair set comes from the MATERIALIZED
     // MinHash index (d2c's staging pattern: build+shard once, keyed on the
     // source file identity; replays scan ONLY the index): components over
-    // minhashNearDupPairsFromIndex, then the identical group-keyed coin.
+    // MinhashIndex.nearDupPairs, then the identical group-keyed coin.
     // At 100 TB the split job stops riding a full exact-pairs pipeline
     // over raw text — it reads the ~1% index, never the corpus. Trigram
     // j >= 0.5 pairs (the d2 family's regime; banding recall gated there)
@@ -1252,12 +1252,10 @@ private[verify] object CorpusRows {
         val srcFile = new java.io.File(s"$d/documents.parquet")
         val idxDir =
           s"${scratchDir(d)}/s5j2_minhash_index_${stageKey(srcFile, "full_n3b32r2")}"
-        if (!new java.io.File(s"$idxDir/bands/_SUCCESS").exists()) {
-          Dedup.writeMinhashIndex(
-            Dedup.buildMinhashIndex(docs, "doc_id", "text"), idxDir, "doc_id", shards = 4)
-        }
-        val pairs = Dedup.minhashNearDupPairsFromIndex(
-          Dedup.readMinhashIndex(s, idxDir), "doc_id", threshold = 0.5)
+        val mh = Dedup.MinhashIndex("doc_id", "text")
+        if (!new java.io.File(s"$idxDir/bands/_SUCCESS").exists())
+          mh.write(docs, idxDir, shards = 4)
+        val pairs = mh.nearDupPairs(mh.read(s, idxDir), threshold = 0.5)
         val labels = Dedup.connectedComponents(pairs)
           .withColumnRenamed("id", "doc_id")
         val grouped = docs.select("doc_id")

@@ -290,21 +290,17 @@ private[verify] object DedupRows {
         val srcFile = new java.io.File(s"$d/documents.parquet")
         val idxDir =
           s"${scratchDir(d)}/d7b_contain_index_${stageKey(srcFile, "n3df50")}"
-        if (!new java.io.File(s"$idxDir/inv/_SUCCESS").exists()) {
-          Dedup.writeContainmentIndex(
-            Dedup.buildContainmentIndex(docs.filter(col("doc_id") % 4 =!= 0),
-              "doc_id", "text", n = 3, maxDf = 50),
-            idxDir, "doc_id", shards = 4)
-        }
-        Dedup.decontaminationFromIndex(Dedup.readContainmentIndex(s, idxDir),
-          docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", n = 3, threshold = 0.5)
+        val ci = Dedup.ContainmentIndex("doc_id", "text", n = 3, maxDf = 50)
+        if (!new java.io.File(s"$idxDir/inv/_SUCCESS").exists())
+          ci.write(docs.filter(col("doc_id") % 4 =!= 0), idxDir, shards = 4)
+        ci.probe(docs.filter(col("doc_id") % 4 === 0), ci.read(s, idxDir), threshold = 0.5)
           .orderBy("test_id", "train_id")
       },
       d7OracleSql),
 
     // D7c: the containment-index UPDATE lifecycle — the df-capped family's
     // d2d: day-1 build over part of the train corpus, day-2
-    // updateContainmentIndex folds in the rest (df deltas appended,
+    // ContainmentIndex.append folds in the rest (df deltas appended,
     // over-cap shingles tombstoned so their stale entries vanish at read
     // time), day-3 screens the benchmark against the updated index. The
     // effective index must equal the from-scratch build over the FULL
@@ -320,24 +316,20 @@ private[verify] object DedupRows {
         val srcFile = new java.io.File(s"$d/documents.parquet")
         val idxDir =
           s"${scratchDir(d)}/d7c_contain_index_${stageKey(srcFile, "n3df50m4")}"
+        val ci = Dedup.ContainmentIndex("doc_id", "text", n = 3, maxDf = 50)
         if (!new java.io.File(s"$idxDir/_UPDATED").exists()) {
-          Dedup.writeContainmentIndex(
-            Dedup.buildContainmentIndex(
-              docs.filter(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2),
-              "doc_id", "text", n = 3, maxDf = 50),
-            idxDir, "doc_id", shards = 4)
-          Dedup.updateContainmentIndex(docs.filter(col("doc_id") % 4 === 3),
-            idxDir, "doc_id", "text", n = 3, maxDf = 50, shards = 4)
+          ci.write(docs.filter(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2),
+            idxDir, shards = 4)
+          ci.append(docs.filter(col("doc_id") % 4 === 3), idxDir, shards = 4)
           new java.io.File(s"$idxDir/_UPDATED").createNewFile()
         }
-        Dedup.decontaminationFromIndex(Dedup.readContainmentIndex(s, idxDir),
-          docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", n = 3, threshold = 0.5)
+        ci.probe(docs.filter(col("doc_id") % 4 === 0), ci.read(s, idxDir), threshold = 0.5)
           .orderBy("test_id", "train_id")
       },
       d7OracleSql),
 
     // D7d: d7c's lifecycle with COMPACTION before the probe — build day 1,
-    // update day 2 (df deltas + tombstones land), compactContainmentIndex
+    // update day 2 (df deltas + tombstones land), ContainmentIndex.compact
     // settles the read debt (tombstones applied into inv/, df deltas merged
     // to one row per shingle, tomb/ dropped), then the day-3 probe runs
     // against the compacted index. Rows must still equal the from-scratch
@@ -354,19 +346,15 @@ private[verify] object DedupRows {
         val srcFile = new java.io.File(s"$d/documents.parquet")
         val idxDir =
           s"${scratchDir(d)}/d7d_contain_index_${stageKey(srcFile, "n3df50m4c")}"
+        val ci = Dedup.ContainmentIndex("doc_id", "text", n = 3, maxDf = 50)
         if (!new java.io.File(s"$idxDir/_COMPACTED").exists()) {
-          Dedup.writeContainmentIndex(
-            Dedup.buildContainmentIndex(
-              docs.filter(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2),
-              "doc_id", "text", n = 3, maxDf = 50),
-            idxDir, "doc_id", shards = 4)
-          Dedup.updateContainmentIndex(docs.filter(col("doc_id") % 4 === 3),
-            idxDir, "doc_id", "text", n = 3, maxDf = 50, shards = 4)
-          Dedup.compactContainmentIndex(s, idxDir, "doc_id", shards = 4)
+          ci.write(docs.filter(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2),
+            idxDir, shards = 4)
+          ci.append(docs.filter(col("doc_id") % 4 === 3), idxDir, shards = 4)
+          ci.compact(s, idxDir, shards = 4)
           new java.io.File(s"$idxDir/_COMPACTED").createNewFile()
         }
-        Dedup.decontaminationFromIndex(Dedup.readContainmentIndex(s, idxDir),
-          docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", n = 3, threshold = 0.5)
+        ci.probe(docs.filter(col("doc_id") % 4 === 0), ci.read(s, idxDir), threshold = 0.5)
           .orderBy("test_id", "train_id")
       },
       d7OracleSql),
@@ -381,7 +369,7 @@ private[verify] object DedupRows {
     // vanish at read time via the probe's anti-join. INSERT ORDER
     // MATTERS: the inv and tomb inserts read the PRE-batch df table, so
     // both run before the batch's df deltas land (mirroring
-    // updateContainmentIndex's read-before-append). Compaction = the
+    // ContainmentIndex.append's read-before-append). Compaction = the
     // CTAS-stage compose per table, with the inv stage APPLYING the
     // tombstones (anti-join) and the df stage merging deltas to one row
     // per shingle; tomb then empties via INSERT OVERWRITE from an empty
@@ -465,7 +453,7 @@ private[verify] object DedupRows {
             "SELECT CAST(NULL AS BIGINT) AS sk WHERE 1 = 0")
           new java.io.File(s"$idxDir/_UPDATED").createNewFile()
         }
-        // day-3 probe: the decontaminationFromIndex plan as one statement
+        // day-3 probe: the ContainmentIndex.probe plan as one statement
         // (anti-join kept for generality — post-compaction tomb is empty)
         s.sql(s"WITH ${shingleSetCtes("doc_id % 4 = 0")}, " +
           "eff AS (SELECT i.train_id, i.sk FROM graft_ct_inv_sql i " +

@@ -2,7 +2,6 @@ package graft
 package verify
 
 import graft.operators._
-import graft.sources.ParquetSink
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
@@ -453,8 +452,8 @@ private[verify] object StreamIndexRows {
     // as a LIVE STREAM — incoming documents fingerprint narrowly and
     // stream-static ANTI-join the materialized fingerprint index (d8c's
     // staged dir, same build) per micro-batch. Stateless: the index IS
-    // the state, owned by the pipeline (advanced between batches via
-    // updateFingerprintIndex), so this is the streaming face of the whole
+    // the state, owned by the pipeline (advanced between batches by
+    // FingerprintIndex.append), so this is the streaming face of the whole
     // materialized-index story. Same oracle as d8/d8c.
     //
     // the streaming replay of the same probe: stream-static anti join
@@ -463,12 +462,10 @@ private[verify] object StreamIndexRows {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val srcFile = new java.io.File(s"$d/documents.parquet")
+        val fp = Dedup.FingerprintIndex("text")
         val idxDir = s"${scratchDir(d)}/d8c_fp_index_${stageKey(srcFile, "mod10")}"
-        if (!new java.io.File(s"$idxDir/_SUCCESS").exists()) {
-          ParquetSink.writeSharded(
-            Dedup.fingerprintIndex(docs.filter(col("doc_id") % 10 =!= 0), "text"),
-            idxDir, "fingerprint", shards = 4)
-        }
+        if (!new java.io.File(s"$idxDir/fingerprint/_SUCCESS").exists())
+          fp.write(docs.filter(col("doc_id") % 10 =!= 0), idxDir, shards = 4)
         val stageDir = s"${scratchDir(d)}/e7_docs_${stageKey(srcFile, "mod10")}"
         if (!new java.io.File(s"$stageDir/_SUCCESS").exists()) {
           docs.filter(col("doc_id") % 10 === 0).select("doc_id", "text")
@@ -477,7 +474,7 @@ private[verify] object StreamIndexRows {
         val schema = s.read.parquet(stageDir).schema
         val src = s.readStream.schema(schema).parquet(stageDir)
         StreamOps.runToMemoryTable(s,
-          StreamOps.ingestDedupStreaming(src, s.read.parquet(idxDir), "text"),
+          StreamOps.ingestDedupStreaming(src, fp.read(s, idxDir)("fingerprint"), "text"),
           "e7_stream_ingest_sink")
           .select("doc_id", "fingerprint").orderBy("doc_id")
       },
@@ -519,7 +516,7 @@ private[verify] object StreamIndexRows {
 
     // E7b: the streaming ingest loop ACROSS the day boundary — the cadence
     // a production pipeline actually runs: stream-replay segment 1 against
-    // the day-1 index, fold the survivors in via updateFingerprintIndex
+    // the day-1 index, fold the survivors in via FingerprintIndex.append
     // (delta-append, the d8d lifecycle), then stream-replay segment 2
     // against the UPDATED index — two AvailableNow passes bracketing one
     // index mutation. d8d proves the batch lifecycle and e7 proves
@@ -534,24 +531,23 @@ private[verify] object StreamIndexRows {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val srcFile = new java.io.File(s"$d/documents.parquet")
-        val key = stageKey(srcFile, "mod9e7b")
+        val key = stageKey(srcFile, "mod9e7b_parts")
         val idxDir = s"${scratchDir(d)}/e7b_fp_index_$key"
         val surv1Dir = s"${scratchDir(d)}/e7b_surv1_$key"
         val seg2Dir = s"${scratchDir(d)}/e7b_seg2_$key"
+        val fp = Dedup.FingerprintIndex("text")
         if (!new java.io.File(s"$idxDir/_UPDATED").exists()) {
-          ParquetSink.writeSharded(
-            Dedup.fingerprintIndex(docs.filter(col("doc_id") % 9 >= 2), "text"),
-            idxDir, "fingerprint", shards = 4)
+          fp.write(docs.filter(col("doc_id") % 9 >= 2), idxDir, shards = 4)
           val seg1Dir = s"${scratchDir(d)}/e7b_seg1_$key"
           docs.filter(col("doc_id") % 9 === 0).select("doc_id", "text")
             .coalesce(4).write.mode("overwrite").parquet(seg1Dir)
           val src1 = s.readStream.schema(s.read.parquet(seg1Dir).schema).parquet(seg1Dir)
           StreamOps.runToMemoryTable(s,
-            StreamOps.ingestDedupStreaming(src1, s.read.parquet(idxDir), "text"),
+            StreamOps.ingestDedupStreaming(src1, fp.read(s, idxDir)("fingerprint"), "text"),
             "e7b_day1_sink")
             .select("doc_id", "text", "fingerprint")
             .write.mode("overwrite").parquet(surv1Dir)
-          Dedup.updateFingerprintIndex(s.read.parquet(surv1Dir), idxDir, "text", shards = 4)
+          fp.append(s.read.parquet(surv1Dir), idxDir, shards = 4)
           new java.io.File(s"$idxDir/_UPDATED").createNewFile()
         }
         if (!new java.io.File(s"$seg2Dir/_SUCCESS").exists()) {
@@ -560,7 +556,7 @@ private[verify] object StreamIndexRows {
         }
         val src2 = s.readStream.schema(s.read.parquet(seg2Dir).schema).parquet(seg2Dir)
         val day2 = StreamOps.runToMemoryTable(s,
-          StreamOps.ingestDedupStreaming(src2, s.read.parquet(idxDir), "text"),
+          StreamOps.ingestDedupStreaming(src2, fp.read(s, idxDir)("fingerprint"), "text"),
           "e7b_day2_sink")
         s.read.parquet(surv1Dir).select("doc_id", "fingerprint")
           .unionAll(day2.select("doc_id", "fingerprint"))
@@ -681,14 +677,10 @@ private[verify] object StreamIndexRows {
         val srcFile = new java.io.File(s"$d/documents.parquet")
         val idxDir =
           s"${scratchDir(d)}/d2c_minhash_index_${stageKey(srcFile, "n3b32r2")}"
-        if (!new java.io.File(s"$idxDir/bands/_SUCCESS").exists()) {
-          Dedup.writeMinhashIndex(
-            Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 9 =!= 0), "doc_id", "text"),
-            idxDir, "doc_id", shards = 4)
-        }
-        Dedup.minhashIncrementalFromIndex(
-          docs.filter(col("doc_id") % 9 === 0), Dedup.readMinhashIndex(s, idxDir),
-          "doc_id", "text", threshold = 0.5)
+        val mh = Dedup.MinhashIndex("doc_id", "text")
+        if (!new java.io.File(s"$idxDir/bands/_SUCCESS").exists())
+          mh.write(docs.filter(col("doc_id") % 9 =!= 0), idxDir, shards = 4)
+        mh.probe(docs.filter(col("doc_id") % 9 === 0), mh.read(s, idxDir), threshold = 0.5)
           .select("doc_id", "n_chars").orderBy("doc_id")
       },
       d2bOracleSql),
@@ -712,27 +704,23 @@ private[verify] object StreamIndexRows {
         val srcFile = new java.io.File(s"$d/documents.parquet")
         val idxDir =
           s"${scratchDir(d)}/d2d_minhash_index_${stageKey(srcFile, "n3b32r2m7")}"
+        val mh = Dedup.MinhashIndex("doc_id", "text")
         if (!new java.io.File(s"$idxDir/_UPDATED").exists()) {
-          Dedup.writeMinhashIndex(
-            Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 7 >= 2), "doc_id", "text"),
-            idxDir, "doc_id", shards = 4)
+          mh.write(docs.filter(col("doc_id") % 7 >= 2), idxDir, shards = 4)
           // materialize day-2 survivors BEFORE the append so the update job
           // reads the cached rows, not the index dir it is writing into
-          val surv = Dedup.minhashIncrementalFromIndex(
-            docs.filter(col("doc_id") % 7 === 0), Dedup.readMinhashIndex(s, idxDir),
-            "doc_id", "text", threshold = 0.5)
+          val surv = mh.probe(docs.filter(col("doc_id") % 7 === 0), mh.read(s, idxDir),
+            threshold = 0.5)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           surv.count()
-          Dedup.updateMinhashIndex(surv, idxDir, "doc_id", "text", shards = 4)
+          mh.append(surv, idxDir, shards = 4)
           surv.unpersist()
           // settle the delta shards before day 3 — the probe result must be
           // identical before and after compaction (same oracle row gates it)
-          Dedup.compactMinhashIndex(s, idxDir, "doc_id", shards = 4)
+          mh.compact(s, idxDir, shards = 4)
           new java.io.File(s"$idxDir/_UPDATED").createNewFile()
         }
-        Dedup.minhashIncrementalFromIndex(
-          docs.filter(col("doc_id") % 7 === 1), Dedup.readMinhashIndex(s, idxDir),
-          "doc_id", "text", threshold = 0.5)
+        mh.probe(docs.filter(col("doc_id") % 7 === 1), mh.read(s, idxDir), threshold = 0.5)
           .select("doc_id", "n_chars").orderBy("doc_id")
       },
       d2dOracleSql),
@@ -756,15 +744,13 @@ private[verify] object StreamIndexRows {
         val srcFile = new java.io.File(s"$d/documents.parquet")
         val idxDir =
           s"${scratchDir(d)}/d2c_minhash_index_${stageKey(srcFile, "n3b32r2")}"
-        if (!new java.io.File(s"$idxDir/bands/_SUCCESS").exists()) {
-          Dedup.writeMinhashIndex(
-            Dedup.buildMinhashIndex(docs.filter(col("doc_id") % 9 =!= 0), "doc_id", "text"),
-            idxDir, "doc_id", shards = 4)
-        }
+        val mh = Dedup.MinhashIndex("doc_id", "text")
+        if (!new java.io.File(s"$idxDir/bands/_SUCCESS").exists())
+          mh.write(docs.filter(col("doc_id") % 9 =!= 0), idxDir, shards = 4)
         Tables.registerAll(s, d)
-        val idx = Dedup.readMinhashIndex(s, idxDir)
-        idx.sets.createOrReplaceTempView("graft_minhash_sets")
-        idx.bands.createOrReplaceTempView("graft_minhash_bands")
+        val idx = mh.read(s, idxDir)
+        idx("sets").createOrReplaceTempView("graft_minhash_sets")
+        idx("bands").createOrReplaceTempView("graft_minhash_bands")
         s.sql(minhashProbeSql("doc_id % 9 = 0",
           "graft_minhash_sets", "graft_minhash_bands"))
       },
@@ -834,13 +820,11 @@ private[verify] object StreamIndexRows {
         val srcFile = new java.io.File(s"$d/documents.parquet")
         val idxDir =
           s"${scratchDir(d)}/d8c_fp_index_${stageKey(srcFile, "mod10")}"
-        if (!new java.io.File(s"$idxDir/_SUCCESS").exists()) {
-          ParquetSink.writeSharded(
-            Dedup.fingerprintIndex(docs.filter(col("doc_id") % 10 =!= 0), "text"),
-            idxDir, "fingerprint", shards = 4)
-        }
+        val fp = Dedup.FingerprintIndex("text")
+        if (!new java.io.File(s"$idxDir/fingerprint/_SUCCESS").exists())
+          fp.write(docs.filter(col("doc_id") % 10 =!= 0), idxDir, shards = 4)
         StreamOps.ingestDedupStreaming(
-          docs.filter(col("doc_id") % 10 === 0), s.read.parquet(idxDir), "text")
+          docs.filter(col("doc_id") % 10 === 0), fp.read(s, idxDir)("fingerprint"), "text")
           .select("doc_id", "fingerprint").orderBy("doc_id")
       },
       d8OracleSql),
@@ -855,22 +839,21 @@ private[verify] object StreamIndexRows {
       (s, d) => {
         val docs = Tables.documents(s, d)
         val srcFile = new java.io.File(s"$d/documents.parquet")
-        val idxDir = s"${scratchDir(d)}/d8d_fp_index_${stageKey(srcFile, "mod8c")}"
+        val idxDir = s"${scratchDir(d)}/d8d_fp_index_${stageKey(srcFile, "mod8c_parts")}"
+        val fp = Dedup.FingerprintIndex("text")
         if (!new java.io.File(s"$idxDir/_UPDATED").exists()) {
-          ParquetSink.writeSharded(
-            Dedup.fingerprintIndex(docs.filter(col("doc_id") % 8 >= 2), "text"),
-            idxDir, "fingerprint", shards = 4)
+          fp.write(docs.filter(col("doc_id") % 8 >= 2), idxDir, shards = 4)
           val surv = StreamOps.ingestDedupStreaming(
-            docs.filter(col("doc_id") % 8 === 0), s.read.parquet(idxDir), "text")
+            docs.filter(col("doc_id") % 8 === 0), fp.read(s, idxDir)("fingerprint"), "text")
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           surv.count()
-          Dedup.updateFingerprintIndex(surv, idxDir, "text", shards = 4)
+          fp.append(surv, idxDir, shards = 4)
           surv.unpersist()
-          Dedup.compactFingerprintIndex(s, idxDir, shards = 4)
+          fp.compact(s, idxDir, shards = 4)
           new java.io.File(s"$idxDir/_UPDATED").createNewFile()
         }
         StreamOps.ingestDedupStreaming(
-          docs.filter(col("doc_id") % 8 === 1), s.read.parquet(idxDir), "text")
+          docs.filter(col("doc_id") % 8 === 1), fp.read(s, idxDir)("fingerprint"), "text")
           .select("doc_id", "fingerprint").orderBy("doc_id")
       },
       d8dOracleSql),
@@ -935,16 +918,11 @@ private[verify] object StreamIndexRows {
         val srcFile = new java.io.File(s"$d/embeddings.parquet")
         val idxDir =
           s"${scratchDir(d)}/d5d_emb_index_${stageKey(srcFile, "d64b32p4ord")}"
-        if (!new java.io.File(s"$idxDir/bands/_SUCCESS").exists()) {
-          Dedup.writeEmbeddingIndex(
-            Dedup.buildEmbeddingIndex(emb.filter(col("vec_id") % 11 =!= 0), "vec_id",
-              "embedding", dim = 64, bands = 32, bitsPerBand = 4, ordinal = true),
-            idxDir, "vec_id", shards = 4)
-        }
-        Dedup.embeddingIncrementalFromIndex(
-          emb.filter(col("vec_id") % 11 === 0), Dedup.readEmbeddingIndex(s, idxDir),
-          "vec_id", "embedding", 0.45, dim = 64, bands = 32, bitsPerBand = 4,
-          ordinal = true)
+        val ei = Dedup.EmbeddingIndex("vec_id", "embedding", dim = 64, bands = 32,
+          bitsPerBand = 4, ordinal = true)
+        if (!new java.io.File(s"$idxDir/bands/_SUCCESS").exists())
+          ei.write(emb.filter(col("vec_id") % 11 =!= 0), idxDir, shards = 4)
+        ei.probe(emb.filter(col("vec_id") % 11 === 0), ei.read(s, idxDir), 0.45)
           .select("vec_id", "label").orderBy("vec_id")
       },
       d5cOracleSql),

@@ -96,7 +96,9 @@ class CodegenCacheSpec extends SparkTestBase with AdaptiveSparkPlanHelper with B
     assert(run(100, 250) == (100L to 250L))
     val (second, sources) = compiledSources(run(731, 1402))
     assert(second == (731L to 1402L))
-    val stages = sources.count(_.contains("class GeneratedIteratorForCodegenStage"))
+    // "GeneratedIterator", or "GeneratedIteratorForCodegenStage<id>" when
+    // spark.sql.codegen.useIdInClassName is on
+    val stages = sources.count(_.contains("class GeneratedIterator"))
     assert(stages == 0, s"new bounds compiled $stages stage classes")
   }
 
@@ -147,6 +149,16 @@ class CodegenCacheSpec extends SparkTestBase with AdaptiveSparkPlanHelper with B
     }
     assert(scans.nonEmpty)
     assert(scans.forall(_.predicates.forall(!_.exists(_.isInstanceOf[BoundLiteral]))))
+  }
+
+  // last: releaseAll ends every loan of the session, `events` included
+  test("dashboardChain re-runs after Caches.releaseAll without compiling a class") {
+    val d = "/root/testdata/sf0.001"
+    val first = SparkEntry.dashboardChain(spark, d).collect().toSeq
+    Caches.releaseAll(spark)
+    val (second, c) = compiles(SparkEntry.dashboardChain(spark, d).collect().toSeq)
+    assert(second == first)
+    assert(c == 0, s"the second dashboardChain call compiled $c classes")
   }
 
   override def afterAll(): Unit =

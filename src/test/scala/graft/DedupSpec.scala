@@ -681,30 +681,26 @@ class DedupSpec extends SparkTestBase {
     val batch = corpus.filter(col("doc_id").isin(1L, 4L))
     val corp = corpus.filter(!col("doc_id").isin(1L, 4L))
     // MinHash: build → shard to parquet → reload → probe == one-shot
-    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(corp, "doc_id", "text", n = 2),
-      s"$dir/mh", "doc_id", shards = 2)
-    val mh = Dedup.minhashIncrementalFromIndex(batch,
-      Dedup.readMinhashIndex(spark, s"$dir/mh"), "doc_id", "text", 0.5, n = 2)
+    val mhIndex = Dedup.MinhashIndex("doc_id", "text", n = 2)
+    mhIndex.write(corp, s"$dir/mh", shards = 2)
+    val mh = mhIndex.probe(batch, mhIndex.read(spark, s"$dir/mh"), 0.5)
       .select("doc_id").as[Long].collect().toSet
     val mhDirect = Dedup.minhashIncremental(batch, corp, "doc_id", "text", 0.5, n = 2)
       .select("doc_id").as[Long].collect().toSet
     assert(mh == mhDirect && mh == Set(4L), s"minhash replay diverged: $mh vs $mhDirect")
     // exact: fingerprint index round-trip == one-shot
-    graft.sources.ParquetSink.writeSharded(Dedup.fingerprintIndex(corp, "text"),
-      s"$dir/fp", "fingerprint", shards = 2)
-    val ex = StreamOps.ingestDedupStreaming(batch, spark.read.parquet(s"$dir/fp"),
+    val fpIndex = Dedup.FingerprintIndex("text")
+    fpIndex.write(corp, s"$dir/fp", shards = 2)
+    val ex = StreamOps.ingestDedupStreaming(batch, fpIndex.read(spark, s"$dir/fp")("fingerprint"),
       "text").select("doc_id").as[Long].collect().toSet
     val exDirect = Dedup.exactIncremental(batch, corp, "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
     assert(ex == exDirect, s"exact replay diverged: $ex vs $exDirect")
     // decontamination: train sets + df-capped inverted index round-trip ==
     // one-shot (train = corp, test = batch — the d7 screening shape)
-    Dedup.writeContainmentIndex(
-      Dedup.buildContainmentIndex(corp, "doc_id", "text", n = 2, maxDf = 10),
-      s"$dir/ci", "doc_id", shards = 2)
-    val dc = Dedup.decontaminationFromIndex(
-      Dedup.readContainmentIndex(spark, s"$dir/ci"), batch, "doc_id", "text",
-      n = 2, threshold = 0.5)
+    val ciIndex = Dedup.ContainmentIndex("doc_id", "text", n = 2, maxDf = 10)
+    ciIndex.write(corp, s"$dir/ci", shards = 2)
+    val dc = ciIndex.probe(batch, ciIndex.read(spark, s"$dir/ci"), threshold = 0.5)
       .select("test_id", "train_id", "containment")
       .as[(Long, Long, Double)].collect().toSet
     val dcDirect = Dedup.decontaminationPairs(corp, batch, "doc_id", "text",
@@ -721,13 +717,10 @@ class DedupSpec extends SparkTestBase {
       (10L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
       (11L, Array(0.0f, 1.0f, 0.0f, 0.0f))
     ).toDF("vec_id", "embedding")
-    Dedup.writeEmbeddingIndex(
-      Dedup.buildEmbeddingIndex(vcorp, "vec_id", "embedding", dim = 4,
-        bands = 16, bitsPerBand = 2),
-      s"$dir/emb", "vec_id", shards = 2)
-    val emb = Dedup.embeddingIncrementalFromIndex(vbatch,
-      Dedup.readEmbeddingIndex(spark, s"$dir/emb"), "vec_id", "embedding",
-      0.9, dim = 4, bands = 16, bitsPerBand = 2)
+    val embIndex = Dedup.EmbeddingIndex("vec_id", "embedding", dim = 4, bands = 16,
+      bitsPerBand = 2)
+    embIndex.write(vcorp, s"$dir/emb", shards = 2)
+    val emb = embIndex.probe(vbatch, embIndex.read(spark, s"$dir/emb"), 0.9)
       .select("vec_id").as[Long].collect().toSet
     val embDirect = Dedup.embeddingIncrementalBanded(vbatch, vcorp, "vec_id", "embedding",
       0.9, dim = 4, bands = 16, bitsPerBand = 2, ordinal = false)
@@ -753,19 +746,16 @@ class DedupSpec extends SparkTestBase {
 
     // ---- MinHash family
     val mh = s"$dir/mh"
-    Dedup.writeMinhashIndex(Dedup.buildMinhashIndex(day1, "doc_id", "text", n = 2),
-      mh, "doc_id", shards = 2)
-    val surv2 = Dedup.minhashIncrementalFromIndex(day2,
-      Dedup.readMinhashIndex(spark, mh), "doc_id", "text", 0.5, n = 2)
+    val mhIndex = Dedup.MinhashIndex("doc_id", "text", n = 2)
+    mhIndex.write(day1, mh, shards = 2)
+    val surv2 = mhIndex.probe(day2, mhIndex.read(spark, mh), 0.5)
     assert(surv2.select("doc_id").as[Long].collect().toSet == Set(202L))
     // stale (day-1-only) index misses the day-2 survivor's near-dup
-    val stale = Dedup.minhashIncrementalFromIndex(day3,
-      Dedup.readMinhashIndex(spark, mh), "doc_id", "text", 0.5, n = 2)
+    val stale = mhIndex.probe(day3, mhIndex.read(spark, mh), 0.5)
       .select("doc_id").as[Long].collect().toSet
     assert(stale == Set(301L, 303L), s"stale index should keep 301: $stale")
-    Dedup.updateMinhashIndex(surv2, mh, "doc_id", "text", shards = 2, n = 2)
-    val day3Updated = Dedup.minhashIncrementalFromIndex(day3,
-      Dedup.readMinhashIndex(spark, mh), "doc_id", "text", 0.5, n = 2)
+    mhIndex.append(surv2, mh, shards = 2)
+    val day3Updated = mhIndex.probe(day3, mhIndex.read(spark, mh), 0.5)
       .select("doc_id").as[Long].collect().toSet
     // from-scratch rebuild of the day-3 corpus: day-1 ∪ day-2 survivors
     val rebuilt = Dedup.minhashIncremental(day3,
@@ -781,12 +771,13 @@ class DedupSpec extends SparkTestBase {
       (301L, "red orange yellow green blue indigo"),  // ≠ fingerprint (word differs)
       (302L, "Red Orange Yellow Green Blue Violet!"), // = day-2 survivor's print
       (303L, "something else entirely again")).toDF("doc_id", "text")
-    graft.sources.ParquetSink.writeSharded(Dedup.fingerprintIndex(day1, "text"),
-      fp, "fingerprint", shards = 2)
-    val fsurv = StreamOps.ingestDedupStreaming(day2, spark.read.parquet(fp), "text")
+    val fpIndex = Dedup.FingerprintIndex("text")
+    fpIndex.write(day1, fp, shards = 2)
+    val fsurv = StreamOps.ingestDedupStreaming(day2, fpIndex.read(spark, fp)("fingerprint"),
+      "text")
     assert(fsurv.select("doc_id").as[Long].collect().toSet == Set(201L, 202L))
-    Dedup.updateFingerprintIndex(fsurv, fp, "text", shards = 2)
-    val fUpdated = StreamOps.ingestDedupStreaming(e3, spark.read.parquet(fp),
+    fpIndex.append(fsurv, fp, shards = 2)
+    val fUpdated = StreamOps.ingestDedupStreaming(e3, fpIndex.read(spark, fp)("fingerprint"),
       "text").select("doc_id").as[Long].collect().toSet
     val fRebuilt = Dedup.exactIncremental(e3, day1.union(day2), "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
@@ -802,22 +793,16 @@ class DedupSpec extends SparkTestBase {
     val v3 = Seq(
       (301L, Array(0.0f, 0.1f, 0.99f, 0.0f)),  // near-dup of the day-2 survivor
       (302L, Array(0.0f, 1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    Dedup.writeEmbeddingIndex(
-      Dedup.buildEmbeddingIndex(v1, "vec_id", "embedding", dim = 4, bands = 16,
-        bitsPerBand = 2),
-      em, "vec_id", shards = 2)
-    val vsurv = Dedup.embeddingIncrementalFromIndex(v2,
-      Dedup.readEmbeddingIndex(spark, em), "vec_id", "embedding", 0.9, dim = 4,
-      bands = 16, bitsPerBand = 2)
+    val embIndex = Dedup.EmbeddingIndex("vec_id", "embedding", dim = 4, bands = 16,
+      bitsPerBand = 2)
+    embIndex.write(v1, em, shards = 2)
+    val vsurv = embIndex.probe(v2, embIndex.read(spark, em), 0.9)
     assert(vsurv.select("vec_id").as[Long].collect().toSet == Set(202L))
-    Dedup.updateEmbeddingIndex(vsurv, em, "vec_id", "embedding", dim = 4,
-      shards = 2, bands = 16, bitsPerBand = 2)
+    embIndex.append(vsurv, em, shards = 2)
     // settle the delta shards before day 3: the probe must be identical
     // before and after compaction (the rebuild-equivalence below gates it)
-    Dedup.compactEmbeddingIndex(spark, em, "vec_id", shards = 2)
-    val vUpdated = Dedup.embeddingIncrementalFromIndex(v3,
-      Dedup.readEmbeddingIndex(spark, em), "vec_id", "embedding", 0.9, dim = 4,
-      bands = 16, bitsPerBand = 2)
+    embIndex.compact(spark, em, shards = 2)
+    val vUpdated = embIndex.probe(v3, embIndex.read(spark, em), 0.9)
       .select("vec_id").as[Long].collect().toSet
     val vRebuilt = Dedup.embeddingIncrementalBanded(v3,
       v1.union(v2.filter(col("vec_id") === 202L)), "vec_id", "embedding", 0.9,
@@ -837,13 +822,10 @@ class DedupSpec extends SparkTestBase {
     val train2 = Seq((3L, "alpha beta theta")).toDF("doc_id", "text")
     val tests = Seq((10L, "alpha beta"), (11L, "beta gamma kappa"))
       .toDF("doc_id", "text")
-    Dedup.writeContainmentIndex(
-      Dedup.buildContainmentIndex(train1, "doc_id", "text", n = 2, maxDf = 1),
-      dir, "doc_id", shards = 2)
-    Dedup.updateContainmentIndex(train2, dir, "doc_id", "text", n = 2, maxDf = 1,
-      shards = 2)
-    val got = Dedup.decontaminationFromIndex(Dedup.readContainmentIndex(spark, dir),
-      tests, "doc_id", "text", n = 2, threshold = 0.5)
+    val ci = Dedup.ContainmentIndex("doc_id", "text", n = 2, maxDf = 1)
+    ci.write(train1, dir, shards = 2)
+    ci.append(train2, dir, shards = 2)
+    val got = ci.probe(tests, ci.read(spark, dir), threshold = 0.5)
       .select("test_id", "train_id", "containment")
       .as[(Long, Long, Double)].collect().toSet
     val want = Dedup.decontaminationPairs(train1.union(train2), tests,
@@ -866,16 +848,13 @@ class DedupSpec extends SparkTestBase {
     val train2 = Seq((3L, "alpha beta theta")).toDF("doc_id", "text")
     val tests = Seq((10L, "alpha beta"), (11L, "beta gamma kappa"))
       .toDF("doc_id", "text")
-    Dedup.writeContainmentIndex(
-      Dedup.buildContainmentIndex(train1, "doc_id", "text", n = 2, maxDf = 1),
-      dir, "doc_id", shards = 2)
-    Dedup.updateContainmentIndex(train2, dir, "doc_id", "text", n = 2, maxDf = 1,
-      shards = 2)
-    val before = Dedup.decontaminationFromIndex(Dedup.readContainmentIndex(spark, dir),
-      tests, "doc_id", "text", n = 2, threshold = 0.5)
+    val ci = Dedup.ContainmentIndex("doc_id", "text", n = 2, maxDf = 1)
+    ci.write(train1, dir, shards = 2)
+    ci.append(train2, dir, shards = 2)
+    val before = ci.probe(tests, ci.read(spark, dir), threshold = 0.5)
       .select("test_id", "train_id", "containment")
       .as[(Long, Long, Double)].collect().toSet
-    Dedup.compactContainmentIndex(spark, dir, "doc_id", shards = 2)
+    ci.compact(spark, dir, shards = 2)
     // tombstones are applied into inv/, so tomb/ must be GONE (the read
     // path's anti-join disappears with it — PlanSpec pins the plan side)
     assert(!new java.io.File(s"$dir/tomb").exists(),
@@ -886,18 +865,15 @@ class DedupSpec extends SparkTestBase {
       "compacted df/ must hold one merged row per shingle")
     assert(dfTab.filter(col("sk").isNotNull).agg(max("df")).as[Long].head() == 2L,
       "merged df must be the SUM of deltas (alpha-beta: 1+1)")
-    val after = Dedup.decontaminationFromIndex(Dedup.readContainmentIndex(spark, dir),
-      tests, "doc_id", "text", n = 2, threshold = 0.5)
+    val after = ci.probe(tests, ci.read(spark, dir), threshold = 0.5)
       .select("test_id", "train_id", "containment")
       .as[(Long, Long, Double)].collect().toSet
     assert(after == before, s"compaction changed the relation: $after != $before")
     // a LATER update against the compacted index still works: tomb/ is
     // recreated on demand and df merges pick up from the compacted row
     val train3 = Seq((4L, "delta epsilon iota")).toDF("doc_id", "text")
-    Dedup.updateContainmentIndex(train3, dir, "doc_id", "text", n = 2, maxDf = 1,
-      shards = 2)
-    val day3 = Dedup.decontaminationFromIndex(Dedup.readContainmentIndex(spark, dir),
-      tests, "doc_id", "text", n = 2, threshold = 0.5)
+    ci.append(train3, dir, shards = 2)
+    val day3 = ci.probe(tests, ci.read(spark, dir), threshold = 0.5)
       .select("test_id", "train_id", "containment")
       .as[(Long, Long, Double)].collect().toSet
     val rebuilt = Dedup.decontaminationPairs(train1.union(train2).union(train3),
@@ -938,8 +914,8 @@ class DedupSpec extends SparkTestBase {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val oneShot = Dedup.minhashNearDupsPlain(docs, "doc_id", "text", 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val fromIndex = Dedup.minhashNearDupPairsFromIndex(
-      Dedup.buildMinhashIndex(docs, "doc_id", "text"), "doc_id", 0.5)
+    val mh = Dedup.MinhashIndex("doc_id", "text")
+    val fromIndex = mh.nearDupPairs(mh.rows(docs), 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(oneShot.nonEmpty, "fixture must contain near-dup pairs")
     assert(fromIndex == oneShot,

@@ -50,18 +50,18 @@ class EmptyInputSpec extends SparkTestBase {
     // materialized indexes built over an empty corpus: empty frames with
     // the right schemas, and probes against them keep the whole batch
     val batch = Seq((1L, "some new document text here")).toDF("doc_id", "text")
-    val mh = Dedup.buildMinhashIndex(emptyDocs, "doc_id", "text")
-    assert(mh.sets.count() == 0 && mh.bands.count() == 0)
-    assert(Dedup.minhashIncrementalFromIndex(batch, mh, "doc_id", "text", 0.5).count() == 1)
+    val mh = Dedup.MinhashIndex("doc_id", "text")
+    val mhRows = mh.rows(emptyDocs)
+    assert(mhRows("sets").count() == 0 && mhRows("bands").count() == 0)
+    assert(mh.probe(batch, mhRows, 0.5).count() == 1)
     assert(graft.streaming.StreamOps.ingestDedupStreaming(batch,
-      Dedup.fingerprintIndex(emptyDocs, "text"), "text").count() == 1)
-    val ci = Dedup.buildContainmentIndex(emptyDocs, "doc_id", "text", 3, 50)
-    assert(Dedup.decontaminationFromIndex(ci, batch, "doc_id", "text", 3, 0.5).count() == 0)
+      Dedup.FingerprintIndex("text").rows(emptyDocs)("fingerprint"), "text").count() == 1)
+    val ci = Dedup.ContainmentIndex("doc_id", "text", 3, 50)
+    assert(ci.probe(batch, ci.rows(emptyDocs), 0.5).count() == 0)
     val noVecs7 = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     val vb = Seq((1L, Array(1.0f, 0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val ei = Dedup.buildEmbeddingIndex(noVecs7, "vec_id", "embedding", dim = 4)
-    assert(Dedup.embeddingIncrementalFromIndex(vb, ei, "vec_id", "embedding",
-      0.9, dim = 4).count() == 1)
+    val ei = Dedup.EmbeddingIndex("vec_id", "embedding", dim = 4)
+    assert(ei.probe(vb, ei.rows(noVecs7), 0.9).count() == 1)
     // exact median over an empty / all-null input yields a null (SQL agg)
     val med = Seq.empty[Double].toDF("v")
       .agg(graft.functions.ExactMedian.exactMedian(col("v"))).head
@@ -73,26 +73,20 @@ class EmptyInputSpec extends SparkTestBase {
     val batch = Seq((1L, "some new document text here")).toDF("doc_id", "text")
     // index UPDATE with an EMPTY survivor batch: appends empty deltas,
     // probes are unchanged
-    Dedup.writeMinhashIndex(
-      Dedup.buildMinhashIndex(batch, "doc_id", "text"), s"$dir/mh", "doc_id", 2)
-    val before = Dedup.minhashIncrementalFromIndex(
-      Seq((2L, "another doc")).toDF("doc_id", "text"),
-      Dedup.readMinhashIndex(spark, s"$dir/mh"), "doc_id", "text", 0.5).count()
-    Dedup.updateMinhashIndex(emptyDocs, s"$dir/mh", "doc_id", "text", shards = 2)
-    assert(Dedup.minhashIncrementalFromIndex(
-      Seq((2L, "another doc")).toDF("doc_id", "text"),
-      Dedup.readMinhashIndex(spark, s"$dir/mh"), "doc_id", "text", 0.5).count() == before)
-    graft.sources.ParquetSink.writeSharded(
-      Dedup.fingerprintIndex(batch, "text"), s"$dir/fp", "fingerprint", 2)
-    Dedup.updateFingerprintIndex(emptyDocs, s"$dir/fp", "text", shards = 2)
-    assert(spark.read.parquet(s"$dir/fp").count() == 1)
-    Dedup.writeContainmentIndex(
-      Dedup.buildContainmentIndex(batch, "doc_id", "text", 2, 50), s"$dir/ci",
-      "doc_id", 2)
-    Dedup.updateContainmentIndex(emptyDocs, s"$dir/ci", "doc_id", "text", 2, 50,
-      shards = 2)
-    assert(Dedup.decontaminationFromIndex(Dedup.readContainmentIndex(spark, s"$dir/ci"),
-      batch, "doc_id", "text", 2, 0.5).count() == 1)
+    val mh = Dedup.MinhashIndex("doc_id", "text")
+    mh.write(batch, s"$dir/mh", shards = 2)
+    val other = Seq((2L, "another doc")).toDF("doc_id", "text")
+    val before = mh.probe(other, mh.read(spark, s"$dir/mh"), 0.5).count()
+    mh.append(emptyDocs, s"$dir/mh", shards = 2)
+    assert(mh.probe(other, mh.read(spark, s"$dir/mh"), 0.5).count() == before)
+    val fp = Dedup.FingerprintIndex("text")
+    fp.write(batch, s"$dir/fp", shards = 2)
+    fp.append(emptyDocs, s"$dir/fp", shards = 2)
+    assert(fp.read(spark, s"$dir/fp")("fingerprint").count() == 1)
+    val ci = Dedup.ContainmentIndex("doc_id", "text", 2, 50)
+    ci.write(batch, s"$dir/ci", shards = 2)
+    ci.append(emptyDocs, s"$dir/ci", shards = 2)
+    assert(ci.probe(batch, ci.read(spark, s"$dir/ci"), 0.5).count() == 1)
     // IVF: empty update is a no-op; empty queries probe to zero rows
     val vb = Seq((1L, Array(1.0f, 0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
     val noVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")

@@ -315,11 +315,10 @@ class PlanSpec extends SparkTestBase {
     val idxPath = "target/tmp/planspec_d2c_idx"
     docs.filter(col("doc_id") % 9 =!= 0).write.mode("overwrite").parquet(corpusPath)
     docs.filter(col("doc_id") % 9 === 0).write.mode("overwrite").parquet(batchPath)
-    Dedup.writeMinhashIndex(
-      Dedup.buildMinhashIndex(spark.read.parquet(corpusPath), "doc_id", "text"),
-      idxPath, "doc_id", shards = 2)
-    val p = plan(Dedup.minhashIncrementalFromIndex(spark.read.parquet(batchPath),
-      Dedup.readMinhashIndex(spark, idxPath), "doc_id", "text", threshold = 0.5))
+    val mh = Dedup.MinhashIndex("doc_id", "text")
+    mh.write(spark.read.parquet(corpusPath), idxPath, shards = 2)
+    val p = plan(mh.probe(spark.read.parquet(batchPath), mh.read(spark, idxPath),
+      threshold = 0.5))
     // the whole point of the materialized index: corpus text is neither
     // re-shingled nor even READ in the replay — every corpus-side input
     // (band keys, shingle sets) comes from the saved index files
@@ -338,18 +337,16 @@ class PlanSpec extends SparkTestBase {
     val idxPath = "target/tmp/planspec_d2d_idx"
     docs.filter(col("doc_id") % 7 >= 2).write.mode("overwrite").parquet(corpusPath)
     docs.filter(col("doc_id") % 7 === 0).write.mode("overwrite").parquet(day2Path)
-    Dedup.writeMinhashIndex(
-      Dedup.buildMinhashIndex(spark.read.parquet(corpusPath), "doc_id", "text"),
-      idxPath, "doc_id", shards = 2)
-    val surv = Dedup.minhashIncrementalFromIndex(spark.read.parquet(day2Path),
-      Dedup.readMinhashIndex(spark, idxPath), "doc_id", "text", threshold = 0.5)
+    val mh = Dedup.MinhashIndex("doc_id", "text")
+    mh.write(spark.read.parquet(corpusPath), idxPath, shards = 2)
+    val surv = mh.probe(spark.read.parquet(day2Path), mh.read(spark, idxPath),
+      threshold = 0.5)
       .persist()
     surv.count()
-    Dedup.updateMinhashIndex(surv, idxPath, "doc_id", "text", shards = 2)
+    mh.append(surv, idxPath, shards = 2)
     surv.unpersist()
-    val p = plan(Dedup.minhashIncrementalFromIndex(
-      docs.filter(col("doc_id") % 7 === 1),
-      Dedup.readMinhashIndex(spark, idxPath), "doc_id", "text", threshold = 0.5))
+    val p = plan(mh.probe(docs.filter(col("doc_id") % 7 === 1), mh.read(spark, idxPath),
+      threshold = 0.5))
     // the day-3 probe must see day-2's contribution exclusively through
     // the index's delta shards: neither the original corpus nor day-2's
     // raw text source may appear in the plan
@@ -366,20 +363,16 @@ class PlanSpec extends SparkTestBase {
   test("compacted containment probe has NO anti-join — tombstones were applied at compaction (D7d)") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val idxPath = "target/tmp/planspec_d7d_idx"
-    Dedup.writeContainmentIndex(
-      Dedup.buildContainmentIndex(docs.filter(col("doc_id") % 4 === 1),
-        "doc_id", "text", n = 3, maxDf = 50),
-      idxPath, "doc_id", shards = 2)
-    Dedup.updateContainmentIndex(docs.filter(col("doc_id") % 4 === 2),
-      idxPath, "doc_id", "text", n = 3, maxDf = 50, shards = 2)
-    val probe = (p: String) => plan(Dedup.decontaminationFromIndex(
-      Dedup.readContainmentIndex(spark, p),
-      docs.filter(col("doc_id") % 4 === 0), "doc_id", "text", n = 3, threshold = 0.5))
+    val ci = Dedup.ContainmentIndex("doc_id", "text", n = 3, maxDf = 50)
+    ci.write(docs.filter(col("doc_id") % 4 === 1), idxPath, shards = 2)
+    ci.append(docs.filter(col("doc_id") % 4 === 2), idxPath, shards = 2)
+    val probe = (p: String) => plan(ci.probe(docs.filter(col("doc_id") % 4 === 0),
+      ci.read(spark, p), threshold = 0.5))
     // BEFORE compaction the read path pays a tombstone anti-join on every
     // probe — that is the read debt compaction exists to settle
     assert(probe(idxPath).contains("LeftAnti"),
       "pre-compaction probe should carry the tombstone anti-join")
-    Dedup.compactContainmentIndex(spark, idxPath, "doc_id", shards = 2)
+    ci.compact(spark, idxPath, shards = 2)
     val p = probe(idxPath)
     assert(!p.contains("LeftAnti"),
       s"compacted probe must not anti-join tombstones:\n$p")
@@ -620,11 +613,9 @@ class PlanSpec extends SparkTestBase {
     val corpusPath = "target/tmp/planspec_s5j2_corpus"
     val idxPath = "target/tmp/planspec_s5j2_idx"
     docs.write.mode("overwrite").parquet(corpusPath)
-    Dedup.writeMinhashIndex(
-      Dedup.buildMinhashIndex(spark.read.parquet(corpusPath), "doc_id", "text"),
-      idxPath, "doc_id", shards = 2)
-    val p = plan(Dedup.minhashNearDupPairsFromIndex(
-      Dedup.readMinhashIndex(spark, idxPath), "doc_id", 0.5))
+    val mh = Dedup.MinhashIndex("doc_id", "text")
+    mh.write(spark.read.parquet(corpusPath), idxPath, shards = 2)
+    val p = plan(mh.nearDupPairs(mh.read(spark, idxPath), 0.5))
     assert(!p.contains("planspec_s5j2_corpus"),
       s"the all-pairs probe must not touch the corpus source:\n$p")
     assert(p.contains("planspec_s5j2_idx"),

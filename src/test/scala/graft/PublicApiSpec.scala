@@ -37,7 +37,8 @@ class VerifyRowsSpec extends AnyFunSuite {
   * each near-dup and as-of operator has one public name, and its measured
   * gate picks the plan from the input (the reference plans stay
   * `private[graft]`); no operator takes a per-call cache-release switch,
-  * because graft's caches live until `Caches.releaseAll` / `Caches.drain`.
+  * because graft's caches live until `Caches.releaseAll` / `Caches.drain`;
+  * and Dedup's ingest indexes keep one lifecycle, `graft.sources.ShardedIndex`.
   */
 class OperatorApiSpec extends AnyFunSuite {
 
@@ -100,6 +101,24 @@ class OperatorApiSpec extends AnyFunSuite {
           .filter(switches).map(p => s"$name($p)")
     } yield s"$f:$line: $bad"
     assert(offending.isEmpty, offending.mkString("plan switches or deleted aliases:\n", "\n", ""))
+  }
+
+  test("Dedup declares none of the per-family index lifecycle defs ShardedIndex replaced") {
+    val lifecycle = Set("fingerprintIndex", "updateFingerprintIndex", "compactFingerprintIndex",
+      "buildMinhashIndex", "writeMinhashIndex", "readMinhashIndex", "updateMinhashIndex",
+      "compactMinhashIndex", "minhashIncrementalFromIndex", "minhashNearDupPairsFromIndex",
+      "buildContainmentIndex", "writeContainmentIndex", "readContainmentIndex",
+      "updateContainmentIndex", "compactContainmentIndex", "decontaminationFromIndex",
+      "buildEmbeddingIndex", "writeEmbeddingIndex", "readEmbeddingIndex",
+      "updateEmbeddingIndex", "compactEmbeddingIndex", "embeddingIncrementalFromIndex")
+    val path = Paths.get("src/main/scala/graft/operators/Dedup.scala")
+    assert(Files.isRegularFile(path), s"run from the repo root: ${path.toAbsolutePath}")
+    val src = SourceScan.blankComments(Files.readString(path))
+    val offending = for {
+      m <- defLine.findAllMatchIn(src).toSeq
+      if lifecycle(m.group(2))
+    } yield s"$path:${src.substring(0, m.start).count(_ == '\n') + 1}: def ${m.group(2)}"
+    assert(offending.isEmpty, offending.mkString("index lifecycle defs are back:\n", "\n", ""))
   }
 
   test("no library or benchmark source mentions the deleted Multimodal module") {

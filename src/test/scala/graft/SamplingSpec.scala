@@ -185,8 +185,8 @@ class SamplingSpec extends SparkTestBase {
       import graft.verify.RowHelpers.{scratchDir, stageKey}
       s"${scratchDir(dir)}/s5j2_minhash_index_${stageKey(f, "full_n3b32r2")}"
     }
-    val pairs = Dedup.minhashNearDupPairsFromIndex(
-      Dedup.readMinhashIndex(spark, idxDir), "doc_id", 0.5)
+    val mh = Dedup.MinhashIndex("doc_id", "text")
+    val pairs = mh.nearDupPairs(mh.read(spark, idxDir), 0.5)
       .select("id_1", "id_2").as[(Long, Long)].collect()
     assert(pairs.nonEmpty, "fixture must contain near-dup pairs for the gate to bite")
     val straddlers = pairs.filter { case (a, b) => split(a) != split(b) }

@@ -332,11 +332,11 @@ class StreamOpsSpec extends SparkTestBase {
     val idxDir = "target/tmp/streamspec_e7_idx"
     val corpus = Seq((100L, "hello world"), (101L, "known document text"))
       .toDF("doc_id", "text")
-    graft.sources.ParquetSink.writeSharded(
-      operators.Dedup.fingerprintIndex(corpus, "text"), idxDir, "fingerprint", 2)
+    val fp = operators.Dedup.FingerprintIndex("text")
+    fp.write(corpus, idxDir, shards = 2)
     val mem = MemoryStream[(Long, String)]
     val src = mem.toDF().toDF("doc_id", "text")
-    val q = StreamOps.ingestDedupStreaming(src, spark.read.parquet(idxDir), "text")
+    val q = StreamOps.ingestDedupStreaming(src, fp.read(spark, idxDir)("fingerprint"), "text")
       .writeStream.format("memory").queryName("e7_out")
       .outputMode("append").start()
     try {
@@ -351,13 +351,13 @@ class StreamOpsSpec extends SparkTestBase {
 
   test("streaming ingest across the day boundary: probe → index update → probe again (E7b)") {
     // day-1 replay screens against the base index; its survivors fold in
-    // via updateFingerprintIndex; the day-2 replay must then drop both
+    // via FingerprintIndex.append; the day-2 replay must then drop both
     // base-known AND day-1-survivor duplicates — the composed lifecycle.
     val idxDir = "target/tmp/streamspec_e7b_idx"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxDir))
     val corpus = Seq((100L, "base document")).toDF("doc_id", "text")
-    graft.sources.ParquetSink.writeSharded(
-      operators.Dedup.fingerprintIndex(corpus, "text"), idxDir, "fingerprint", 2)
+    val fp = operators.Dedup.FingerprintIndex("text")
+    fp.write(corpus, idxDir, shards = 2)
     val seg1Dir = java.nio.file.Files.createTempDirectory("e7b_seg1").toString
     val seg2Dir = java.nio.file.Files.createTempDirectory("e7b_seg2").toString
     Seq((1L, "Base Document!"), (2L, "day one novelty"))
@@ -368,14 +368,14 @@ class StreamOpsSpec extends SparkTestBase {
     val surv1 = StreamOps.runToMemoryTable(spark,
       StreamOps.ingestDedupStreaming(
         spark.readStream.schema(schema).parquet(seg1Dir),
-        spark.read.parquet(idxDir), "text"), "e7b_day1_test")
+        fp.read(spark, idxDir)("fingerprint"), "text"), "e7b_day1_test")
     assert(surv1.select("doc_id").as[Long].collect().toSet == Set(2L),
       "day-1 replay must drop the base-known doc")
-    operators.Dedup.updateFingerprintIndex(surv1, idxDir, "text", shards = 2)
+    fp.append(surv1, idxDir, shards = 2)
     val surv2 = StreamOps.runToMemoryTable(spark,
       StreamOps.ingestDedupStreaming(
         spark.readStream.schema(schema).parquet(seg2Dir),
-        spark.read.parquet(idxDir), "text"), "e7b_day2_test")
+        fp.read(spark, idxDir)("fingerprint"), "text"), "e7b_day2_test")
     assert(surv2.select("doc_id").as[Long].collect().toSet == Set(5L),
       "day-2 replay must drop base-known AND day-1-survivor duplicates")
   }
@@ -391,11 +391,11 @@ class StreamOpsSpec extends SparkTestBase {
     val root = s"target/tmp/streamspec_rtp_$name"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     docs.toDF("doc_id", "text").write.json(s"$root/in")
-    graft.sources.ParquetSink.writeSharded(operators.Dedup.fingerprintIndex(
-      known.map(t => (0L, t)).toDF("doc_id", "text"), "text"), s"$root/idx", "fingerprint", 2)
+    val fp = operators.Dedup.FingerprintIndex("text")
+    fp.write(known.map(t => (0L, t)).toDF("doc_id", "text"), s"$root/idx", shards = 2)
     val schema = "doc_id BIGINT, text STRING"
     (StreamOps.ingestDedupStreaming(s.readStream.schema(schema).json(s"$root/in"),
-      s.read.parquet(s"$root/idx"), "text"), s"$root/run")
+      fp.read(s, s"$root/idx")("fingerprint"), "text"), s"$root/run")
   }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
