@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.ShardedIndex
+import graft.sources.ShardedIndex.Part
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -174,29 +176,26 @@ object Agg {
         max(col("state_max")).as("state_max"))
   }
 
-  /** X10b — the MATERIALIZED agg-state lifecycle: the dedup-index recipe
-    * ([[graft.operators.Dedup]]'s build → delta-append → compact) applied
-    * to aggregate state. The persisted table holds state rows (possibly
-    * several per key after delta appends); [[readAggState]] merges on read
-    * (idempotent once compacted), and [[compactAggState]] folds the delta
-    * shards back to one pre-merged row per key — after which reads skip
-    * the re-reduce's regrouping of duplicates entirely. Day N's update
-    * cost is one batch-sized build + a delta-append; the 100 TB history
-    * is never rescanned.
+  /** X10b — the MATERIALIZED agg-state lifecycle: a
+    * [[graft.sources.ShardedIndex]] family like
+    * [[graft.operators.Dedup]]'s ingest indexes, with one part `state/`
+    * (state rows keyed by the first key; [[rows]] is [[buildAggState]]).
+    * After appends it holds several state rows per key; [[read]] merges on
+    * read (idempotent once compacted), and compaction folds the delta
+    * shards back to one pre-merged row per key through [[mergeAggState]]
+    * — after which reads skip the re-reduce's regrouping of duplicates
+    * entirely. Day N's update cost is one batch-sized build + a
+    * delta-append; the 100 TB history is never rescanned.
     */
-  def readAggState(spark: org.apache.spark.sql.SparkSession, path: String,
-                   keys: Seq[String]): DataFrame =
-    mergeAggState(Seq(spark.read.parquet(path)), keys)
+  final case class AggState(keys: Seq[String], v: String)
+      extends ShardedIndex(Seq(Part("state", keys.head, df => mergeAggState(Seq(df), keys))),
+        None) {
 
-  def updateAggState(batch: DataFrame, path: String, keys: Seq[String],
-                     v: String, shards: Int): Unit =
-    graft.sources.ParquetSink.appendSharded(
-      buildAggState(batch, keys, v), path, keys.head, shards)
+    def rows(df: DataFrame): Map[String, DataFrame] = Map("state" -> buildAggState(df, keys, v))
 
-  def compactAggState(spark: org.apache.spark.sql.SparkSession, path: String,
-                      keys: Seq[String], shards: Int): Unit =
-    graft.sources.ParquetSink.compactShardedWith(spark, path, keys.head, shards)(
-      df => mergeAggState(Seq(df), keys))
+    override def read(spark: SparkSession, path: String): Map[String, DataFrame] =
+      Map("state" -> mergeAggState(Seq(super.read(spark, path)("state")), keys))
+  }
 
   /** Presentation row from a state: avg divides the exact decimal sum AS A
     * DOUBLE (both engines see the identical double dividend, so the 4dp

@@ -2123,18 +2123,18 @@ object Dedup {
     * CORPUS vector at cosine ≥ `threshold` inside the batch vector's
     * k-means cell. The quantizer is trained on the corpus
     * ([[Similarity.kmeansAssign]]) and FROZEN — the batch assigns to the
-    * final cells' re-centered centroids ([[Similarity.labelCentroidVectors]],
-    * the faiss add() semantics [[Similarity.updateIvfIndex]] already
-    * uses) — so a daily ingest never retrains, and recall has IVF
+    * final cells' re-centered centroids ([[Similarity.labelCentroidVectors]])
+    * by the same assignment [[Similarity.IvfIndex.append]] uses, faiss
+    * add() semantics — so a daily ingest never retrains, and recall has IVF
     * semantics: a duplicate hiding in a NEIGHBORING cell is missed
     * (SemDeDup's own within-cell contract; raise k-probes by unioning
     * cells if the corpus demands it, or rebuild periodically as with the
     * IVF index).
     *
     * Scale shape: centroids are k×dim floats through the driver (the
-    * classical distributed-Lloyd boundary); batch assignment is the
-    * broadcast-join packed-long argmax (zero sorts); the probe join is an
-    * equi-join on `cell` — batch rows meet ONLY their own cell's members,
+    * classical distributed-Lloyd boundary); batch assignment is
+    * [[Similarity.withAssignedCell]]'s argmax (zero sorts); the probe join
+    * is an equi-join on `cell` — batch rows meet ONLY their own cell's members,
     * Σ |batch_c|·|cell_c| cosines, never batch × corpus — and matched ids
     * partial-agg to ≤ |batch| before the distinct exchange. At 100 TB the
     * trained (cells, centroids) pair is the thing to keep materialized
@@ -2152,16 +2152,9 @@ object Dedup {
     val cents = Similarity.labelCentroidVectors(corpusCells, "cell", vecCol, dim)
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toIndexedSeq
-    val assigned = Similarity.assignCellsJoin(newVecs, idCol, vecCol, cents, "cell")
-    // join back on (id, vec-hash), null-safe on id — assignCellsJoin emits
-    // one row per distinct (id, vector), so an id-only join would cross
-    // batch vectors sharing an id onto each other's cells
-    val keyed = newVecs.select(col(idCol), col(vecCol))
-      .withColumn("_ac_vh", xxhash64(col(vecCol)))
-    val b = keyed
-      .join(assigned,
-        keyed(idCol) <=> assigned(idCol) && keyed("_ac_vh") === assigned("_ac_vh"))
-      .select(assigned("cell"), keyed(idCol).as("_bid"), keyed(vecCol).as("_bv"))
+    val b = Similarity.withAssignedCell(newVecs.select(col(idCol), col(vecCol)), idCol, vecCol,
+        cents, "cell")
+      .select(col("cell"), col(idCol).as("_bid"), col(vecCol).as("_bv"))
     val c = corpusCells.select(col("cell"), col(vecCol).as("_cv"))
     val matched = b.join(c, "cell")
       .filter(round(Vectors.cosine(col("_bv"), col("_cv")), 6) >= threshold)

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.functions.{TopK, Vectors}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sources.{ParquetSink, ShardedIndex}
+import graft.sources.ShardedIndex.Part
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -549,9 +551,9 @@ object Similarity {
     * hash join back onto `df` (the price of not building a k-branch
     * expression), which Catalyst prunes to the columns the caller uses.
     */
-  private def withAssignedCell(df: DataFrame, idCol: String, vecCol: String,
-                               cents: Seq[(Int, Array[Float])],
-                               outCol: String): DataFrame =
+  private[graft] def withAssignedCell(df: DataFrame, idCol: String, vecCol: String,
+                                      cents: Seq[(Int, Array[Float])],
+                                      outCol: String): DataFrame =
     if (cents.size <= InlineAssignCells)
       df.withColumn(outCol, assignCellExpr(vecCol, cents))
     else {
@@ -670,7 +672,7 @@ object Similarity {
     * query, keep the `probes` nearest cells, equi-join the corpus on cell
     * membership, exact-score only those members. Used by both the inline
     * [[ivfTopK]] (centroids derived from the assignment) and the
-    * materialized [[ivfTopKFromIndex]] (centroids loaded from parquet).
+    * materialized [[IvfIndex.probe]] (centroids loaded from parquet).
     *
     * The probed frame is Q×`probes` rows, each carrying the full query
     * vector — broadcast-sized for the usual small query batch, but a bulk
@@ -705,72 +707,93 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** The materialized IVF/ANN index — the [[graft.operators.Dedup]]
-    * ingest-index recipe applied to the similarity family: `cells` =
-    * (id, vector, cell), the trained coarse-quantizer assignment; `cents` =
-    * (cell, centroid), the per-cell centroid vectors the probe ranks.
-    * Training (Lloyd iterations — driver round-trips, full corpus passes)
-    * happens ONCE at build; every query batch afterwards probes the loaded
-    * frames, which is one broadcast-ranked centroid table + one equi-join
-    * — no k-means in the replay plan (PlanSpec-pinned; driver-gated
-    * sim_ivf_index_replay bit-matches sim_ivf_trained).
+  /** The materialized IVF/ANN index, a [[graft.sources.ShardedIndex]]
+    * family like [[graft.operators.Dedup]]'s ingest indexes: `cells/` =
+    * (id, vector, cell), the trained coarse-quantizer assignment, keyed by
+    * id; `cents/` = (cell, centroid), the per-cell centroid vectors the
+    * probe ranks, keyed by cell. Training (Lloyd iterations — driver
+    * round-trips, full corpus passes) happens ONCE, in [[rows]]; every
+    * query batch afterwards [[probe]]s the loaded parts, which is one
+    * broadcast-ranked centroid table + one equi-join — no k-means in the
+    * replay plan (PlanSpec-pinned; driver-gated sim_ivf_index_replay
+    * bit-matches sim_ivf_trained). `cents/` is k rows, written in
+    * `shards` small files like `cells/`.
     */
-  case class IvfIndex(cells: DataFrame, cents: DataFrame)
+  final case class IvfIndex(idCol: String, vecCol: String, dim: Int, k: Int,
+                            iters: Int = 2, seed: String = "kmeans", roundTo: Int = 4)
+      extends ShardedIndex(Seq(Part("cells", idCol, identity), Part("cents", "cell", identity)),
+        None) {
 
-  def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    dim: Int, k: Int, iters: Int = 2, seed: String = "kmeans",
-                    roundTo: Int = 4): IvfIndex = {
-    val assigned = kmeansAssign(corpus, idCol, vecCol, dim, k, iters, seed, roundTo)
-    IvfIndex(assigned.select(col(idCol), col(vecCol), col("cell")),
-      labelCentroidVectors(assigned, "cell", vecCol, dim))
-  }
+    def rows(docs: DataFrame): Map[String, DataFrame] = {
+      val assigned = kmeansAssign(docs, idCol, vecCol, dim, k, iters, seed, roundTo)
+      Map("cells" -> assigned.select(col(idCol), col(vecCol), col("cell")),
+        "cents" -> labelCentroidVectors(assigned, "cell", vecCol, dim))
+    }
 
-  /** Persist / load an [[IvfIndex]] under `path` (`cells/` sharded by id;
-    * `cents/` is k rows — one shard).
-    */
-  def writeIvfIndex(index: IvfIndex, path: String, idCol: String,
-                    shards: Int): Unit = {
-    graft.sources.ParquetSink.writeSharded(index.cells, s"$path/cells", idCol, shards)
-    graft.sources.ParquetSink.writeSharded(index.cents, s"$path/cents", "cell", 1)
-  }
+    /** Fold new vectors into the saved index with the standard IVF
+      * contract (faiss `add()` semantics): the batch is assigned to the
+      * FROZEN centroids by one narrow argmax projection and delta-appended
+      * to `cells/`; the coarse quantizer itself is not retrained (that is
+      * [[retrain]]). Appended members are probed identically to built ones
+      * — SimilaritySpec pins that an updated index returns new-batch
+      * vectors ranked by the same exact cosine as a rebuilt cells frame.
+      */
+    override def append(newVecs: DataFrame, path: String, shards: Int): Unit = {
+      val cents = newVecs.sparkSession.read.parquet(s"$path/cents").collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toIndexedSeq
+      require(cents.nonEmpty, s"IvfIndex.append: index at $path has no centroids")
+      put(Map("cells" -> withAssignedCell(newVecs, idCol, vecCol, cents, "cell")
+          .select(col(idCol), col(vecCol), col("cell"))),
+        path, shards, ParquetSink.appendSharded)
+    }
 
-  def readIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
-    IvfIndex(spark.read.parquet(s"$path/cells"), spark.read.parquet(s"$path/cents"))
+    /** [[ivfTopK]] against the loaded index: identical probe path and
+      * output (the centroid relation round-trips parquet bit-exactly), zero
+      * training work per query batch.
+      */
+    def probe(queries: DataFrame, index: Map[String, DataFrame], topK: Int,
+              probes: Int = 2, maxBroadcastProbes: Long = 1L << 16): DataFrame =
+      ivfProbe(index("cells"), index("cents"), queries, idCol, vecCol, "cell", topK, probes,
+        maxBroadcastProbes)
 
-  /** [[ivfTopK]] against a prebuilt [[IvfIndex]]: identical probe path and
-    * output (the centroid relation round-trips parquet bit-exactly), zero
-    * training work per query batch.
-    */
-  def ivfTopKFromIndex(index: IvfIndex, queries: DataFrame, idCol: String,
-                       vecCol: String, k: Int, probes: Int = 2,
-                       maxBroadcastProbes: Long = 1L << 16): DataFrame =
-    ivfProbe(index.cells, index.cents, queries, idCol, vecCol, "cell", k, probes,
-      maxBroadcastProbes)
-
-  /** Fold new vectors into the saved [[IvfIndex]] — the ingest-index
-    * UPDATE for the ANN family, with the standard IVF contract (faiss
-    * `add()` semantics): the batch is assigned to the FROZEN centroids by
-    * one narrow argmax projection and delta-appended to `cells/`; the
-    * coarse quantizer itself is not retrained (periodic retraining = a
-    * fresh [[buildIvfIndex]], exactly like index compaction). Appended
-    * members are probed identically to built ones — SimilaritySpec pins
-    * that an updated index returns new-batch vectors ranked by the same
-    * exact cosine as a rebuilt cells frame.
-    */
-  def updateIvfIndex(newVecs: DataFrame, path: String, idCol: String,
-                     vecCol: String, shards: Int): Unit = {
-    val spark = newVecs.sparkSession
-    val cents = spark.read.parquet(s"$path/cents").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toIndexedSeq
-    require(cents.nonEmpty, "updateIvfIndex: index has no centroids")
-    val assigned = withAssignedCell(newVecs, idCol, vecCol, cents, "cell")
-      .select(col(idCol), col(vecCol), col("cell"))
-    graft.sources.ParquetSink.appendSharded(assigned, s"$path/cells", idCol, shards)
+    /** The rebuild [[shouldRetrainIvf]] triggers: retrain the coarse
+      * quantizer ON THE CURRENTLY INDEXED VECTORS (base build + every
+      * appended delta) and replace the index in place; at a derived k it is
+      * `copy(k = deriveIvfK(...)).retrain(...)`. The result is
+      * BIT-IDENTICAL to a from-scratch [[write]] over the union — the
+      * deterministic Lloyd seeding is a pure function of the id SET
+      * (md5-smallest k), floats round-trip parquet exactly, and the
+      * training input is set-equal to union-of-appends by construction —
+      * so SimilaritySpec gates equality instead of plausibility.
+      *
+      * Swap discipline: the rebuild READS `cells/` lazily, so it fully
+      * materializes into `retrain_stage/` before the live parts are
+      * replaced (a direct overwrite would read-from-under-write). The swap
+      * tears BOTH live parts down before renaming either staged part in: a
+      * crash mid-swap then leaves a MISSING part — [[read]] fails naming
+      * it and the complete staged index is still on disk for recovery —
+      * never the silent wrongness of new cell assignments paired with old
+      * centroids (which a swap-one-then-the-other order permits). On a
+      * shared filesystem at scale the same shape applies with a manifest
+      * repoint instead of a rename; the stage-then-swap is the portable
+      * part.
+      */
+    def retrain(spark: SparkSession, path: String, shards: Int): Unit = {
+      val stage = s"$path/retrain_stage"
+      write(spark.read.parquet(s"$path/cells").select(col(idCol), col(vecCol)), stage, shards)
+      val names = Seq("cells", "cents")
+      names.foreach(n => ParquetSink.deleteRecursively(new java.io.File(s"$path/$n")))
+      names.foreach { n =>
+        require(new java.io.File(s"$stage/$n").renameTo(new java.io.File(s"$path/$n")),
+          s"IvfIndex.retrain: could not swap $n into place")
+      }
+      ParquetSink.deleteRecursively(new java.io.File(stage))
+    }
   }
 
   /** Retrain-trigger telemetry for a materialized [[IvfIndex]] — answers
-    * WHEN the "periodic retraining = fresh [[buildIvfIndex]]" documented on
-    * [[updateIvfIndex]] should actually fire. One row of cell-occupancy
+    * WHEN [[IvfIndex.retrain]], the rebuild [[IvfIndex.append]]'s frozen
+    * centroids eventually need, should actually fire. One row of cell-occupancy
     * stats computed from `cells/` alone (a count per cell — no vector
     * math, no centroid reads, one partial-aggregated pass):
     *
@@ -780,7 +803,7 @@ object Similarity {
     *   - `vectors`    total indexed vectors (base + every appended delta)
     *   - `max_cell` / `mean_cell`  occupancy extremes
     *   - `imbalance`  max/mean occupancy — ~1.0 when the quantizer still
-    *     fits the data; grows monotonically as [[updateIvfIndex]] appends
+    *     fits the data; grows monotonically as [[IvfIndex.append]] adds
     *     batches the FROZEN centroids mis-fit (skew piles into few cells,
     *     and appends can never rebalance). A pipeline thresholds this
     *     (e.g. > 3.0) to schedule the rebuild: past it, probe cost is no
@@ -806,8 +829,8 @@ object Similarity {
     * guessed knob): true when the measured max/mean occupancy imbalance
     * exceeds `maxImbalance`, i.e. when the frozen quantizer mis-fits the
     * appended data badly enough that probe cost is no longer ~probes/k
-    * of the corpus and the periodic rebuild documented on
-    * [[updateIvfIndex]] should fire. 3.0 is the production default (a
+    * of the corpus and the periodic rebuild [[IvfIndex.retrain]] should
+    * fire. 3.0 is the production default (a
     * 3× hot cell triples the expected probe scan); an empty or
     * single-cell-degenerate index reports no imbalance and never
     * triggers. Reads the ≤1-row stats frame — one bounded collect.
@@ -827,7 +850,7 @@ object Similarity {
     * cell count (a rebuild must never shrink the index's resolution) —
     * the same one-row stats frame every other derivation here reads, so
     * the whole arc is: [[ivfIndexStats]] → [[shouldRetrainIvf]] +
-    * [[deriveIvfK]] → [[retrainIvfIndex]](k'). `targetMeanCell` is the
+    * [[deriveIvfK]] → [[IvfIndex.retrain]] at k'. `targetMeanCell` is the
     * probe-cost knob: expected scan per query ≈ probes × targetMeanCell
     * rows. Clamped to `maxK` (the k×dim centroid matrix must stay
     * driver- and broadcast-small: 2^20 × 64 floats = 256 MB is the
@@ -845,46 +868,6 @@ object Similarity {
       val want = (vectors + targetMeanCell - 1) / targetMeanCell
       math.min(maxK.toLong, math.max(math.max(1L, cells), want)).toInt
     }
-  }
-
-  /** The rebuild [[shouldRetrainIvf]] triggers: retrain the coarse
-    * quantizer ON THE CURRENTLY INDEXED VECTORS (base build + every
-    * appended delta) and replace the index in place. The result is
-    * BIT-IDENTICAL to a from-scratch [[buildIvfIndex]] over the union —
-    * the deterministic Lloyd seeding is a pure function of the id SET
-    * (md5-smallest k), floats round-trip parquet exactly, and the
-    * training input is set-equal to union-of-appends by construction —
-    * so SimilaritySpec gates equality instead of plausibility.
-    *
-    * Swap discipline: the rebuild READS `cells/` lazily, so it fully
-    * materializes into `retrain_stage/` before the live dirs are
-    * replaced (a direct overwrite would read-from-under-write). The swap
-    * tears BOTH live dirs down before renaming either staged dir in: a
-    * crash mid-swap then leaves a MISSING directory — readIvfIndex fails
-    * loudly and the complete staged index is still on disk for recovery —
-    * never the silent wrongness of new cell assignments paired with old
-    * centroids (which a swap-one-then-the-other order permits). On a
-    * shared filesystem at scale the same shape applies with a manifest
-    * repoint instead of a rename; the stage-then-swap is the portable
-    * part.
-    */
-  def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                      idCol: String, vecCol: String, dim: Int, k: Int,
-                      iters: Int = 2, seed: String = "kmeans",
-                      roundTo: Int = 4, shards: Int = 4): Unit = {
-    val vecs = spark.read.parquet(s"$path/cells").select(col(idCol), col(vecCol))
-    val idx = buildIvfIndex(vecs, idCol, vecCol, dim, k, iters, seed, roundTo)
-    writeIvfIndex(idx, s"$path/retrain_stage", idCol, shards)
-    val subs = Seq("cells", "cents")
-    subs.foreach(sub =>
-      graft.sources.ParquetSink.deleteRecursively(new java.io.File(s"$path/$sub")))
-    subs.foreach { sub =>
-      require(new java.io.File(s"$path/retrain_stage/$sub")
-        .renameTo(new java.io.File(s"$path/$sub")),
-        s"retrainIvfIndex: could not swap $sub into place")
-    }
-    graft.sources.ParquetSink.deleteRecursively(
-      new java.io.File(s"$path/retrain_stage"))
   }
 
   /** LSH-bucketed approximate top-k with 1-bit multiprobe. Candidates from

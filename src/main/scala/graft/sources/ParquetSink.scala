@@ -41,12 +41,11 @@ object ParquetSink {
   /** Delta-append to a [[writeSharded]] table: adds `shards` new files
     * holding `df`'s rows; existing files are untouched (LSM-style — a scan
     * of `path` sees base ∪ all deltas). This is the maintenance write of
-    * the materialized ingest indexes ([[graft.operators.Dedup]]'s
-    * `update*Index`): each daily batch appends its delta instead of
-    * rewriting a 100 TB base. File count grows by `shards` per append —
-    * compact periodically with [[compactSharded]] (the reader-visible rows
-    * are identical before and after, so compaction can happen any time
-    * between batches).
+    * every materialized state ([[ShardedIndex.append]]): each daily batch
+    * appends its delta instead of rewriting a 100 TB base. File count
+    * grows by `shards` per append — compact periodically with
+    * [[compactSharded]] (the reader-visible rows are identical before and
+    * after, so compaction can happen any time between batches).
     */
   def appendSharded(df: DataFrame, path: String, idCol: String, shards: Int): Unit = {
     require(shards >= 1, "appendSharded: shards must be >= 1")

@@ -3,8 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** A materialized index kept as named parts under one path: each part is
-  * a [[ParquetSink.writeSharded]] table `path/name`, hash-sharded on its
+/** The lifecycle of every materialized state graft keeps between batches:
+  * the dedup ingest indexes, the IVF index and the aggregate state. A state
+  * is a set of named parts under one path; each part is a
+  * [[ParquetSink.writeSharded]] table `path/name`, hash-sharded on its
   * key. A family supplies its parts and [[rows]], the rows a batch of
   * documents contributes to each part; the lifecycle is the same for all:
   *
@@ -16,7 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - [[compact]] folds each part back to `shards` files through the
   *     part's `fold` (crash-recoverable, [[ParquetSink.compactShardedWith]],
   *     whose directory swap is local-filesystem only);
-  *   - [[read]] loads every part present as a plain parquet scan.
+  *   - [[read]] loads every part as a plain parquet scan, and fails naming
+  *     any part that is missing (a crash inside a directory swap leaves
+  *     one missing; reading the rest would pair parts from two states).
   *
   * Deletions are tombstones: with `tombstones` set, `path/tomb` holds
   * values of the named column, and a row of the named part carrying one is
@@ -41,8 +45,9 @@ abstract class ShardedIndex(parts: Seq[ShardedIndex.Part],
     put(rows(docs), path, shards, ParquetSink.appendSharded)
 
   def read(spark: SparkSession, path: String): Map[String, DataFrame] = {
-    val loaded = present(spark, path).map(p => p.name -> spark.read.parquet(s"$path/${p.name}"))
-      .toMap
+    val missing = parts.filterNot(p => exists(spark, s"$path/${p.name}")).map(_.name)
+    require(missing.isEmpty, s"index at $path has no part ${missing.mkString("/, ")}/")
+    val loaded = parts.map(p => p.name -> spark.read.parquet(s"$path/${p.name}")).toMap
     tombstones.filter(_ => exists(spark, s"$path/$Tomb")).fold(loaded) { t =>
       loaded.updated(t.part, live(loaded(t.part), spark.read.parquet(s"$path/$Tomb"), t))
     }
@@ -51,7 +56,7 @@ abstract class ShardedIndex(parts: Seq[ShardedIndex.Part],
   def compact(spark: SparkSession, path: String, shards: Int): Unit = {
     val tomb = tombstones.filter(_ => exists(spark, s"$path/$Tomb"))
       .map(t => t -> spark.read.parquet(s"$path/$Tomb"))
-    present(spark, path).foreach { p =>
+    parts.foreach { p =>
       val settle = tomb.collect {
         case (t, dead) if t.part == p.name => (df: DataFrame) => live(df, dead, t)
       }.getOrElse(identity[DataFrame] _)
@@ -75,9 +80,6 @@ abstract class ShardedIndex(parts: Seq[ShardedIndex.Part],
   /** `df`'s rows that no tombstone in `dead` kills, in `df`'s column order. */
   private def live(df: DataFrame, dead: DataFrame, t: Tombstones): DataFrame =
     df.join(dead, df(t.column) === dead(t.column), "left_anti")
-
-  private def present(spark: SparkSession, path: String): Seq[Part] =
-    parts.filter(p => exists(spark, s"$path/${p.name}"))
 
   private def fileSystem(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -170,28 +170,18 @@ object StreamOps {
       .groupBy(window(col("event_time"), width).as("window"))
       .agg(count(lit(1)).as("n_events"))
 
-  /** Run `body` with the session's streaming state-store provider switched
-    * to `providerClass`, restoring the previous setting afterwards. At
-    * production state sizes (watermark horizon × active keys) the default
-    * HDFS-backed in-memory store is the first thing to fall over; RocksDB
-    * ([[RocksDbProvider]], bundled with Spark) spills state off-heap. The
-    * conf is read at QUERY START, so wrapping a replay is enough — and the
-    * operators here carry no provider assumptions (StreamOpsSpec replays
-    * the dedup-then-count chain under RocksDB against the batch oracle).
+  /** Spark's bundled RocksDB state-store provider. At production state
+    * sizes (watermark horizon × active keys) the default HDFS-backed
+    * in-memory store is the first thing to fall over; RocksDB spills state
+    * off-heap. The provider conf is read at QUERY START, so wrapping a
+    * replay in `Session.withConf(spark,
+    * "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider)` is
+    * enough — and the operators here carry no provider assumptions
+    * (StreamOpsSpec replays the dedup-then-count chain under RocksDB
+    * against the batch oracle).
     */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  def withStateStoreProvider[T](spark: SparkSession, providerClass: String)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, providerClass)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   /** Gap-based sessionization, BATCH form: a session breaks when the gap
     * from the previous event of the same user exceeds `gapUs`. Classic

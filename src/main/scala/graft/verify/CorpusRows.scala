@@ -3,7 +3,6 @@ package verify
 
 import graft.functions.{Text, Vectors}
 import graft.operators._
-import graft.sources.ParquetSink
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StringType, StructField, StructType}
@@ -1106,17 +1105,17 @@ private[verify] object CorpusRows {
         val li = Tables.lineitem(s, d)
         val keys = Seq("l_returnflag")
         val srcFile = new java.io.File(s"$d/lineitem.parquet")
-        val stateDir = s"${scratchDir(d)}/x10b_agg_state_${stageKey(srcFile, "mod3qty")}"
+        // the key names the `state/` part layout: a stage in another
+        // layout is never reused
+        val stateDir = s"${scratchDir(d)}/x10b_agg_state_${stageKey(srcFile, "mod3qty_parts")}"
+        val state = Agg.AggState(keys, "l_quantity")
         if (!new java.io.File(s"$stateDir/_UPDATED").exists()) {
-          ParquetSink.writeSharded(
-            Agg.buildAggState(li.where(col("l_orderkey") % 3 =!= 0), keys, "l_quantity"),
-            stateDir, keys.head, shards = 2)
-          Agg.updateAggState(li.where(col("l_orderkey") % 3 === 0),
-            stateDir, keys, "l_quantity", shards = 2)
-          Agg.compactAggState(s, stateDir, keys, shards = 2)
+          state.write(li.where(col("l_orderkey") % 3 =!= 0), stateDir, shards = 2)
+          state.append(li.where(col("l_orderkey") % 3 === 0), stateDir, shards = 2)
+          state.compact(s, stateDir, shards = 2)
           new java.io.File(s"$stateDir/_UPDATED").createNewFile()
         }
-        Agg.finalizeAggState(Agg.readAggState(s, stateDir, keys), keys)
+        Agg.finalizeAggState(state.read(s, stateDir)("state"), keys)
           .select(col("l_returnflag"), col("n"),
             (round(col("sum"), 2) + lit(0.0)).as("sum_qty"),
             col("min").as("min_qty"), col("max").as("max_qty"),

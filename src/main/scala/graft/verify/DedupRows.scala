@@ -954,14 +954,10 @@ private[verify] object DedupRows {
         val emb = Tables.embeddings(s, d)
         val srcFile = new java.io.File(s"$d/embeddings.parquet")
         val idxDir = s"${scratchDir(d)}/sim_ivf_index_${stageKey(srcFile, "d64k8i2")}"
-        if (!new java.io.File(s"$idxDir/cents/_SUCCESS").exists()) {
-          Similarity.writeIvfIndex(
-            Similarity.buildIvfIndex(emb, "vec_id", "embedding", dim = 64, k = 8,
-              iters = 2),
-            idxDir, "vec_id", shards = 4)
-        }
-        Similarity.ivfTopKFromIndex(Similarity.readIvfIndex(s, idxDir),
-          emb.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5, probes = 3)
+        val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+        if (!new java.io.File(s"$idxDir/cents/_SUCCESS").exists())
+          ivf.write(emb, idxDir, shards = 4)
+        ivf.probe(emb.filter(col("vec_id") < 10), ivf.read(s, idxDir), topK = 5, probes = 3)
           .withColumn("rank", col("rank").cast("long"))
           .orderBy("query_id", "rank")
       },
@@ -982,12 +978,9 @@ private[verify] object DedupRows {
         val emb = Tables.embeddings(s, d)
         val srcFile = new java.io.File(s"$d/embeddings.parquet")
         val idxDir = s"${scratchDir(d)}/sim_ivf_index_${stageKey(srcFile, "d64k8i2")}"
-        if (!new java.io.File(s"$idxDir/cents/_SUCCESS").exists()) {
-          Similarity.writeIvfIndex(
-            Similarity.buildIvfIndex(emb, "vec_id", "embedding", dim = 64, k = 8,
-              iters = 2),
-            idxDir, "vec_id", shards = 4)
-        }
+        if (!new java.io.File(s"$idxDir/cents/_SUCCESS").exists())
+          Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+            .write(emb, idxDir, shards = 4)
         Similarity.ivfIndexStats(s, idxDir)
       },
       s"${kmeansCtesSql(dim = 64, k = 8, seed = "kmeans")}, " +
@@ -1001,7 +994,7 @@ private[verify] object DedupRows {
     // plan choice, the d4c/e6f discipline): bootstrap the quantizer on
     // the first 16 vectors (the tiny early sample a pipeline trains its
     // day-1 index on), append the other ~30× under the FROZEN centroids
-    // (the documented updateIvfIndex regime: appends can never
+    // (the documented IvfIndex.append regime: appends can never
     // rebalance), read the occupancy imbalance, derive shouldRetrainIvf,
     // and run the triggered rebuild. The arc runs at BOTH row
     // thresholds — the FIRE arm retrains and reports the rebuilt
@@ -1023,13 +1016,10 @@ private[verify] object DedupRows {
         val idxDir = s"${scratchDir(d)}/sim_ivf_retrain_${stageKey(srcFile, s"d64k8i2b16f${SimRetrainFire}h$SimRetrainHold")}"
         if (!new java.io.File(s"$idxDir/_RETRAIN_DONE").exists()) {
           graft.sources.ParquetSink.deleteRecursively(new java.io.File(idxDir))
-          Similarity.writeIvfIndex(
-            Similarity.buildIvfIndex(emb.filter(col("vec_id") < 16),
-              "vec_id", "embedding", dim = 64, k = 8, iters = 2),
-            idxDir, "vec_id", shards = 4)
-          Similarity.updateIvfIndex(emb.filter(col("vec_id") >= 16)
-              .select("vec_id", "embedding"),
-            idxDir, "vec_id", "embedding", shards = 4)
+          val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+          ivf.write(emb.filter(col("vec_id") < 16), idxDir, shards = 4)
+          ivf.append(emb.filter(col("vec_id") >= 16).select("vec_id", "embedding"),
+            idxDir, shards = 4)
           def stats() = Similarity.ivfIndexStats(s, idxDir).head()
           val pre = stats()
           // shouldRetrainIvf's own null discipline, mirrored (r18 ADVICE):
@@ -1045,9 +1035,7 @@ private[verify] object DedupRows {
           // them locally avoids two more full cells/ scans per cold stage
           val fire = pre.getDouble(4) > SimRetrainFire
           val hold = pre.getDouble(4) > SimRetrainHold
-          if (fire || hold)
-            Similarity.retrainIvfIndex(s, idxDir, "vec_id", "embedding",
-              dim = 64, k = 8, iters = 2)
+          if (fire || hold) ivf.retrain(s, idxDir, shards = 4)
           val post = stats()
           // the decision rows persist WITH the staged index: a replay must
           // report the evidence each decision was taken on, not re-measure
@@ -1077,7 +1065,7 @@ private[verify] object DedupRows {
     // production gate, not just a spec. Per arm (see SimRetrainK*): the
     // bootstrap-append arc, the one-row stats read, deriveIvfK at the
     // arm's target (plus the clamp derivation at maxK = 12), then
-    // retrainIvfIndex AT THE DERIVED k. The oracle re-derives the whole
+    // IvfIndex.retrain AT THE DERIVED k. The oracle re-derives the whole
     // thing — ceil, floor-at-cells, clamp — and trains the union rebuild
     // at ITS OWN derived k (a scalar subquery feeds the Lloyd seed
     // filter), so a wrong Spark derivation mismatches twice: on the
@@ -1094,13 +1082,10 @@ private[verify] object DedupRows {
           graft.sources.ParquetSink.deleteRecursively(new java.io.File(idxDir))
           def arm(target: Long) = {
             val armDir = s"$idxDir/arm_$target"
-            Similarity.writeIvfIndex(
-              Similarity.buildIvfIndex(emb.filter(col("vec_id") < 16),
-                "vec_id", "embedding", dim = 64, k = 8, iters = 2),
-              armDir, "vec_id", shards = 4)
-            Similarity.updateIvfIndex(emb.filter(col("vec_id") >= 16)
-                .select("vec_id", "embedding"),
-              armDir, "vec_id", "embedding", shards = 4)
+            val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+            ivf.write(emb.filter(col("vec_id") < 16), armDir, shards = 4)
+            ivf.append(emb.filter(col("vec_id") >= 16).select("vec_id", "embedding"),
+              armDir, shards = 4)
             val pre = Similarity.ivfIndexStats(s, armDir).head()
             require(!pre.isNullAt(4),
               s"sim_ivf_retrain_k: degenerate bootstrap index at $armDir")
@@ -1111,8 +1096,7 @@ private[verify] object DedupRows {
             val derivedK = Similarity.deriveIvfK(s, armDir, targetMeanCell = target)
             val clampK = Similarity.deriveIvfK(s, armDir, targetMeanCell = target,
               maxK = SimRetrainKClampMax)
-            Similarity.retrainIvfIndex(s, armDir, "vec_id", "embedding",
-              dim = 64, k = derivedK, iters = 2)
+            ivf.copy(k = derivedK).retrain(s, armDir, shards = 4)
             val post = Similarity.ivfIndexStats(s, armDir).head()
             (target, pre.getLong(0), vectors, pre.getDouble(4), wantK,
               derivedK.toLong, clampK.toLong, post.getLong(0), post.getLong(1),
@@ -1152,16 +1136,13 @@ private[verify] object DedupRows {
         val emb = Tables.embeddings(s, d)
         val srcFile = new java.io.File(s"$d/embeddings.parquet")
         val idxDir = s"${scratchDir(d)}/sim_ivf_index_${stageKey(srcFile, "d64k8i2")}"
-        if (!new java.io.File(s"$idxDir/cents/_SUCCESS").exists()) {
-          Similarity.writeIvfIndex(
-            Similarity.buildIvfIndex(emb, "vec_id", "embedding", dim = 64, k = 8,
-              iters = 2),
-            idxDir, "vec_id", shards = 4)
-        }
+        val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+        if (!new java.io.File(s"$idxDir/cents/_SUCCESS").exists())
+          ivf.write(emb, idxDir, shards = 4)
         Tables.registerAll(s, d)
-        val idx = Similarity.readIvfIndex(s, idxDir)
-        idx.cells.createOrReplaceTempView("graft_ivf_cells")
-        idx.cents.createOrReplaceTempView("graft_ivf_cents")
+        val idx = ivf.read(s, idxDir)
+        idx("cells").createOrReplaceTempView("graft_ivf_cells")
+        idx("cents").createOrReplaceTempView("graft_ivf_cents")
         s.sql(
           "WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings " +
             "WHERE vec_id < 10), " +
@@ -1212,10 +1193,8 @@ private[verify] object DedupRows {
           def rm(f: java.io.File): Unit =
             graft.sources.ParquetSink.deleteRecursively(f)
           rm(new java.io.File(idxDir))
-          Similarity.writeIvfIndex(
-            Similarity.buildIvfIndex(emb.filter(col("vec_id") % 5 =!= 0),
-              "vec_id", "embedding", dim = 64, k = 8, iters = 2),
-            idxDir, "vec_id", shards = 4)
+          Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+            .write(emb.filter(col("vec_id") % 5 =!= 0), idxDir, shards = 4)
         }
         // external table over the staged cells (schema inferred from the
         // day-1 files), frozen centroids as a read-only view

@@ -90,13 +90,12 @@ class EmptyInputSpec extends SparkTestBase {
     // IVF: empty update is a no-op; empty queries probe to zero rows
     val vb = Seq((1L, Array(1.0f, 0.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
     val noVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(vb, "vec_id", "embedding", dim = 4, k = 1),
-      s"$dir/ivf", "vec_id", shards = 2)
-    Similarity.updateIvfIndex(noVecs, s"$dir/ivf", "vec_id", "embedding", shards = 2)
-    val ivf = Similarity.readIvfIndex(spark, s"$dir/ivf")
-    assert(ivf.cells.count() == 1)
-    assert(Similarity.ivfTopKFromIndex(ivf, noVecs, "vec_id", "embedding", k = 3).count() == 0)
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 4, k = 1)
+    ivf.write(vb, s"$dir/ivf", shards = 2)
+    ivf.append(noVecs, s"$dir/ivf", shards = 2)
+    val ivfParts = ivf.read(spark, s"$dir/ivf")
+    assert(ivfParts("cells").count() == 1)
+    assert(ivf.probe(noVecs, ivfParts, topK = 3).count() == 0)
   }
 
   test("dedup family: empty corpus -> empty outputs, schemas intact") {

@@ -389,10 +389,8 @@ class PlanSpec extends SparkTestBase {
     val corpusPath = "target/tmp/planspec_ivf_corpus"
     val idxPath = "target/tmp/planspec_ivf_idx"
     emb.write.mode("overwrite").parquet(corpusPath)
-    Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(spark.read.parquet(corpusPath), "vec_id", "embedding",
-        dim = 64, k = 4, iters = 2),
-      idxPath, "vec_id", shards = 2)
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 4, iters = 2)
+    ivf.write(spark.read.parquet(corpusPath), idxPath, shards = 2)
     // queries ride an in-memory frame so ANY file scan in the plan is
     // index or corpus — training already happened at build time, and the
     // replay must not reach back to the corpus source for vectors, cells,
@@ -400,8 +398,7 @@ class PlanSpec extends SparkTestBase {
     import spark.implicits._
     val queries = emb.limit(5).collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .toSeq.toDF("vec_id", "embedding")
-    val p = plan(Similarity.ivfTopKFromIndex(Similarity.readIvfIndex(spark, idxPath),
-      queries, "vec_id", "embedding", k = 3, probes = 2))
+    val p = plan(ivf.probe(queries, ivf.read(spark, idxPath), topK = 3, probes = 2))
     assert(!p.contains("planspec_ivf_corpus"),
       s"replay must not rescan the corpus source:\n$p")
     assert(p.contains("planspec_ivf_idx"),
@@ -413,12 +410,11 @@ class PlanSpec extends SparkTestBase {
   test("SQL-text IVF probe plans like the Scala probe — index scan, equi-join cells (SIM-SQL)") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val idxPath = "target/tmp/planspec_ivf_sql_idx"
-    Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", dim = 64, k = 4, iters = 2),
-      idxPath, "vec_id", shards = 2)
-    val idx = Similarity.readIvfIndex(spark, idxPath)
-    idx.cells.createOrReplaceTempView("graft_ivf_cells")
-    idx.cents.createOrReplaceTempView("graft_ivf_cents")
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 4, iters = 2)
+    ivf.write(emb, idxPath, shards = 2)
+    val idx = ivf.read(spark, idxPath)
+    idx("cells").createOrReplaceTempView("graft_ivf_cells")
+    idx("cents").createOrReplaceTempView("graft_ivf_cents")
     emb.limit(5).createOrReplaceTempView("planspec_ivf_queries")
     graft.plans.GraftExtensions.registerFunctions(spark)
     val p = plan(spark.sql(

@@ -110,11 +110,17 @@ class OperatorApiSpec extends AnyFunSuite {
       "buildContainmentIndex", "writeContainmentIndex", "readContainmentIndex",
       "updateContainmentIndex", "compactContainmentIndex", "decontaminationFromIndex",
       "buildEmbeddingIndex", "writeEmbeddingIndex", "readEmbeddingIndex",
-      "updateEmbeddingIndex", "compactEmbeddingIndex", "embeddingIncrementalFromIndex")
-    val path = Paths.get("src/main/scala/graft/operators/Dedup.scala")
-    assert(Files.isRegularFile(path), s"run from the repo root: ${path.toAbsolutePath}")
-    val src = SourceScan.blankComments(Files.readString(path))
+      "updateEmbeddingIndex", "compactEmbeddingIndex", "embeddingIncrementalFromIndex",
+      "buildIvfIndex", "writeIvfIndex", "readIvfIndex", "ivfTopKFromIndex", "updateIvfIndex",
+      "retrainIvfIndex", "readAggState", "updateAggState", "compactAggState",
+      "withStateStoreProvider")
+    val paths = Seq("operators/Dedup.scala", "operators/Similarity.scala", "operators/Agg.scala",
+      "streaming/StreamOps.scala").map(f => Paths.get(s"src/main/scala/graft/$f"))
+    paths.foreach(p =>
+      assert(Files.isRegularFile(p), s"run from the repo root: ${p.toAbsolutePath}"))
     val offending = for {
+      path <- paths
+      src = SourceScan.blankComments(Files.readString(path))
       m <- defLine.findAllMatchIn(src).toSeq
       if lifecycle(m.group(2))
     } yield s"$path:${src.substring(0, m.start).count(_ == '\n') + 1}: def ${m.group(2)}"

@@ -1,13 +1,14 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Agg, Dedup, Similarity}
 import graft.sources.ShardedIndex
 import org.apache.spark.sql.DataFrame
 
-/** One lifecycle for every ingest index family: build → append two
+/** One lifecycle for every materialized state: build → append two
   * batches → compact reads exactly the relation a from-scratch build over
   * corpus ∪ batches reads, part by part, and appending an empty batch
-  * changes nothing a reader sees.
+  * changes nothing a reader sees. The IVF index appends to frozen
+  * centroids, so its from-scratch equality holds after a retrain.
   */
 class ShardedIndexSpec extends SparkTestBase {
   import spark.implicits._
@@ -31,13 +32,19 @@ class ShardedIndexSpec extends SparkTestBase {
   private val vecs2 = Seq((5L, Array(0.0f, 0.0f, 0.0f, 1.0f))).toDF("vec_id", "embedding")
   private val noVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
 
+  private val amounts = Seq(("a", 1.5), ("b", 2.0), ("a", 3.25)).toDF("k", "v")
+  private val amounts1 = Seq(("b", -4.0), ("c", 0.5)).toDF("k", "v")
+  private val amounts2 = Seq(("a", 7.0), ("c", 2.75), ("d", 1.0)).toDF("k", "v")
+  private val noAmounts = Seq.empty[(String, Double)].toDF("k", "v")
+
   private val families: Seq[(String, ShardedIndex, Seq[DataFrame])] = Seq(
     ("fingerprint", Dedup.FingerprintIndex("text"), Seq(corpus, batch1, batch2, noDocs)),
     ("minhash", Dedup.MinhashIndex("doc_id", "text", n = 2), Seq(corpus, batch1, batch2, noDocs)),
     ("containment", Dedup.ContainmentIndex("doc_id", "text", n = 2, maxDf = 2),
       Seq(corpus, batch1, batch2, noDocs)),
     ("embedding", Dedup.EmbeddingIndex("vec_id", "embedding", dim = 4, bands = 16,
-      bitsPerBand = 2), Seq(vecs, vecs1, vecs2, noVecs)))
+      bitsPerBand = 2), Seq(vecs, vecs1, vecs2, noVecs)),
+    ("aggstate", Agg.AggState(Seq("k"), "v"), Seq(amounts, amounts1, amounts2, noAmounts)))
 
   /** Each part's rows, columns in name order, as a sorted multiset. */
   private def relation(index: Map[String, DataFrame]): Map[String, Seq[String]] =
@@ -89,5 +96,44 @@ class ShardedIndexSpec extends SparkTestBase {
     ci.append(batch2, dir, shards = 2)
     ci.write(corpus, dir, shards = 2)
     assert(!tomb.exists())
+  }
+
+  test("aggstate: a read merges the appended deltas before any compaction") {
+    val state = Agg.AggState(Seq("k"), "v")
+    state.write(amounts, s"$root/aggstate/merged", shards = 2)
+    state.append(amounts1, s"$root/aggstate/merged", shards = 2)
+    state.append(amounts2, s"$root/aggstate/merged", shards = 2)
+    state.write(amounts.union(amounts1).union(amounts2), s"$root/aggstate/whole", shards = 2)
+    assert(relation(state.read(spark, s"$root/aggstate/merged"))
+      == relation(state.read(spark, s"$root/aggstate/whole")))
+  }
+
+  test("ivf: compaction leaves the read unchanged; retrain reads as a from-scratch build") {
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 4, k = 2)
+    val grown = s"$root/ivf/grown"
+    val scratch = s"$root/ivf/scratch"
+    ivf.write(vecs, grown, shards = 2)
+    ivf.append(vecs1, grown, shards = 2)
+    ivf.append(vecs2, grown, shards = 2)
+    val appended = relation(ivf.read(spark, grown))
+    assert(appended("cells").size == 5, "every appended vector lands in cells/")
+    ivf.compact(spark, grown, shards = 2)
+    assert(relation(ivf.read(spark, grown)) == appended)
+    ivf.retrain(spark, grown, shards = 2)
+    ivf.write(vecs.union(vecs1).union(vecs2), scratch, shards = 2)
+    assert(relation(ivf.read(spark, grown)) == relation(ivf.read(spark, scratch)))
+    assert(!new java.io.File(s"$grown/retrain_stage").exists())
+  }
+
+  test("ivf: reading an index whose cells/ is missing fails naming the part") {
+    // the state a crash inside the retrain swap leaves: both live parts
+    // are removed before either staged part is renamed in
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 4, k = 2)
+    val dir = s"$root/ivf/torn"
+    ivf.write(vecs, dir, shards = 2)
+    graft.sources.ParquetSink.deleteRecursively(new java.io.File(s"$dir/cells"))
+    val e = intercept[IllegalArgumentException](ivf.read(spark, dir))
+    assert(e.getMessage.contains("cells/") && !e.getMessage.contains("cents/"),
+      e.getMessage)
   }
 }

@@ -184,12 +184,10 @@ class SimilaritySpec extends SparkTestBase {
   test("IVF index round-trip: ivfTopKFromIndex bit-matches the inline trained form") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = "target/tmp/simspec_ivf_idx"
-    Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", dim = 64, k = 8, iters = 2),
-      dir, "vec_id", shards = 2)
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+    ivf.write(emb, dir, shards = 2)
     val queries = emb.filter(col("vec_id") < 10)
-    val replay = Similarity.ivfTopKFromIndex(Similarity.readIvfIndex(spark, dir),
-      queries, "vec_id", "embedding", k = 5, probes = 3)
+    val replay = ivf.probe(queries, ivf.read(spark, dir), topK = 5, probes = 3)
       .select("query_id", "neighbor_id", "cosine", "rank")
       .collect().map(_.mkString("|")).toSet
     val inline = Similarity.ivfTopK(
@@ -206,17 +204,16 @@ class SimilaritySpec extends SparkTestBase {
     val dir = "target/tmp/simspec_ivf_update"
     val base = emb.filter(col("vec_id") % 5 =!= 0)
     val batch = emb.filter(col("vec_id") % 5 === 0)
-    Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(base, "vec_id", "embedding", dim = 64, k = 8, iters = 2),
-      dir, "vec_id", shards = 2)
-    Similarity.updateIvfIndex(batch, dir, "vec_id", "embedding", shards = 2)
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+    ivf.write(base, dir, shards = 2)
+    ivf.append(batch, dir, shards = 2)
     // settle the appended cell shards: the probe and the frozen-centroid
     // assignment checks below must hold identically after compaction
-    graft.sources.ParquetSink.compactSharded(spark, s"$dir/cells", "vec_id", shards = 2)
-    val updated = Similarity.readIvfIndex(spark, dir)
+    ivf.compact(spark, dir, shards = 2)
+    val updated = ivf.read(spark, dir)
     // every appended member lands in the cell of its nearest frozen
     // centroid (ties to the lowest cell — the assignment contract)
-    val centMap = updated.cents.collect()
+    val centMap = updated("cents").collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var d = 0.0; var na = 0.0; var nb = 0.0
@@ -224,7 +221,7 @@ class SimilaritySpec extends SparkTestBase {
       while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
       BigDecimal(d / math.sqrt(na * nb)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
-    val appended = updated.cells.join(batch.select(col("vec_id")), "vec_id")
+    val appended = updated("cells").join(batch.select(col("vec_id")), "vec_id")
       .select("vec_id", "embedding", "cell")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getInt(2)))
     assert(appended.length == batch.count())
@@ -237,8 +234,7 @@ class SimilaritySpec extends SparkTestBase {
     // that very vector as the top neighbor at cosine 1
     val copies = batch.limit(3)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
-    val top = Similarity.ivfTopKFromIndex(updated, copies,
-      "vec_id", "embedding", k = 1, probes = 3)
+    val top = ivf.probe(copies, updated, topK = 1, probes = 3)
       .collect().map(r => (r.getLong(0) - 1000000L, r.getLong(1), r.getDouble(2)))
     assert(top.length == 3)
     top.foreach { case (orig, nbr, cosv) =>
@@ -250,10 +246,8 @@ class SimilaritySpec extends SparkTestBase {
   test("ivfIndexStats: occupancy bookkeeping; post-update imbalance is monotone in appended skew") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val base = emb.filter(col("vec_id") % 5 =!= 0)
-    def freshIndex(dir: String): Unit =
-      Similarity.writeIvfIndex(
-        Similarity.buildIvfIndex(base, "vec_id", "embedding", dim = 64, k = 8, iters = 2),
-        dir, "vec_id", shards = 2)
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+    def freshIndex(dir: String): Unit = ivf.write(base, dir, shards = 2)
     def stats(dir: String): (Long, Long, Long, Double, Double) = {
       val r = Similarity.ivfIndexStats(spark, dir).collect().head
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))
@@ -283,8 +277,8 @@ class SimilaritySpec extends SparkTestBase {
     val dirSkew = "target/tmp/simspec_ivf_stats_skew"
     val dirBal = "target/tmp/simspec_ivf_stats_bal"
     freshIndex(dirSkew); freshIndex(dirBal)
-    Similarity.updateIvfIndex(skewBatch, dirSkew, "vec_id", "embedding", shards = 2)
-    Similarity.updateIvfIndex(balBatch, dirBal, "vec_id", "embedding", shards = 2)
+    ivf.append(skewBatch, dirSkew, shards = 2)
+    ivf.append(balBatch, dirBal, shards = 2)
     val (sSkew, sBal) = (stats(dirSkew), stats(dirBal))
     // both appended the same row count...
     assert(sSkew._2 == s0._2 + cellCount && sBal._2 == s0._2 + cellCount)
@@ -300,9 +294,8 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val base = emb.filter(col("vec_id") % 5 =!= 0)
     val dir = "target/tmp/simspec_ivf_retrain"
-    Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(base, "vec_id", "embedding", dim = 64, k = 8, iters = 2),
-      dir, "vec_id", shards = 2)
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+    ivf.write(base, dir, shards = 2)
     // appended-skew load: copies of the hottest cell's vectors re-assign
     // to their own frozen centroid, so the append provably piles into one
     // cell and imbalance rises
@@ -310,7 +303,7 @@ class SimilaritySpec extends SparkTestBase {
     val hot = baseCells.groupBy("cell").count()
       .collect().maxBy(r => (r.getLong(1), -r.getInt(0))).getInt(0)
     // materialized locally: the lazy frame would re-read cells/ AFTER the
-    // retrain swap replaces those files (the exact hazard retrainIvfIndex's
+    // retrain swap replaces those files (the exact hazard IvfIndex.retrain's
     // stage-then-swap exists to avoid inside the API)
     val skewRows = baseCells.filter(col("cell") === hot).limit(24)
       .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding"))
@@ -318,7 +311,7 @@ class SimilaritySpec extends SparkTestBase {
     val skewBatch = spark.createDataFrame(skewRows)
       .toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>").as("embedding"))
-    Similarity.updateIvfIndex(skewBatch, dir, "vec_id", "embedding", shards = 2)
+    ivf.append(skewBatch, dir, shards = 2)
     val preImb = Similarity.ivfIndexStats(spark, dir).head().getDouble(4)
     assert(preImb > 1.0, "the skewed append must register as imbalance")
     // the derivation is EXACTLY "measured imbalance exceeds the bound":
@@ -337,27 +330,25 @@ class SimilaritySpec extends SparkTestBase {
     // the triggered rebuild bit-matches a from-scratch build on the union
     val union = base.select(col("vec_id"), col("embedding"))
       .unionAll(skewBatch)
-    Similarity.retrainIvfIndex(spark, dir, "vec_id", "embedding",
-      dim = 64, k = 8, iters = 2)
-    val fresh = Similarity.buildIvfIndex(union, "vec_id", "embedding",
-      dim = 64, k = 8, iters = 2)
+    ivf.retrain(spark, dir, shards = 4)
+    val fresh = ivf.rows(union)
     def cellsSet(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cell", "embedding").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toList)).toSet
     def centsSet(df: org.apache.spark.sql.DataFrame) =
       df.select("cell", "centroid").collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toList)).toSet
-    val got = Similarity.readIvfIndex(spark, dir)
-    assert(cellsSet(got.cells) == cellsSet(fresh.cells),
+    val got = ivf.read(spark, dir)
+    assert(cellsSet(got("cells")) == cellsSet(fresh("cells")),
       "retrained cells must equal a from-scratch union build")
-    assert(centsSet(got.cents) == centsSet(fresh.cents),
+    assert(centsSet(got("cents")) == centsSet(fresh("cents")),
       "retrained centroids must equal a from-scratch union build")
     // the stage dir must not survive the swap
     assert(!new java.io.File(s"$dir/retrain_stage").exists())
   }
 
   test("retrainIvfIndex at the DERIVED k bit-matches a from-scratch build at k' (r18 #1)") {
-    // the production pairing (deriveIvfK → retrainIvfIndex(k')) holds the
+    // the production pairing (deriveIvfK → IvfIndex.retrain at k') holds the
     // same from-scratch-equality contract as the same-k rebuild: the
     // deterministic Lloyd seeding is a pure function of the id SET at ANY
     // k, so the gate is the identical argument at the derived value. The
@@ -366,30 +357,25 @@ class SimilaritySpec extends SparkTestBase {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val dir = "target/tmp/simspec_ivf_retrain_k"
     graft.sources.ParquetSink.deleteRecursively(new java.io.File(dir))
-    Similarity.writeIvfIndex(
-      Similarity.buildIvfIndex(emb.filter(col("vec_id") < 16),
-        "vec_id", "embedding", dim = 64, k = 8, iters = 2),
-      dir, "vec_id", shards = 2)
-    Similarity.updateIvfIndex(emb.filter(col("vec_id") >= 16)
-      .select("vec_id", "embedding"), dir, "vec_id", "embedding", shards = 2)
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 8, iters = 2)
+    ivf.write(emb.filter(col("vec_id") < 16), dir, shards = 2)
+    ivf.append(emb.filter(col("vec_id") >= 16).select("vec_id", "embedding"), dir, shards = 2)
     val kPrime = Similarity.deriveIvfK(spark, dir, targetMeanCell = 32)
     val vectors = Similarity.ivfIndexStats(spark, dir).head().getLong(1)
     assert(kPrime == ((vectors + 31) / 32).toInt && kPrime > 8,
       "the growth branch must bind on this fixture (want > bootstrap cells)")
-    Similarity.retrainIvfIndex(spark, dir, "vec_id", "embedding",
-      dim = 64, k = kPrime, iters = 2)
-    val fresh = Similarity.buildIvfIndex(emb.select("vec_id", "embedding"),
-      "vec_id", "embedding", dim = 64, k = kPrime, iters = 2)
+    ivf.copy(k = kPrime).retrain(spark, dir, shards = 4)
+    val fresh = ivf.copy(k = kPrime).rows(emb.select("vec_id", "embedding"))
     def cellsSet(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "cell", "embedding").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2).toList)).toSet
     def centsSet(df: org.apache.spark.sql.DataFrame) =
       df.select("cell", "centroid").collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toList)).toSet
-    val got = Similarity.readIvfIndex(spark, dir)
-    assert(cellsSet(got.cells) == cellsSet(fresh.cells),
+    val got = ivf.read(spark, dir)
+    assert(cellsSet(got("cells")) == cellsSet(fresh("cells")),
       "derived-k retrain must equal a from-scratch union build at k'")
-    assert(centsSet(got.cents) == centsSet(fresh.cents),
+    assert(centsSet(got("cents")) == centsSet(fresh("cents")),
       "derived-k retrained centroids must equal a from-scratch build at k'")
   }
 

@@ -216,7 +216,8 @@ class StreamOpsSpec extends SparkTestBase {
     // stateful operators must produce the same append-mode output with
     // spark.sql.streaming.stateStore.providerClass = RocksDB
     implicit val sqlCtx = spark.sqlContext
-    val got = StreamOps.withStateStoreProvider(spark, StreamOps.RocksDbProvider) {
+    val got = Session.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" -> StreamOps.RocksDbProvider) {
       assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
         == StreamOps.RocksDbProvider)
       val mem = MemoryStream[(Long, Long, Long)]
