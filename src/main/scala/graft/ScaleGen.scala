@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * fixture mode (r14 #4): documents ONLY, with the top-`hotHead`
   * (lowercased) source tokens EXEMPT from the per-copy suffix — their
   * absolute counts then grow `copies`× while N grows `copies`×, so the
-  * 1× heavy-hitter SHARE structure survives the scale-up and the
-  * e10/t27 ε·N gates assert on a non-empty head instead of the
+  * 1× heavy-hitter SHARE structure survives the scale-up and an ε·N
+  * frequency gate asserts on a non-empty head instead of the
   * vacuous empty set the plain transform produces (every suffixed token
   * keeps its 1× count under a 1000× N). The exempt head re-links a few
   * all-hot-word shingles across copies, so this fixture is for the

@@ -170,8 +170,7 @@ object Session {
       // (measured at 1000×: the 30k-key HLL state build spilled 27.6 GB
       // and the 400-shard freq-sketch build 17.7 GB, both pure fallback
       // sorts). Every graft TypedImperativeAggregate buffer is bounded by
-      // construction (HLL image ≈ 4 KB fixed, frequent-items capped by
-      // maxMapSize, DataSketches images), so 2048 buffers/task is
+      // construction (HLL image ≈ 4 KB fixed), so 2048 buffers/task is
       // ~10–100 MB — far cheaper than the sort it replaces. Re-measured
       // with the raise: both builds zero spill.
       //

@@ -2171,7 +2171,7 @@ object Dedup {
     // d3b double-evaluation pattern (guide §3/§5). Persist it (loan
     // convention; ~one int over the corpus width). The same plan is what
     // sim_ivf_trained and d10b derive from — CacheManager plan-matching
-    // shares one entry across the family, as t18/t19 do.
+    // shares one entry across the family.
     val cells = graft.Caches.persistLoaned(
       Similarity.kmeansAssign(df, idCol, vecCol, dim, k, iters, seed))
     val l = cells.select(col("cell"), col(idCol).as("id_1"), col(vecCol).as("_v1"))

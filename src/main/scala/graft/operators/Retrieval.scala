@@ -5,11 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Rank-fusion retrieval — the hybrid-search composition a training-data
-  * pipeline runs when one signal alone misranks: lexical scoring (BM25,
-  * [[TermStats.bm25]]) finds exact-term matches that embeddings blur,
-  * vector scoring finds paraphrases lexical match misses. Reciprocal-rank
-  * fusion (Cormack, Clarke & Büttcher, SIGIR 2009) combines the two
-  * WITHOUT score calibration: only the RANKS travel into the fused score,
+  * pipeline runs when one signal alone misranks: lexical scoring (e.g.
+  * BM25) finds exact-term matches that embeddings blur, vector scoring
+  * finds paraphrases lexical match misses. Reciprocal-rank fusion
+  * (Cormack, Clarke & Büttcher, SIGIR 2009) combines the two WITHOUT
+  * score calibration: only the RANKS travel into the fused score,
   * so a BM25 in [0, 12] and a cosine in [−1, 1] need no normalization pass.
   *
   * Extends the reference surface (which has no retrieval at all —

@@ -196,43 +196,7 @@ object GraftExtensions {
     // — its two-level shape is a plan, not an expression; the SQL form is
     // the window idiom the s5l row exercises)
     unaryComposed("graft_bpe_tokens", graft.functions.Text.bpeTokensExpr),
-    unaryComposed("graft_ws_tokens", graft.functions.Text.wsTokensExpr),
-    // the bounded-state heavy-hitter family (t27): the registry builder
-    // returns the raw AggregateFunction — the analyzer wraps it — so SQL
-    // text gets the same TypedImperativeAggregate the Scala API uses.
-    // maxMapSize must be a foldable integer literal (it sizes the buffer
-    // at plan time).
-    aggWithSize("graft_freq_sketch",
-      (c, m) => graft.functions.FreqSketchAgg(
-        org.apache.spark.sql.catalyst.expressions.Cast(c,
-          org.apache.spark.sql.types.StringType), m),
-      classOf[graft.functions.FreqSketchAgg]),
-    aggWithSize("graft_freq_union",
-      (c, m) => graft.functions.FreqSketchUnionAgg(c, m),
-      classOf[graft.functions.FreqSketchUnionAgg]),
-    (FunctionIdentifier("graft_freq_items"),
-      new ExpressionInfo(classOf[graft.functions.FreqSketchItems].getName,
-        "graft_freq_items"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"graft_freq_items expects 1 argument, got ${args.length}")
-        graft.functions.FreqSketchItems(args.head)
-      }))
-
-  private def aggWithSize(name: String,
-                          make: (Expression, Int) => Expression,
-                          clazz: Class[_]) =
-    (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"$name expects 2 arguments (value, maxMapSize), got ${args.length}")
-        require(args(1).foldable, s"$name: maxMapSize must be a literal")
-        val m = args(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"$name: maxMapSize must be an integer literal, got $other")
-        }
-        make(args.head, m)
-      })
+    unaryComposed("graft_ws_tokens", graft.functions.Text.wsTokensExpr))
 
   /** Register the functions on an ALREADY-RUNNING session (the extensions
     * path needs the conf set before session construction).

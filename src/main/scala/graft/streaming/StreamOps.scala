@@ -561,41 +561,6 @@ object StreamOps {
     q.awaitTermination()
   }
 
-  /** E10 — streaming maintenance of the heavy-hitter STATE (the t27b
-    * lifecycle driven by a stream): each micro-batch builds its per-shard
-    * frequent-items images and delta-appends them to the state directory;
-    * consumers fold the images with the sketch's own union
-    * ([[graft.operators.TermStats.mergedHeavyHitters]]), whose published
-    * bound is associative over ANY batch split — so the streamed state
-    * answers the top-terms question with the same guarantee as a one-shot
-    * pass, and the corpus is never re-read. The e9 foreachBatch shape:
-    * per-batch work is one bounded aggregate, state growth is
-    * `shards` rows of fixed-size images per batch (compact by re-unioning
-    * when the directory grows — the x10b recipe).
-    */
-  def maintainHeavyHitterState(stream: DataFrame, idCol: String,
-                               textCol: String, maxMapSize: Int, shards: Int,
-                               statePath: String, checkpointPath: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // IDEMPOTENT per-batch write: crash-recovery re-runs the last
-        // uncommitted batch (foreachBatch is at-least-once), and a plain
-        // append would double its images — silently breaking the sketch
-        // bound (lower bounds could exceed exact counts). Overwriting the
-        // batch's OWN partition directory makes the replay a no-op; the
-        // partition-discovery `batch` column is inert metadata for
-        // [[graft.operators.TermStats.mergedHeavyHitters]].
-        graft.operators.TermStats
-          .buildHeavyHitterShardStates(batch.toDF(), idCol, textCol, maxMapSize, shards)
-          .write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointPath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   /** Streaming STATE-STORE width derived from the replay's backlog size
     * instead of inherited from the session's core-count-sized
     * `spark.sql.shuffle.partitions` (r21, guide §2 "derive partitioning

@@ -1,11 +1,11 @@
 package graft
 package verify
 
-import graft.functions.{Text, Vectors}
+import graft.functions.Text
 import graft.operators._
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DecimalType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.DecimalType
 
 import OracleSql._
 import RowHelpers._
@@ -83,81 +83,6 @@ private[verify] object CorpusRows {
           s"'$digits', '<NUMBER>', 'g')) AS scrubbed_md5 " +
           "FROM documents ORDER BY doc_id"
       }),
-
-    // T16: per-source term-distribution drift — χ² of each source's
-    // unigram counts vs the corpus distribution (full-vocabulary cells)
-    //
-    // mirrors chiSquareDrift: e = n·c/N in the same operand order; cells
-    // over the full source × vocabulary frame (absent terms contribute e)
-    VerifyRow("t16_chisq_drift",
-      (s, d) =>
-        TermStats.chiSquareDrift(Tables.documents(s, d), "source", "text")
-          .orderBy("source"),
-      "WITH tk AS (SELECT source, term FROM (SELECT source, " +
-        "unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term FROM documents) " +
-        "WHERE len(term) > 0), " +
-        "o AS (SELECT source, term, count(*) AS o FROM tk GROUP BY 1, 2), " +
-        "ns AS (SELECT source, count(*) AS n FROM tk GROUP BY 1), " +
-        "ct AS (SELECT term, count(*) AS c FROM tk GROUP BY 1), " +
-        "tot AS (SELECT count(*) AS N FROM tk), " +
-        "cells AS (SELECT ns.source, ns.n, ct.term, coalesce(o.o, 0)::DOUBLE AS o0, " +
-        "ns.n::DOUBLE * ct.c::DOUBLE / tot.N::DOUBLE AS e " +
-        "FROM ns CROSS JOIN ct CROSS JOIN tot " +
-        "LEFT JOIN o ON o.source = ns.source AND o.term = ct.term) " +
-        // fixed-order fold (term-ascending), mirroring the Spark side's
-        // sorted-array aggregate — bit-identical chi2, no ulp caveat
-        "SELECT source, max(n)::BIGINT AS n_tokens, " +
-        "round(list_reduce(list((o0 - e) * (o0 - e) / e ORDER BY term) || [0.0], " +
-        "(a, b) -> a + b), 4) AS chi2 " +
-        "FROM cells GROUP BY source ORDER BY source"),
-
-    // T17: BM25 relevance of every document against a fixed query term set
-    // — the corpus-search primitive (topic slicing, retrieval grading).
-    // Integer tf/df/dl inputs + fixed-order term sum; ln is the one libm
-    // call (round-4 output, documented ulp caveat as in t16)
-    VerifyRow("t17_bm25",
-      (s, d) =>
-        TermStats.bm25(Tables.documents(s, d), "doc_id", "text", Bm25Terms)
-          .orderBy("doc_id"),
-      bm25OracleSql(Bm25Terms, k1 = 1.2, b = 0.75)),
-
-    // H1: hybrid retrieval — BM25 top-20 (t17's terms, zero-score docs
-    // excluded) and cosine-to-query top-20 (query = embedding of vec_id 0)
-    // fused by reciprocal rank (k0 = 60): only RANKS enter the fused
-    // score, so the two scales need no calibration; each list is a
-    // TakeOrdered reduction, the fusion runs on ≤ 40 candidate rows
-    //
-    // t17's BM25 as one candidate list, cosine-to-vec_id-0 as the other;
-    // rank over each LIMITed list, fuse 1/(rank+60), fused top-10
-    VerifyRow("h1_hybrid_rrf",
-      (s, d) => {
-        val emb = Tables.embeddings(s, d)
-        val bm = Retrieval.topKRanked(
-          TermStats.bm25(Tables.documents(s, d), "doc_id", "text", Bm25Terms)
-            .filter(col("bm25") > 0), "doc_id", "bm25", 20)
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("_q"))
-        val cosScores = emb.filter(col("vec_id") =!= 0)
-          .crossJoin(broadcast(q))
-          .select(col("vec_id").as("doc_id"),
-            round(Vectors.cosine(col("embedding"), col("_q")), 6).as("cosine"))
-        Retrieval.rrfFuse(
-          Seq(bm, Retrieval.topKRanked(cosScores, "doc_id", "cosine", 20)),
-          "doc_id", k0 = 60, topK = 10)
-          .orderBy(col("rrf").desc, col("doc_id"))
-      },
-      "WITH bm AS (" + bm25OracleSql(Bm25Terms, k1 = 1.2, b = 0.75) + "), " +
-        "bmtop AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rank FROM " +
-        "(SELECT doc_id, bm25 FROM bm WHERE bm25 > 0 ORDER BY bm25 DESC, doc_id LIMIT 20)), " +
-        "qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0), " +
-        "cs AS (SELECT vec_id AS doc_id, " +
-        "round(list_cosine_similarity(embedding::DOUBLE[], qe::DOUBLE[]), 6) AS cosine " +
-        "FROM embeddings CROSS JOIN qv WHERE vec_id != 0), " +
-        "cstop AS (SELECT doc_id, row_number() OVER (ORDER BY cosine DESC, doc_id) AS rank FROM " +
-        "(SELECT doc_id, cosine FROM cs ORDER BY cosine DESC, doc_id LIMIT 20)), " +
-        "u AS (SELECT doc_id, rank FROM bmtop UNION ALL SELECT doc_id, rank FROM cstop), " +
-        "f AS (SELECT doc_id, round(sum(1.0::DOUBLE / (rank + 60)), 6) AS rrf, " +
-        "count(*) AS n_lists FROM u GROUP BY doc_id) " +
-        "SELECT doc_id, rrf, n_lists FROM f ORDER BY rrf DESC, doc_id LIMIT 10"),
 
     // T13: Gopher quality rules — the published pre-training gate's seven
     // signals plus the combined pass verdict, all integer-count + one-
@@ -454,23 +379,6 @@ private[verify] object CorpusRows {
         "regexp_split_to_array(lower(trim(text)), '\\s+')) AS token FROM documents) " +
         "GROUP BY token ORDER BY n DESC, token ASC LIMIT 100"),
 
-    // T10: per-document distinctive terms — tf/df scoring (tf-idf with an
-    // engine-exact 1/df weight), the first cross-document text score
-    VerifyRow("t10_distinctive",
-      (s, d) =>
-        TermStats.distinctiveTerms(Tables.documents(s, d), "doc_id", "text", 3)
-          .orderBy("doc_id", "rank"),
-      "WITH toks AS (SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term " +
-        "FROM documents), " +
-        "tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term), " +
-        "dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM toks) GROUP BY term), " +
-        "scored AS (SELECT t.doc_id, t.term, t.tf, d.df, " +
-        "round(t.tf::DOUBLE / d.df::DOUBLE, 6) AS score FROM tf t JOIN dfq d USING (term)), " +
-        "ranked AS (SELECT doc_id, term, tf, df, score, row_number() OVER (" +
-        "PARTITION BY doc_id ORDER BY score DESC, term ASC) AS rank FROM scored) " +
-        "SELECT doc_id, term, tf, df, score, rank FROM ranked WHERE rank <= 3 " +
-        "ORDER BY doc_id, rank"),
-
     // A20: top-N rows per group — the argmax surface generalized to n,
     // map-side-pruned via Spark's WindowGroupLimit (PlanSpec-pinned)
     VerifyRow("a20_top_per_group",
@@ -483,233 +391,6 @@ private[verify] object CorpusRows {
         "SELECT o_orderpriority, o_orderkey, o_totalprice, row_number() OVER (" +
         "PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank " +
         "FROM orders) WHERE rank <= 3 ORDER BY o_orderpriority, rank"),
-
-    // T12: corpus bigram counts — the classic n-gram LM statistics table,
-    // top-100 by frequency (occurrences, not distinct-per-doc)
-    VerifyRow("t12_bigram_counts",
-      (s, d) =>
-        TermStats.ngramCounts(Tables.documents(s, d), "text", 2, 100),
-      "SELECT gram, count(*) AS n FROM (" +
-        "SELECT unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS gram " +
-        "FROM (SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents)) " +
-        "GROUP BY gram ORDER BY n DESC, gram ASC LIMIT 100"),
-
-    // T25: PMI collocations — top adjacent-pair pointwise mutual
-    // information at a min-count cutoff (phrase mining / tokenizer prep)
-    //
-    // pmi recomputed with the SAME division association as the Spark side
-    // ((cab/N2) / ((ca/N1)*(cb/N1))) so the doubles agree; +0.0 kills -0.0
-    VerifyRow("t25_pmi_collocations",
-      (s, d) =>
-        TermStats.pmiCollocations(Tables.documents(s, d), "text", minCount = 5,
-          topN = 50),
-      "WITH w AS (SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS w FROM documents), " +
-        "uni AS (SELECT u AS wd, count(*)::BIGINT AS cw FROM (SELECT unnest(w) AS u FROM w) GROUP BY u), " +
-        "n1 AS (SELECT sum(cw)::DOUBLE AS N1 FROM uni), " +
-        "bc AS (SELECT gram, count(*)::BIGINT AS cab FROM (" +
-        "SELECT unnest(list_transform(range(1, len(w)), i -> w[i] || ' ' || w[i+1])) AS gram FROM w) " +
-        "GROUP BY gram), " +
-        "n2 AS (SELECT sum(cab)::DOUBLE AS N2 FROM bc), " +
-        "j AS (SELECT b.gram, b.cab, ua.cw AS ca, ub.cw AS cb FROM bc b " +
-        "JOIN uni ua ON ua.wd = split_part(b.gram, ' ', 1) " +
-        "JOIN uni ub ON ub.wd = split_part(b.gram, ' ', 2) " +
-        "WHERE b.cab >= 5) " +
-        "SELECT gram, cab AS n, " +
-        "round(ln((cab / n2.N2) / ((ca / n1.N1) * (cb / n1.N1))), 6) + 0.0 AS pmi " +
-        "FROM j, n1, n2 ORDER BY pmi DESC, gram ASC LIMIT 50"),
-
-    // T26: CCNet-style quality buckets — head/middle/tail by exact
-    // corpus quartiles of the t11 LM score
-    //
-    // t11's score feeding a quartile CASE; quantile_cont matches Spark's
-    // percentile interpolation (the g7 parity), fractions 0.25/0.75 are
-    // exact binary doubles
-    VerifyRow("t26_quality_buckets",
-      (s, d) =>
-        TermStats.qualityBuckets(Tables.documents(s, d), "doc_id", "text")
-          .orderBy("doc_id"),
-      "WITH toks AS (SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term " +
-        "FROM documents), " +
-        "vocab AS (SELECT term, count(*) AS n FROM toks GROUP BY term), " +
-        "scored AS (SELECT t.doc_id, round(avg(v.n), 4) AS lm_score " +
-        "FROM toks t JOIN vocab v USING (term) GROUP BY t.doc_id), " +
-        "th AS (SELECT quantile_cont(lm_score, 0.25) AS t1, " +
-        "quantile_cont(lm_score, 0.75) AS t2 FROM scored) " +
-        "SELECT s.doc_id, s.lm_score, " +
-        "CASE WHEN s.lm_score <= th.t1 THEN 'tail' " +
-        "WHEN s.lm_score <= th.t2 THEN 'middle' ELSE 'head' END AS bucket " +
-        "FROM scored s, th ORDER BY s.doc_id"),
-
-    // T27: heavy hitters with BOUNDED state — the frequent-items sketch
-    // (fixed maxMapSize entries per partial, one image per partition
-    // across the exchange) gated e8d-style: every token whose exact count
-    // exceeds the sketch's a-priori ε·N must be returned with its bounds
-    // bracketing the exact count (the published no-false-negatives
-    // guarantee — deterministic TRUE under any stream order)
-    //
-    // the deterministic half of the t27 gate re-derived exactly (token set
-    // + exact counts above ε·N, ε = 3.5/1024 = the sketch's own a-priori
-    // constant, spec-pinned); the sketch's no-false-negatives + bracketing
-    // guarantee makes within_tol TRUE under any stream order
-    VerifyRow("t27_heavy_hitters",
-      (s, d) =>
-        TermStats.heavyHittersGate(Tables.documents(s, d), "text", 1024)
-          .orderBy("token"),
-      hhGateOracleSql),
-
-    // T27c: the t27 gate as PURE SQL TEXT — the registered
-    // graft_freq_sketch aggregate + graft_freq_items decode (the s5l/x12c
-    // lift applied to the sketch family); same oracle relation as t27
-    //
-    // the SQL-text form states the same guarantee — identical oracle
-    VerifyRow("t27c_heavy_hitters_sql",
-      (s, d) => {
-        Tables.registerAll(s, d)
-        s.sql(
-          "WITH tok AS (SELECT explode(split(lower(trim(text)), '\\\\s+')) AS token " +
-            "FROM documents), " +
-            "sk AS (SELECT graft_freq_sketch(token, 1024) AS s FROM tok), " +
-            "it AS (SELECT inline(graft_freq_items(s)) FROM sk), " +
-            "n AS (SELECT CAST(count(*) AS DOUBLE) AS N FROM tok), " +
-            "e AS (SELECT token, count(*) AS n_exact FROM tok GROUP BY token) " +
-            "SELECT e.token, e.n_exact, " +
-            "(it.estimate IS NOT NULL AND it.lower <= e.n_exact AND e.n_exact <= it.upper) AS within_tol " +
-            "FROM e CROSS JOIN n LEFT JOIN it ON e.token = it.token " +
-            "WHERE e.n_exact > 0.00341796875 * n.N ORDER BY e.token")
-      },
-      hhGateOracleSql),
-
-    // T27b: the heavy-hitter STATE LIFECYCLE (x10b/x10c applied to the
-    // frequency question) — day-1 builds 3 of 4 shard images to parquet,
-    // day-2 delta-appends the 4th shard's image rows, merge-on-read folds
-    // every image with the sketch's own union; the merged state must
-    // satisfy the t27 guarantee over the FULL corpus
-    //
-    // the lifecycle's merged state must satisfy the same full-corpus
-    // guarantee — identical oracle relation to t27
-    VerifyRow("t27b_heavy_hitter_state",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val srcFile = new java.io.File(s"$d/documents.parquet")
-        val stateDir = s"${scratchDir(d)}/t27b_hh_state_${stageKey(srcFile, "m1024s4")}"
-        if (!new java.io.File(s"$stateDir/_UPDATED").exists()) {
-          TermStats.buildHeavyHitterShardStates(
-            docs.filter(pmod(col("doc_id"), lit(4)) =!= 3), "doc_id", "text",
-            maxMapSize = 1024, shards = 4)
-            .write.mode("overwrite").parquet(s"$stateDir/states")
-          TermStats.buildHeavyHitterShardStates(
-            docs.filter(pmod(col("doc_id"), lit(4)) === 3), "doc_id", "text",
-            maxMapSize = 1024, shards = 4)
-            .write.mode("append").parquet(s"$stateDir/states")
-          new java.io.File(s"$stateDir/_UPDATED").createNewFile()
-        }
-        TermStats.heavyHittersGateFrom(
-          TermStats.mergedHeavyHitters(s.read.parquet(s"$stateDir/states"), 1024),
-          docs, "text", 1024)
-          .orderBy("token")
-      },
-      hhGateOracleSql),
-
-    // T18: cross-document repeated-span coverage — the duplicate-n-gram
-    // fraction gate (boilerplate/templated spam that doc-level dedup and
-    // within-doc repetition both miss): tokens covered by 5-token windows
-    // appearing verbatim in >= 2 distinct documents, exact merged-interval
-    // coverage, all integer arithmetic
-    //
-    // duplicated window = exact 5-token sequence in >= 2 distinct docs
-    // (the oracle groups the window STRINGS; Spark groups their xxhash64 —
-    // the d2/d4 hash-equivalence precedent); coverage = the sorted-starts
-    // merged-interval formula (w for the first start, min(gap, w) after)
-    VerifyRow("t18_dup_spans",
-      (s, d) =>
-        TermStats.duplicateSpanCoverage(Tables.documents(s, d), "doc_id", "text", w = 5)
-          .orderBy("doc_id"),
-      "WITH t AS (SELECT doc_id, list_filter(" +
-        "regexp_split_to_array(lower(trim(text)), '\\s+'), x -> len(x) > 0) AS w " +
-        "FROM documents), " +
-        "n AS (SELECT doc_id, w, len(w)::BIGINT AS n_tokens FROM t), " +
-        "wins AS (SELECT doc_id, n_tokens, unnest(range(0, n_tokens - 4)) AS start, w " +
-        "FROM n WHERE n_tokens >= 5), " +
-        "ws AS (SELECT doc_id, start, " +
-        "array_to_string(w[start + 1 : start + 5], ' ') AS win FROM wins), " +
-        "dup AS (SELECT win FROM ws GROUP BY win HAVING count(DISTINCT doc_id) >= 2), " +
-        "ds AS (SELECT doc_id, start, " +
-        "lag(start) OVER (PARTITION BY doc_id ORDER BY start) AS prev " +
-        "FROM ws JOIN dup USING (win)), " +
-        "cov AS (SELECT doc_id, sum(CASE WHEN prev IS NULL THEN 5 " +
-        "ELSE least(start - prev, 5) END)::BIGINT AS dup_tokens FROM ds GROUP BY doc_id) " +
-        "SELECT n.doc_id, n.n_tokens, coalesce(c.dup_tokens, 0)::BIGINT AS dup_tokens, " +
-        "round(coalesce(c.dup_tokens, 0)::DOUBLE / greatest(n.n_tokens, 1), 6) AS dup_frac " +
-        "FROM n LEFT JOIN cov c USING (doc_id) ORDER BY doc_id"),
-
-    // T19: span scrubbing — the transform t18 measures: remove every token
-    // covered by a cross-doc duplicated 5-token window, md5-pin the
-    // scrubbed text (survivors in original order); fully-duplicated docs
-    // keep 0 tokens but keep their row
-    //
-    // t18's duplicated windows, then the SCRUB: anti-join covered
-    // positions (dup starts exploded w wide) against token positions,
-    // re-join survivors in order, md5 the scrubbed text. Parallel unnest
-    // zips (token, position); string_agg ORDER BY pins the join order.
-    VerifyRow("t19_span_scrub",
-      (s, d) =>
-        TermStats.scrubDuplicateSpans(Tables.documents(s, d), "doc_id", "text", w = 5)
-          .orderBy("doc_id"),
-      "WITH t AS (SELECT doc_id, list_filter(" +
-        "regexp_split_to_array(lower(trim(text)), '\\s+'), x -> len(x) > 0) AS w " +
-        "FROM documents), " +
-        "n AS (SELECT doc_id, w, len(w)::BIGINT AS n_tokens FROM t), " +
-        "wins AS (SELECT doc_id, n_tokens, unnest(range(0, n_tokens - 4)) AS start, w " +
-        "FROM n WHERE n_tokens >= 5), " +
-        "ws AS (SELECT doc_id, start, " +
-        "array_to_string(w[start + 1 : start + 5], ' ') AS win FROM wins), " +
-        "dup AS (SELECT win FROM ws GROUP BY win HAVING count(DISTINCT doc_id) >= 2), " +
-        "ds AS (SELECT DISTINCT doc_id, start FROM ws JOIN dup USING (win)), " +
-        "covered AS (SELECT DISTINCT doc_id, start + r.range AS pos " +
-        "FROM ds CROSS JOIN range(0, 5) r), " +
-        "toks AS (SELECT doc_id, unnest(w) AS tok, " +
-        "unnest(range(0, len(w))) AS pos FROM n), " +
-        "kept AS (SELECT tk.doc_id, tk.pos, tk.tok FROM toks tk " +
-        "LEFT JOIN covered c ON tk.doc_id = c.doc_id AND tk.pos = c.pos " +
-        "WHERE c.pos IS NULL), " +
-        "agg AS (SELECT doc_id, count(*)::BIGINT AS kept_tokens, " +
-        "md5(string_agg(tok, ' ' ORDER BY pos)) AS cleaned_md5 " +
-        "FROM kept GROUP BY doc_id) " +
-        "SELECT n.doc_id, n.n_tokens, coalesce(a.kept_tokens, 0)::BIGINT AS kept_tokens, " +
-        "coalesce(a.cleaned_md5, md5('')) AS cleaned_md5 " +
-        "FROM n LEFT JOIN agg a USING (doc_id) ORDER BY doc_id"),
-
-    // T11: unigram-LM corpus-frequency score (CCNet-style head/middle/tail
-    // quality bucketing proxy) — integer-exact mean token frequency
-    VerifyRow("t11_unigram_lm",
-      (s, d) =>
-        TermStats.unigramLmScore(Tables.documents(s, d), "doc_id", "text")
-          .orderBy("doc_id"),
-      "WITH toks AS (SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term " +
-        "FROM documents), " +
-        "vocab AS (SELECT term, count(*) AS n FROM toks GROUP BY term) " +
-        "SELECT t.doc_id, round(avg(v.n), 4) AS lm_score FROM toks t JOIN vocab v USING (term) " +
-        "GROUP BY t.doc_id ORDER BY t.doc_id"),
-
-    // T22: bigram fluency — per-doc mean corpus frequency of its adjacent
-    // token pairs (order-sensitive: scrambled text scores low even when
-    // its words are common); <2-token docs → null
-    //
-    // adjacent-pair frequencies over the same lower/trim/split words;
-    // <2-token docs left-join to null
-    VerifyRow("t22_bigram_lm",
-      (s, d) =>
-        TermStats.bigramLmScore(Tables.documents(s, d), "doc_id", "text")
-          .orderBy("doc_id"),
-      "WITH w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws " +
-        "FROM documents), " +
-        "bg AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 1), " +
-        "i -> ws[i] || ' ' || ws[i+1])) AS b FROM w WHERE len(ws) >= 2), " +
-        "v AS (SELECT b, count(*)::BIGINT AS n FROM bg GROUP BY b), " +
-        "s AS (SELECT bg.doc_id, round(avg(v.n), 4) AS lm2_score " +
-        "FROM bg JOIN v USING (b) GROUP BY bg.doc_id) " +
-        "SELECT d.doc_id, s.lm2_score FROM documents d LEFT JOIN s USING (doc_id) " +
-        "ORDER BY d.doc_id"),
 
     // T23: hashed-feature linear quality score (fasttext-filter shape) —
     // token → md5 bucket → weight-vector fold, all per-row narrow
@@ -779,42 +460,6 @@ private[verify] object CorpusRows {
         "round(sum(o_totalprice) OVER (PARTITION BY o_custkey " +
         "ORDER BY o_orderdate, o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) " +
         "AS running_spend FROM orders ORDER BY o_custkey, o_orderkey"),
-
-    // T15: document chunking — 120-char windows with 20-char overlap;
-    // md5 of each chunk keeps the row compact while pinning content exactly
-    //
-    // mirrors chunkByChars: stride walk capped at len-overlap, 1-based substr
-    VerifyRow("t15_chunking",
-      (s, d) =>
-        Chunking.chunkByChars(Tables.documents(s, d), "doc_id", "text", 120, 20)
-          .select(col("doc_id"), col("chunk_id"), col("chunk_start"),
-            col("chunk_chars"), md5(col("chunk")).as("chunk_md5"))
-          .orderBy("doc_id", "chunk_id"),
-      "SELECT doc_id, (s - 1) // 100 AS chunk_id, s::BIGINT AS chunk_start, " +
-        "len(substr(text, s, 120))::BIGINT AS chunk_chars, md5(substr(text, s, 120)) AS chunk_md5 " +
-        "FROM (SELECT doc_id, text, unnest(range(1, greatest(len(text) - 20, 1) + 1, 100)) AS s " +
-        "FROM documents WHERE len(text) > 0) ORDER BY doc_id, chunk_id"),
-
-    // T15b: token-budget chunking — 40-token windows, 8-token overlap
-    // (stride 32); the context-window form of t15
-    //
-    // token stride walk; DuckDB bracket slices are 1-based stop-inclusive,
-    // mirroring Spark's slice(arr, start, length)
-    VerifyRow("t15b_chunk_tokens",
-      (s, d) =>
-        Chunking.chunkByTokens(Tables.documents(s, d), "doc_id", "text", 40, 8)
-          .select(col("doc_id"), col("chunk_id"), col("tok_start"), col("n_tokens"),
-            md5(col("chunk")).as("chunk_md5"))
-          .orderBy("doc_id", "chunk_id"),
-      "WITH w AS (SELECT doc_id, " +
-        "list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> len(x) > 0) AS words " +
-        "FROM documents), " +
-        "b AS (SELECT doc_id, words, len(words) AS n, " +
-        "unnest(range(1, greatest(len(words) - 8, 1) + 1, 32)) AS s FROM w WHERE len(words) > 0) " +
-        "SELECT doc_id, (s - 1) // 32 AS chunk_id, s::BIGINT AS tok_start, " +
-        "least(n - s + 1, 40)::BIGINT AS n_tokens, " +
-        "md5(array_to_string(words[s : s + 39], ' ')) AS chunk_md5 " +
-        "FROM b ORDER BY doc_id, chunk_id"),
 
     // X6: z-score standardization — one moments pass broadcast back onto
     // a narrow projection; round-4 moments = the cross-engine bit-stable
@@ -994,45 +639,6 @@ private[verify] object CorpusRows {
         "THEN (d.l_quantity - d.med) / (1.4826 * m.mad) END, 4) + 0.0 AS mad_z " +
         "FROM dev d JOIN mad m USING (l_returnflag) " +
         "ORDER BY d.l_orderkey, d.l_linenumber"),
-
-    // X12: semi-structured extraction — lift a typed field out of the
-    // events JSON props blob with an EXPLICIT schema (from_json, narrow,
-    // no inference job) and aggregate it; count(k) vs count(*) is the
-    // parse-success census the PERMISSIVE contract makes meaningful
-    VerifyRow("x12_json_extract",
-      (s, d) =>
-        SemiStructured.extractJson(
-            Tables.events(s, d).select("event_type", "props"),
-            "props", StructType(Seq(StructField("k", LongType))))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n_events"), count(col("k")).as("n_k"),
-            sum("k").as("sum_k"), min("k").as("min_k"), max("k").as("max_k"))
-          .orderBy("event_type"),
-      x12OracleSql),
-
-    // X12b: nested/array JSON round-trip — to_json packs a struct with an
-    // ARRAY field, extractJson lifts it back against the declared nested
-    // schema; the oracle recomputes the fields straight from the table, so
-    // serialize→parse must be lossless for strings and string arrays
-    //
-    // the round-trip oracle: fields recomputed straight from the table —
-    // Spark's serialize→parse must land on the same values
-    VerifyRow("x12b_json_nested",
-      (s, d) => {
-        val packed = Tables.documents(s, d)
-          .select(col("doc_id"),
-            to_json(struct(col("lang"),
-              split(trim(col("text")), "\\s+").as("words"))).as("blob"))
-        SemiStructured.extractJson(packed, "blob", StructType(Seq(
-            StructField("lang", StringType),
-            StructField("words", ArrayType(StringType)))))
-          .select(col("doc_id"), col("lang"),
-            size(col("words")).cast("long").as("n_words"))
-          .orderBy("doc_id")
-      },
-      "SELECT doc_id, lang, " +
-        "len(regexp_split_to_array(trim(text), '\\s+'))::BIGINT AS n_words " +
-        "FROM documents ORDER BY doc_id"),
 
     // X9: single-pass data-quality expectations — the ingest gate. Five
     // rules (three row predicates, two uniqueness checks) fold into ONE
@@ -1327,12 +933,10 @@ private[verify] object CorpusRows {
       },
       s5kOracleSql),
 
-    // X12c: the x12 JSON lift as PURE SQL TEXT — from_json with a DDL
-    // schema string on the events view (the SQL spelling of extractJson's
-    // declared-schema contract; same PERMISSIVE null-on-malformed)
-    //
-    // the SQL-text twin (from_json with a DDL schema string) computes the
-    // identical relation
+    // X12c: a typed JSON lift as PURE SQL TEXT — from_json with a DDL
+    // schema string on the events view: a declared schema (no inference
+    // job) and PERMISSIVE null-on-malformed, so count(k) vs count(*) is
+    // the parse-success census
     VerifyRow("x12c_json_sql",
       (s, d) => {
         Tables.registerAll(s, d)

@@ -405,38 +405,6 @@ private[verify] object OracleSql {
       arms + " ORDER BY target_mean_cell"
   }
 
-  /** The t17 query's fixed term set — shared by the Spark row and the
-    * oracle builder so they can never drift.
-    */
-  val Bm25Terms = Seq("spark", "vector", "merge")
-
-  /** DuckDB rendition of [[graft.operators.TermStats.bm25]], constants
-    * interpolated from the SAME Scala doubles the Spark expression uses
-    * (shortest-repr `toString` round-trips exactly), per-term conditional
-    * sums added in the same fixed order.
-    */
-  def bm25OracleSql(terms: Seq[String], k1: Double, b: Double): String = {
-    val inList = terms.map(t => s"'$t'").mkString(", ")
-    val sums = terms.zipWithIndex.map { case (t, i) =>
-      s"sum(CASE WHEN term = '$t' THEN cell ELSE 0.0 END) AS s$i"
-    }.mkString(", ")
-    val total = terms.indices.map(i => s"s$i").mkString(" + ")
-    "WITH toks AS (SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term FROM documents), " +
-      "tk AS (SELECT doc_id, term FROM toks WHERE len(term) > 0), " +
-      "dl AS (SELECT d.doc_id, count(t.term)::BIGINT AS dl FROM documents d " +
-      "LEFT JOIN tk t USING (doc_id) GROUP BY d.doc_id), " +
-      "st AS (SELECT count(*)::DOUBLE AS n, sum(dl)::DOUBLE AS tot FROM dl), " +
-      s"tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM tk WHERE term IN ($inList) GROUP BY doc_id, term), " +
-      "dfx AS (SELECT term, count(*)::DOUBLE AS df FROM tf GROUP BY term), " +
-      "cells AS (SELECT tf.doc_id, tf.term, " +
-      s"ln((st.n - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0) * (tf.tf::DOUBLE * ${(k1 + 1).toString}) / " +
-      s"(tf.tf::DOUBLE + ${k1.toString} * (${(1 - b).toString} + ${b.toString} * dl.dl::DOUBLE / (st.tot / st.n))) AS cell " +
-      "FROM tf JOIN dfx USING (term) JOIN dl USING (doc_id) CROSS JOIN st), " +
-      s"ps AS (SELECT doc_id, $sums FROM cells GROUP BY doc_id) " +
-      s"SELECT dl.doc_id, dl.dl, round(coalesce($total, 0.0), 4) AS bm25 " +
-      "FROM dl LEFT JOIN ps USING (doc_id) ORDER BY doc_id"
-  }
-
   /** As-of-join oracle (union-merge in SQL) — shared by j3_asof_join and
     * j3b_asof_bucketed: the bucketed two-pass variant must reproduce the
     * same relation bit for bit.
@@ -512,20 +480,6 @@ private[verify] object OracleSql {
       s"HAVING round(count(*)::DOUBLE / (any_value(a.n_sh) + any_value(b.n_sh) - count(*)), 6) >= $th"
 
   val bigramJaccardSql: String = bigramJaccardSqlOver("documents", 0.1)
-
-  /** Shared by t27 / t27b / t27c / e10 — four gates over the SAME
-    * heavy-hitter guarantee (direct, materialized-state, SQL-text,
-    * streamed-state); one string so the epsilon literal can never
-    * diverge between siblings. 0.00341796875 = 3.5/1024, the sketch's
-    * own a-priori constant (spec-pinned against FreqItems.epsilon).
-    */
-  val hhGateOracleSql: String =
-    "WITH tok AS (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token " +
-      "FROM documents), " +
-      "n AS (SELECT count(*)::DOUBLE AS N FROM tok), " +
-      "e AS (SELECT token, count(*)::BIGINT AS n_exact FROM tok GROUP BY token) " +
-      "SELECT token, n_exact, TRUE AS within_tol FROM e, n " +
-      "WHERE n_exact > 0.00341796875 * N ORDER BY token"
 
   /** Shared by d2f / d2g — the exact all-pairs relation over the
     * dup-injected fixture both rows use (the auto entry is
@@ -608,10 +562,10 @@ private[verify] object OracleSql {
       "WHEN 'src2' THEN 10000 ELSE -1 END " +
       "ORDER BY doc_id"
 
-  /** The x12 JSON-lift oracle — DuckDB's NATIVE json path, faithful to
+  /** The x12c JSON-lift oracle — DuckDB's NATIVE json path, faithful to
     * from_json(LongType) on every regime (malformed → NULL via
     * json_valid; nested $.k absent → NULL; float → json_type DOUBLE →
-    * NULL). Shared by the typed row (x12) and the SQL-text row (x12c).
+    * NULL).
     */
   val x12OracleSql: String =
     "SELECT event_type, count(*) AS n_events, count(k) AS n_k, " +

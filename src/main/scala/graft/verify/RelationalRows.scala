@@ -1,7 +1,6 @@
 package graft
 package verify
 
-import graft.functions.Text
 import graft.operators._
 import graft.sources.{CsvSource, JsonlSource, ParquetSink}
 import org.apache.spark.sql.functions._
@@ -110,51 +109,6 @@ private[verify] object RelationalRows {
       "SELECT doc_id, text, CASE WHEN doc_id % 2 = 1 " +
         "THEN round(n_chars / 100.0, 4) + 0.0 END AS quality " +
         "FROM documents ORDER BY doc_id"),
-
-    // S10: ORC round-trip — Spark's second first-class columnar format
-    // (in-core, no extra jar); the relation must hash-match the parquet
-    // original, proving format choice changes bytes on disk, not data
-    //
-    // format round trips: the oracle is the ORIGINAL relation — the format
-    // may only change bytes on disk, never data
-    VerifyRow("s10_orc_roundtrip",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val orcDir = s"${scratchDir(d)}/orc_documents"
-        sources.ColumnarSource.writeOrcSharded(docs, orcDir, "doc_id", 4)
-        sources.ColumnarSource.readOrc(s, orcDir)
-          .select("doc_id", "text", "lang", "source", "n_chars")
-          .orderBy("doc_id")
-      },
-      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"),
-
-    // S11: raw text-lines round-trip — the rawest LLM-corpus shape (one
-    // doc per line, .txt shards). Restricted to newline-free docs on BOTH
-    // sides (a newline would split a document; writeTextLines documents
-    // the constraint), result is the line multiset
-    VerifyRow("s11_text_roundtrip",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-          .filter(!col("text").contains("\n") && !col("text").contains("\r"))
-        val txtDir = s"${scratchDir(d)}/text_documents"
-        sources.ColumnarSource.writeTextLines(docs, "text", txtDir, 4)
-        sources.ColumnarSource.readTextLines(s, txtDir).orderBy("value")
-      },
-      "SELECT text AS value FROM documents " +
-        "WHERE position(chr(10) IN text) = 0 AND position(chr(13) IN text) = 0 ORDER BY value"),
-
-    // S12: zstd-parquet round-trip — codec control for the archival tier;
-    // a pure physical property, the relation is unchanged
-    VerifyRow("s12_zstd_roundtrip",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val zDir = s"${scratchDir(d)}/zstd_documents"
-        sources.ColumnarSource.writeParquetCodec(docs, zDir, "doc_id", 4, "zstd")
-        s.read.parquet(zDir)
-          .select("doc_id", "text", "lang", "source", "n_chars")
-          .orderBy("doc_id")
-      },
-      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"),
 
     // S6: JSONL round-trip — documents → hash-sharded .jsonl → explicit-
     // schema read-back; must hash-match the parquet original (JSON
@@ -760,29 +714,6 @@ private[verify] object RelationalRows {
         "CAST(((sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id " +
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) - n_tokens) AS BIGINT) // 2048 AS bin " +
         "FROM final ORDER BY doc_id"),
-
-    // CHAIN: chunk → fingerprint → per-source dedup stats — the RAG/
-    // context-window preparation funnel (how much of each source's chunked
-    // text is redundant?). Narrow chunking feeds a map-side-combined
-    // count/distinct keyed by source.
-    //
-    // t15's stride walk (300/50 → stride 250) + d1's fingerprint recipe
-    VerifyRow("q_chunk_chain",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val chunks = Chunking.chunkByChars(docs, "doc_id", "text", 300, 50)
-          .join(docs.select("doc_id", "source"), "doc_id")
-        chunks.select(col("source"), Text.fingerprint(col("chunk")).as("f"))
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_chunks"), countDistinct(col("f")).as("n_unique"))
-          .orderBy("source")
-      },
-      "WITH ch AS (SELECT doc_id, substr(text, s, 300) AS chunk " +
-        "FROM (SELECT doc_id, text, unnest(range(1, greatest(len(text) - 50, 1) + 1, 250)) AS s " +
-        "FROM documents WHERE len(text) > 0)) " +
-        "SELECT d.source, count(*) AS n_chunks, " +
-        "count(DISTINCT md5(regexp_replace(lower(ch.chunk), '[^a-z0-9]', '', 'g'))) AS n_unique " +
-        "FROM ch JOIN documents d USING (doc_id) GROUP BY d.source ORDER BY d.source"),
 
     // G3 arbitrary-function aggregate surface: typed Aggregator (order-
     // independent example fns so the oracle compare is exact)

@@ -480,40 +480,6 @@ private[verify] object StreamIndexRows {
       },
       d8OracleSql),
 
-    // E10: streaming maintenance of the heavy-hitter state — docs staged
-    // as 4 files replayed one per micro-batch (maxFilesPerTrigger=1), each
-    // batch delta-appends its shard images, and the merged state must
-    // satisfy the t27 full-corpus guarantee: the sketch union's bound is
-    // associative over ANY batch split, which is exactly what this gates
-    //
-    // the streamed state must satisfy the same full-corpus guarantee
-    VerifyRow("e10_stream_heavy_hitters",
-      (s, d) => {
-        val docs = Tables.documents(s, d)
-        val srcFile = new java.io.File(s"$d/documents.parquet")
-        val stageDir = s"${scratchDir(d)}/e10_docs_${stageKey(srcFile, "seg4")}"
-        if (!new java.io.File(s"$stageDir/_SUCCESS").exists()) {
-          docs.select("doc_id", "text")
-            .repartition(4, pmod(col("doc_id"), lit(4)))
-            .write.mode("overwrite").parquet(stageDir)
-        }
-        val stateDir = s"${scratchDir(d)}/e10_hh_state_${stageKey(srcFile, "m1024s4b")}"
-        if (!new java.io.File(s"$stateDir/_DONE").exists()) {
-          val schema = s.read.parquet(stageDir).schema
-          val src = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(stageDir)
-          StreamOps.maintainHeavyHitterState(src, "doc_id", "text",
-            maxMapSize = 1024, shards = 4,
-            statePath = s"$stateDir/states", checkpointPath = s"$stateDir/ckpt")
-          new java.io.File(s"$stateDir/_DONE").createNewFile()
-        }
-        TermStats.heavyHittersGateFrom(
-          TermStats.mergedHeavyHitters(s.read.parquet(s"$stateDir/states"), 1024),
-          docs, "text", 1024)
-          .orderBy("token")
-      },
-      hhGateOracleSql),
-
     // E7b: the streaming ingest loop ACROSS the day boundary — the cadence
     // a production pipeline actually runs: stream-replay segment 1 against
     // the day-1 index, fold the survivors in via FingerprintIndex.append

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{Dedup, TermStats}
+import graft.operators.Dedup
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -49,10 +49,10 @@ class CachesSpec extends SparkTestBase {
     val s2 = Session.tune(spark.newSession())
     // distinct inputs: sessions share one cache manager, so the same plan
     // persisted in both would be one cache entry
-    TermStats.distinctiveTerms(Tables.documents(spark, sf).limit(40),
-      "doc_id", "text", k = 2).count()
-    TermStats.distinctiveTerms(Tables.documents(s2, sf).limit(30),
-      "doc_id", "text", k = 2).count()
+    Dedup.minhashNearDups(Tables.documents(spark, sf).limit(40),
+      "doc_id", "text", threshold = 0.5).count()
+    Dedup.minhashNearDups(Tables.documents(s2, sf).limit(30),
+      "doc_id", "text", threshold = 0.5).count()
     assert(Caches.outstanding(s2) > 0, "the s2 call must register its loan")
     assert(Caches.outstanding(spark) > 0, "the spark call must register its loan")
 

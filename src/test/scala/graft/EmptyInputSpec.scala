@@ -18,8 +18,6 @@ class EmptyInputSpec extends SparkTestBase {
     val km = Similarity.kmeansAssign(emptyVecs, "vec_id", "embedding", dim = 4, k = 2, iters = 2)
     assert(km.columns.contains("cell") && km.count() == 0)
     assert(Similarity.quantizedTopK(emptyVecs, emptyVecs, "vec_id", "embedding", 5).count() == 0)
-    assert(TermStats.distinctiveTerms(emptyDocs, "doc_id", "text", 3).count() == 0)
-    assert(TermStats.unigramLmScore(emptyDocs, "doc_id", "text").count() == 0)
     assert(Dedup.decontaminationPairs(emptyDocs, emptyDocs, "doc_id", "text", 3, 0.5, 50).count() == 0)
     assert(Dedup.exactIncremental(emptyDocs, emptyDocs, "doc_id", "text").count() == 0)
     val emptyNums = Seq.empty[Double].toDF("v")
@@ -32,9 +30,6 @@ class EmptyInputSpec extends SparkTestBase {
   }
 
   test("round-6 additions: empty inputs degrade to empty/zero, never throw") {
-    // BM25 over an empty corpus: no rows, schema intact (N=0 never divides)
-    val bm = TermStats.bm25(emptyDocs, "doc_id", "text", Seq("spark"))
-    assert(bm.columns.toSeq == Seq("doc_id", "dl", "bm25") && bm.count() == 0)
     // incremental minhash: empty batch and/or empty corpus
     assert(Dedup.minhashIncremental(emptyDocs, emptyDocs, "doc_id", "text", 0.5).count() == 0)
     // built-in session_window over no events
@@ -43,10 +38,6 @@ class EmptyInputSpec extends SparkTestBase {
   }
 
   test("round-7 additions: empty inputs degrade to empty/zero, never throw") {
-    // duplicate-span coverage: empty corpus -> no rows, schema intact
-    val ds = TermStats.duplicateSpanCoverage(emptyDocs, "doc_id", "text", 5)
-    assert(ds.columns.toSeq == Seq("doc_id", "n_tokens", "dup_tokens", "dup_frac") &&
-      ds.count() == 0)
     // materialized indexes built over an empty corpus: empty frames with
     // the right schemas, and probes against them keep the whole batch
     val batch = Seq((1L, "some new document text here")).toDF("doc_id", "text")
@@ -151,13 +142,6 @@ class EmptyInputSpec extends SparkTestBase {
   }
 
   test("round-9 additions: empty inputs degrade to empty/zero, never throw") {
-    // bigram LM over an empty corpus: no rows, schema intact
-    val bg = TermStats.bigramLmScore(emptyDocs, "doc_id", "text")
-    assert(bg.columns.toSeq == Seq("doc_id", "lm2_score") && bg.count() == 0)
-    // single-token corpus: every row survives with a null score
-    val one = Seq((1L, "solo")).toDF("doc_id", "text")
-    val bg1 = TermStats.bigramLmScore(one, "doc_id", "text").collect()
-    assert(bg1.length == 1 && bg1(0).isNullAt(1))
     // hashed linear scorer over an empty frame: no rows, no throw
     assert(emptyDocs.select(Text.hashedLinearScore(col("text"))).count() == 0)
     // snapshot diff: empty vs empty, empty vs non-empty (all added/removed)
@@ -220,16 +204,6 @@ class EmptyInputSpec extends SparkTestBase {
     assert(operators.Retrieval.rrfFuse(Seq(ranked, ranked), "id").count() == 0)
   }
 
-  test("round-11 additions: empty inputs degrade to empty/zero, never throw") {
-    // JSON extraction over an empty frame: no rows, lifted schema intact
-    val emptyProps = Seq.empty[(Long, String)].toDF("id", "props")
-    val out = SemiStructured.extractJson(emptyProps, "props",
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.LongType))))
-    assert(out.columns.toSeq == Seq("id", "k") && out.count() == 0)
-  }
-
   test("round-13 late additions (s5p/x14/t27/d4e): empty inputs degrade to empty, never throw") {
     val emptySrc = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source")
     // the mixing solver: empty corpus -> empty plan, schema intact
@@ -240,13 +214,6 @@ class EmptyInputSpec extends SparkTestBase {
     // the dataset card
     val card = Analytics.corpusReport(emptySrc, "text", "source")
     assert(card.columns.contains("dup_frac") && card.count() == 0)
-    // heavy hitters: the global sketch row exists but decodes to no items
-    assert(TermStats.heavyHitters(emptySrc, "text", 16).count() == 0)
-    assert(TermStats.heavyHittersGate(emptySrc, "text", 16).count() == 0)
-    val states = TermStats.buildHeavyHitterShardStates(emptySrc, "doc_id",
-      "text", 16, shards = 2)
-    assert(states.count() == 0)
-    assert(TermStats.mergedHeavyHitters(states, 16).count() == 0)
     // the sampled df diagnostic
     assert(Dedup.shingleDfStatsSampled(emptySrc, "doc_id", "text", 3,
       rate = 0.25).count() == 0)
@@ -257,11 +224,6 @@ class EmptyInputSpec extends SparkTestBase {
   }
 
   test("round-16 additions: empty inputs degrade to empty/zero, never throw") {
-    // span scrub over no docs: schema intact, zero rows (the priced
-    // tokenVolume is 0 -> widths floor at defaultParallelism, no divide)
-    val sc = TermStats.scrubDuplicateSpans(emptyDocs, "doc_id", "text", 5)
-    assert(sc.columns.toSeq == Seq("doc_id", "n_tokens", "kept_tokens", "cleaned_md5") &&
-      sc.count() == 0)
     // the gated embedding LSH branches with an empty corpus: the gate's
     // pairCost/allPairs are both 0 -> banded branch over nothing
     val emptyVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")

@@ -203,14 +203,6 @@ class PlanSpec extends SparkTestBase {
       s"expected partial+final moment phases in:\n$p")
   }
 
-  test("chunking is narrow — the explode is the fan-out, no exchange (T15)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val p = plan(Chunking.chunkByChars(docs, "doc_id", "text", 120, 20))
-    assert(!p.contains("Exchange"), s"chunking must not shuffle:\n$p")
-    assert(p.contains("Generate") && p.contains("explode"),
-      s"expected the stride-walk explode in:\n$p")
-  }
-
   test("runningTotal plans exactly one exchange (group co-location) (A21)") {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     val p = plan(Analytics.runningTotal(orders, Seq("o_custkey"),
@@ -434,47 +426,6 @@ class PlanSpec extends SparkTestBase {
       s"the SQL probe must scan the saved index:\n$p")
   }
 
-  test("bm25: ZERO corpus exchanges — dl/tf are narrow array projections, stats broadcast back (T17)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val p = plan(TermStats.bm25(docs, "doc_id", "text", Seq("spark", "vector")))
-    assert(!p.contains("hashpartitioning"),
-      s"the corpus must never hash-exchange — only the 1-row stats reduction:\n$p")
-    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin") &&
-      !p.contains("BroadcastHashJoin"),
-      s"no keyed joins at all — the stats row rides a broadcast cross:\n$p")
-    assert(p.contains("BroadcastNestedLoopJoin"),
-      s"expected the 1-row stats broadcast cross in:\n$p")
-  }
-
-  test("distinctiveTerms: the corpus is tokenized and exchanged ONCE — df reads the tf cache (T10)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val p = plan(TermStats.distinctiveTerms(docs, "doc_id", "text", 3))
-    // both the score join and the df aggregate must read the persisted
-    // tf frame — never re-tokenize the corpus (the pre-r7 distinct-based
-    // df paid a second full scan + (doc, term) exchange)
-    assert("InMemoryTableScan".r.findAllIn(p).length >= 2,
-      s"both plan positions must read the tf cache:\n$p")
-    // the detail section prints each physical node ONCE by id: the two
-    // InMemoryRelations must share one cached subtree, so the (doc, term)
-    // corpus exchange (and with it the tokenize + scan) appears exactly once
-    assert("Arguments: hashpartitioning\\(doc_id[^)]*term".r.findAllIn(p).length == 1,
-      s"exactly one (doc, term) corpus exchange — shared via the tf cache:\n$p")
-  }
-
-  test("duplicate-span family: hash-keyed equi-plans only, distinct-doc count partial-aggregates (T18/T19)") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    Seq(plan(TermStats.duplicateSpanCoverage(docs, "doc_id", "text", 5)),
-        plan(TermStats.scrubDuplicateSpans(docs, "doc_id", "text", 5)))
-      .foreach { p =>
-        // windows join back by 8-byte hash / (id, pos) — never all-pairs
-        assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-          s"span family must stay equi-joined:\n$p")
-        // the (whash, doc) distinct-doc count must partial-aggregate
-        assert("HashAggregate".r.findAllIn(p).length >= 2,
-          s"expected partial+final count phases in:\n$p")
-      }
-  }
-
   test("bucketed snapshot diff: ZERO exchanges — the full-outer merges the bucketed scans directly (X8b)") {
     val docs = spark.range(1000)
       .select(col("id").as("doc_id"), concat(lit("doc "), col("id")).as("text"))
@@ -635,7 +586,19 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("hybrid RRF: each candidate list is a TakeOrdered heap, never a global sort (H1)") {
-    val p = plan(VerifyRows("h1_hybrid_rrf").run(spark, sf))
+    // a lexical list (per-doc hits of one term) and a cosine-to-vec_id-0
+    // list, fused by reciprocal rank
+    val hits = Tables.documents(spark, sf).select(col("doc_id"),
+      size(filter(split(lower(trim(col("text"))), "\\s+"), w => w === "spark"))
+        .cast("double").as("hits"))
+      .filter(col("hits") > 0)
+    val emb = Tables.embeddings(spark, sf)
+    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("_q"))
+    val cos = emb.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
+      .select(col("vec_id").as("doc_id"),
+        graft.functions.Vectors.cosine(col("embedding"), col("_q")).as("cosine"))
+    val p = plan(Retrieval.rrfFuse(Seq(Retrieval.topKRanked(hits, "doc_id", "hits", 20),
+      Retrieval.topKRanked(cos, "doc_id", "cosine", 20)), "doc_id", k0 = 60, topK = 10))
     // two candidate lists → two top-k reductions; the only nested-loop is
     // the audited one-row query-vector broadcast
     assert("TakeOrderedAndProject".r.findAllIn(p).length >= 2,
@@ -677,10 +640,5 @@ class PlanSpec extends SparkTestBase {
     // must not appear)
     assert(!optimized.contains("size(array_sort"),
       s"inferred filter re-computes the shingle pipeline:\n${optimized.take(2000)}")
-    // and the tokenizer explode in the t-family term stats
-    val vocab = TermStats.unigramLmScore(docs, "doc_id", "text")
-    val vp = vocab.queryExecution.optimizedPlan.toString
-    assert(!vp.contains("size(split"),
-      s"inferred filter re-computes the token split:\n${vp.take(2000)}")
   }
 }

@@ -125,27 +125,6 @@ class PropertySpec extends SparkTestBase {
     })
   }
 
-  test("chunking reconstructs every document exactly for any chunk/overlap sizes (T15)") {
-    import graft.operators.Chunking
-    val gen = Gen.zip(
-      Gen.nonEmptyListOf(Gen.alphaNumStr.suchThat(_.nonEmpty)),
-      Gen.choose(2, 12), Gen.choose(0, 1))
-    check("chunk-rebuild", Prop.forAll(gen) { case (texts, chunk, ovFlag) =>
-      val overlap = math.min(ovFlag * (chunk / 2), chunk - 1)
-      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-      val chunks = Chunking.chunkByChars(df, "doc_id", "text", chunk, overlap)
-        .select("doc_id", "chunk_id", "chunk")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-        .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
-      texts.zipWithIndex.forall { case (t, i) =>
-        val cs = chunks.getOrElse(i.toLong, Seq.empty)
-        val rebuilt =
-          if (cs.isEmpty) "" else cs.head + cs.tail.map(_.drop(overlap)).mkString
-        rebuilt == t
-      }
-    }, samples = 4)
-  }
-
   test("weightedSample yield is monotone in rate and a subset at lower rates (S5g)") {
     import graft.operators.Sampling
     check("weighted-monotone", Prop.forAll(
@@ -155,36 +134,6 @@ class PropertySpec extends SparkTestBase {
         .select("id").as[Long].collect().toSet
       val lo = kept(0.2); val hi = kept(0.8)
       lo.subsetOf(hi) // each row's threshold grows with rate; its coin is fixed
-    }, samples = 4)
-  }
-
-  test("bm25 equals a driver-side reference implementation on random corpora (T17)") {
-    import graft.operators.TermStats
-    val wordGen = Gen.oneOf("spark", "scan", "join", "vector", "batch", "row")
-    check("bm25-reference", Prop.forAll(
-      Gen.nonEmptyListOf(Gen.listOf(wordGen))) { docsWords =>
-      val docs = docsWords.zipWithIndex
-        .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toDF("doc_id", "text")
-      val terms = Seq("spark", "vector")
-      val got = TermStats.bm25(docs, "doc_id", "text", terms)
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-      // reference: direct Okapi computation over the same token model
-      val toks = docsWords.map(_.filter(_.nonEmpty))
-      val n = toks.size.toDouble
-      val avgdl = toks.map(_.size.toLong).sum.toDouble / n
-      val dfs = terms.map(t => t -> toks.count(_.contains(t)).toDouble).toMap
-      def cell(tf: Double, dl: Double, dfv: Double) =
-        math.log((n - dfv + 0.5) / (dfv + 0.5) + 1.0) * (tf * 2.2) /
-          (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
-      toks.zipWithIndex.forall { case (ws, i) =>
-        val dl = ws.size.toLong
-        val want = terms.map { t =>
-          val tf = ws.count(_ == t).toDouble
-          if (tf > 0) cell(tf, dl.toDouble, dfs(t)) else 0.0
-        }.sum
-        val (gdl, gscore) = got(i.toLong)
-        gdl == dl && math.abs(gscore - want) < 1e-4 + 1e-9
-      }
     }, samples = 4)
   }
 
@@ -265,21 +214,6 @@ class PropertySpec extends SparkTestBase {
     }, samples = 5)
   }
 
-  test("pmiCollocations is invariant to document order and partitioning (T25)") {
-    import graft.operators.TermStats
-    val word = Gen.oneOf("a", "b", "c", "d", "xy")
-    check("pmi-permutation", Prop.forAll(
-      Gen.nonEmptyListOf(Gen.nonEmptyListOf(word).map(_.mkString(" ")))) { texts =>
-      val a = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-      val b = texts.reverse.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("id", "text").repartition(4)
-      def run(d: org.apache.spark.sql.DataFrame) =
-        TermStats.pmiCollocations(d, "text", minCount = 1, topN = 100)
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-      run(a) == run(b)
-    }, samples = 4)
-  }
-
   test("agg-state merge over ANY batch partitioning bit-equals the full recompute (X10)") {
     check("state-merge-recompute", Prop.forAll(
       Gen.nonEmptyListOf(Gen.zip(Gen.choose(0, 3), Gen.choose(-1e6, 1e6), Gen.choose(0, 2)))) { xs =>
@@ -310,37 +244,5 @@ class PropertySpec extends SparkTestBase {
       }.sortBy { case (id, s, _) => (-s, id) }
       got == want
     }, samples = 5)
-  }
-
-  test("freq-sketch honors its published bound for ANY corpus, partitioning, and sharding (T27)") {
-    import graft.operators.TermStats
-    import graft.functions.FreqItems
-    // skewed vocab: a few heavy tokens + a long tail, random multiplicities
-    val docGen = Gen.nonEmptyListOf(Gen.frequency(
-      (4, Gen.oneOf("h0", "h1", "h2")),
-      (3, Gen.choose(0, 200).map(i => s"r$i"))))
-    check("freq-sketch-bound", Prop.forAll(
-      Gen.nonEmptyListOf(docGen), Gen.choose(2, 9)) { (docs, parts) =>
-      val df = docs.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
-        .toDF("doc_id", "text").repartition(parts)
-      val exact = docs.flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      val n = exact.values.sum.toDouble
-      val m = 16
-      def holds(items: Map[String, (Long, Long, Long)]): Boolean = {
-        val noFalseNeg = exact.filter(_._2 > FreqItems.epsilon(m) * n)
-          .keys.forall(items.contains)
-        val bracketed = items.forall { case (t, (_, lb, ub)) =>
-          val tru = exact.getOrElse(t, 0L); lb <= tru && tru <= ub
-        }
-        noFalseNeg && bracketed
-      }
-      val direct = TermStats.heavyHitters(df, "text", m)
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-      // and through the sharded-state lifecycle (build + union)
-      val folded = TermStats.mergedHeavyHitters(
-        TermStats.buildHeavyHitterShardStates(df, "doc_id", "text", m, shards = 3), m)
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-      holds(direct) && holds(folded)
-    }, samples = 4)
   }
 }

@@ -13,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class VerifyRowsSpec extends AnyFunSuite {
 
-  test("the 229 Verify row names are unique") {
+  test("the 206 Verify row names are unique") {
     val names = VerifyRows.all.map(_.name)
     val dups = names.diff(names.distinct).distinct
     assert(dups.isEmpty, s"row names declared twice: ${dups.sorted}")
-    assert(names.size == 229, s"expected 229 rows, got ${names.size}")
+    assert(names.size == 206, s"expected 206 rows, got ${names.size}")
     assert(VerifyRows.all.forall(_.oracleSql.trim.nonEmpty), "every row carries oracle SQL")
   }
 
@@ -38,7 +38,10 @@ class VerifyRowsSpec extends AnyFunSuite {
   * gate picks the plan from the input (the reference plans stay
   * `private[graft]`); no operator takes a per-call cache-release switch,
   * because graft's caches live until `Caches.releaseAll` / `Caches.drain`;
-  * and Dedup's ingest indexes keep one lifecycle, `graft.sources.ShardedIndex`.
+  * Dedup's ingest indexes keep one lifecycle, `graft.sources.ShardedIndex`;
+  * and the modules deleted as outside the north star (media codecs, term
+  * statistics, frequency sketches, extra file formats, chunking, JSON
+  * lifting) stay deleted.
   */
 class OperatorApiSpec extends AnyFunSuite {
 
@@ -49,8 +52,7 @@ class OperatorApiSpec extends AnyFunSuite {
     "asofJoinStreamingSliced", "exactIncrementalFromIndex")
   private val files = Seq("src/main/scala/graft/operators/Dedup.scala",
     "src/main/scala/graft/streaming/StreamOps.scala",
-    "src/main/scala/graft/operators/Sampling.scala",
-    "src/main/scala/graft/operators/TermStats.scala")
+    "src/main/scala/graft/operators/Sampling.scala")
 
   // a def line with its modifiers; the parameter lists follow the name
   private val defLine =
@@ -127,15 +129,17 @@ class OperatorApiSpec extends AnyFunSuite {
     assert(offending.isEmpty, offending.mkString("index lifecycle defs are back:\n", "\n", ""))
   }
 
-  test("no library or benchmark source mentions the deleted Multimodal module") {
+  test("no library or benchmark source mentions a deleted module or SQL function") {
+    val deleted = Seq("Multimodal", "TermStats", "FreqItems", "FreqSketch", "ColumnarSource",
+      "Chunking", "SemiStructured", "graft_freq_", "maintainHeavyHitterState")
     val roots = Seq(Paths.get("src/main/scala"), Paths.get("perfbench/src"))
     roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
     val offending = for {
       root <- roots
       f <- Files.walk(root).iterator.asScala.filter(Files.isRegularFile(_)).toList
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if line.contains("Multimodal")
-    } yield s"$f:${i + 1}"
-    assert(offending.isEmpty, offending.mkString("Multimodal is back:\n", "\n", ""))
+      name <- deleted.filter(line.contains)
+    } yield s"$f:${i + 1}: $name"
+    assert(offending.isEmpty, offending.mkString("deleted names are back:\n", "\n", ""))
   }
 }
