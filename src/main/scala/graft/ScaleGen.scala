@@ -26,18 +26,7 @@ import org.apache.spark.sql.functions._
   * Writes `copies`-scaled parquet to `dst` with multi-file layout (32-way)
   * so scans parallelize like real multi-row-group tables.
   *
-  * A fourth argument `hotHead > 0` switches to the FREQUENCY-FAMILY
-  * fixture mode (r14 #4): documents ONLY, with the top-`hotHead`
-  * (lowercased) source tokens EXEMPT from the per-copy suffix — their
-  * absolute counts then grow `copies`× while N grows `copies`×, so the
-  * 1× heavy-hitter SHARE structure survives the scale-up and an ε·N
-  * frequency gate asserts on a non-empty head instead of the
-  * vacuous empty set the plain transform produces (every suffixed token
-  * keeps its 1× count under a 1000× N). The exempt head re-links a few
-  * all-hot-word shingles across copies, so this fixture is for the
-  * frequency probes, NOT the dedup quadratics — write it to its own dir.
-  *
-  * Usage: runMain graft.ScaleGen [srcDir] [dstDir] [copies] [hotHead]
+  * Usage: runMain graft.ScaleGen [srcDir] [dstDir] [copies]
   */
 object ScaleGen {
 
@@ -45,47 +34,9 @@ object ScaleGen {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("target/scaledata/sf1")
     val copies = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
-    val hotHead = args.lift(3).flatMap(_.toIntOption).getOrElse(0)
     val spark = Session.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    if (hotHead > 0) generateDocumentsHot(spark, src, dst, copies, hotHead)
-    else generate(spark, src, dst, copies)
+    generate(spark, src, dst, copies)
     spark.stop()
-  }
-
-  /** The hot-head documents fixture (see object scaladoc). One plan — the
-    * source cross-joined with `range(copies)` — instead of a `copies`-way
-    * union, so a DIRECT 1000× generation is a single broadcast-NL join
-    * over 5M output rows rather than a 1000-branch plan. Suffixing uses
-    * the array-rebuild form (split → transform → concat_ws) because the
-    * exemption is per-word; copies > 0 therefore collapse runs of
-    * whitespace — irrelevant to every \\s+-tokenizing consumer.
-    */
-  def generateDocumentsHot(spark: SparkSession, src: String, dst: String,
-                           copies: Int, hotHead: Int): Unit = {
-    require(copies >= 1 && hotHead >= 1)
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    // the head is picked on the SAME normalization the frequency family
-    // counts (lower/trim/split) with a deterministic tie-break
-    val hot = docs.select(explode(split(lower(trim(col("text"))), "\\s+")).as("t"))
-      .groupBy("t").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("t")).limit(hotHead)
-      .collect().map(_.getString(0))
-    // fail with a message, not an NPE (empty source → null max(doc_id)) or
-    // an analysis error (empty head → untyped array() literal)
-    require(hot.nonEmpty,
-      s"generateDocumentsHot: source $src/documents.parquet is empty or has no tokens")
-    println(s"[scalegen] hot head ($hotHead): ${hot.take(16).mkString(", ")}…")
-    val hotArr = array(hot.map(lit(_)): _*)
-    val docStride = math.max(1L, docs.agg(max("doc_id")).head().getLong(0) + 1)
-    val t = when(col("_c") === 0, col("text")).otherwise(concat_ws(" ",
-      transform(split(col("text"), "\\s+"),
-        w => when(array_contains(hotArr, lower(w)), w)
-          .otherwise(concat(w, lit("x"), col("_c").cast("string"))))))
-    val out = docs.crossJoin(spark.range(copies).select(col("id").as("_c")))
-      .select((col("doc_id") + col("_c") * lit(docStride)).as("doc_id"),
-        t.as("text"), col("lang"), col("source"), length(t).as("n_chars"))
-    out.repartition(64).write.mode("overwrite").parquet(s"$dst/documents.parquet")
-    println(s"[scalegen] wrote hot-head documents ($copies copies)")
   }
 
   def generate(spark: SparkSession, src: String, dst: String, copies: Int): Unit = {

@@ -67,7 +67,7 @@ object Dedup {
     */
   private def verifyJaccard(candidates: DataFrame, sets: DataFrame,
                             idCol: String, threshold: Double,
-                            spreadRows: Option[Long] = None): DataFrame =
+                            spreadRows: Long = 0L): DataFrame =
     verifyJaccard2(candidates, sets, sets, idCol, threshold, spreadRows)
 
   /** `spreadRows` (r18 VERDICT #2): a PRICED verify-pair volume — the
@@ -80,7 +80,7 @@ object Dedup {
     * band-row width rule prices the BAND exchange, which says nothing
     * about how many candidate pairs the bands produce, and AQE coalesces
     * the bytes-tiny pair frames onto too few kernel threads (the d9e
-    * lesson). None (the small-corpus paths) keeps today's plan — as does
+    * lesson). 0 (unpriced: the small-corpus paths) keeps today's plan — as does
     * any priced volume whose derived width would only hit the
     * parallelism floor: there the explicit exchange buys no width and
     * merely vetoes AQE's (correct, measured: d4d +0.4 s at sf0.1)
@@ -89,12 +89,11 @@ object Dedup {
   private def verifyJaccard2(candidates: DataFrame, setsL: DataFrame,
                              setsR: DataFrame, idCol: String,
                              threshold: Double,
-                             spreadRows: Option[Long] = None): DataFrame = {
+                             spreadRows: Long = 0L): DataFrame = {
     val s1 = setsL.select(col(idCol).as("id_1"), col("n_sh").as("n_1"), col("shs").as("shs_1"))
     val s2 = setsR.select(col(idCol).as("id_2"), col("n_sh").as("n_2"), col("shs").as("shs_2"))
     def spread(df: DataFrame, key: String) =
-      spreadRows.map(n => spreadIfWide(df, n, VerifyPairRowsPerPartition, col(key)))
-        .getOrElse(df)
+      spreadIfWide(df, spreadRows, VerifyPairRowsPerPartition, col(key))
     spread(spread(candidates, "id_1").join(s1, "id_1"), "id_2").join(s2, "id_2")
       .withColumn("inter", ArrayOps.sortedIntersectSize(col("shs_1"), col("shs_2")).cast("double"))
       .withColumn("uni", (col("n_1") + col("n_2") - col("inter")).cast("double"))
@@ -185,39 +184,21 @@ object Dedup {
     expr(s"transform(sequence(0, ${perms - 1}), " +
       "p -> array_min(transform(shs, h -> xxhash64(p, h))))")
 
-  /** MinHash signature from prepared [[shingleSets]]: permutation p is
-    * min over xxhash64(p, shingleKey) — re-hashing an 8-byte long per
-    * element, never re-shingling text. Column form (`mh_0..mh_{p-1}`)
-    * built from the shared [[sigArrayExpr]] in its own projection (the
-    * array alias is referenced `perms` times, which CollapseProject
-    * refuses to inline — the signature computes once per row).
-    */
-  def minhashSignatureFromSets(sets: DataFrame, idCol: String, perms: Int): DataFrame =
-    sets.select(col(idCol), sigArrayExpr(perms).as("_sigs"))
-      .select(col(idCol) +:
-        (0 until perms).map(p => element_at(col("_sigs"), p + 1).as(s"mh_$p")): _*)
-
   /** MinHash signature: `perms` independent min-hashes over the document's
-    * word-`n`-gram shingle set. No shuffle — two narrow projections.
+    * word-`n`-gram shingle set — permutation p is min over
+    * xxhash64(p, shingleKey), re-hashing an 8-byte long per element, never
+    * re-shingling text. No shuffle. Column form (`mh_0..mh_{p-1}`) built
+    * from the shared [[sigArrayExpr]] in its own projection (the array
+    * alias is referenced `perms` times, which CollapseProject refuses to
+    * inline — the signature computes once per row).
     */
   def minhashSignature(df: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, perms: Int = 64): DataFrame =
-    minhashSignatureFromSets(shingleSets(df, idCol, textCol, n), idCol, perms)
+    shingleSets(df, idCol, textCol, n)
+      .select(col(idCol), sigArrayExpr(perms).as("_sigs"))
+      .select(col(idCol) +:
+        (0 until perms).map(p => element_at(col("_sigs"), p + 1).as(s"mh_$p")): _*)
 
-  /** LSH near-duplicate pairs via banded MinHash + exact-Jaccard
-    * verification. `bands` × `rowsPerBand` must equal `perms`. A pair is a
-    * candidate iff some band of the signature matches exactly; candidates
-    * are then verified with the TRUE shingle-set Jaccard so the output
-    * contains no false positives (recall is the standard LSH S-curve:
-    * P[candidate] = 1-(1-j^r)^b).
-    *
-    * Default banding 32×2: recall at j = 0.5 is 1-(0.75)³² ≈ 0.9999 and →1
-    * above. The wide low-j candidate tail this trades for is cheap now:
-    * verification is the codegen'd merge on prepared hash arrays, not a
-    * re-shingle + string array_intersect.
-    *
-    * Output: (id_1, id_2, jaccard) with id_1 < id_2, jaccard rounded to 6.
-    */
   /** Per-task row target for the band self-join's exchanges (the big-corpus
     * path only): each reduce task sorts ~this many (id, band, bkey) rows
     * per side (~40 B in-memory each → tens of MB of sort state), so the
@@ -268,8 +249,8 @@ object Dedup {
     * call-site form of the width rule ([[minhashNearDupsPlain]]'s band exchange,
     * [[fuzzyVerify]]'s candidate/text exchanges ride it).
     */
-  def spreadKernel(df: DataFrame, pricedRows: Long, rowsPerTask: Long,
-                   keys: org.apache.spark.sql.Column*): DataFrame =
+  private[graft] def spreadKernel(df: DataFrame, pricedRows: Long, rowsPerTask: Long,
+                                  keys: org.apache.spark.sql.Column*): DataFrame =
     df.repartition(kernelWidth(df.sparkSession, pricedRows, rowsPerTask),
       keys: _*)
 
@@ -403,12 +384,12 @@ object Dedup {
       // back to the un-pruned verify rather than ship a monster
       val res =
         if (nIds == 0L || nIds > (1L << 24))
-          verifyJaccard(cand, sets, idCol, threshold, spreadRows = Some(nCand))
+          verifyJaccard(cand, sets, idCol, threshold, spreadRows = nCand)
         else {
           val mightMatch = bloomMightContain(ids, col("_cid"), nIds, fpp = 0.01,
             maxNumBits = Long.MaxValue, probe = xxhash64(col(idCol)))
           verifyJaccard(cand, sets.filter(mightMatch), idCol, threshold,
-            spreadRows = Some(nCand))
+            spreadRows = nCand)
         }
       // no caller handle for the candidate persist — materialize the
       // (threshold-filtered, small) result and drop the candidates; the
@@ -532,6 +513,16 @@ object Dedup {
     * map-side-combined aggregate over the same 16-byte class fingerprint
     * the collapse itself uses (md5 of the space-joined token sequence):
     * two longs to the driver, the s5i-total bounded-collect pattern.
+    *
+    * `bands` × `rowsPerBand` is the signature length. A pair is a
+    * candidate iff some band of the signature matches exactly; candidates
+    * are verified with the TRUE shingle-set Jaccard, so the output has no
+    * false positives (recall is the LSH S-curve P[candidate] =
+    * 1-(1-j^r)^b). The default 32×2 banding recalls 1-(0.75)³² ≈ 0.9999
+    * at j = 0.5 and →1 above; its wide low-j candidate tail is cheap
+    * because verification is the codegen'd merge on prepared hash arrays.
+    *
+    * Output: (id_1, id_2, jaccard) with id_1 < id_2, jaccard rounded to 6.
     */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double, n: Int = 3,
@@ -612,378 +603,236 @@ object Dedup {
       .select("id_1", "id_2", "jaccard")
   }
 
-  /** Inverted-index variant for SPARSE shingle distributions: candidates =
-    * pairs co-occurring under some shingle with document frequency ≤
-    * `maxDf` (hot shingles are excluded from candidate generation ONLY —
-    * verification still uses full sets, so there are no false positives
-    * and no score error). Exact iff every qualifying pair shares at least
-    * one sub-ceiling shingle; otherwise recall loss is bounded to pairs
-    * whose entire overlap is ubiquitous shingles — document the ceiling
-    * with the corpus. Cost: Σ_{df(s)≤maxDf} df(s)² for candidates +
-    * O(|candidates| × set size) verify.
-    *
-    * GUARDED BY DEFAULT (the d9/d5 plain-name pattern, closing the last
-    * plainly-reachable measured scale-killer — r16 sweep: this form at a
-    * FIXED cap admits ~quadratically more candidates as the corpus grows
-    * and exhausted >60 GB of disk at the 100× probe): the plain call
-    * PRICES the cap against the [[shingleDfStats]] histogram — the same
-    * (shingle, df) aggregate the pipeline pays anyway — and REFUSES a
-    * `maxDf` whose cumulative candidate cost exceeds `guardPairs`,
-    * naming the priced volume, the largest cap that would fit, and the
-    * escapes ([[ngramJaccardPairsSparseAuto]] for a budget-derived cap, a
-    * lower `maxDf`, or a `guardPairs` sized to the cluster's budget).
-    * When the guard passes, the histogram evidence is reused: the rare
-    * keys broadcast when their exact count fits the measured budget, and
-    * the verify prune engages when the priced candidate volume does —
-    * the relation is IDENTICAL either way (spec-pinned against
-    * [[ngramJaccardPairsSparseUnguarded]], the d4b reference).
-    *
-    * TWO-STAGE PRICING (the d4e ladder in front of the exact histogram):
-    * a hopeless cap must not cost the corpus-wide (shingle, df) aggregate
-    * just to be refused — at 1000× that exact pass alone measured 42.9 s
-    * with 21 GB of spill (BENCH_SCALE r16), i.e. the REFUSAL would be the
-    * most expensive thing the call did. So the guard first prices the cap
-    * on the deterministic 1/16 document sample ([[shingleDfStatsSampled]],
-    * whose `est_*` columns are the unbiased 1/rate² full-corpus
-    * estimates) and refuses IMMEDIATELY when the estimate exceeds 4× the
-    * guard — far enough past the boundary that the sample's O(1/√(df·
-    * rate)) concentration noise cannot flip the verdict. Estimates inside
-    * the 4× band escalate to the exact histogram, which settles admission
-    * (and is then REUSED by the admitted pipeline, so the exact pass is
-    * never wasted work). The sampled stage runs only where it earns its
-    * keep: corpora of at least `quickPriceMinDocs` documents (the
-    * `pruneVerifyMinRows` precedent — below ~1M docs the exact histogram
-    * is sub-second and the extra sampled pass is pure overhead, measured
-    * +1.3 s on the sf0.1 bench row), and caps where `maxDf/16 >= 2` (the
-    * sampled cap axis degenerates below 2). The size gate reads a count
-    * ONLY when the input is a leaf plan (bare file scan / cached frame —
-    * footer- or cache-cheap); a DERIVED input skips the gate and prices
-    * from the sample unconditionally, because a dedicated counting pass
-    * over the derivation would cost more than the sampled stage it gates
-    * (r17 advisory), and the 4× refusal margin is corpus-size-safe.
+  /** The pair-cost histogram over a frame with one row per cell (a
+    * shingle's posting list, a banded cell, a k-means cell) and its size
+    * in `sizeCol`: one row per distinct size with the number of cells of
+    * that size (`countCol`), the candidate pairs those cells cost
+    * (`pair_cost = count · size·(size−1)/2` — each cell is a
+    * size-choose-2 self-join block) and the running total by ascending
+    * size (`cum_pair_cost`). The cost model every priced near-dup gate
+    * reads: the candidate cost of admitting cells up to size c is exactly
+    * `cum_pair_cost(c)`. ONE map-side-combined aggregate over the cells;
+    * the cumulative window runs over the ≤ |distinct sizes| histogram
+    * only.
     */
-  def ngramJaccardPairsSparse(df: DataFrame, idCol: String, textCol: String,
-                              n: Int, threshold: Double, maxDf: Int,
-                              guardPairs: Long = FixedCapGuardPairs,
-                              quickPriceMinDocs: Long = 1L << 20): DataFrame = {
-    val rate = 0.0625 // 1/16, the d4e binary fraction
-    val sampledCap = (maxDf * rate).toLong
-    // Corpus-size evidence for the quickPriceMinDocs gate must not cost
-    // a dedicated full pass over a DERIVED input (the r17 advisory: the
-    // count() job re-evaluates the whole derivation just to decide
-    // whether the sampled stage arms). So the count runs only where it
-    // is genuinely cheap — a bare file scan (parquet footer counts) or
-    // an already-cached frame — and a derived input skips the size gate
-    // and prices from the sample unconditionally: one 1/16-cost pass in
-    // place of the full counting pass, and the 4× refusal margin does
-    // not depend on corpus size (small corpora cannot inflate a
-    // sub-guard bill past 4× the guard — the flukes are low-df keys
-    // whose absolute cost is tiny), so the verdict stays safe.
-    val cheapDocs: Option[Long] = {
-      import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
-      // A count is "cheap" when the plan is a leaf (parquet footer
-      // counts / cached frame) OR a projection/filter stack over one —
-      // after pushdown those count() jobs scan at most the filter
-      // columns, far below the sampled pricing pass they gate (r18
-      // ADVICE: keying on LeafNode alone sent every trivially-derived
-      // small corpus to the 1/16-sample estimate, re-introducing the
-      // +1.3 s overhead quickPriceMinDocs exists to avoid and trading
-      // the exact histogram for a higher-variance sample). Failing
-      // that, Catalyst plan statistics' rowCount (exact for cached
-      // relations) serves as gate evidence WITHOUT a job — an estimate
-      // can only mis-route between two GUARDED paths, never unguard.
-      // A Filter qualifies only when its predicate is deterministic and
-      // UDF-free (r19 ADVICE): a Scala-closure or non-deterministic
-      // predicate cannot push to the scan, so df.count() would evaluate
-      // the full filter over the whole corpus — the exact full pre-pass
-      // the r17 advisory removed. Such plans fall through to the
-      // stats-based estimate below.
-      def cheapPredicate(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-        e.deterministic && e.find {
-          case _: org.apache.spark.sql.catalyst.expressions.ScalaUDF => true
-          case _: org.apache.spark.sql.catalyst.expressions.objects.Invoke => true
-          case _ => false
-        }.isEmpty
-      def nearLeaf(p: LogicalPlan): Boolean = p match {
-        case _: LeafNode => true
-        case Project(_, child) => nearLeaf(child)
-        case Filter(cond, child) => cheapPredicate(cond) && nearLeaf(child)
-        case _ => false
-      }
-      val plan = df.queryExecution.optimizedPlan
-      if (nearLeaf(plan)) Some(df.count())
-      else plan.stats.rowCount.map(_.longValue)
-    }
-    if (sampledCap >= 2 && cheapDocs.forall(_ >= quickPriceMinDocs)) {
-      // one tiny collect over the ≤|distinct sampled dfs|-row frame; the
-      // est_cum column is the unbiased full-corpus pair bill
-      val est = shingleDfStatsSampled(df, idCol, textCol, n, rate)
-        .filter(col("df") <= sampledCap)
-        .agg(max("est_cum_pair_cost")).head()
-      val estBill = if (est.isNullAt(0)) 0.0 else est.getDouble(0)
-      if (estBill > 4.0 * guardPairs) {
-        val estL = estBill.toLong
-        throw new IllegalArgumentException(
-          s"ngramJaccardPairsSparse: maxDf=$maxDf prices an ESTIMATED " +
-            s"$estL candidate pairs (>4x the $guardPairs guard) from the " +
-            "1/16 document sample; refused before the corpus-wide " +
-            "histogram (the exact bill could only confirm it). Use " +
-            "ngramJaccardPairsSparseAuto to derive the cap from a pair " +
-            "budget, lower maxDf, or raise guardPairs to the cluster's " +
-            "candidate budget.")
-      }
-    }
-    sparseCappedFromHistogram(df, idCol, textCol, n, threshold,
-      hist => {
-        // cum at the cap = the exact candidate-pair bill this maxDf buys
-        val priced = hist.filter(_._1 <= maxDf).map(_._3).maxOption.getOrElse(0L)
-        if (priced > guardPairs) {
-          val fitting = math.max(2L,
-            hist.filter(_._3 <= guardPairs).map(_._1).maxOption.getOrElse(2L))
-          throw new IllegalArgumentException(
-            s"ngramJaccardPairsSparse: maxDf=$maxDf prices $priced candidate " +
-              s"pairs on this corpus, over the $guardPairs guard (largest " +
-              s"fitting cap: $fitting). Use ngramJaccardPairsSparseAuto to " +
-              "derive the cap from a pair budget, lower maxDf, or raise " +
-              "guardPairs to the cluster's candidate budget.")
-        }
-        (maxDf.toLong, priced <= BroadcastRareKeyLimit)
-      })
+  private def pairCostHistogram(cells: DataFrame, sizeCol: String,
+                                countCol: String): DataFrame = {
+    val hist = cells.groupBy(sizeCol).agg(count(lit(1)).as(countCol))
+      // s·(s−1) is even, so DIV 2 is exact long arithmetic
+      .withColumn("pair_cost", expr(s"$countCol * ($sizeCol * ($sizeCol - 1) DIV 2)"))
+    val wCum = Window.orderBy(sizeCol) // tiny frame: ≤ |distinct sizes| rows
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    hist.withColumn("cum_pair_cost", sum("pair_cost").over(wCum))
   }
 
-  /** The fixed-cap sparse plan with no pricing guard: the d4b reference
-    * regime [[ngramJaccardPairsSparse]] is spec-pinned against, which the
-    * d4b row and the specs call directly. Nothing bounds its candidate
-    * volume (the r16 sweep: >60 GB of disk at the 100× probe).
+  /** [[pairCostHistogram]]'s (size, count, cum_pair_cost) strata collected
+    * to the driver, ascending size — the form a gate derives its cap
+    * from. ONE bounded collect (≤ |distinct sizes| rows, the s5i-total
+    * pattern), sorted on the driver rather than in an exchange (every AQE
+    * stage is ~100 ms of latency).
     */
-  private[graft] def ngramJaccardPairsSparseUnguarded(df: DataFrame, idCol: String,
-                                                      textCol: String, n: Int,
-                                                      threshold: Double,
-                                                      maxDf: Int): DataFrame =
-    // The reduced sets feed FIVE plan positions (df-count, both sides of
-    // the candidate self-join via inv, both verify sides); without a cache
-    // boundary Spark re-evaluates the shingling subtree for each. The sets
-    // table is the corpus reduced to 8-byte keys (~1-2% of text size) —
-    // persisting it is the standard inverted-index-build trade.
-    sparseJaccardFromSets(graft.Caches.persistLoaned(shingleSets(df, idCol, textCol, n)),
-      idCol, threshold, maxDf)
+  private def pairCostStrata(cells: DataFrame,
+                             sizeCol: String): IndexedSeq[(Long, Long, Long)] =
+    cells.groupBy(sizeCol).agg(count(lit(1)))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(_._1)
+      .scanLeft((0L, 0L, 0L)) { case ((_, _, cum), (size, n)) =>
+        (size, n, cum + n * (size * (size - 1) / 2))
+      }.drop(1).toIndexedSeq
 
-  /** The df-capped candidate+verify body over prepared sets — shared by
-    * the fixed-ceiling ([[ngramJaccardPairsSparse]]) and budget-derived
-    * ([[ngramJaccardPairsSparseAuto]]) entry points so the candidate
-    * semantics can never diverge between them.
+  /** The cap rule: the largest size whose cumulative pair cost stays
+    * within `budgetPairs`, floored at 2 (below 2 a cell generates no
+    * candidates at all — if even the size-2 cells blow the budget the
+    * floor keeps the operator productive).
+    */
+  private def capWithin(strata: IndexedSeq[(Long, Long, Long)], budgetPairs: Long): Long =
+    math.max(2L, strata.filter(_._3 <= budgetPairs).map(_._1).maxOption.getOrElse(2L))
+
+  /** The cumulative pair cost of admitting every cell up to size `cap`. */
+  private def pairCostAt(strata: IndexedSeq[(Long, Long, Long)], cap: Long): Long =
+    strata.takeWhile(_._1 <= cap).lastOption.map(_._3).getOrElse(0L)
+
+  /** D4d — inverted-index Jaccard for SPARSE shingle distributions, with
+    * the document-frequency ceiling DERIVED from a candidate-pair budget:
+    * candidates are pairs co-occurring under some shingle with df ≤ the
+    * largest ceiling whose cumulative candidate cost ([[shingleDfStats]])
+    * stays within `budgetPairs`, floored at 2. Hot shingles are excluded
+    * from candidate GENERATION only — verification still uses full sets,
+    * so there are no false positives and no score error; lowering the
+    * ceiling loses exactly the pairs whose entire overlap sits in
+    * shingles above it (document the budget with the corpus). A fixed
+    * PAIR budget keeps per-task memory flat as the corpus grows: a fixed
+    * hand-picked df cap admits ~quadratically more candidates at scale
+    * (the r16 sweep: >60 GB of disk at the 100× probe), while the derived
+    * cap adapts downward so the candidate volume stays bounded.
     *
-    * Only shingles with df in [2, maxDf] feed candidate generation: a
-    * df-1 shingle's self-join yields no pair (killed by id_1 < id_2), so
-    * excluding it up front is correctness-neutral and shrinks the rare
-    * frame by the (heavy-tailed) unique-shingle mass.
+    * The derived ceiling is returned nowhere; read it from
+    * [[shingleDfStats]] + `budgetPairs` (one deterministic filter over
+    * that histogram, which the d4d oracle reproduces in SQL). The
+    * histogram pass reuses the SAME persisted sets as the pair pipeline,
+    * and its evidence picks the plan: the rare keys broadcast when their
+    * exact count fits the measured budget, and a budget within the
+    * broadcast limit licenses the verify prune. For dense corpora at low
+    * thresholds prefer [[ngramJaccardPairs]]' blocked all-pairs plan.
+    */
+  def ngramJaccardPairsSparse(df: DataFrame, idCol: String, textCol: String,
+                              n: Int, threshold: Double,
+                              budgetPairs: Long): DataFrame = {
+    require(budgetPairs >= 0, "ngramJaccardPairsSparse: budget must be >= 0")
+    // |candidates| ≤ cum_pair_cost(ceiling) ≤ budgetPairs by construction,
+    // so a bounded budget licenses the verify prune
+    sparseCappedFromHistogram(df, idCol, textCol, n, threshold,
+      strata => (capWithin(strata, budgetPairs), budgetPairs <= BroadcastRareKeyLimit))
+  }
+
+  /** The fixed-ceiling sparse plan: [[ngramJaccardPairsSparse]]'s body at
+    * a hand-picked `maxDf` instead of a budget-derived one — the d4b
+    * reference the specs pin the derived ceiling against. Nothing bounds
+    * its candidate volume.
+    */
+  private[graft] def ngramJaccardPairsSparseFixedCap(df: DataFrame, idCol: String,
+                                                     textCol: String, n: Int,
+                                                     threshold: Double,
+                                                     maxDf: Int): DataFrame =
+    sparseCappedFromHistogram(df, idCol, textCol, n, threshold,
+      strata => (maxDf.toLong, pairCostAt(strata, maxDf) <= BroadcastRareKeyLimit))
+
+  /** The histogram-evidenced df-capped pipeline: build the (shingle, df)
+    * aggregate once, collect its [[pairCostStrata]], let `choose` turn
+    * them into (ceiling, pruneVerify-license), then run
+    * [[sparseJaccardFromSets]] with the broadcast decision read off the
+    * exact qualifying-key count.
+    */
+  private def sparseCappedFromHistogram(df: DataFrame, idCol: String,
+      textCol: String, n: Int, threshold: Double,
+      choose: IndexedSeq[(Long, Long, Long)] => (Long, Boolean)): DataFrame = {
+    // The reduced sets feed five plan positions (df-count, both sides of
+    // the candidate self-join, both verify sides); without a cache
+    // boundary Spark re-evaluates the shingling subtree for each. The sets
+    // table is the corpus reduced to 8-byte keys (~1-2% of text size).
+    val sets = graft.Caches.persistLoaned(shingleSets(df, idCol, textCol, n))
+    // the (shingle, df) aggregate persisted ONCE for three consumers: the
+    // strata collect (ceiling + key count), the rare-keys probe side,
+    // and the bloom build — without it the corpus-wide distinct-key count
+    // runs twice (measured at 1000×, 5M docs / ~500M distinct trigrams:
+    // each pass sort-fallback-spills ~40 GB; this is the d4 family's
+    // single biggest exchange and it must be paid exactly once)
+    val skdf = graft.Caches.persistLoaned(
+      ArrayOps.explodeDense(sets, Seq.empty, col("shs"), "sk")
+        .groupBy("sk").agg(count(lit(1)).as("_df")))
+    // one tiny collect serves the ceiling (from the cumulative candidate
+    // cost), the count of qualifying keys (broadcast vs shuffle) and the
+    // ceiling's cum pair cost (verify-width evidence, r18 VERDICT #2)
+    val strata = pairCostStrata(skdf, "_df")
+    val (ceiling, pruneVerify) = choose(strata)
+    val rareKeyCount = strata.filter(t => t._1 >= 2 && t._1 <= ceiling).map(_._2).sum
+    val (res, candidates) =
+      sparseJaccardFromSets(sets, idCol, threshold,
+        skdf.filter(col("_df") >= 2 && col("_df") <= ceiling).select("sk"), rareKeyCount,
+        broadcastRareKeys = rareKeyCount <= BroadcastRareKeyLimit,
+        pruneVerify = pruneVerify, pricedPairs = pairCostAt(strata, ceiling))
+    // neither the candidate persist nor the df aggregate has a
+    // caller-visible handle, so neither may outlive this call: materialize
+    // the (budget-bounded, small) result into its own ledgered persist and
+    // drop both. The SETS cache stays a loan until Caches.releaseAll / drain.
+    val out = graft.Caches.persistLoaned(res)
+    out.count()
+    (candidates.toSeq :+ skdf).foreach(graft.Caches.endLoan)
+    out
+  }
+
+  /** The df-capped candidate+verify body over prepared sets and their
+    * qualifying rare keys (`rareKeys`, `nKeys` of them: the shingles with
+    * df in [2, ceiling] — a df-1 shingle's self-join yields no pair, so
+    * excluding it is correctness-neutral and shrinks the rare frame by
+    * the heavy-tailed unique-shingle mass).
     *
-    * `broadcastRareKeys`: when the caller KNOWS the qualifying key set is
-    * small (the Auto variant reads it off the df histogram), the rare-key
-    * frame broadcasts and the posting list is pruned by a NARROW filter —
-    * the corpus-sized postings exchange disappears and only the
+    * `broadcastRareKeys`: when the key count fits the broadcast budget the
+    * rare-key frame broadcasts and the posting list is pruned by a NARROW
+    * filter — the corpus-sized postings exchange disappears and only the
     * cost-bounded rare postings shuffle for the self-join. Measured at
     * 100×: 1.9 GB shuffle + 1.8 GB spill → both gone (BENCH_SCALE.md).
-    * The plain path stays for the fixed-cap form, where no key-count
-    * evidence exists and a blind broadcast could OOM the driver on a
-    * corpus whose every shingle is rare.
+    *
+    * Returns the pair relation and, on the `pruneVerify` path, the
+    * candidate persist the caller settles once the result is materialized.
     */
   private[graft] def sparseJaccardFromSets(sets: DataFrame, idCol: String,
-                                    threshold: Double, maxDf: Int,
-                                    broadcastRareKeys: Boolean = false,
-                                    pruneVerify: Boolean = false,
-                                    candidateCache: Option[DataFrame => Unit] = None,
-                                    rareKeysPrepared: Option[(DataFrame, Long)] = None,
-                                    pricedPairs: Option[Long] = None)
-                                   : DataFrame = {
+                                           threshold: Double, rareKeys: DataFrame,
+                                           nKeys: Long, broadcastRareKeys: Boolean,
+                                           pruneVerify: Boolean,
+                                           pricedPairs: Long): (DataFrame, Option[DataFrame]) = {
     val inv = ArrayOps.explodeDense(sets, Seq(col(idCol).as("id")), col("shs"), "sk")
-    // `rareKeysPrepared` = (qualifying-keys frame, exact key count) from a
-    // caller that already paid the (shingle, df) aggregate — the Auto path
-    // persists that aggregate ONCE for (histogram, ceiling, this probe
-    // side); without it the corpus-wide distinct-key count would run twice
-    // (measured at 1000×: each pass sort-fallback-spills ~40 GB).
-    val rareKeys = rareKeysPrepared.map(_._1).getOrElse(
-      inv.groupBy("sk").agg(count(lit(1)).as("_df"))
-        .filter(col("_df") >= 2 && col("_df") <= maxDf).select("sk"))
-    // rareKeys handed back for unpersist once candidates materialize (set
-    // only when the bloom path below persists its own copy)
-    var rareKeysCache: Option[DataFrame] = None
     val rare =
       if (broadcastRareKeys) inv.join(broadcast(rareKeys), "sk")
-      else if (!pruneVerify) inv.join(rareKeys, "sk")
+      // past ~16M keys the bloom filter itself is tens of MB of task
+      // literal — the plain join rather than broadcast a monster
+      else if (!pruneVerify || nKeys == 0L || nKeys > (1L << 24)) inv.join(rareKeys, "sk")
       else {
         // The budget-gated path past the broadcast limit: a plain
         // rare-postings join sort-merges the ENTIRE posting stream.
         // d8b's answer applies verbatim: fold the rare keys into
         // Catalyst's BloomFilterAggregate and probe the posting stream
         // BEFORE its join exchange — only ~rare-mass + fpp·|inv| postings
-        // shuffle, and the equi-join keeps the result exact. Key count
-        // comes free from the prepared histogram; otherwise the keys
-        // frame persists so its aggregate runs once for (count, bloom,
-        // probe side) and drops when candidates materialize.
-        val (rk, nKeys) = rareKeysPrepared match {
-          case Some((f, n)) => (f, n)
-          case None =>
-            val f = graft.Caches.persistLoaned(rareKeys)
-            val n = f.count() // also materializes the persist
-            rareKeysCache = Some(f)
-            (f, n)
-        }
-        // past ~16M keys the filter itself is tens of MB of task literal —
-        // fall back to the plain join rather than broadcast a monster.
-        // rareKeysCache stays SET here: the join below still consumes rk,
-        // and dropping the persist now would re-run the corpus-wide
-        // (shingle, df) aggregate for it (~40 GB spill per pass at 1000×);
-        // the cleanup after candidates materialize releases it.
-        if (nKeys == 0L || nKeys > (1L << 24)) {
-          inv.join(rk, "sk")
-        } else {
-          val mightMatch = bloomMightContain(rk, col("sk"), nKeys, fpp = 0.01,
-            maxNumBits = Long.MaxValue, probe = col("sk"))
-          inv.filter(mightMatch).join(rk, "sk")
-        }
+        // shuffle, and the equi-join keeps the result exact.
+        val mightMatch = bloomMightContain(rareKeys, col("sk"), nKeys, fpp = 0.01,
+          maxNumBits = Long.MaxValue, probe = col("sk"))
+        inv.filter(mightMatch).join(rareKeys, "sk")
       }
     // same distinct-width discipline as the minhash path: the priced cum
     // pair bill is exactly the pre-distinct volume of this stream
-    val rawCandidates0 = rare.select(col("id").as("id_1"), col("sk"))
-      .join(rare.select(col("id").as("id_2"), col("sk")), "sk")
-      .filter(col("id_1") < col("id_2"))
-      .select("id_1", "id_2")
-    val rawCandidates = pricedPairs
-      .map(n => spreadIfWide(rawCandidates0, n, BandRowsPerPartition,
-        col("id_1"), col("id_2")))
-      .getOrElse(rawCandidates0).distinct()
-    // pruneVerify (the Auto path, where |candidates| ≤ budgetPairs by
-    // construction): MATERIALIZE the bounded candidate set once (without
-    // the cache boundary the prune's broadcast subtree re-runs the whole
-    // candidate pipeline — measured 2× the shuffle), then semi-prune the
-    // sets table to candidate ids via a BROADCAST semi join (ids only —
-    // a few hundred KB) before the verify joins, so the corpus-sized sets
-    // frame never crosses an exchange. The candidate persist is
-    // budget-bounded and travels with the result (the caller's loan, as
-    // with tokenBudgetSelect's prefix).
-    // exact pair evidence where the prune already counts the persisted
-    // candidates; otherwise the caller's priced bill (the histogram's cum
-    // pair cost — an upper bound on candidates, which only ever widens)
-    var verifyRows: Option[Long] = pricedPairs
-    val candidates =
-      if (!pruneVerify) rawCandidates
-      else {
-        val c = graft.Caches.persistLoaned(rawCandidates)
-        verifyRows = Some(c.count())
-        // the rare-keys cache fed (count, bloom, probe); candidates are
-        // materialized past it now, so it owes nothing downstream
-        rareKeysCache.foreach(graft.Caches.endLoan)
-        candidateCache.foreach(_(c)) // hand the persist to the caller's loan
-        c
-      }
-    val verifySets =
-      if (!pruneVerify) sets
-      else sets.join(
+    val rawCandidates = spreadIfWide(
+      rare.select(col("id").as("id_1"), col("sk"))
+        .join(rare.select(col("id").as("id_2"), col("sk")), "sk")
+        .filter(col("id_1") < col("id_2"))
+        .select("id_1", "id_2"),
+      pricedPairs, BandRowsPerPartition, col("id_1"), col("id_2")).distinct()
+    if (!pruneVerify)
+      // the priced bill (an upper bound on candidates, which only ever
+      // widens) sizes the verify exchanges
+      (verifyJaccard(rawCandidates, sets, idCol, threshold, spreadRows = pricedPairs),
+        None)
+    else {
+      // pruneVerify (|candidates| ≤ budgetPairs by construction):
+      // MATERIALIZE the bounded candidate set once (without the cache
+      // boundary the prune's broadcast subtree re-runs the whole candidate
+      // pipeline — measured 2× the shuffle), then semi-prune the sets
+      // table to candidate ids via a BROADCAST semi join (ids only — a few
+      // hundred KB) before the verify joins, so the corpus-sized sets
+      // frame never crosses an exchange.
+      val candidates = graft.Caches.persistLoaned(rawCandidates)
+      val nCand = candidates.count()
+      val verifySets = sets.join(
         broadcast(candidates.select(col("id_1").as("_vid"))
           .union(candidates.select(col("id_2").as("_vid"))).distinct()),
         sets(idCol) === col("_vid"), "left_semi")
-    verifyJaccard(candidates, verifySets, idCol, threshold,
-      spreadRows = verifyRows)
+      (verifyJaccard(candidates, verifySets, idCol, threshold, spreadRows = nCand),
+        Some(candidates))
+    }
   }
 
   /** D4c — document-frequency distribution diagnostic for the sparse
-    * inverted-index path: one row per distinct shingle df with the number
-    * of shingles at that df, the candidate pairs those shingles generate
-    * (`n_shingles · df·(df−1)/2` — each df-frequency shingle emits a
-    * df-choose-2 self-join block), and the running total. This is the
-    * cost model behind choosing `maxDf`: the candidate-generation cost of
+    * inverted-index path: [[pairCostHistogram]] over the shingles' posting
+    * lists — one row per distinct shingle df with the number of shingles
+    * at that df (`n_shingles`), the candidate pairs they generate and the
+    * running total. The candidate-generation cost of
     * [[ngramJaccardPairsSparse]] at ceiling c is exactly
-    * `cum_pair_cost(c)`, so the histogram turns "pick a df cap" from a
-    * guess into reading one column. (VERDICT r11 #1 — the j6/autoBlocks
-    * pattern applied to the one measured super-linear scale row, d4b.)
+    * `cum_pair_cost(c)`, so choosing a budget is reading one column.
     *
     * Scale shape: ONE map-side-combined (shingle-key, count) aggregate —
     * the same exchange the sparse path's df-count already pays — reduced
     * to a ≤|distinct dfs| histogram (heavy-tailed corpora have thousands
-    * of distinct df values, not millions); the cumulative window runs over
-    * that tiny frame only. Shingles are the usual 64-bit keys, so two
-    * grams colliding merge their dfs — the same accepted divergence as
-    * the index itself.
-    *
-    * AT SCALE PREFER [[shingleDfStatsSampled]] (d4e): this exact form's
-    * corpus-wide (shingle, df) aggregate is the d4 family's knee —
-    * measured at 1000× (5M docs, ~500M distinct trigrams): 42.9 s with
-    * 18.8+2.4 GB spill, while the 1/16-sampled ladder prices the same
-    * plan in 4.1 s with zero spill and an unbiased 1/rate² pair-bill
-    * estimate. The exact histogram is the right tool only when the exact
-    * ceiling arithmetic must be reproduced (the d4d oracle path).
+    * of distinct df values, not millions). Shingles are the usual 64-bit
+    * keys, so two grams colliding merge their dfs — the same accepted
+    * divergence as the index itself. At the 1000× probe this corpus-wide
+    * aggregate is the d4 family's knee (42.9 s with 18.8+2.4 GB spill).
     */
   def shingleDfStats(df: DataFrame, idCol: String, textCol: String,
                      n: Int): DataFrame =
-    dfHistogram(shingleSets(df, idCol, textCol, n))
+    pairCostHistogram(
+      ArrayOps.explodeDense(shingleSets(df, idCol, textCol, n), Seq.empty, col("shs"), "sk")
+        .groupBy("sk").agg(count(lit(1)).as("df")),
+      "df", "n_shingles")
 
-  /** D4e — [[shingleDfStats]] over a DETERMINISTIC DOCUMENT SAMPLE: the
-    * form of the df diagnostic a 100 TB corpus can actually afford. The
-    * exact histogram is linear but heavy — at the 1000× probe it is the
-    * most expensive row in the repo (482 s, 32 GB spill: the corpus-wide
-    * distinct-shingle aggregate IS the q18 knee) — and a plan-pricing
-    * diagnostic does not need exact strata. Sampling DOCUMENTS with the
-    * engine-portable md5 coin ([[Sampling.deterministicSample]] — the
-    * oracle replays the same coin) keeps every downstream property the
-    * cap derivation uses: a shingle with df d survives with
-    * Binomial(d, rate) sample-df, so E[df′(df′−1)] = d(d−1)·rate² and
-    * `est_*` (= pair_cost / rate²) is the UNBIASED estimate of the
-    * full-corpus candidate bill; the heavy keys that dominate the curve
-    * concentrate tightly (relative error ~ 1/√(d·rate)), while the noisy
-    * low-df strata contribute little cost to begin with. Consumers
-    * derive a cap on the SAMPLED df axis and scale by 1/rate (document
-    * the estimate, as d4d documents its recall trade).
-    *
-    * Exact arithmetic on the sample (hash-gated by the oracle); only the
-    * `est_*` columns carry the scaling. `rate` should be a binary
-    * fraction (0.25, 1/64) so both engines scale bit-identically.
-    */
-  def shingleDfStatsSampled(df: DataFrame, idCol: String, textCol: String,
-                            n: Int, rate: Double, seed: Long = 0L): DataFrame = {
-    require(rate > 0.0 && rate <= 1.0, "shingleDfStatsSampled: rate must be in (0, 1]")
-    val hist = dfHistogram(shingleSets(
-      Sampling.deterministicSample(df, idCol, rate, seed), idCol, textCol, n))
-    hist.withColumn("est_pair_cost", round(col("pair_cost") / (rate * rate), 6))
-      .withColumn("est_cum_pair_cost", round(col("cum_pair_cost") / (rate * rate), 6))
-  }
-
-  private def dfHistogram(sets: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hist = ArrayOps.explodeDense(sets, Seq.empty, col("shs"), "sk")
-      .groupBy("sk").agg(count(lit(1)).as("df"))
-      .groupBy("df").agg(count(lit(1)).as("n_shingles"))
-      // df·(df−1) is even, so DIV 2 is exact long arithmetic
-      .withColumn("pair_cost", expr("n_shingles * (df * (df - 1) DIV 2)"))
-    val wCum = Window.orderBy("df") // tiny frame: ≤ |distinct df values| rows
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist.withColumn("cum_pair_cost", sum("pair_cost").over(wCum))
-  }
-
-  /** [[ngramJaccardPairsSparse]] with the df ceiling DERIVED from a
-    * candidate-pair budget instead of hand-picked: the largest `maxDf`
-    * whose cumulative candidate cost (see [[shingleDfStats]]) stays within
-    * `budgetPairs`, floored at 2 (a ceiling below 2 generates no
-    * candidates at all — if even the df=2 shingles blow the budget the
-    * floor keeps the operator productive and the caller sees the real
-    * cost in the diagnostic). This is what keeps the sparse path's
-    * per-task memory flat as the corpus grows: a fixed hand-picked cap
-    * admits ~linearly more candidates at 10× data, while a fixed PAIR
-    * budget adapts the cap downward so candidate volume — the thing task
-    * memory and shuffle actually scale with — stays bounded.
-    *
-    * Recall trade (document with the corpus, as with the fixed cap): only
-    * candidate GENERATION is restricted — verification still uses full
-    * sets — so lowering the ceiling loses exactly the pairs whose entire
-    * overlap sits in shingles above it. The derived ceiling is returned
-    * nowhere; read it from [[shingleDfStats]] + `budgetPairs` (the
-    * derivation is one deterministic filter over that histogram, and the
-    * d4d oracle reproduces it in SQL).
-    *
-    * The histogram pass reuses the SAME persisted sets as the pair
-    * pipeline (one extra tiny aggregate, no re-shingling); the one-row
-    * ceiling collect is the bounded driver step (the s5i-total pattern).
-    */
   /** Broadcast footprint per 8-byte key, MEASURED from the real artifact:
     * the BroadcastExchange `dataSize` of a single-long-column relation at
     * 512K rows is exactly 64.0 bytes/row (33,554,432 B — the
@@ -1013,107 +862,6 @@ object Dedup {
     * decision is evidence-based, never a blind hint.
     */
   private val BroadcastRareKeyLimit = BroadcastRareKeyBudgetBytes / BroadcastBytesPerKey
-
-  /** Default ceiling on the PRICED candidate volume a plain fixed-cap
-    * [[ngramJaccardPairsSparse]] call will accept: 50M pairs ≈ a 1-2 GB
-    * candidate exchange plus a verify fan bounded at 50M set-merges —
-    * comfortably inside a 32-slot executor's working set and ~40× the
-    * whole sf0.1 corpus bill (1.27M at maxDf = 50), while the regime the
-    * r16 sweep measured DNF-ing on disk (the same cap at 100×: priced
-    * 126.6M pairs, whose KB-scale set-pair verify rows are the >60 GB of
-    * spill — a FIXED df ceiling admits ~quadratically more candidates as
-    * every shingle's df grows with the corpus) is refused in the
-    * histogram pass alone (measured 9.8 s, zero spill, BENCH_SCALE r17).
-    * Override per call when the cluster's budget genuinely differs.
-    */
-  private[graft] val FixedCapGuardPairs: Long = 50000000L
-
-  def ngramJaccardPairsSparseAuto(df: DataFrame, idCol: String, textCol: String,
-                                  n: Int, threshold: Double,
-                                  budgetPairs: Long): DataFrame = {
-    require(budgetPairs >= 0, "ngramJaccardPairsSparseAuto: budget must be >= 0")
-    sparseCappedFromHistogram(df, idCol, textCol, n, threshold,
-      hist => {
-        val ceiling = math.max(2L,
-          hist.filter(_._3 <= budgetPairs).map(_._1).maxOption.getOrElse(2L))
-        // |candidates| ≤ cum_pair_cost(ceiling) ≤ budgetPairs by
-        // construction, so a bounded budget licenses the verify prune
-        (ceiling, budgetPairs <= BroadcastRareKeyLimit)
-      })
-  }
-
-  /** The histogram-evidenced df-capped pipeline shared by the
-    * budget-derived ([[ngramJaccardPairsSparseAuto]]) and guarded
-    * fixed-cap ([[ngramJaccardPairsSparse]]) entry points: build the
-    * (shingle, df) aggregate once, collect the tiny cumulative-cost
-    * histogram, let `choose` turn it into (ceiling, pruneVerify-license)
-    * — throwing there REFUSES the call and releases the evidence caches
-    * — then run the candidate+verify body with the broadcast decision
-    * read off the exact qualifying-key count.
-    */
-  private def sparseCappedFromHistogram(df: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double,
-      choose: IndexedSeq[(Long, Long, Long)] => (Long, Boolean)): DataFrame = {
-    // the pruneVerify candidate persist is internal (no caller handle), so
-    // it never outlives this call — dropped below once the result can no
-    // longer recompute it
-    var candCache: Option[DataFrame] = None
-    val sets = graft.Caches.persistLoaned(shingleSets(df, idCol, textCol, n))
-    // the (shingle, df) aggregate persisted ONCE for three consumers: the
-    // histogram collect (ceiling + key count), the rare-keys probe side,
-    // and the bloom build — without it the corpus-wide distinct-key count
-    // runs twice (measured at 1000×, 5M docs / ~500M distinct trigrams:
-    // each pass sort-fallback-spills ~40 GB; this is the d4 family's
-    // single biggest exchange and it must be paid exactly once)
-    val skdf = graft.Caches.persistLoaned(
-      ArrayOps.explodeDense(sets, Seq.empty, col("shs"), "sk")
-        .groupBy("sk").agg(count(lit(1)).as("_df")))
-    // one tiny collect serves BOTH derivations: the ceiling (from the
-    // cumulative candidate cost) and the count of qualifying keys
-    // (drives the broadcast-vs-shuffle pruning choice). Arithmetic
-    // identical to dfHistogram's — cum over ascending df.
-    val (ceiling, pruneVerify, rareKeyCount, pricedBill) =
-      try {
-        val strata = skdf.groupBy(col("_df").as("df"))
-          .agg(count(lit(1)).as("n_shingles"))
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
-          .sortBy(_._1) // tiny frame: driver sort, not an exchange stage
-        var cum = 0L
-        val hist = strata.map { case (d0, n0) =>
-          cum += n0 * (d0 * (d0 - 1) / 2); (d0, n0, cum)
-        }.toIndexedSeq
-        val (c0, pv) = choose(hist)
-        (c0, pv, hist.filter(t => t._1 >= 2 && t._1 <= c0).map(_._2).sum,
-          // the cap's cum pair cost — verify-width evidence the
-          // histogram already priced (r18 VERDICT #2)
-          hist.filter(_._1 <= c0).map(_._3).maxOption)
-      } catch { case e: Throwable =>
-        // a refused cap returns nothing — the evidence caches must not
-        // outlive the refusal (the sets loan included: there is no
-        // lazy result left that could recompute through it)
-        graft.Caches.endLoan(skdf)
-        graft.Caches.endLoan(sets)
-        throw e
-      }
-    val res =
-      sparseJaccardFromSets(sets, idCol, threshold,
-        math.min(ceiling, Int.MaxValue.toLong).toInt,
-        broadcastRareKeys = rareKeyCount <= BroadcastRareKeyLimit,
-        pruneVerify = pruneVerify,
-        candidateCache = Some(c => candCache = Some(c)),
-        rareKeysPrepared = Some((
-          skdf.filter(col("_df") >= 2 && col("_df") <= ceiling).select("sk"),
-          rareKeyCount)),
-        pricedPairs = pricedBill)
-    // neither the candidate persist nor the df aggregate has a
-    // caller-visible handle, so neither may outlive this call: materialize
-    // the (budget-bounded, small) result into its own ledgered persist and
-    // drop both. The SETS cache stays a loan until Caches.releaseAll / drain.
-    val out = graft.Caches.persistLoaned(res)
-    out.count()
-    (candCache.toSeq :+ skdf).foreach(graft.Caches.endLoan)
-    out
-  }
 
   /** X13 — cross-source duplicate OVERLAP MATRIX: for every source pair
     * (a ≤ b), how many distinct normalized fingerprints appear in BOTH —
@@ -1463,11 +1211,6 @@ object Dedup {
         org.apache.spark.sql.types.StructField("component", idType, nullable = false))))
   }
 
-  /** Canonical-keep selection: drop every document that belongs to a
-    * near-dup cluster but is not its minimum-id representative.
-    * `localEdgeLimit` passes through to [[connectedComponents]] (0 forces
-    * the distributed label loop).
-    */
   /** D6c — INCREMENTAL connected components: fold a batch of NEW pairs
     * into existing (id, component) labels without re-walking the full
     * historical pair set. The saved labels are CONTRACTION edges — each
@@ -1497,6 +1240,11 @@ object Dedup {
         .unionByName(newPairs.select("id_1", "id_2")),
       maxIter, labelPartitions, localEdgeLimit)
 
+  /** Canonical-keep selection: drop every document that belongs to a
+    * near-dup cluster but is not its minimum-id representative.
+    * `localEdgeLimit` passes through to [[connectedComponents]] (0 forces
+    * the distributed label loop).
+    */
   def keepCanonical(df: DataFrame, idCol: String, pairs: DataFrame,
                     localEdgeLimit: Long = 1L << 18): DataFrame = {
     val losers = connectedComponents(pairs, localEdgeLimit = localEdgeLimit)
@@ -1549,6 +1297,9 @@ object Dedup {
     df.join(losers, df(idCol) === losers("id"), "left_anti")
   }
 
+  /** The SimHash sketch width, in bits. */
+  val SimhashBits = 60
+
   /** 60-bit SimHash over whitespace tokens: bit i of the sketch is the sign
     * of Σ_tokens (bit i of tokenHash(token) ? +1 : -1). Near-dup docs differ
     * in few bits (small Hamming distance). Computed per-row with array
@@ -1556,8 +1307,6 @@ object Dedup {
     * (md5-derived, 60 bits) so the sketch is reproducible in any engine
     * with an md5 — which is what makes the result oracle-checkable.
     */
-  val SimhashBits = 60
-
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // token hashes materialized as their own projection alias: the sketch
     // references it 60 times (once per bit), which keeps the projection
@@ -1592,6 +1341,34 @@ object Dedup {
     withHashes.select(col(idCol), col("_len"), simhashSketchExpr.as("simhash"))
   }
 
+  /** The 15-bit chunk `c` (0..3) of a 60-bit sketch. */
+  private def simhashChunk(sketch: Column, c: Int): Column =
+    shiftrightunsigned(sketch, c * 15).bitwiseAND(lit(0x7FFFL))
+
+  /** The ONE SimHash chunk scheme: each sketched row exploded into its
+    * four (chunk, ckey) band rows, carrying the `keep` columns. A pair
+    * within Hamming ≤ 3 of a 60-bit sketch agrees exactly on ≥ 1 of the
+    * 4 chunks (pigeonhole), so equi-joining on (chunk, ckey) recalls
+    * every such pair.
+    */
+  private def simhashChunkRows(sketched: DataFrame, keep: String*): DataFrame =
+    sketched.select(keep.map(col) :+
+        explode(array((0 until 4).map { c =>
+          struct(lit(c).as("chunk"), simhashChunk(col("simhash"), c).as("ckey"))
+        }: _*)).as("cd"): _*)
+      .select(keep.map(col) ++ Seq(col("cd.chunk"), col("cd.ckey")): _*)
+
+  /** FIRST-AGREEING-CHUNK test for a pair met at band `chunk`: true when
+    * the two sketches already agree on an earlier chunk, where the pair
+    * also met. Keeping only the meets where it is false emits each pair
+    * exactly once with no pair dedup — three codegen'd mask compares on
+    * the sketches in hand, not a join or a distinct.
+    */
+  private def earlierChunkAgrees(sh1: Column, sh2: Column): Column =
+    (0 until 3).map { c =>
+      col("chunk") > c && simhashChunk(sh1, c) === simhashChunk(sh2, c)
+    }.reduce(_ || _)
+
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, banded into
     * 4×15-bit chunks for candidate generation (a pair within Hamming ≤ 3 of
     * a 60-bit sketch must agree exactly on ≥1 of 4 chunks — pigeonhole, so
@@ -1609,30 +1386,15 @@ object Dedup {
     // the chunk explode below is four cheap bit-ops rows per cached row.
     // Loan convention: the result is lazy, Caches.drain settles it.
     val sh = graft.Caches.persistLoaned(simhash(df, idCol, textCol))
-    val chunked = sh.select(
-      col(idCol), col("simhash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftrightunsigned(col("simhash"), c * 15).bitwiseAND(lit(0x7FFFL)).as("ckey"))
-      }: _*)).as("cd"))
-      .select(col(idCol), col("simhash"), col("cd.chunk"), col("cd.ckey"))
+    val chunked = simhashChunkRows(sh, idCol, "simhash")
     val l = chunked.select(col(idCol).as("id_1"), col("simhash").as("sh_1"), col("chunk"), col("ckey"))
     val r = chunked.select(col(idCol).as("id_2"), col("simhash").as("sh_2"), col("chunk"), col("ckey"))
-    // FIRST-AGREEING-CHUNK collapse instead of a distinct (the fuzzy
-    // path's chunkDedup trick, r16 sweep): a qualifying pair agrees on
-    // ≥1 of the 4 chunks and is emitted exactly at its first agreeing
-    // chunk, so the relation needs NO pair dedup at all. The .distinct()
-    // it replaces buffered up to 4 copies of every within-threshold pair
-    // in its partial aggregate — 19.9 GB of memory spill at 100× (both
-    // sketches are in hand here, so the earlier-chunk check is three
-    // codegen'd mask compares, not a join).
-    val earlierChunkAgrees = (0 until 3).map { c =>
-      col("chunk") > c &&
-        shiftrightunsigned(col("sh_1"), c * 15).bitwiseAND(lit(0x7FFFL)) ===
-        shiftrightunsigned(col("sh_2"), c * 15).bitwiseAND(lit(0x7FFFL))
-    }.reduce(_ || _)
+    // FIRST-AGREEING-CHUNK collapse instead of a distinct (r16 sweep):
+    // the .distinct() it replaces buffered up to 4 copies of every
+    // within-threshold pair in its partial aggregate — 19.9 GB of memory
+    // spill at 100×
     l.join(r, Seq("chunk", "ckey"))
-      .filter(col("id_1") < col("id_2") && !earlierChunkAgrees)
+      .filter(col("id_1") < col("id_2") && !earlierChunkAgrees(col("sh_1"), col("sh_2")))
       .select(col("id_1"), col("id_2"),
         bit_count(col("sh_1").bitwiseXOR(col("sh_2"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -1685,7 +1447,7 @@ object Dedup {
     // Persist the banded sketch rows (r20): the verify's two join sides
     // each re-evaluated the simhash pipeline (md5 per token + 60-bit
     // fold) without a cache boundary — the same double-evaluation the
-    // budget/gated entries already avoid via their chunked persist. Loan
+    // gated entry already avoids via its chunked persist. Loan
     // convention (lazy result, Caches.drain settles).
     fuzzyVerify(df, idCol, textCol, maxDist, maxHamming,
       graft.Caches.persistLoaned(fuzzyChunked(df, idCol, textCol, maxDist)),
@@ -1711,21 +1473,12 @@ object Dedup {
                        maxHamming: Int = 3): DataFrame = {
     require(maxDist >= 0, "fuzzyIncremental: maxDist must be >= 0")
     require(maxHamming <= 3, "4-chunk banding guarantees recall only for maxHamming <= 3")
-    val lSide = fuzzyChunked(newDocs, idCol, textCol, maxDist)
-      .select(col(idCol).as("id_1"), col("simhash").as("sh_1"),
-        col("_len").as("_l1"), col("chunk"), col("ckey"), col("_hb").as("_lb"))
-    val rSide = fuzzyChunked(corpus, idCol, textCol, maxDist)
-      .select(col(idCol).as("id_2"), col("simhash").as("sh_2"),
-        col("_len").as("_l2"), col("chunk"), col("ckey"),
-        explode(array(col("_hb") - 1, col("_hb"), col("_hb") + 1)).as("_lb"))
-    val earlierChunkAgrees = (0 until 3).map { c =>
-      (col("chunk") > c) &&
-        (shiftrightunsigned(col("sh_1"), c * 15).bitwiseAND(lit(0x7FFFL)) ===
-          shiftrightunsigned(col("sh_2"), c * 15).bitwiseAND(lit(0x7FFFL)))
-    }.reduce(_ || _)
+    val lSide = fuzzyHomeSide(fuzzyChunked(newDocs, idCol, textCol, maxDist), idCol)
+    val rSide = fuzzyReplicatedSide(fuzzyChunked(corpus, idCol, textCol, maxDist), idCol)
     val cand = lSide.join(rSide, Seq("chunk", "ckey", "_lb"))
       .filter(bit_count(col("sh_1").bitwiseXOR(col("sh_2"))) <= maxHamming &&
-        abs(col("_l1") - col("_l2")) <= maxDist && !earlierChunkAgrees)
+        abs(col("_l1") - col("_l2")) <= maxDist &&
+        !earlierChunkAgrees(col("sh_1"), col("sh_2")))
       .select("id_1", "id_2")
     val t1 = newDocs.select(col(idCol).as("id_1"), col(textCol).as("_t1"))
     val t2 = corpus.select(col(idCol).as("id_2"), col(textCol).as("_t2"))
@@ -1738,21 +1491,30 @@ object Dedup {
   /** The ONE definition of the fuzzy family's banded sketch rows —
     * (id, simhash, _len, chunk, ckey, _hb) where `_hb = floor(len / w)`
     * is the row's HOME length bucket (width w = maxDist+1) — shared by
-    * the pair join, the cell diagnostic, and the budget-capped variant so
+    * the pair join, the cell diagnostic, and the capped admission so
     * the cell scheme can never drift between them.
     */
   private[graft] def fuzzyChunked(df: DataFrame, idCol: String, textCol: String,
                                   maxDist: Int): DataFrame = {
     val w = maxDist + 1
-    simhashWithLen(df, idCol, textCol).select(
-      col(idCol), col("simhash"), col("_len"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftrightunsigned(col("simhash"), c * 15).bitwiseAND(lit(0x7FFFL)).as("ckey"))
-      }: _*)).as("cd"))
-      .select(col(idCol), col("simhash"), col("_len"), col("cd.chunk"), col("cd.ckey"),
-        floor(col("_len") / w).as("_hb"))
+    simhashChunkRows(simhashWithLen(df, idCol, textCol), idCol, "simhash", "_len")
+      .withColumn("_hb", floor(col("_len") / w))
   }
+
+  /** The probing side of the fuzzy band join: each chunk row in its HOME
+    * length bucket (`_lb`), as (id_1, sh_1, _l1, chunk, ckey, _lb). */
+  private def fuzzyHomeSide(chunked: DataFrame, idCol: String): DataFrame =
+    chunked.select(col(idCol).as("id_1"), col("simhash").as("sh_1"),
+      col("_len").as("_l1"), col("chunk"), col("ckey"), col("_hb").as("_lb"))
+
+  /** The build side of the fuzzy band join: each chunk row replicated into
+    * its home and both adjacent length buckets, as (id_2, sh_2, _l2,
+    * chunk, ckey, _lb) — any pair with |Δlen| ≤ maxDist meets the home
+    * side in ≥ 1 bucket, and in exactly one per chunk. */
+  private def fuzzyReplicatedSide(chunked: DataFrame, idCol: String): DataFrame =
+    chunked.select(col(idCol).as("id_2"), col("simhash").as("sh_2"),
+      col("_len").as("_l2"), col("chunk"), col("ckey"),
+      explode(array(col("_hb") - 1, col("_hb"), col("_hb") + 1)).as("_lb"))
 
   /** The fuzzy family's candidate join + levenshtein verify over a given
     * (possibly admission-filtered) chunked frame: length-sliced banding
@@ -1773,10 +1535,10 @@ object Dedup {
     * is unchanged (every pair still surfaces, just at one chunk). At
     * 100× the full-admission path still spills ~6 GB — the residue lives in
     * the banded JOIN's sort of the low-entropy buckets themselves, not
-    * the dedup — which is exactly what [[fuzzyNearDupsBudget]]'s
-    * admission cap exists to bound (3.5 s, zero spill, same probe).
+    * the dedup — which is exactly what [[fuzzyNearDups]]' capped
+    * admission exists to bound (3.5 s, zero spill, same probe).
     *
-    * `chunkDedup = false` (the BUDGET path): the old distinct stays —
+    * `chunkDedup = false` (the CAPPED path): the old distinct stays —
     * there admission may have EXCLUDED a pair's first agreeing chunk
     * while a later chunk admits it, so collapsing to the first chunk
     * would silently shrink the documented any-admitted-chunk recall
@@ -1795,17 +1557,8 @@ object Dedup {
                           chunked: DataFrame,
                           chunkDedup: Boolean,
                           pricedRows: Long = 0L): DataFrame = {
-    val lSide = chunked.select(col(idCol).as("id_1"), col("simhash").as("sh_1"),
-      col("_len").as("_l1"), col("chunk"), col("ckey"), col("_hb").as("_lb"))
-    val rSide = chunked.select(col(idCol).as("id_2"), col("simhash").as("sh_2"),
-      col("_len").as("_l2"), col("chunk"), col("ckey"),
-      explode(array(col("_hb") - 1, col("_hb"), col("_hb") + 1)).as("_lb"))
-    val earlierChunkAgrees = (0 until 3).map { c =>
-      (col("chunk") > c) &&
-        (shiftrightunsigned(col("sh_1"), c * 15).bitwiseAND(lit(0x7FFFL)) ===
-          shiftrightunsigned(col("sh_2"), c * 15).bitwiseAND(lit(0x7FFFL)))
-    }.reduce(_ || _)
-    val base = lSide.join(rSide, Seq("chunk", "ckey", "_lb"))
+    val base = fuzzyHomeSide(chunked, idCol)
+      .join(fuzzyReplicatedSide(chunked, idCol), Seq("chunk", "ckey", "_lb"))
       .filter(col("id_1") < col("id_2") &&
         bit_count(col("sh_1").bitwiseXOR(col("sh_2"))) <= maxHamming &&
         abs(col("_l1") - col("_l2")) <= maxDist)
@@ -1824,7 +1577,7 @@ object Dedup {
       kernelWidth(df.sparkSession, pricedRows, VerifyRowsPerTask)
       else 0
     val cand = if (chunkDedup) {
-      val c = base.filter(!earlierChunkAgrees).select("id_1", "id_2")
+      val c = base.filter(!earlierChunkAgrees(col("sh_1"), col("sh_2"))).select("id_1", "id_2")
       if (w > 0) spreadKernel(c, pricedRows, VerifyRowsPerTask, col("id_1"))
       else c
     } else {
@@ -1858,12 +1611,12 @@ object Dedup {
   }
 
   /** D9c — cell-size DIAGNOSTIC for the fuzzy banding join (the d4c
-    * pattern applied to the fuzzy family): histogram of (chunk, ckey,
-    * lenBucket) cell sizes with the candidate evaluations each size
-    * stratum costs within its cells (`n_cells · c(c−1)/2`) and the
-    * running total by ascending size — the frame the budget-capped
-    * variant's cap derivation reads. One narrow aggregate over 32-byte
-    * banded rows; never a join.
+    * pattern applied to the fuzzy family): [[pairCostHistogram]] over the
+    * (chunk, ckey, lenBucket) cells — one row per cell size with the
+    * number of cells (`n_cells`), the candidate evaluations each size
+    * stratum costs within its cells and the running total by ascending
+    * size, the arithmetic [[fuzzyNearDups]]' gate prices with. One narrow
+    * aggregate over 32-byte banded rows; never a join.
     *
     * The priced quantity is the WITHIN-cell quadratic term — the thing
     * that diverges on a low-entropy corpus (clustered sketches ⇒ one
@@ -1874,16 +1627,9 @@ object Dedup {
     * sum is the right budget handle.
     */
   def fuzzyCellStats(df: DataFrame, idCol: String, textCol: String,
-                     maxDist: Int): DataFrame = {
-    val cells = fuzzyChunked(df, idCol, textCol, maxDist)
-      .groupBy("chunk", "ckey", "_hb").agg(count(lit(1)).as("cell_size"))
-    val hist = cells.groupBy("cell_size").agg(count(lit(1)).as("n_cells"))
-      // c·(c−1) is even, so DIV 2 is exact long arithmetic
-      .withColumn("pair_cost", expr("n_cells * (cell_size * (cell_size - 1) DIV 2)"))
-    val wCum = Window.orderBy("cell_size") // tiny frame: ≤ |distinct sizes| rows
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist.withColumn("cum_pair_cost", sum("pair_cost").over(wCum))
-  }
+                     maxDist: Int): DataFrame =
+    pairCostHistogram(fuzzyCells(fuzzyChunked(df, idCol, textCol, maxDist)),
+      "cell_size", "n_cells")
 
   /** Over-cap cell frames below this many cells broadcast for the
     * admission anti join (3 small ints/longs per row; the histogram gives
@@ -1892,47 +1638,8 @@ object Dedup {
     */
   private val BroadcastOverCapCellLimit = 1L << 19
 
-  /** D9b — [[fuzzyNearDupsBanded]] with candidate admission CAPPED by a pair
-    * budget (the d4d pattern applied to the fuzzy family): one aggregate
-    * prices the (chunk, ckey, lenBucket) cell sizes ([[fuzzyCellStats]]),
-    * the cap is derived as the largest cell size whose cumulative
-    * within-cell candidate cost stays inside `budgetPairs` (floored at 2 —
-    * below 2 a cell generates nothing and the operator would go sterile),
-    * and rows whose HOME cell exceeds the cap are excluded from the join
-    * on BOTH sides. This is what keeps the fuzzy path's shuffle and task
-    * memory flat as the corpus grows: a fixed cap admits linearly more
-    * candidates at 10× data; a fixed PAIR budget adapts the cap downward
-    * so candidate volume — the thing the 100× probe measured spilling —
-    * stays bounded (within-cell meets ≤ budget by construction; adjacent
-    * cross meets ≤ 2·cap·|admitted rows|, linear).
-    *
-    * Recall contract (document with the corpus, as d4d documents its
-    * 290-vs-2,560 trade): only candidate GENERATION is restricted —
-    * verification is exact on survivors — so a true pair (edit distance
-    * ≤ maxDist) is lost iff EVERY chunk where its sketches agree lands
-    * both ids in (or one id in) an over-cap cell. Over-cap cells are
-    * precisely the degenerate near-identical clusters; within such a
-    * cluster pairs are lost, while pairs bridging a normal cell in ANY of
-    * the 4 chunks survive. The oracle re-derives the same cap from the
-    * same histogram in SQL, so the derivation arithmetic itself is gated.
-    *
-    * The chunked frame and its cells aggregate are [[graft.Caches]] loans
-    * (the histogram and the join both read them).
-    */
-  def fuzzyNearDupsBudget(df: DataFrame, idCol: String, textCol: String,
-                          maxDist: Int, budgetPairs: Long,
-                          maxHamming: Int = 3): DataFrame = {
-    require(maxDist >= 0, "fuzzyNearDupsBudget: maxDist must be >= 0")
-    require(maxHamming <= 3, "4-chunk banding guarantees recall only for maxHamming <= 3")
-    require(budgetPairs >= 0, "fuzzyNearDupsBudget: budget must be >= 0")
-    val chunked = graft.Caches.persistLoaned(fuzzyChunked(df, idCol, textCol, maxDist))
-    val cells = graft.Caches.persistLoaned(fuzzyCells(chunked))
-    fuzzyCapped(df, idCol, textCol, maxDist, maxHamming, chunked, cells,
-      fuzzyCellHist(cells), budgetPairs)
-  }
-
   /** The (chunk, ckey, _hb) → cell_size aggregate, computed ONCE per
-    * budget/auto call and persisted (loan convention): the histogram AND
+    * gated call and persisted (loan convention): the strata collect AND
     * the over-cap blacklist both read it. Before r15 each derived it
     * independently — a duplicated full-corpus aggregate+exchange over the
     * chunked frame (4 rows/doc: 20M rows at 1000×) per capped call.
@@ -1940,76 +1647,65 @@ object Dedup {
   private[graft] def fuzzyCells(chunked: DataFrame): DataFrame =
     chunked.groupBy("chunk", "ckey", "_hb").agg(count(lit(1)).as("cell_size"))
 
-  /** The (cell_size, n_cells, cum_pair_cost) histogram of the banded cells,
-    * ascending cell_size — ONE bounded collect (≤ |distinct sizes| rows, the
-    * s5i-total pattern) shared by the budget and auto entries so the cap
-    * arithmetic can never drift between them. Arithmetic identical to
-    * [[fuzzyCellStats]]'s.
-    */
-  private def fuzzyCellHist(cells: DataFrame): Array[(Long, Long, Long)] =
-    cells.groupBy("cell_size").agg(count(lit(1)).as("n_cells"))
-      .collect()                    // ≤ |distinct sizes| rows: sort on the
-      .map(r => (r.getLong(0), r.getLong(1))) // driver, not in an exchange
-      .sortBy(_._1)                 // (every AQE stage is ~100 ms latency)
-      .scanLeft((0L, 0L, 0L)) { case ((_, _, cum), (size, n)) =>
-        (size, n, cum + n * (size * (size - 1) / 2))
-      }.drop(1).toArray
-
   /** The capped-admission body over a prepared chunked frame + its cells
-    * aggregate + histogram — derive the largest cap inside `budgetPairs`,
-    * anti-join over-cap HOME cells off both sides, verify (with the
-    * candidate distinct — admission may exclude a pair's first agreeing
-    * chunk, see [[fuzzyVerify]]).
+    * aggregate + strata: derive the largest cap inside `budgetPairs`
+    * ([[capWithin]]), anti-join over-cap HOME cells off both sides, verify
+    * (with the candidate distinct — admission may exclude a pair's first
+    * agreeing chunk, see [[fuzzyVerify]]).
     */
   private def fuzzyCapped(df: DataFrame, idCol: String, textCol: String,
                           maxDist: Int, maxHamming: Int, chunked: DataFrame,
-                          cells: DataFrame, hist: Array[(Long, Long, Long)],
+                          cells: DataFrame, strata: IndexedSeq[(Long, Long, Long)],
                           budgetPairs: Long): DataFrame = {
-    val cap = math.max(2L,
-      hist.filter(_._3 <= budgetPairs).map(_._1).maxOption.getOrElse(2L))
-    val nOverCap = hist.filter(_._1 > cap).map(_._2).sum
+    val cap = capWithin(strata, budgetPairs)
+    val nOverCap = strata.filter(_._1 > cap).map(_._2).sum
     val overCap = cells.filter(col("cell_size") > cap)
       .select("chunk", "ckey", "_hb")
     val blacklist = if (nOverCap <= BroadcastOverCapCellLimit)
       broadcast(overCap) else overCap
     val admitted = chunked.join(blacklist, Seq("chunk", "ckey", "_hb"), "left_anti")
-    // within-cell admitted pairs are PRICED EXACTLY by the histogram's
+    // within-cell admitted pairs are PRICED EXACTLY by the strata's
     // cumulative cost at the cap; ×3 covers the unpriced adjacent-slice
     // cross meets (≤ 2·cap·rows, linear). [[kernelWidth]] sizes the verify
     // exchanges from it (≤ ~64k text-carrying rows per task, ≈128 MB of
     // sort state at ~2 KB/pair, capped at 8192) — measured at 1000×: the
     // r15 fixed-32 width put ~1M 2 KB rows in each verify sort and
     // spilled 144 GB.
-    val admittedPairs = hist.filter(_._1 <= cap).lastOption.map(_._3).getOrElse(0L)
     fuzzyVerify(df, idCol, textCol, maxDist, maxHamming, admitted,
-      chunkDedup = false, pricedRows = 3 * admittedPairs)
+      chunkDedup = false, pricedRows = 3 * pairCostAt(strata, cap))
   }
 
   /** D9 — fuzzy near-dup pairs at edit distance ≤ `maxDist`, with the
-    * plan chosen from the input (d9e, closing the d4d→d4e / d5e→d5f /
-    * d2g arc): one bounded histogram collect over the banded cells
-    * ([[fuzzyCellStats]]' arithmetic) prices the within-cell quadratic,
-    * the budget derives from CORPUS SIZE (`pairsPerDoc × nDocs` —
-    * candidate volume stays linear in the corpus, the property every
-    * scale-safe entry here maintains), and the gate picks:
+    * plan chosen from the input (d9e/d9b): one bounded strata collect
+    * over the banded cells ([[fuzzyCellStats]]' arithmetic) prices the
+    * within-cell quadratic, the budget derives from CORPUS SIZE
+    * (`pairsPerDoc × nDocs` — candidate volume stays linear in the
+    * corpus, the property every scale-safe entry here maintains), and the
+    * gate picks:
     *
     *   - total cost ≤ budget → [[fuzzyNearDupsBanded]]'s full-admission
     *     plan (first-agreeing-chunk dedup, no candidate distinct — the
     *     fastest plan, and admission would not have excluded anything:
     *     result-identical by construction, spec-pinned);
-    *   - total cost > budget → [[fuzzyNearDupsBudget]]'s capped admission
-    *     at the derived budget (zero spill 1×→1000× under a stated
-    *     budget, per the r12/r13 probes).
+    *   - total cost > budget → CAPPED admission: the cap is the largest
+    *     cell size whose cumulative within-cell cost stays inside the
+    *     budget (floored at 2), and rows whose HOME cell exceeds it are
+    *     excluded from the join on BOTH sides (zero spill 1×→1000× under
+    *     a binding budget, per the r12/r13 probes).
     *
-    * `nDocs` comes free from the same histogram (each doc contributes
+    * `nDocs` comes free from the same strata (each doc contributes
     * exactly 4 chunk rows, so Σ cell_size·n_cells / 4 — no extra pass).
-    * Recall under the capped branch follows d9b's documented contract:
-    * only generation is restricted, lost pairs live entirely inside
-    * over-cap (degenerate near-identical) cells. The oracle re-derives
-    * budget, cap, and admission in SQL, so the gate arithmetic itself is
-    * hash-gated. When the pair budget is a stated SLO use
-    * [[fuzzyNearDupsBudget]] directly (zero spill 1×→1000× under a
-    * binding budget, measured r13).
+    *
+    * Recall contract of the capped branch (document with the corpus, as
+    * d4d documents its recall trade): only candidate GENERATION is
+    * restricted — verification is exact on survivors — so a true pair
+    * (edit distance ≤ maxDist) is lost iff EVERY chunk where its
+    * sketches agree lands both ids in (or one id in) an over-cap cell.
+    * Over-cap cells are precisely the degenerate near-identical
+    * clusters; pairs bridging a normal cell in ANY of the 4 chunks
+    * survive. The oracle re-derives budget, cap and admission in SQL, so
+    * the gate arithmetic itself is hash-gated. The chunked frame and its
+    * cells aggregate are [[graft.Caches]] loans.
     */
   def fuzzyNearDups(df: DataFrame, idCol: String, textCol: String,
                     maxDist: Int, maxHamming: Int = 3,
@@ -2019,10 +1715,11 @@ object Dedup {
     require(pairsPerDoc >= 1, "fuzzyNearDups: pairsPerDoc must be >= 1")
     val chunked = graft.Caches.persistLoaned(fuzzyChunked(df, idCol, textCol, maxDist))
     val cells = graft.Caches.persistLoaned(fuzzyCells(chunked))
-    val hist = fuzzyCellHist(cells)
-    val nDocs = hist.map(t => t._1 * t._2).sum / 4
-    val budget = pairsPerDoc * nDocs
-    val total = hist.lastOption.map(_._3).getOrElse(0L)
+    val strata = pairCostStrata(cells, "cell_size")
+    val nDocs = strata.map(t => t._1 * t._2).sum / 4
+    // saturating: a pairsPerDoc meant as "unbounded" must not wrap negative
+    val budget = (BigInt(pairsPerDoc) * nDocs).min(Long.MaxValue).toLong
+    val total = strata.lastOption.map(_._3).getOrElse(0L)
     if (total <= budget) {
       // the full-admission branch never reads the cells again — settle the
       // loan now instead of at session drain
@@ -2033,7 +1730,7 @@ object Dedup {
         chunkDedup = true, pricedRows = 3 * total)
     } else
       fuzzyCapped(df, idCol, textCol, maxDist, maxHamming, chunked, cells,
-        hist, budget)
+        strata, budget)
   }
 
   /** Embedding-cosine near-duplicate pairs, EXACT threshold join on the
@@ -2063,29 +1760,6 @@ object Dedup {
       .select("id_1", "id_2", "cosine")
   }
 
-  /** D10 — SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
-    * dedup via k-means cells. Embeddings are clustered into `k` coarse
-    * cells ([[Similarity.kmeansAssign]] — deterministic seeding, so the
-    * oracle replays the training); cosine pairs at ≥ `threshold` are
-    * generated ONLY within a cell; each within-cell duplicate cluster
-    * (connected components — cells are disjoint, so components never
-    * cross them) keeps its smallest id. Returns the surviving rows.
-    *
-    * This is the semantic complement to the lexical family: d2/d4 catch
-    * shared n-grams, d9 catches edit distance, SemDeDup catches
-    * PARAPHRASES — same meaning, disjoint token sets — which is why
-    * large-corpus curation runs it after exact/fuzzy dedup.
-    *
-    * Scale shape: the paper's own design IS the scale argument — the
-    * quadratic is bounded per cell (Σ_c n_c(n_c−1)/2 candidates, priced
-    * exactly like d9c's cells by one groupBy(cell).count() before the
-    * join), and k grows with the corpus to hold cell sizes flat (the
-    * paper uses n_c ≈ 10⁴ at corpus scale, k ∝ N). The cell join is an
-    * equi-join on `cell` (PlanSpec: no cartesian); vectors travel into it
-    * once per member, not per pair. At 100 TB the kmeansAssign centroids
-    * are a broadcast (k×dim floats) and assignment is one narrow scan —
-    * the same shape [[Similarity.ivfTopK]] already measures at 100×.
-    */
   /** D10b — cell-size DIAGNOSTIC for [[semDedup]] (the d4c/d9c pattern
     * applied to the semantic family): histogram of k-means cell sizes
     * with the within-cell pair cost each size stratum contributes
@@ -2106,15 +1780,11 @@ object Dedup {
     // row is one aggregate over the assignment d10 already cached; a
     // standalone call pays one fill for one read (scale note: the entry
     // is corpus-wide, see the BENCH_SCALE loan-footprint table)
-    val cells = graft.Caches.persistLoaned(
-      Similarity.kmeansAssign(df, idCol, vecCol, dim, k, iters, seed))
-      .groupBy("cell").agg(count(lit(1)).as("cell_size"))
-    val hist = cells.groupBy("cell_size").agg(count(lit(1)).as("n_cells"))
-      // c·(c−1) is even, so DIV 2 is exact long arithmetic
-      .withColumn("pair_cost", expr("n_cells * (cell_size * (cell_size - 1) DIV 2)"))
-    val wCum = Window.orderBy("cell_size") // tiny frame: ≤ |distinct sizes| rows
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist.withColumn("cum_pair_cost", sum("pair_cost").over(wCum))
+    pairCostHistogram(
+      graft.Caches.persistLoaned(
+        Similarity.kmeansAssign(df, idCol, vecCol, dim, k, iters, seed))
+        .groupBy("cell").agg(count(lit(1)).as("cell_size")),
+      "cell_size", "n_cells")
   }
 
   /** D10c — incremental SemDeDup ingest, completing the incremental
@@ -2162,6 +1832,29 @@ object Dedup {
     newVecs.join(matched, newVecs(idCol) === matched("_bid"), "left_anti")
   }
 
+  /** D10 — SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
+    * dedup via k-means cells. Embeddings are clustered into `k` coarse
+    * cells ([[Similarity.kmeansAssign]] — deterministic seeding, so the
+    * oracle replays the training); cosine pairs at ≥ `threshold` are
+    * generated ONLY within a cell; each within-cell duplicate cluster
+    * (connected components — cells are disjoint, so components never
+    * cross them) keeps its smallest id. Returns the surviving rows.
+    *
+    * This is the semantic complement to the lexical family: d2/d4 catch
+    * shared n-grams, d9 catches edit distance, SemDeDup catches
+    * PARAPHRASES — same meaning, disjoint token sets — which is why
+    * large-corpus curation runs it after exact/fuzzy dedup.
+    *
+    * Scale shape: the paper's own design IS the scale argument — the
+    * quadratic is bounded per cell (Σ_c n_c(n_c−1)/2 candidates, priced
+    * exactly like d9c's cells by one groupBy(cell).count() before the
+    * join), and k grows with the corpus to hold cell sizes flat (the
+    * paper uses n_c ≈ 10⁴ at corpus scale, k ∝ N). The cell join is an
+    * equi-join on `cell` (PlanSpec: no cartesian); vectors travel into it
+    * once per member, not per pair. At 100 TB the kmeansAssign centroids
+    * are a broadcast (k×dim floats) and assignment is one narrow scan —
+    * the same shape [[Similarity.ivfTopK]] already measures at 100×.
+    */
   def semDedup(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                k: Int, threshold: Double, iters: Int = 2,
                seed: String = "kmeans"): DataFrame = {
@@ -2246,24 +1939,21 @@ object Dedup {
 
   /** The banded cross-probe body: [[embeddingIncremental]]'s under-gate
     * branch, and the reference the d5c row and the specs call directly.
-    *
-    * `pricedRows` (the d5h/d5i gate's Σ n_batch·n_corpus bucket pricing,
-    * 0 = unknown) switches to the VERIFY-IN-JOIN shape — the
-    * [[embeddingLshBanded]] fix in the cross-corpus form: corpus vectors
-    * ride their band rows (linear) instead of shipping once per
-    * candidate, the cosine evaluates inside the band join, and only
-    * matched batch ids reach the distinct.
+    * The VERIFY-IN-JOIN shape — the [[embeddingLshBanded]] fix in the
+    * cross-corpus form: corpus vectors ride their band rows (linear)
+    * instead of shipping once per candidate, the cosine evaluates inside
+    * the band join, and only matched batch ids reach the distinct.
+    * Unpriced, the band exchanges spread at the parallelism floor.
     */
   private[graft] def embeddingIncrementalBanded(newVecs: DataFrame, corpus: DataFrame,
                                          idCol: String, vecCol: String,
                                          threshold: Double, dim: Int,
                                          bands: Int, bitsPerBand: Int,
-                                         ordinal: Boolean,
-                                         pricedRows: Long = 0L): DataFrame =
+                                         ordinal: Boolean): DataFrame =
     embeddingIncrementalBandedSketched(newVecs,
       Similarity.sketchedVecs(newVecs, idCol, vecCol, dim, bands, bitsPerBand, ordinal),
       Similarity.sketchedVecs(corpus, idCol, vecCol, dim, bands, bitsPerBand, ordinal),
-      idCol, threshold, pricedRows)
+      idCol, threshold, pricedRows = 0L)
 
   /** The banded cross-probe body over prepared sketch frames — the auto
     * gate passes its (persisted) pricing sketches in, so neither side is
@@ -2275,26 +1965,14 @@ object Dedup {
                                                  skB: DataFrame, skC: DataFrame,
                                                  idCol: String, threshold: Double,
                                                  pricedRows: Long): DataFrame = {
-    val matched =
-      if (pricedRows <= 0) {
-        val candidates = Similarity.bandRowsFromSketched(skB, "id_1")
-          .join(Similarity.bandRowsFromSketched(skC, "id_2"), Seq("band", "bkey"))
-          .select("id_1", "id_2").distinct()
-        val v1 = skB.select(col("_sid").as("id_1"), col("_svec").as("v_1"))
-        val v2 = skC.select(col("_sid").as("id_2"), col("_svec").as("v_2"))
-        candidates.join(v1, "id_1").join(v2, "id_2")
-          .filter(round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold)
-          .select("id_1").distinct()
-      } else {
-        val l0 = Similarity.bandRowsWithVecFromSketched(skB, "id_1", "v_1")
-        val r0 = Similarity.bandRowsWithVecFromSketched(skC, "id_2", "v_2")
-        val w = 1L << 16
-        val l = spreadKernel(l0, pricedRows, w, col("band"), col("bkey"))
-        val r = spreadKernel(r0, pricedRows, w, col("band"), col("bkey"))
-        l.join(r, Seq("band", "bkey"))
-          .filter(round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold)
-          .select("id_1").distinct()
-      }
+    val w = 1L << 16
+    val l = spreadKernel(Similarity.bandRowsWithVecFromSketched(skB, "id_1", "v_1"),
+      pricedRows, w, col("band"), col("bkey"))
+    val r = spreadKernel(Similarity.bandRowsWithVecFromSketched(skC, "id_2", "v_2"),
+      pricedRows, w, col("band"), col("bkey"))
+    val matched = l.join(r, Seq("band", "bkey"))
+      .filter(round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold)
+      .select("id_1").distinct()
     newVecs.join(matched, newVecs(idCol) === matched("id_1"), "left_anti")
   }
 
@@ -2318,9 +1996,9 @@ object Dedup {
     * banding): the banded probe OOMs an 8 GB JVM; this path completes
     * with zero spill at flat task memory.
     */
-  def embeddingIncrementalExact(newVecs: DataFrame, corpus: DataFrame,
-                                idCol: String, vecCol: String,
-                                threshold: Double): DataFrame = {
+  private[graft] def embeddingIncrementalExact(newVecs: DataFrame, corpus: DataFrame,
+                                               idCol: String, vecCol: String,
+                                               threshold: Double): DataFrame = {
     val batch = broadcast(newVecs.select(col(idCol).as("id_1"), col(vecCol).as("v_1")))
     val matched = corpus.select(col(vecCol).as("v_2"))
       .join(batch, round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold)
@@ -2690,66 +2368,46 @@ object Dedup {
   /** The banded self-join LSH body: [[embeddingNearDupsLSH]]'s under-gate
     * branch, and the reference the d5b row and the specs call directly.
     *
-    * Two physical shapes, same relation:
-    *   - `pricedRows = 0` (the reference regime): distinct the
-    *     candidate pairs first, then join both vectors on — each cosine
-    *     evaluates exactly once, but EVERY candidate carries two 256-byte
-    *     vectors through id-keyed exchanges.
-    *   - `pricedRows > 0` (the gate's Σ b(b−1)/2 pricing): VERIFY IN THE
-    *     BAND JOIN — vectors ride the band rows (`bands`× the corpus,
-    *     linear), the cosine evaluates inside the join stage, and only
-    *     SURVIVORS reach the final distinct. The r16 sweep's find forced
-    *     this: at 100× the gate correctly ADMITS ~1.2e9 candidates
-    *     (sub-quadratic — the admission contract holds), but
-    *     distinct-first then shipped a vector per candidate — the second
-    *     id join's exchange alone priced ~400 GB and exhausted the probe
-    *     box's disk, and no exchange WIDTH fixes a per-candidate payload.
-    *     Kernel work matches the gate's bound exactly (a pair costs one
-    *     cosine per colliding band — Σ b(b−1)/2 is precisely that count),
-    *     and the band exchanges spread at [[kernelWidth]] so per-task
-    *     in-join work stays at the quantum.
+    * VERIFY IN THE BAND JOIN: vectors ride the band rows (`bands`× the
+    * corpus, linear), the cosine evaluates inside the join stage, and only
+    * SURVIVORS reach the final distinct. The r16 sweep's find forced this
+    * shape: at 100× the gate correctly ADMITS ~1.2e9 candidates
+    * (sub-quadratic — the admission contract holds), but distinct-first
+    * then shipped a vector per candidate — the second id join's exchange
+    * alone priced ~400 GB and exhausted the probe box's disk, and no
+    * exchange WIDTH fixes a per-candidate payload. Kernel work matches
+    * the gate's bound exactly (a pair costs one cosine per colliding band
+    * — Σ b(b−1)/2 is precisely that count), and the band exchanges spread
+    * at [[kernelWidth]] of the gate's Σ b(b−1)/2 pricing so per-task
+    * in-join work stays at the quantum; this unpriced reference spreads
+    * them at the parallelism floor.
     */
   private[graft] def embeddingLshBanded(df: DataFrame, idCol: String, vecCol: String,
                                  threshold: Double, dim: Int, bands: Int,
-                                 bitsPerBand: Int, ordinal: Boolean,
-                                 pricedRows: Long = 0L): DataFrame =
+                                 bitsPerBand: Int, ordinal: Boolean): DataFrame =
     // the self-join reads the sketch once per side — persist it so the
     // bands × bits dim-length sketch folds run once per vector, not twice
     // (loan convention: lazy result, Caches.drain settles)
     embeddingLshBandedFromSketched(
       graft.Caches.persistLoaned(Similarity.sketchedVecs(
         df, idCol, vecCol, dim, bands, bitsPerBand, ordinal)),
-      threshold, pricedRows)
+      threshold, pricedRows = 0L)
 
   /** The banded self-join body over a prepared (persisted) sketch frame —
-    * both join sides, and the verify vectors of the distinct-first shape,
-    * derive from the ONE sketch evaluation.
+    * both join sides derive from the ONE sketch evaluation.
     */
   private def embeddingLshBandedFromSketched(sk: DataFrame, threshold: Double,
                                              pricedRows: Long): DataFrame = {
-    if (pricedRows <= 0) {
-      val candidates = Similarity.bandRowsFromSketched(sk, "id_1")
-        .join(Similarity.bandRowsFromSketched(sk, "id_2"), Seq("band", "bkey"))
-        .filter(col("id_1") < col("id_2"))
-        .select("id_1", "id_2").distinct()
-      val v1 = sk.select(col("_sid").as("id_1"), col("_svec").as("v_1"))
-      val v2 = sk.select(col("_sid").as("id_2"), col("_svec").as("v_2"))
-      candidates.join(v1, "id_1").join(v2, "id_2")
-        .withColumn("cosine", round(Vectors.cosine(col("v_1"), col("v_2")), 6))
-        .filter(col("cosine") >= threshold)
-        .select("id_1", "id_2", "cosine")
-    } else {
-      val l0 = Similarity.bandRowsWithVecFromSketched(sk, "id_1", "v_1")
-      val r0 = Similarity.bandRowsWithVecFromSketched(sk, "id_2", "v_2")
-      val w = 1L << 16
-      val l = spreadKernel(l0, pricedRows, w, col("band"), col("bkey"))
-      val r = spreadKernel(r0, pricedRows, w, col("band"), col("bkey"))
-      l.join(r, Seq("band", "bkey"))
-        .filter(col("id_1") < col("id_2"))
-        .withColumn("cosine", round(Vectors.cosine(col("v_1"), col("v_2")), 6))
-        .filter(col("cosine") >= threshold)
-        .select("id_1", "id_2", "cosine")
-        .distinct()
-    }
+    val w = 1L << 16
+    val l = spreadKernel(Similarity.bandRowsWithVecFromSketched(sk, "id_1", "v_1"),
+      pricedRows, w, col("band"), col("bkey"))
+    val r = spreadKernel(Similarity.bandRowsWithVecFromSketched(sk, "id_2", "v_2"),
+      pricedRows, w, col("band"), col("bkey"))
+    l.join(r, Seq("band", "bkey"))
+      .filter(col("id_1") < col("id_2"))
+      .withColumn("cosine", round(Vectors.cosine(col("v_1"), col("v_2")), 6))
+      .filter(col("cosine") >= threshold)
+      .select("id_1", "id_2", "cosine")
+      .distinct()
   }
 }

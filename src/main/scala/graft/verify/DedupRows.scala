@@ -91,31 +91,28 @@ private[verify] object DedupRows {
       bigramJaccardSql + " ORDER BY id_1, id_2"),
 
     // D4b: inverted-index sparse variant with a FIXED document-frequency
-    // cap — the pinned reference regime, the unguarded plan called
-    // directly (r17: the public name prices the cap against the df
-    // histogram and refuses a volume that explodes at scale — the d9/d5
-    // pattern). Cap mirrored exactly in the oracle.
+    // cap — the pinned reference regime, called directly (the public
+    // name derives its cap from a pair budget: d4d). Cap mirrored
+    // exactly in the oracle.
     VerifyRow("d4b_jaccard_sparse",
       (s, d) =>
-        Dedup.ngramJaccardPairsSparseUnguarded(Tables.documents(s, d), "doc_id", "text", 3, 0.2,
+        Dedup.ngramJaccardPairsSparseFixedCap(Tables.documents(s, d), "doc_id", "text", 3, 0.2,
           maxDf = 50)
           .orderBy("id_1", "id_2"),
-      d4bSparseOracleSql),
-
-    // D4f: the GUARDED plain fixed-cap name — same cap, same relation as
-    // d4b (shared oracle SQL), but the call runs only because the priced
-    // candidate volume (1.27M pairs at sf0.1) fits the 50M guard; at the
-    // 100× regime the r16 sweep measured DNF-ing, this same call refuses
-    // instead (BENCH_SCALE)
-    //
-    // the guarded plain name must reproduce the fixed-cap relation
-    // EXACTLY (the guard only prices and refuses; it never changes the
-    // admitted candidate set) — same oracle text as d4b
-    VerifyRow("d4f_jaccard_sparse_guarded",
-      (s, d) =>
-        Dedup.ngramJaccardPairsSparse(Tables.documents(s, d), "doc_id", "text", 3, 0.2, maxDf = 50)
-          .orderBy("id_1", "id_2"),
-      d4bSparseOracleSql),
+      s"WITH $trigramShCte, " +
+        "inv AS (SELECT doc_id, unnest(grams) AS g FROM sh), " +
+        "rare AS (SELECT g FROM inv GROUP BY g HAVING count(*) <= 50), " +
+        "cand AS (SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2 " +
+        "FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id " +
+        "WHERE a.g IN (SELECT g FROM rare)), " +
+        "v AS (SELECT c.id_1, c.id_2, " +
+        "len(list_intersect(s1.grams, s2.grams))::DOUBLE AS inter, " +
+        "(len(s1.grams) + len(s2.grams))::DOUBLE AS sz " +
+        "FROM cand c JOIN sh s1 ON c.id_1 = s1.doc_id JOIN sh s2 ON c.id_2 = s2.doc_id) " +
+        "SELECT id_1, id_2, round(CASE WHEN sz > inter THEN inter / (sz - inter) " +
+        "ELSE 0 END, 6) AS jaccard FROM v " +
+        "WHERE round(CASE WHEN sz > inter THEN inter / (sz - inter) ELSE 0 END, 6) >= 0.2 " +
+        "ORDER BY id_1, id_2"),
 
     // D4c: the df-distribution diagnostic behind the sparse path's cap —
     // per-df shingle counts, the candidate pairs each df stratum costs,
@@ -138,35 +135,6 @@ private[verify] object DedupRows {
         "(sum(pair_cost) OVER (ORDER BY df))::BIGINT AS cum_pair_cost " +
         "FROM c ORDER BY df"),
 
-    // D4e: the df diagnostic over a deterministic 25% document sample —
-    // the form a 100 TB corpus prices its plan with (the exact d4c is the
-    // repo's most expensive third-decade row). Exact arithmetic on the
-    // sample; est_* columns scale the pair bill by 1/rate² (unbiased).
-    //
-    // the same histogram over the deterministic 25% md5-coin sample (the
-    // s5 coin, same seed-0 literal), with the 1/rate² scaled estimate
-    // columns — exact arithmetic on the sample gates the sampling itself
-    VerifyRow("d4e_df_stats_sampled",
-      (s, d) =>
-        Dedup.shingleDfStatsSampled(Tables.documents(s, d), "doc_id", "text", 3,
-          rate = 0.25)
-          .orderBy("df"),
-      "WITH dd AS (SELECT doc_id, text FROM documents WHERE " +
-        "('0x' || substr(md5(doc_id::VARCHAR || '_0'), 1, 15))::BIGINT < " +
-        s"${(BigDecimal(0.25) * BigDecimal(1L << 60)).toLong}), " +
-        trigramShCteOver("dd") + ", " +
-        "inv AS (SELECT doc_id, unnest(grams) AS g FROM sh), " +
-        "dfs AS (SELECT g, count(*) AS df FROM inv GROUP BY g), " +
-        "hist AS (SELECT df, count(*)::BIGINT AS n_shingles FROM dfs GROUP BY df), " +
-        "c AS (SELECT df, n_shingles, " +
-        "(n_shingles * (df * (df - 1) // 2))::BIGINT AS pair_cost FROM hist), " +
-        "cc AS (SELECT df, n_shingles, pair_cost, " +
-        "(sum(pair_cost) OVER (ORDER BY df))::BIGINT AS cum_pair_cost FROM c) " +
-        "SELECT df, n_shingles, pair_cost, cum_pair_cost, " +
-        "round(pair_cost / 0.0625, 6) AS est_pair_cost, " +
-        "round(cum_pair_cost / 0.0625, 6) AS est_cum_pair_cost " +
-        "FROM cc ORDER BY df"),
-
     // D4d: sparse Jaccard with the cap DERIVED from a candidate-pair
     // budget — the oracle re-derives the same ceiling from the same
     // histogram in SQL, so the derivation arithmetic itself is gated.
@@ -179,7 +147,7 @@ private[verify] object DedupRows {
     // the pruned pair set
     VerifyRow("d4d_jaccard_sparse_auto",
       (s, d) =>
-        Dedup.ngramJaccardPairsSparseAuto(Tables.documents(s, d), "doc_id", "text",
+        Dedup.ngramJaccardPairsSparse(Tables.documents(s, d), "doc_id", "text",
           3, 0.2, budgetPairs = 12000L)
           .orderBy("id_1", "id_2"),
       s"WITH $trigramShCte, " +
@@ -570,36 +538,18 @@ private[verify] object DedupRows {
         "(sum(pair_cost) OVER (ORDER BY cell_size))::BIGINT AS cum_pair_cost " +
         "FROM c ORDER BY cell_size"),
 
-    // D9b: fuzzy dedup with admission CAPPED by a candidate-pair budget —
-    // the d4d pattern applied to the fuzzy family; the oracle re-derives
-    // the same cap from the same histogram in SQL. Budget 3000 binds at
-    // every SF (cap 20 at sf0.001, 23 at sf0.01, 3 at sf0.1), so the
-    // over-cap pruning path — not just the derivation — is exercised
-    //
-    // d9's pipeline with the admission cap DERIVED in SQL from the same
-    // cell histogram + budget the Spark side uses — gates the derivation
-    // arithmetic AND the capped candidate join, not just the verified set.
-    // abs(hb diff) <= 1 in SQL == Spark's adjacent-bucket replication
+    // D9b: the fuzzy gate's CAPPED branch — the d4d pattern applied to
+    // the fuzzy family: pairsPerDoc = 6 prices a budget of 6 × |docs|
+    // that binds at every SF (3,000 against a ~4k within-cell cost at
+    // sf0.001/0.01 → cap 20/23; 30,000 against ~371k at sf0.1 → cap 29),
+    // so the over-cap pruning path — not just the derivation — is
+    // exercised. The oracle re-derives budget, cap and admission in SQL
     VerifyRow("d9b_fuzzy_budget",
       (s, d) =>
-        Dedup.fuzzyNearDupsBudget(Tables.documents(s, d), "doc_id", "text",
-          maxDist = 40, budgetPairs = 3000L)
+        Dedup.fuzzyNearDups(Tables.documents(s, d), "doc_id", "text",
+          maxDist = 40, pairsPerDoc = 6L)
           .orderBy("id_1", "id_2"),
-      s"WITH $fuzzyCellsCte, " +
-        "hist AS (SELECT cell_size, count(*) AS n FROM cells GROUP BY cell_size), " +
-        "cum AS (SELECT cell_size, sum(n * (cell_size * (cell_size - 1) // 2)) " +
-        "OVER (ORDER BY cell_size) AS c FROM hist), " +
-        "cap AS (SELECT greatest(coalesce((SELECT max(cell_size) FROM cum WHERE c <= 3000), 2), 2) AS cap), " +
-        "adm AS (SELECT ch.* FROM ch JOIN cells USING (chunk, ckey, hb) " +
-        "WHERE cells.cell_size <= (SELECT cap FROM cap)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2 " +
-        "FROM adm a JOIN adm b ON a.chunk = b.chunk AND a.ckey = b.ckey " +
-        "AND abs(a.hb - b.hb) <= 1 AND a.doc_id < b.doc_id " +
-        "WHERE bit_count(xor(a.simhash, b.simhash)) <= 3 AND abs(a.len - b.len) <= 40) " +
-        "SELECT c.id_1, c.id_2, levenshtein(d1.text, d2.text)::BIGINT AS edit_dist " +
-        "FROM cand c JOIN documents d1 ON c.id_1 = d1.doc_id " +
-        "JOIN documents d2 ON c.id_2 = d2.doc_id " +
-        "WHERE levenshtein(d1.text, d2.text) <= 40 ORDER BY id_1, id_2"),
+      fuzzyGateOracleSql(6L)),
 
     // D9e: the fuzzy AUTO gate — the last diagnostic-without-a-derived-
     // plan-choice retired: budget = pairsPerDoc × nDocs (corpus-
@@ -610,34 +560,12 @@ private[verify] object DedupRows {
     // branch binds — the testdata SFs gate BOTH branches. The oracle
     // re-derives budget, cap, and admission in SQL; a non-binding budget
     // derives cap = max cell size, so the one capped SQL covers both.
-    //
-    // the auto gate's FULL derivation in SQL: budget = 64 × |documents|,
-    // cap from the same histogram (non-binding budget ⇒ cap = max cell
-    // size ⇒ admits everything ⇒ identical to the full-admission plan,
-    // which is exactly the Spark gate's uncapped branch) — one capped
-    // formulation gates both branches of the plan choice
     VerifyRow("d9e_fuzzy_auto",
       (s, d) =>
         Dedup.fuzzyNearDups(Tables.documents(s, d), "doc_id", "text",
           maxDist = 40, pairsPerDoc = 64L)
           .orderBy("id_1", "id_2"),
-      s"WITH $fuzzyCellsCte, " +
-        "hist AS (SELECT cell_size, count(*) AS n FROM cells GROUP BY cell_size), " +
-        "cum AS (SELECT cell_size, sum(n * (cell_size * (cell_size - 1) // 2)) " +
-        "OVER (ORDER BY cell_size) AS c FROM hist), " +
-        "budget AS (SELECT 64 * (SELECT count(*) FROM documents) AS b), " +
-        "cap AS (SELECT greatest(coalesce((SELECT max(cell_size) FROM cum " +
-        "WHERE c <= (SELECT b FROM budget)), 2), 2) AS cap), " +
-        "adm AS (SELECT ch.* FROM ch JOIN cells USING (chunk, ckey, hb) " +
-        "WHERE cells.cell_size <= (SELECT cap FROM cap)), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2 " +
-        "FROM adm a JOIN adm b ON a.chunk = b.chunk AND a.ckey = b.ckey " +
-        "AND abs(a.hb - b.hb) <= 1 AND a.doc_id < b.doc_id " +
-        "WHERE bit_count(xor(a.simhash, b.simhash)) <= 3 AND abs(a.len - b.len) <= 40) " +
-        "SELECT c.id_1, c.id_2, levenshtein(d1.text, d2.text)::BIGINT AS edit_dist " +
-        "FROM cand c JOIN documents d1 ON c.id_1 = d1.doc_id " +
-        "JOIN documents d2 ON c.id_2 = d2.doc_id " +
-        "WHERE levenshtein(d1.text, d2.text) <= 40 ORDER BY id_1, id_2"),
+      fuzzyGateOracleSql(64L)),
 
     // D5: embedding-cosine near-dup pairs (exact all-pairs, codegen'd cosine)
     VerifyRow("d5_embed_neardup",

@@ -30,7 +30,7 @@ private[verify] object OracleSql {
     * extended with text length, the 4×15-bit chunk rows, the home length
     * bucket (width = maxDist+1 = 41 at the d9 parameterization), and the
     * (chunk, ckey, hb) cell sizes — the one SQL definition both the
-    * histogram and the capped-admission oracles read, mirroring
+    * histogram and the fuzzy-gate oracles read, mirroring
     * `Dedup.fuzzyChunked`.
     */
   val fuzzyCellsCte: String =
@@ -42,6 +42,35 @@ private[verify] object OracleSql {
       "FROM shl, (VALUES (0), (1), (2), (3)) c(chunk)), " +
       "cells AS (SELECT chunk, ckey, hb, count(*) AS cell_size " +
       "FROM ch GROUP BY chunk, ckey, hb)"
+
+  /** The fuzzy gate's full derivation in SQL (d9b/d9e):
+    * `Dedup.fuzzyNearDups` at maxDist 40 with budget = `pairsPerDoc` ×
+    * |documents|, the cap re-derived from the same cell histogram
+    * (greatest(max cell size with cum cost <= budget, 2)), over-cap home
+    * cells excluded, candidates verified by levenshtein. A non-binding
+    * budget derives cap = max cell size, which admits everything and
+    * equals the gate's full-admission branch, so one capped formulation
+    * gates both branches. abs(hb diff) <= 1 == Spark's adjacent-bucket
+    * replication.
+    */
+  def fuzzyGateOracleSql(pairsPerDoc: Long): String =
+    s"WITH $fuzzyCellsCte, " +
+      "hist AS (SELECT cell_size, count(*) AS n FROM cells GROUP BY cell_size), " +
+      "cum AS (SELECT cell_size, sum(n * (cell_size * (cell_size - 1) // 2)) " +
+      "OVER (ORDER BY cell_size) AS c FROM hist), " +
+      s"budget AS (SELECT $pairsPerDoc * (SELECT count(*) FROM documents) AS b), " +
+      "cap AS (SELECT greatest(coalesce((SELECT max(cell_size) FROM cum " +
+      "WHERE c <= (SELECT b FROM budget)), 2), 2) AS cap), " +
+      "adm AS (SELECT ch.* FROM ch JOIN cells USING (chunk, ckey, hb) " +
+      "WHERE cells.cell_size <= (SELECT cap FROM cap)), " +
+      "cand AS (SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2 " +
+      "FROM adm a JOIN adm b ON a.chunk = b.chunk AND a.ckey = b.ckey " +
+      "AND abs(a.hb - b.hb) <= 1 AND a.doc_id < b.doc_id " +
+      "WHERE bit_count(xor(a.simhash, b.simhash)) <= 3 AND abs(a.len - b.len) <= 40) " +
+      "SELECT c.id_1, c.id_2, levenshtein(d1.text, d2.text)::BIGINT AS edit_dist " +
+      "FROM cand c JOIN documents d1 ON c.id_1 = d1.doc_id " +
+      "JOIN documents d2 ON c.id_2 = d2.doc_id " +
+      "WHERE levenshtein(d1.text, d2.text) <= 40 ORDER BY id_1, id_2"
 
   /** DuckDB expression snippets for the text gates — single definitions
     * shared by the t1/t2/t8 oracles and the q_pipeline_chain composition
@@ -510,28 +539,6 @@ private[verify] object OracleSql {
       s"regexp_split_to_array(lower(trim(text)), '\\s+')[i+2])) AS grams FROM $rel)"
 
   val trigramShCte: String = trigramShCteOver("documents")
-
-  /** The fixed-cap (maxDf = 50) sparse-Jaccard oracle — shared VERBATIM by
-    * d4b (the unguarded reference plan) and d4f (the guarded public
-    * name): the guard prices and refuses, never alters the
-    * admitted candidate set, so one SQL text gating both rows is what
-    * proves that.
-    */
-  val d4bSparseOracleSql: String =
-    s"WITH $trigramShCte, " +
-      "inv AS (SELECT doc_id, unnest(grams) AS g FROM sh), " +
-      "rare AS (SELECT g FROM inv GROUP BY g HAVING count(*) <= 50), " +
-      "cand AS (SELECT DISTINCT a.doc_id AS id_1, b.doc_id AS id_2 " +
-      "FROM inv a JOIN inv b ON a.g = b.g AND a.doc_id < b.doc_id " +
-      "WHERE a.g IN (SELECT g FROM rare)), " +
-      "v AS (SELECT c.id_1, c.id_2, " +
-      "len(list_intersect(s1.grams, s2.grams))::DOUBLE AS inter, " +
-      "(len(s1.grams) + len(s2.grams))::DOUBLE AS sz " +
-      "FROM cand c JOIN sh s1 ON c.id_1 = s1.doc_id JOIN sh s2 ON c.id_2 = s2.doc_id) " +
-      "SELECT id_1, id_2, round(CASE WHEN sz > inter THEN inter / (sz - inter) " +
-      "ELSE 0 END, 6) AS jaccard FROM v " +
-      "WHERE round(CASE WHEN sz > inter THEN inter / (sz - inter) ELSE 0 END, 6) >= 0.2 " +
-      "ORDER BY id_1, id_2"
 
   /** The d6 components relation (transitive closure over the bigram pair
     * set, canonical = min id) — shared verbatim by the from-scratch row

@@ -448,8 +448,8 @@ private[graft] object RowHelpers {
     * join — d5c's 32×4-at-0.45 parameterization, i.e. the pinned d5b
     * reference regime, quadratic per (band, bkey) bucket once corpus/16
     * rows share a 4-bit key (measured family-wide: the r16 sweep's
-    * ~4e10-row admission arithmetic). `guardPairs > 0` puts the d4f gate
-    * IN the lifecycle (the r17 ask): before every fold cycle the stage
+    * ~4e10-row admission arithmetic). `guardPairs > 0` puts a pricing
+    * guard IN the lifecycle (the r17 ask): before every fold cycle the stage
     * runs [[embBandBillSql]] — the d5h/d5i pricing numerator, Σ
     * n_batch·n_index over the joined (band, bkey) bucket counts, itself
     * pure SQL a consumer can run — and REFUSES when the bill exceeds the
@@ -549,14 +549,13 @@ private[graft] object RowHelpers {
       "FROM bb JOIN ib ON bb.band = ib.band AND bb.bkey = ib.bkey"
 
   /** Default guard for the SQL index lifecycle's banded candidate bill —
-    * the d4 family's 50M-pair ceiling ([[graft.operators.Dedup
-    * .FixedCapGuardPairs]]): past it the candidate join's task memory and
+    * a 50M-pair ceiling: past it the candidate join's task memory and
     * shuffle are the measured scale-killers (the r17 100× probe).
     */
   val EmbSqlGuardPairs: Long = 50000000L
 
   /** Run [[embBandBillSql]] and REFUSE a day whose banded candidate bill
-    * exceeds `guardPairs` — the d4f contract on the SQL lifecycle: the
+    * exceeds `guardPairs` — a refuse-before-work contract: the
     * refusal costs the pricing aggregates only and happens before any
     * fold insert, so a refused day cannot half-mutate the index.
     */

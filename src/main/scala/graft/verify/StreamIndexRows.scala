@@ -925,8 +925,8 @@ private[verify] object StreamIndexRows {
       },
       d5jOracleSql),
 
-    // D5k: the d5j lifecycle behind the IN-SQL admission guard (the d4f
-    // pattern applied to the last measured-fatal plainly-reachable
+    // D5k: the d5j lifecycle behind the IN-SQL admission guard (a
+    // pricing guard on the last measured-fatal plainly-reachable
     // regime — r17 Next #1): every fold day and the probe run the
     // banded-bill pricing statement first (the d5h/d5i numerator as pure
     // SQL) and REFUSE over the 50M-pair guard, before any insert touches
@@ -937,8 +937,8 @@ private[verify] object StreamIndexRows {
     // on.
     //
     // the guarded lifecycle admits every canonical day, so it must
-    // reproduce the unguarded relation bit-for-bit (the d4b/d4f shared
-    // oracle discipline)
+    // reproduce the unguarded relation bit-for-bit (one oracle text
+    // gating both rows)
     VerifyRow("d5k_embed_index_guarded_sql",
       (s, d) => {
         Tables.registerAll(s, d)

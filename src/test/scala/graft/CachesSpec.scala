@@ -25,11 +25,11 @@ class CachesSpec extends SparkTestBase {
     val loansBefore = Caches.outstanding(spark)
     // the three loan shapes that outlive their call:
     // 1. the shingle-set cache
-    Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2, maxDf = 50).count()
+    Dedup.ngramJaccardPairsSparseFixedCap(docs, "doc_id", "text", 3, 0.2, maxDf = 50).count()
     assert(Caches.outstanding(spark) > loansBefore,
       "the shingle-set cache stays a loan after the call returns")
     // 2. the budget-bounded result persist handed back to the caller
-    Dedup.ngramJaccardPairsSparseAuto(docs, "doc_id", "text", 3, 0.2,
+    Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2,
       budgetPairs = 12000L).count()
     // 3. the Tables small-scan persist (a memo entry, not a ledger loan)
     Tables.table(spark, sf, "region").count()

@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.Text
-import graft.operators.{Dedup, Sampling, Similarity}
+import graft.functions.{ArrayOps, Text}
+import graft.operators.{Dedup, Similarity}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -60,58 +60,10 @@ class DedupSpec extends SparkTestBase {
   test("ngramJaccardPairsSparse with a permissive cap equals the exact blocked plan (D4b)") {
     val exact = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 2, 0.1)
       .select("id_1", "id_2").as[(Long, Long)].collect().toSet
-    val sparse = Dedup.ngramJaccardPairsSparse(corpus, "doc_id", "text", 2, 0.1, maxDf = 1000)
+    val sparse = Dedup.ngramJaccardPairsSparseFixedCap(corpus, "doc_id", "text", 2, 0.1,
+      maxDf = 1000)
       .select("id_1", "id_2").as[(Long, Long)].collect().toSet
     assert(sparse == exact, "uncapped inverted index must reproduce the exact result")
-  }
-
-  test("guarded fixed cap == unbounded fixed cap bit-for-bit; a blown guard refuses with pricing (D4f)") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_1", "id_2", "jaccard").as[(Long, Long, Double)].collect().toSet
-    // the guard prices and admits — it must never change the relation
-    val guarded = rows(Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2, maxDf = 50))
-    val reference = rows(Dedup.ngramJaccardPairsSparseUnguarded(docs, "doc_id", "text", 3, 0.2,
-      maxDf = 50))
-    assert(guarded == reference, "guard admission must be relation-neutral")
-    // STAGE 1 (sampled quick refusal): guardPairs = 0 puts any non-zero
-    // estimate past the 4x escalation band, so the refusal comes from the
-    // 1/16-sample pricing BEFORE the corpus-wide histogram
-    val baseline = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalArgumentException] {
-      // quickPriceMinDocs = 0 arms the sampled stage on the small fixture
-      Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2, maxDf = 50,
-        guardPairs = 0L, quickPriceMinDocs = 0L).count()
-    }
-    assert(e.getMessage.contains("ESTIMATED"), s"quick stage refuses: ${e.getMessage}")
-    Seq("ngramJaccardPairsSparseAuto", "lower maxDf", "guardPairs").foreach { escape =>
-      assert(e.getMessage.contains(escape), s"escape '$escape' named in message")
-    }
-    // STAGE 2 (exact refusal): a guard just below the true bill keeps the
-    // estimate inside the 4x band, so the call escalates to the exact
-    // histogram and refuses on the exact number
-    val cum = Dedup.shingleDfStats(docs, "doc_id", "text", 3)
-      .filter(col("df") <= 50).agg(org.apache.spark.sql.functions.max("cum_pair_cost"))
-      .head().getLong(0)
-    val est = Dedup.shingleDfStatsSampled(docs, "doc_id", "text", 3, rate = 0.0625)
-      .filter(col("df") <= 3).agg(org.apache.spark.sql.functions.max("est_cum_pair_cost"))
-      .head().getDouble(0)
-    assert(est <= 4.0 * (cum - 1),
-      s"fixture precondition for the escalation test (est=$est cum=$cum)")
-    val e2 = intercept[IllegalArgumentException] {
-      Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2, maxDf = 50,
-        guardPairs = cum - 1).count()
-    }
-    assert(e2.getMessage.contains(s"prices $cum candidate"),
-      s"exact stage refuses with the exact bill: ${e2.getMessage}")
-    assert(!e2.getMessage.contains("ESTIMATED"), "exact refusal, not the sampled stage")
-    Seq("ngramJaccardPairsSparseAuto", "lower maxDf", "guardPairs").foreach { escape =>
-      assert(e2.getMessage.contains(escape), s"escape '$escape' named in message")
-    }
-    // either refusal releases its evidence caches — a refused call must
-    // leave no new persists behind
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- baseline).isEmpty,
-      "refusal must not leak persists")
   }
 
   test("ngramJaccardPairs (blocked) leaves NO cache behind — sets are built inline") {
@@ -314,11 +266,16 @@ class DedupSpec extends SparkTestBase {
   test("sparse-path rare join: bloom-pruned shuffle branch equals broadcast branch (D4d 1000× regime)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val sets = Dedup.shingleSets(docs, "doc_id", "text", 3)
-    def run(bcast: Boolean) =
-      Dedup.sparseJaccardFromSets(sets, "doc_id", 0.2, maxDf = 6,
-        broadcastRareKeys = bcast, pruneVerify = true)
-        .select("id_1", "id_2", "jaccard").as[(Long, Long, Double)]
-        .collect().toSet
+    val rareKeys = ArrayOps.explodeDense(sets, Seq.empty, col("shs"), "sk")
+      .groupBy("sk").agg(count(lit(1)).as("_df"))
+      .filter(col("_df") >= 2 && col("_df") <= 6).select("sk")
+    val nKeys = rareKeys.count()
+    def run(bcast: Boolean) = {
+      val (pairs, candidates) = Dedup.sparseJaccardFromSets(sets, "doc_id", 0.2,
+        rareKeys, nKeys, broadcastRareKeys = bcast, pruneVerify = true, pricedPairs = 0L)
+      try pairs.select("id_1", "id_2", "jaccard").as[(Long, Long, Double)].collect().toSet
+      finally candidates.foreach(Caches.endLoan)
+    }
     // broadcastRareKeys=false + pruneVerify=true is the bloom branch (the
     // past-the-broadcast-limit plan); the bloom is a superset filter and
     // the equi-join stays, so results must be identical
@@ -579,8 +536,9 @@ class DedupSpec extends SparkTestBase {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect().toSet
-    val unbounded = Dedup.fuzzyNearDupsBudget(docs, "doc_id", "text",
-      maxDist = 40, budgetPairs = Long.MaxValue)
+    // the budget saturates instead of wrapping negative into the tightest cap
+    val unbounded = Dedup.fuzzyNearDups(docs, "doc_id", "text",
+      maxDist = 40, pairsPerDoc = Long.MaxValue)
       .as[(Long, Long, Long)].collect().toSet
     assert(unbounded == full, "no cell over an unbounded cap ⇒ identical result")
   }
@@ -590,8 +548,9 @@ class DedupSpec extends SparkTestBase {
     val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect()
       .map(t => ((t._1, t._2), t._3)).toMap
-    val capped = Dedup.fuzzyNearDupsBudget(docs, "doc_id", "text",
-      maxDist = 40, budgetPairs = 3000L)
+    // 6 pairs per doc × 500 docs = a 3,000-pair budget against ~4k within-cell cost
+    val capped = Dedup.fuzzyNearDups(docs, "doc_id", "text",
+      maxDist = 40, pairsPerDoc = 6L)
       .as[(Long, Long, Long)].collect()
     assert(capped.nonEmpty, "budget 3000 must stay productive on the fixture")
     capped.foreach { case (a, b, dist) =>
@@ -619,12 +578,29 @@ class DedupSpec extends SparkTestBase {
     val auto = Dedup.fuzzyNearDups(docs, "doc_id", "text", maxDist = 40,
       pairsPerDoc = 1L)
       .as[(Long, Long, Long)].collect().toSet
-    val budget = Dedup.fuzzyNearDupsBudget(docs, "doc_id", "text",
-      maxDist = 40, budgetPairs = nDocs)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(auto == budget, "binding branch must equal the budget entry at pairsPerDoc × nDocs")
+    // the cap derived by hand from the cell histogram at budget 1 × nDocs
+    val hist = Dedup.fuzzyCellStats(docs, "doc_id", "text", maxDist = 40)
+      .select("cell_size", "cum_pair_cost").as[(Long, Long)].collect()
+    val cap = math.max(2L, hist.filter(_._2 <= nDocs).map(_._1).maxOption.getOrElse(2L))
+    // admitted candidates: rows whose home cell is within the cap, met on
+    // a shared chunk key in an adjacent length bucket, inside the
+    // hamming and length prunes
+    val chunked = Dedup.fuzzyChunked(docs, "doc_id", "text", maxDist = 40)
+    val adm = chunked.join(Dedup.fuzzyCells(chunked), Seq("chunk", "ckey", "_hb"))
+      .filter(col("cell_size") <= cap)
+    val admitted = adm.select(col("doc_id").as("id_1"), col("simhash").as("s1"),
+        col("_len").as("l1"), col("chunk"), col("ckey"), col("_hb").as("h1"))
+      .join(adm.select(col("doc_id").as("id_2"), col("simhash").as("s2"),
+        col("_len").as("l2"), col("chunk"), col("ckey"), col("_hb").as("h2")),
+        Seq("chunk", "ckey"))
+      .filter(col("id_1") < col("id_2") && abs(col("h1") - col("h2")) <= 1 &&
+        bit_count(col("s1").bitwiseXOR(col("s2"))) <= 3 &&
+        abs(col("l1") - col("l2")) <= 40)
+      .select("id_1", "id_2").as[(Long, Long)].collect().toSet
     val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect().toSet
+    assert(auto == full.filter(t => admitted((t._1, t._2))),
+      s"binding branch must equal the full relation restricted to cap-$cap admission")
     assert(auto.subsetOf(full) && auto != full,
       "the binding cap must actually prune on the fixture (subset, not equal)")
   }
@@ -964,49 +940,13 @@ class DedupSpec extends SparkTestBase {
     assert(pairs(unique) == pairs(Dedup.minhashNearDupsPlain(docs, "doc_id", "text", 0.5)))
   }
 
-  test("shingleDfStatsSampled: rate=1 equals the exact histogram; sampled rate equals the histogram of the sample (D4e)") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    // rate = 1: identical to the exact diagnostic, est_* == exact columns
-    val full = Dedup.shingleDfStatsSampled(docs, "doc_id", "text", 3, rate = 1.0)
-      .orderBy("df")
-      .as[(Long, Long, Long, Long, Double, Double)].collect().toSeq
-    val exact = Dedup.shingleDfStats(docs, "doc_id", "text", 3)
-      .orderBy("df").as[(Long, Long, Long, Long)].collect().toSeq
-    assert(full.map(r => (r._1, r._2, r._3, r._4)) == exact,
-      "rate=1 must reproduce the exact histogram")
-    full.foreach { case (_, _, cost, cum, estCost, estCum) =>
-      assert(estCost == cost.toDouble && estCum == cum.toDouble,
-        "rate=1 estimates must equal the exact columns")
-    }
-    // rate = 0.25: exact arithmetic on the deterministic sample — the
-    // histogram must equal shingleDfStats over the SAME md5-coin sample,
-    // and est_* must be pair_cost / rate^2 (the unbiased full-corpus bill)
-    val rate = 0.25
-    val sampled = Dedup.shingleDfStatsSampled(docs, "doc_id", "text", 3, rate)
-      .orderBy("df")
-      .as[(Long, Long, Long, Long, Double, Double)].collect().toSeq
-    val replay = Dedup.shingleDfStats(
-      Sampling.deterministicSample(docs, "doc_id", rate), "doc_id", "text", 3)
-      .orderBy("df").as[(Long, Long, Long, Long)].collect().toSeq
-    assert(sampled.map(r => (r._1, r._2, r._3, r._4)) == replay,
-      "sampled histogram must be the exact histogram of the sample")
-    assert(sampled.nonEmpty && sampled.map(_._2).sum < exact.map(_._2).sum,
-      "the fixture sample must actually shrink the shingle space")
-    sampled.foreach { case (_, _, cost, cum, estCost, estCum) =>
-      assert(estCost == BigDecimal(cost / (rate * rate))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, "est_pair_cost")
-      assert(estCum == BigDecimal(cum / (rate * rate))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, "est_cum_pair_cost")
-    }
-  }
-
   test("ngramJaccardPairsSparseAuto: unbounded budget = exact; binding budget = hand-derived ceiling (D4d)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // unbounded budget → ceiling = max df → candidates unrestricted; any
     // pair at jaccard >= t shares a shingle, so the result is the exact set
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.2)
       .select("id_1", "id_2").as[(Long, Long)].collect().toSet
-    val unbounded = Dedup.ngramJaccardPairsSparseAuto(docs, "doc_id", "text", 3, 0.2,
+    val unbounded = Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2,
       budgetPairs = Long.MaxValue)
       .select("id_1", "id_2").as[(Long, Long)].collect().toSet
     assert(unbounded == exact, "unbounded budget must reproduce the exact result")
@@ -1018,9 +958,9 @@ class DedupSpec extends SparkTestBase {
     val ceiling = math.max(2L,
       hist.filter(_._4 <= budget).map(_._1).maxOption.getOrElse(2L))
     assert(ceiling < hist.map(_._1).max, "fixture budget must actually bind")
-    val auto = Dedup.ngramJaccardPairsSparseAuto(docs, "doc_id", "text", 3, 0.2,
+    val auto = Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2,
       budgetPairs = budget).select("id_1", "id_2").as[(Long, Long)].collect().toSet
-    val fixed = Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2,
+    val fixed = Dedup.ngramJaccardPairsSparseFixedCap(docs, "doc_id", "text", 3, 0.2,
       maxDf = ceiling.toInt).select("id_1", "id_2").as[(Long, Long)].collect().toSet
     assert(auto == fixed, s"auto(budget=$budget) must equal fixed(maxDf=$ceiling)")
     assert(auto.nonEmpty, "the binding budget must stay productive on the fixture")

@@ -214,9 +214,6 @@ class EmptyInputSpec extends SparkTestBase {
     // the dataset card
     val card = Analytics.corpusReport(emptySrc, "text", "source")
     assert(card.columns.contains("dup_frac") && card.count() == 0)
-    // the sampled df diagnostic
-    assert(Dedup.shingleDfStatsSampled(emptySrc, "doc_id", "text", 3,
-      rate = 0.25).count() == 0)
     // the fuzzy gate: empty histogram -> nDocs 0, budget 0, total 0
     // -> full-admission branch over nothing (must not divide, throw, or emit)
     assert(Dedup.fuzzyNearDups(emptySrc, "doc_id", "text", maxDist = 40)
@@ -236,14 +233,12 @@ class EmptyInputSpec extends SparkTestBase {
   }
 
   test("round-17 additions: empty inputs degrade to empty/zero, never throw") {
-    // the guarded fixed-cap sparse path on no docs: the sampled stage is
-    // size-gated off, the exact histogram is empty (priced 0 <= guard),
-    // and the admitted pipeline yields no pairs — even when the sampled
-    // stage is explicitly ARMED, a zero estimate must admit, not refuse
+    // the sparse path on no docs: the df histogram is empty (priced 0),
+    // so both the budget-derived and the fixed cap yield no pairs
     assert(Dedup.ngramJaccardPairsSparse(emptyDocs, "doc_id", "text", 3, 0.2,
+      budgetPairs = 12000L).count() == 0)
+    assert(Dedup.ngramJaccardPairsSparseFixedCap(emptyDocs, "doc_id", "text", 3, 0.2,
       maxDf = 50).count() == 0)
-    assert(Dedup.ngramJaccardPairsSparse(emptyDocs, "doc_id", "text", 3, 0.2,
-      maxDf = 50, quickPriceMinDocs = 0L).count() == 0)
     // slice diagnostic over no clicks: schema intact, zero rows; the
     // derivation then falls back to the horizon (spec'd in StreamOpsSpec)
     val emptyClicks = Seq.empty[(Long, Long)].toDF("user_id", "ts_us")

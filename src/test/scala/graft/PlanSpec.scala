@@ -269,8 +269,9 @@ class PlanSpec extends SparkTestBase {
 
   test("budget-capped fuzzy admission: hash-keyed equi-plans only, anti-joined blacklist (D9b)") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val p = plan(Dedup.fuzzyNearDupsBudget(docs, "doc_id", "text",
-      maxDist = 40, budgetPairs = 3000L))
+    // 6 pairs per doc binds on the fixture: the gate takes its capped branch
+    val p = plan(Dedup.fuzzyNearDups(docs, "doc_id", "text",
+      maxDist = 40, pairsPerDoc = 6L))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"capped candidates must come from the (chunk, ckey, lenBucket) equi-join:\n$p")
   }
@@ -579,7 +580,7 @@ class PlanSpec extends SparkTestBase {
     assert("\\(\\d+\\) HashAggregate".r.findAllIn(hist).length >= 4,
       s"both histogram levels must partial-aggregate:\n$hist")
     assert(!hist.contains("Join"), s"the diagnostic is aggregate-only:\n$hist")
-    val pairs = plan(Dedup.ngramJaccardPairsSparseAuto(docs, "doc_id", "text", 3, 0.2,
+    val pairs = plan(Dedup.ngramJaccardPairsSparse(docs, "doc_id", "text", 3, 0.2,
       budgetPairs = 10000L))
     assert(!pairs.contains("CartesianProduct") && !pairs.contains("BroadcastNestedLoopJoin"),
       s"candidate generation must stay an inverted-index equi-join:\n$pairs")

@@ -13,11 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class VerifyRowsSpec extends AnyFunSuite {
 
-  test("the 206 Verify row names are unique") {
+  test("the 204 Verify row names are unique") {
     val names = VerifyRows.all.map(_.name)
     val dups = names.diff(names.distinct).distinct
     assert(dups.isEmpty, s"row names declared twice: ${dups.sorted}")
-    assert(names.size == 206, s"expected 206 rows, got ${names.size}")
+    assert(names.size == 204, s"expected 204 rows, got ${names.size}")
     assert(VerifyRows.all.forall(_.oracleSql.trim.nonEmpty), "every row carries oracle SQL")
   }
 
@@ -41,15 +41,16 @@ class VerifyRowsSpec extends AnyFunSuite {
   * Dedup's ingest indexes keep one lifecycle, `graft.sources.ShardedIndex`;
   * and the modules deleted as outside the north star (media codecs, term
   * statistics, frequency sketches, extra file formats, chunking, JSON
-  * lifting) stay deleted.
+  * lifting, the hot-head scale fixture) stay deleted.
   */
 class OperatorApiSpec extends AnyFunSuite {
 
   private val switches = Set("unbounded", "sliced", "dupFracGate", "expand", "admissionDenom",
-    "release", "releaseSets")
+    "release", "releaseSets", "guardPairs", "quickPriceMinDocs")
   private val deletedNames = Set("minhashNearDupsAuto", "minhashNearDupsCollapsed",
     "fuzzyNearDupsAuto", "embedNearDupAuto", "embeddingIncrementalAuto",
-    "asofJoinStreamingSliced", "exactIncrementalFromIndex")
+    "asofJoinStreamingSliced", "exactIncrementalFromIndex", "ngramJaccardPairsSparseAuto",
+    "fuzzyNearDupsBudget", "shingleDfStatsSampled", "minhashSignatureFromSets")
   private val files = Seq("src/main/scala/graft/operators/Dedup.scala",
     "src/main/scala/graft/streaming/StreamOps.scala",
     "src/main/scala/graft/operators/Sampling.scala")
@@ -131,7 +132,8 @@ class OperatorApiSpec extends AnyFunSuite {
 
   test("no library or benchmark source mentions a deleted module or SQL function") {
     val deleted = Seq("Multimodal", "TermStats", "FreqItems", "FreqSketch", "ColumnarSource",
-      "Chunking", "SemiStructured", "graft_freq_", "maintainHeavyHitterState")
+      "Chunking", "SemiStructured", "graft_freq_", "maintainHeavyHitterState",
+      "generateDocumentsHot")
     val roots = Seq(Paths.get("src/main/scala"), Paths.get("perfbench/src"))
     roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
     val offending = for {
