@@ -59,18 +59,11 @@ object Dedup {
         array_sort(transform(col("sh"), s => xxhash64(s))).as("shs"))
 
   /** Exact-Jaccard verification of candidate pairs against the hashed
-    * shingle sets: two hash joins to attach each side's sorted key array,
+    * shingle sets: two hash joins attach id_1's sorted key array from
+    * `setsL` and id_2's from `setsR` (the same frame for a self-join),
     * then the codegen'd merge-intersect. O(|candidates| × avg set size).
-    * The two-frame form serves the cross-corpus operators (id_1 resolved
-    * against `setsL`, id_2 against `setsR`); the single-frame overload is
-    * the self-join case.
-    */
-  private def verifyJaccard(candidates: DataFrame, sets: DataFrame,
-                            idCol: String, threshold: Double,
-                            spreadRows: Long = 0L): DataFrame =
-    verifyJaccard2(candidates, sets, sets, idCol, threshold, spreadRows)
-
-  /** `spreadRows` (r18 VERDICT #2): a PRICED verify-pair volume — the
+    *
+    * `spreadRows` (r18 VERDICT #2): a PRICED verify-pair volume — the
     * exact candidate count where the caller materialized it, the
     * histogram's cum pair bill where it priced one — widens the two
     * verify-join exchanges via [[kernelWidth]] at the text-carrying
@@ -86,10 +79,10 @@ object Dedup {
     * merely vetoes AQE's (correct, measured: d4d +0.4 s at sf0.1)
     * broadcast/coalesce choices for genuinely small pair frames.
     */
-  private def verifyJaccard2(candidates: DataFrame, setsL: DataFrame,
-                             setsR: DataFrame, idCol: String,
-                             threshold: Double,
-                             spreadRows: Long = 0L): DataFrame = {
+  private def verifyJaccard(candidates: DataFrame, setsL: DataFrame,
+                            setsR: DataFrame, idCol: String,
+                            threshold: Double,
+                            spreadRows: Long = 0L): DataFrame = {
     val s1 = setsL.select(col(idCol).as("id_1"), col("n_sh").as("n_1"), col("shs").as("shs_1"))
     val s2 = setsR.select(col(idCol).as("id_2"), col("n_sh").as("n_2"), col("shs").as("shs_2"))
     def spread(df: DataFrame, key: String) =
@@ -104,52 +97,43 @@ object Dedup {
   }
 
   /** Banded MinHash keys over a prepared shingle-set frame: one row per
-    * (id aliased to `as`, band, bkey). The ONE definition of the banding
-    * scheme — shared by the self-join ([[minhashNearDupsPlain]]) and the
-    * cross-corpus probe ([[minhashIncremental]]) so the two can never
-    * silently diverge on signature slicing or band hashing.
+    * (id aliased to `as`, band, bkey), the band key hashing the band's
+    * slice of the signature. The ONE definition of the banding scheme —
+    * the self-join ([[minhashNearDupsPlain]]), the saved index
+    * ([[MinhashIndex]]) and its probe all band through it, so they can
+    * never silently diverge on signature slicing or band hashing.
     */
   private[graft] def bandKeys(sets: DataFrame, idCol: String, as: String,
-                       bands: Int, rowsPerBand: Int): DataFrame =
-    bandKeysCarrying(sets, idCol, as, bands, rowsPerBand, carrySets = false)
-
-  /** [[bandKeys]] with `carrySets = true` CARRIES the set payload
-    * (`<as>_n`, `<as>_shs`) on every band row — the verify-in-the-band-
-    * join shape (the d5g lesson A/B'd on the minhash family, BENCH_SCALE
-    * r17): sets ride band rows so the exact-Jaccard verify can evaluate
-    * inside the band join with no candidate-sized exchange. ONE banding
-    * construction backs both forms, so the scheme cannot drift between
-    * the production path and the probe.
-    */
-  private[graft] def bandKeysCarrying(sets: DataFrame, idCol: String, as: String,
-                       bands: Int, rowsPerBand: Int,
-                       carrySets: Boolean): DataFrame = {
-    val base =
-      if (carrySets)
-        sets.select(col(idCol).as(as), col("n_sh").as(s"${as}_n"),
-          col("shs").as(s"${as}_shs"), sigArrayExpr(bands * rowsPerBand).as("_sigs"))
-      else sets.select(col(idCol).as(as), sigArrayExpr(bands * rowsPerBand).as("_sigs"))
-    val keep =
-      if (carrySets) Seq(col(as), col(s"${as}_n"), col(s"${as}_shs"))
-      else Seq(col(as))
-    explodeBands(base, keep, bands, rowsPerBand)
-  }
-
-  /** The one banding EXPLODE over a frame already carrying `_sigs` — the
-    * band/bkey scheme's single definition. Consumers: [[bandKeysCarrying]]
-    * (signatures computed inline) and, through it, the big-corpus path in
-    * [[minhashNearDupsPlain]] that persists the exploded (id, band, bkey) frame
-    * so both self-join sides share one signature pass.
-    */
-  private def explodeBands(base: DataFrame, keep: Seq[org.apache.spark.sql.Column],
-                           bands: Int, rowsPerBand: Int): DataFrame =
-    ArrayOps.explodeDense(base, keep,
+                              bands: Int, rowsPerBand: Int): DataFrame =
+    ArrayOps.explodeDense(
+      sets.select(col(idCol).as(as), sigArrayExpr(bands * rowsPerBand).as("_sigs")),
+      Seq(col(as)),
       array((0 until bands).map { b =>
         struct(lit(b).as("band"),
           hash(slice(col("_sigs"), b * rowsPerBand + 1, rowsPerBand)).as("bkey"))
       }: _*), "bd")
-      .select(keep :+ col("bd.band") :+ col("bd.bkey"): _*)
+      .select(col(as), col("bd.band"), col("bd.bkey"))
 
+  /** The MinHash band self-join: every pair (id_1 < id_2) whose band rows
+    * meet on (band, bkey), one row per meeting band — callers dedup the
+    * pairs. `side(as)` is one join side's (as, band, bkey) rows: banded
+    * from the shingle sets ([[minhashNearDupsPlain]]) or read from a saved
+    * index ([[MinhashIndex.nearDupPairs]]).
+    */
+  private def bandSelfJoin(side: String => DataFrame): DataFrame =
+    side("id_1").join(side("id_2"), Seq("band", "bkey"))
+      .filter(col("id_1") < col("id_2"))
+      .select("id_1", "id_2")
+
+  /** The incremental operators' last step: drop the batch rows whose id
+    * appears as `id_1` in `matched`. The matched ids partial-aggregate to
+    * at most |batch| rows before their distinct exchange, and the batch
+    * keeps its original columns.
+    */
+  private def dropMatched(batch: DataFrame, idCol: String, matched: DataFrame): DataFrame = {
+    val ids = matched.select("id_1").distinct()
+    batch.join(ids, batch(idCol) === ids("id_1"), "left_anti")
+  }
 
   /** A Catalyst bloom filter over `key` of `build` — the
     * `BloomFilterAggregate`/`BloomFilterMightContain` pair behind Spark's
@@ -326,18 +310,14 @@ object Dedup {
     // Below the gate the inline double-compute stays: a persist on a
     // ~100k-doc corpus is pure overhead against sub-second signature
     // passes.
-    val (lk, rk) =
-      if (!pruneVerifySides)
-        (bandKeys(sets, idCol, "id_1", bands, rowsPerBand),
-         bandKeys(sets, idCol, "id_2", bands, rowsPerBand))
+    val side: String => DataFrame =
+      if (!pruneVerifySides) as => bandKeys(sets, idCol, as, bands, rowsPerBand)
       else {
         val banded = graft.Caches.persistLoaned(
           bandKeys(sets, idCol, "_bid", bands, rowsPerBand))
         sigCache = Some(banded)
-        (spreadKernel(banded.withColumnRenamed("_bid", "id_1"),
-          nDocs * bands, BandRowsPerPartition, col("band"), col("bkey")),
-         spreadKernel(banded.withColumnRenamed("_bid", "id_2"),
-          nDocs * bands, BandRowsPerPartition, col("band"), col("bkey")))
+        as => spreadKernel(banded.withColumnRenamed("_bid", as),
+          nDocs * bands, BandRowsPerPartition, col("band"), col("bkey"))
       }
     // The candidate DISTINCT is the one exchange between the (already
     // spread) band join and the (already spread) verify joins — left at
@@ -349,14 +329,12 @@ object Dedup {
     // regime, so the band width rule is the evidence already in hand;
     // partitioning by exactly the distinct's keys means the aggregate
     // reuses the exchange rather than adding one.
-    val rawCand0 = lk.join(rk, Seq("band", "bkey"))
-      .filter(col("id_1") < col("id_2"))
-      .select("id_1", "id_2")
+    val rawCand0 = bandSelfJoin(side)
     val rawCand =
       (if (!pruneVerifySides) rawCand0
        else spreadIfWide(rawCand0, nDocs * bands, BandRowsPerPartition,
          col("id_1"), col("id_2"))).distinct()
-    if (!pruneVerifySides) verifyJaccard(rawCand, sets, idCol, threshold)
+    if (!pruneVerifySides) verifyJaccard(rawCand, sets, sets, idCol, threshold)
     else {
       // Materialize the candidates and bloom-prune BOTH verify sides to
       // their ids BEFORE the verify exchanges: AQE does not broadcast the
@@ -384,12 +362,12 @@ object Dedup {
       // back to the un-pruned verify rather than ship a monster
       val res =
         if (nIds == 0L || nIds > (1L << 24))
-          verifyJaccard(cand, sets, idCol, threshold, spreadRows = nCand)
+          verifyJaccard(cand, sets, sets, idCol, threshold, spreadRows = nCand)
         else {
           val mightMatch = bloomMightContain(ids, col("_cid"), nIds, fpp = 0.01,
             maxNumBits = Long.MaxValue, probe = xxhash64(col(idCol)))
-          verifyJaccard(cand, sets.filter(mightMatch), idCol, threshold,
-            spreadRows = nCand)
+          val pruned = sets.filter(mightMatch)
+          verifyJaccard(cand, pruned, pruned, idCol, threshold, spreadRows = nCand)
         }
       // no caller handle for the candidate persist — materialize the
       // (threshold-filtered, small) result and drop the candidates; the
@@ -789,7 +767,7 @@ object Dedup {
     if (!pruneVerify)
       // the priced bill (an upper bound on candidates, which only ever
       // widens) sizes the verify exchanges
-      (verifyJaccard(rawCandidates, sets, idCol, threshold, spreadRows = pricedPairs),
+      (verifyJaccard(rawCandidates, sets, sets, idCol, threshold, spreadRows = pricedPairs),
         None)
     else {
       // pruneVerify (|candidates| ≤ budgetPairs by construction):
@@ -805,8 +783,8 @@ object Dedup {
         broadcast(candidates.select(col("id_1").as("_vid"))
           .union(candidates.select(col("id_2").as("_vid"))).distinct()),
         sets(idCol) === col("_vid"), "left_semi")
-      (verifyJaccard(candidates, verifySets, idCol, threshold, spreadRows = nCand),
-        Some(candidates))
+      (verifyJaccard(candidates, verifySets, verifySets, idCol, threshold,
+        spreadRows = nCand), Some(candidates))
     }
   }
 
@@ -891,16 +869,16 @@ object Dedup {
     * only NEW documents whose normalized fingerprint does not already
     * exist in the corpus. The anti join ships 16-byte fingerprints only;
     * the corpus side reduces to its distinct fingerprints before the join
-    * (and at 100 TB that distinct-fingerprint set is the thing to keep
-    * materialized between ingest batches). Compose with [[exact]] on the
-    * survivors to also dedup within the new batch.
+    * — [[FingerprintIndex]]'s rows, which at 100 TB are the thing to keep
+    * materialized between ingest batches — and the batch probes them
+    * through the ingest path itself
+    * ([[graft.streaming.StreamOps.ingestDedupStreaming]]). Compose with
+    * [[exact]] on the survivors to also dedup within the new batch.
     */
   def exactIncremental(newDocs: DataFrame, corpus: DataFrame,
-                       idCol: String, textCol: String): DataFrame = {
-    val nf = newDocs.withColumn("fingerprint", Text.fingerprint(col(textCol)))
-    val cf = corpus.select(Text.fingerprint(col(textCol)).as("fingerprint")).distinct()
-    nf.join(cf, Seq("fingerprint"), "left_anti")
-  }
+                       idCol: String, textCol: String): DataFrame =
+    graft.streaming.StreamOps.ingestDedupStreaming(newDocs,
+      FingerprintIndex(textCol).rows(corpus)("fingerprint"), textCol)
 
   /** [[exactIncremental]] with a RUNTIME BLOOM FILTER pruning the corpus
     * side — the shape that matters when the corpus is 100 TB and the daily
@@ -946,21 +924,17 @@ object Dedup {
 
   /** Incremental NEAR-dup dedup — the daily-ingest analogue of
     * [[exactIncremental]] for MinHash similarity: keep only new-batch
-    * documents with no corpus document at Jaccard ≥ `threshold`. Composes
-    * the banded-MinHash candidate machinery ([[minhashNearDups]]) with the
-    * ingest anti-join shape ([[exactIncremental]]):
-    *
-    *   1. both sides reduce to sorted 8-byte shingle-key sets ONCE;
-    *   2. the corpus side is band-indexed (bands × 8-byte keys — at 100 TB
-    *      this index is the thing to keep materialized between ingest
-    *      batches, exactly like the distinct-fingerprint set of the exact
-    *      path);
-    *   3. only the NEW BATCH's band keys join against that index — the
-    *      corpus is never self-joined, so a daily batch costs
-    *      O(|batch| × bands) probe rows, not O(|corpus|²);
-    *   4. candidates are verified with the TRUE shingle-set Jaccard (no
-    *      false positives; recall is the LSH S-curve — 32×2 banding ≈
-    *      0.9999 at j = 0.5), and matched batch ids are anti-joined away.
+    * documents with no corpus document at Jaccard ≥ `threshold`. This is
+    * [[MinhashIndex.probe]] over in-memory parts: the corpus reduces to
+    * sorted 8-byte shingle-key sets ONCE (`sets`) and is band-indexed from
+    * them (`bands` — at 100 TB this index is the thing to keep
+    * materialized between ingest batches, exactly like the
+    * distinct-fingerprint set of the exact path); only the NEW BATCH's
+    * band keys join against it — the corpus is never self-joined, so a
+    * daily batch costs O(|batch| × bands) probe rows, not O(|corpus|²);
+    * candidates verify with the TRUE shingle-set Jaccard (no false
+    * positives; recall is the LSH S-curve — 32×2 banding ≈ 0.9999 at
+    * j = 0.5), and matched batch ids are anti-joined away.
     *
     * Output: the surviving new-batch rows (original columns). Both
     * shingle-set frames are [[graft.Caches]] loans.
@@ -968,15 +942,10 @@ object Dedup {
   def minhashIncremental(newDocs: DataFrame, corpus: DataFrame, idCol: String,
                          textCol: String, threshold: Double, n: Int = 3,
                          bands: Int = 32, rowsPerBand: Int = 2): DataFrame = {
-    val bsets = graft.Caches.persistLoaned(shingleSets(newDocs, idCol, textCol, n))
-    val csets = graft.Caches.persistLoaned(shingleSets(corpus, idCol, textCol, n))
-    val candidates = bandKeys(bsets, idCol, "id_1", bands, rowsPerBand)
-      .join(bandKeys(csets, idCol, "id_2", bands, rowsPerBand), Seq("band", "bkey"))
-      .select("id_1", "id_2").distinct()
-    // verify against the TRUE sets: batch side = id_1, corpus side = id_2
-    val matched = verifyJaccard2(candidates, bsets, csets, idCol, threshold)
-      .select(col("id_1")).distinct()
-    newDocs.join(matched, newDocs(idCol) === matched("id_1"), "left_anti")
+    val index = MinhashIndex(idCol, textCol, n, bands, rowsPerBand)
+    index.probe(newDocs,
+      index.fromSets(graft.Caches.persistLoaned(shingleSets(corpus, idCol, textCol, n))),
+      threshold)
   }
 
   /** Benchmark DECONTAMINATION — the cross-corpus containment check every
@@ -986,13 +955,14 @@ object Dedup {
     * Jaccard: a 50-word benchmark question buried in a 5000-word train doc
     * has tiny Jaccard but containment ≈ 1 — exactly the leak to catch.
     *
-    * Same two-stage shape as [[ngramJaccardPairsSparse]]: candidates from
-    * an inverted index over the TRAIN side restricted to shingles with
-    * train-document-frequency ≤ `maxDf` (ubiquitous shingles generate
-    * candidate blowup but can't evidence contamination on their own);
-    * containment is then verified EXACTLY on the full hashed sets via the
-    * codegen'd merge-intersect, so scores carry no approximation. Both
-    * corpora travel as 8-byte shingle keys, never text.
+    * This is [[ContainmentIndex.probe]] over in-memory parts: candidates
+    * come from an inverted index over the TRAIN side restricted to
+    * shingles with train-document-frequency ≤ `maxDf` (ubiquitous
+    * shingles generate candidate blowup but can't evidence contamination
+    * on their own); containment is then verified EXACTLY on the full
+    * hashed sets via the codegen'd merge-intersect, so scores carry no
+    * approximation. Both corpora travel as 8-byte shingle keys, never
+    * text.
     *
     * Output: (test_id, train_id, containment) for pairs ≥ threshold,
     * containment = |test ∩ train| / |test| rounded to 6. Both shingle-set
@@ -1001,23 +971,10 @@ object Dedup {
   def decontaminationPairs(train: DataFrame, test: DataFrame, idCol: String,
                            textCol: String, n: Int, threshold: Double,
                            maxDf: Int): DataFrame = {
-    val tsets = graft.Caches.persistLoaned(shingleSets(train, idCol, textCol, n))
-    val xsets = graft.Caches.persistLoaned(shingleSets(test, idCol, textCol, n))
-    val ti = ArrayOps.explodeDense(tsets, Seq(col(idCol).as("train_id")), col("shs"), "sk")
-    val rare = ti.groupBy("sk").agg(count(lit(1)).as("_df"))
-      .filter(col("_df") <= maxDf).select("sk")
-    val xi = ArrayOps.explodeDense(xsets, Seq(col(idCol).as("test_id")), col("shs"), "sk")
-    val candidates = xi.join(rare, "sk").join(ti, "sk")
-      .select("test_id", "train_id").distinct()
-    val t1 = tsets.select(col(idCol).as("train_id"), col("shs").as("shs_t"))
-    val x1 = xsets.select(col(idCol).as("test_id"), col("n_sh").as("n_test"),
-      col("shs").as("shs_x"))
-    candidates.join(x1, "test_id").join(t1, "train_id")
-      .withColumn("containment",
-        round(ArrayOps.sortedIntersectSize(col("shs_x"), col("shs_t")).cast("double") /
-          col("n_test").cast("double"), 6))
-      .filter(col("containment") >= threshold)
-      .select("test_id", "train_id", "containment")
+    val index = ContainmentIndex(idCol, textCol, n, maxDf)
+    index.probe(test,
+      index.fromSets(graft.Caches.persistLoaned(shingleSets(train, idCol, textCol, n))),
+      threshold)
   }
 
   /** Connected components over near-duplicate PAIRS — the final dedup
@@ -1041,13 +998,11 @@ object Dedup {
     * stay resident. On a cluster with executor loss concerns, set a
     * checkpoint dir and swap in reliable `checkpoint()`.
     *
-    * `labelPartitions` sizes the per-round label frames (0 → a fraction of
-    * the session's parallelism: labels are a few machine-words per node,
-    * far smaller than the corpus, and one task per corpus partition is
-    * pure overhead — but on a very large node set pass an explicit count).
+    * The per-round label frames run at a fraction of the session's
+    * parallelism: labels are a few machine-words per node, far smaller
+    * than the corpus, and one task per corpus partition is pure overhead.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          labelPartitions: Int = 0,
                           localEdgeLimit: Long = 1L << 18): DataFrame = {
     // checkpoint the edge list ONCE: the (possibly heavy) pair-generation
     // pipeline runs exactly one time, and bidir/labels both derive from the
@@ -1065,8 +1020,7 @@ object Dedup {
     // localEdgeLimit = 0 to force the distributed path.
     if (localEdgeLimit > 0 && edges.count() <= localEdgeLimit)
       return localComponents(edges)
-    val lp = if (labelPartitions > 0) labelPartitions
-             else math.max(2, edges.sparkSession.sparkContext.defaultParallelism / 8)
+    val lp = math.max(2, edges.sparkSession.sparkContext.defaultParallelism / 8)
     // bidir is read every round as the probe side of the propagate join —
     // materialize it ONCE, hash-partitioned by the join key at label scale
     // (a plain union would carry 2× the edge-pipeline partition count into
@@ -1232,22 +1186,17 @@ object Dedup {
     * recompute over the full pair union).
     */
   def connectedComponentsIncremental(labels: DataFrame, newPairs: DataFrame,
-                                     maxIter: Int = 20,
-                                     labelPartitions: Int = 0,
-                                     localEdgeLimit: Long = 1L << 18): DataFrame =
+                                     maxIter: Int = 20): DataFrame =
     connectedComponents(
       labels.select(col("id").as("id_1"), col("component").as("id_2"))
         .unionByName(newPairs.select("id_1", "id_2")),
-      maxIter, labelPartitions, localEdgeLimit)
+      maxIter)
 
   /** Canonical-keep selection: drop every document that belongs to a
     * near-dup cluster but is not its minimum-id representative.
-    * `localEdgeLimit` passes through to [[connectedComponents]] (0 forces
-    * the distributed label loop).
     */
-  def keepCanonical(df: DataFrame, idCol: String, pairs: DataFrame,
-                    localEdgeLimit: Long = 1L << 18): DataFrame = {
-    val losers = connectedComponents(pairs, localEdgeLimit = localEdgeLimit)
+  def keepCanonical(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val losers = connectedComponents(pairs)
       .filter(col("id") =!= col("component")).select("id")
     df.join(losers, df(idCol) === losers("id"), "left_anti")
   }
@@ -1269,9 +1218,8 @@ object Dedup {
     * scale, not corpus scale.
     */
   def keepBest(df: DataFrame, idCol: String, pairs: DataFrame,
-               scoreCol: String,
-               localEdgeLimit: Long = 1L << 18): DataFrame = {
-    val labels = connectedComponents(pairs, localEdgeLimit = localEdgeLimit)
+               scoreCol: String): DataFrame = {
+    val labels = connectedComponents(pairs)
     val scored = labels
       .join(df.select(col(idCol).as("id"), col(scoreCol).as("_s")), "id")
     // argmax with mixed ordering (score DESC, id ASC): a single
@@ -1482,10 +1430,8 @@ object Dedup {
       .select("id_1", "id_2")
     val t1 = newDocs.select(col(idCol).as("id_1"), col(textCol).as("_t1"))
     val t2 = corpus.select(col(idCol).as("id_2"), col(textCol).as("_t2"))
-    val matched = cand.join(t1, "id_1").join(t2, "id_2")
-      .filter(levenshtein(col("_t1"), col("_t2"), maxDist) >= 0)
-      .select("id_1").distinct()
-    newDocs.join(matched, newDocs(idCol) === matched("id_1"), "left_anti")
+    dropMatched(newDocs, idCol, cand.join(t1, "id_1").join(t2, "id_2")
+      .filter(levenshtein(col("_t1"), col("_t2"), maxDist) >= 0))
   }
 
   /** The ONE definition of the fuzzy family's banded sketch rows —
@@ -1824,12 +1770,10 @@ object Dedup {
       .sortBy(_._1).toIndexedSeq
     val b = Similarity.withAssignedCell(newVecs.select(col(idCol), col(vecCol)), idCol, vecCol,
         cents, "cell")
-      .select(col("cell"), col(idCol).as("_bid"), col(vecCol).as("_bv"))
+      .select(col("cell"), col(idCol).as("id_1"), col(vecCol).as("_bv"))
     val c = corpusCells.select(col("cell"), col(vecCol).as("_cv"))
-    val matched = b.join(c, "cell")
-      .filter(round(Vectors.cosine(col("_bv"), col("_cv")), 6) >= threshold)
-      .select(col("_bid")).distinct()
-    newVecs.join(matched, newVecs(idCol) === matched("_bid"), "left_anti")
+    dropMatched(newVecs, idCol, b.join(c, "cell")
+      .filter(round(Vectors.cosine(col("_bv"), col("_cv")), 6) >= threshold))
   }
 
   /** D10 — SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -1880,9 +1824,9 @@ object Dedup {
     * family (exact: [[exactIncremental]], MinHash: [[minhashIncremental]])
     * for vector similarity: keep only new-batch vectors with no corpus
     * vector at cosine ≥ `threshold`. The corpus side is sketch-banded once
-    * ([[Similarity.lshCandidatesCross]] — at 100 TB that band index is the
-    * thing to keep materialized between ingest batches) and probed ONLY by
-    * the new batch's band keys; candidates verify with exact cosine before
+    * (at 100 TB that band index is the thing to keep materialized between
+    * ingest batches — [[EmbeddingIndex]]) and probed ONLY by the new
+    * batch's band keys; candidates verify with exact cosine before
     * the anti join, so admitted false candidates cost compute, never
     * correctness. Recall follows the band/bit S-curve exactly as in
     * [[embeddingNearDupsLSH]] — pick parameters for the target threshold.
@@ -1891,10 +1835,9 @@ object Dedup {
     * [[embeddingNearDupsLSH]] gate in its cross-corpus form): near the
     * cosine background the bands stop pruning and the banded probe
     * OOM'd an 8 GB JVM outright at 100× (measured r13). Both sides'
-    * band-bucket counts ([[Similarity.lshBucketCounts]] — one narrow
-    * aggregate each) join on the tiny bucket key space and Σ
-    * n_batch·n_corpus prices the probe join's candidate evaluations
-    * against |batch|·|corpus|. Bands admitting at most a tenth of that
+    * per-(band, bucket) counts — one narrow aggregate each — join on the
+    * tiny bucket key space and Σ n_batch·n_corpus prices the probe join's
+    * candidate evaluations against |batch|·|corpus|. Bands admitting at most a tenth of that
     * → the banded probe ([[embeddingIncrementalBanded]], sub-linear in
     * the corpus); more → the bounded-broadcast exact scan
     * ([[embeddingIncrementalExact]], flat 17 MB tasks, zero spill: pay
@@ -1927,8 +1870,8 @@ object Dedup {
       }
     if (BigInt(pairCost) * BigInt(AdmissionDenom) <= allPairs)
       // the sketch loans stay live for the (lazy) probe — Caches.drain settles
-      embeddingIncrementalBandedSketched(newVecs, skB, skC, idCol, threshold,
-        pricedRows = pairCost)
+      dropMatched(newVecs, idCol,
+        bandedCosine(skB, Some(skC), threshold, pricedRows = pairCost))
     else {
       // the exact scan never reads the sketches again — settle both now
       graft.Caches.endLoan(skB)
@@ -1937,44 +1880,20 @@ object Dedup {
     }
   }
 
-  /** The banded cross-probe body: [[embeddingIncremental]]'s under-gate
-    * branch, and the reference the d5c row and the specs call directly.
-    * The VERIFY-IN-JOIN shape — the [[embeddingLshBanded]] fix in the
-    * cross-corpus form: corpus vectors ride their band rows (linear)
-    * instead of shipping once per candidate, the cosine evaluates inside
-    * the band join, and only matched batch ids reach the distinct.
-    * Unpriced, the band exchanges spread at the parallelism floor.
+  /** The banded cross-probe: [[embeddingIncremental]]'s under-gate
+    * branch with unpersisted sketches, and the reference the d5c row and
+    * the specs call directly ([[bandedCosine]]'s cross form). Unpriced,
+    * the band exchanges spread at the parallelism floor.
     */
   private[graft] def embeddingIncrementalBanded(newVecs: DataFrame, corpus: DataFrame,
                                          idCol: String, vecCol: String,
                                          threshold: Double, dim: Int,
                                          bands: Int, bitsPerBand: Int,
                                          ordinal: Boolean): DataFrame =
-    embeddingIncrementalBandedSketched(newVecs,
+    dropMatched(newVecs, idCol, bandedCosine(
       Similarity.sketchedVecs(newVecs, idCol, vecCol, dim, bands, bitsPerBand, ordinal),
-      Similarity.sketchedVecs(corpus, idCol, vecCol, dim, bands, bitsPerBand, ordinal),
-      idCol, threshold, pricedRows = 0L)
-
-  /** The banded cross-probe body over prepared sketch frames — the auto
-    * gate passes its (persisted) pricing sketches in, so neither side is
-    * re-sketched for the probe join (r20; before this the corpus sketch
-    * pipeline ran twice per gated call: once for bucket counts, once in
-    * the probe).
-    */
-  private def embeddingIncrementalBandedSketched(newVecs: DataFrame,
-                                                 skB: DataFrame, skC: DataFrame,
-                                                 idCol: String, threshold: Double,
-                                                 pricedRows: Long): DataFrame = {
-    val w = 1L << 16
-    val l = spreadKernel(Similarity.bandRowsWithVecFromSketched(skB, "id_1", "v_1"),
-      pricedRows, w, col("band"), col("bkey"))
-    val r = spreadKernel(Similarity.bandRowsWithVecFromSketched(skC, "id_2", "v_2"),
-      pricedRows, w, col("band"), col("bkey"))
-    val matched = l.join(r, Seq("band", "bkey"))
-      .filter(round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold)
-      .select("id_1").distinct()
-    newVecs.join(matched, newVecs(idCol) === matched("id_1"), "left_anti")
-  }
+      Some(Similarity.sketchedVecs(corpus, idCol, vecCol, dim, bands, bitsPerBand, ordinal)),
+      threshold, pricedRows = 0L))
 
   /** Exact cross-corpus embedding ingest — [[embeddingIncremental]]'s
     * semantics (keep batch vectors with no corpus vector at cosine ≥
@@ -2000,10 +1919,8 @@ object Dedup {
                                                idCol: String, vecCol: String,
                                                threshold: Double): DataFrame = {
     val batch = broadcast(newVecs.select(col(idCol).as("id_1"), col(vecCol).as("v_1")))
-    val matched = corpus.select(col(vecCol).as("v_2"))
-      .join(batch, round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold)
-      .select("id_1").distinct()
-    newVecs.join(matched, newVecs(idCol) === matched("id_1"), "left_anti")
+    dropMatched(newVecs, idCol, corpus.select(col(vecCol).as("v_2"))
+      .join(batch, round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold))
   }
 
   /** D7e — EXACT n-gram overlap decontamination, the published-eval
@@ -2077,10 +1994,11 @@ object Dedup {
   // parts, says which rows a document contributes to each (`rows`, the  //
   // frames the one-shot operators compute internally) and how a batch   //
   // probes them; write/append/compact/read are the shared lifecycle.    //
-  // A probe runs the SAME candidate/verify/anti-join pipeline as the    //
-  // one-shot form against the loaded parts — bit-identical results     //
-  // (driver-gated: d2c_index_replay replays d2b from the saved index),  //
-  // with the corpus never re-shingled / re-sketched / even scanned. The //
+  // A probe is its family's ONE candidate/verify/anti-join body: the    //
+  // exact, MinHash and containment one-shot operators are the probe run //
+  // over in-memory parts, so a replay from the loaded parts is          //
+  // bit-identical (Verify-gated: d2c_index_replay replays d2b) with the //
+  // corpus never re-shingled / re-sketched / even scanned. The          //
   // build parameters (n, banding) are the family's own, so the batch    //
   // side of every probe is shaped exactly like the frozen corpus side.  //
   // ------------------------------------------------------------------ //
@@ -2117,17 +2035,21 @@ object Dedup {
       extends ShardedIndex(Seq(Part("sets", idCol, identity), Part("bands", idCol, identity)),
         None) {
 
-    def rows(docs: DataFrame): Map[String, DataFrame] = {
-      val sets = shingleSets(docs, idCol, textCol, n)
-      Map("sets" -> sets, "bands" -> bandKeys(sets, idCol, idCol, bands, rowsPerBand))
-    }
+    def rows(docs: DataFrame): Map[String, DataFrame] =
+      fromSets(shingleSets(docs, idCol, textCol, n))
 
-    /** [[minhashIncremental]] probing the index: only the BATCH is
-      * shingled; the corpus side of candidates comes from `bands` and of
-      * verification from `sets` — the corpus text is never touched. Result
-      * is bit-identical to the one-shot form on the same corpus
-      * (driver-gated, d2c_index_replay). The BATCH shingle-set frame is a
-      * [[graft.Caches]] loan; the index frames are plain parquet scans.
+    /** The parts over a prepared shingle-set frame: the sets themselves
+      * and their [[bandKeys]]. */
+    private[Dedup] def fromSets(sets: DataFrame): Map[String, DataFrame] =
+      Map("sets" -> sets, "bands" -> bandKeys(sets, idCol, idCol, bands, rowsPerBand))
+
+    /** The MinHash family's cross-corpus candidate → verify → anti-join
+      * body, over saved parts or in-memory ones ([[minhashIncremental]]):
+      * only the BATCH is shingled; the corpus side of candidates comes
+      * from `bands` and of verification from `sets` — the corpus text is
+      * never touched. A replay of the saved index bit-matches the one-shot
+      * form on the same corpus (Verify-gated, d2c_index_replay). The BATCH
+      * shingle-set frame is a [[graft.Caches]] loan.
       */
     def probe(newDocs: DataFrame, index: Map[String, DataFrame],
               threshold: Double): DataFrame = {
@@ -2136,9 +2058,8 @@ object Dedup {
         .join(index("bands").select(col(idCol).as("id_2"), col("band"), col("bkey")),
           Seq("band", "bkey"))
         .select("id_1", "id_2").distinct()
-      val matched = verifyJaccard2(candidates, bsets, index("sets"), idCol, threshold)
-        .select(col("id_1")).distinct()
-      newDocs.join(matched, newDocs(idCol) === matched("id_1"), "left_anti")
+      dropMatched(newDocs, idCol,
+        verifyJaccard(candidates, bsets, index("sets"), idCol, threshold))
     }
 
     /** ALL near-dup pairs of the indexed corpus, from the index alone — the
@@ -2153,15 +2074,11 @@ object Dedup {
       * [[minhashNearDups]] (bit-identical to it on the same corpus and
       * parameters — spec-gated); no false positives (exact verify).
       */
-    def nearDupPairs(index: Map[String, DataFrame], threshold: Double): DataFrame = {
-      val bandRows = index("bands")
-      val candidates = bandRows.select(col(idCol).as("id_1"), col("band"), col("bkey"))
-        .join(bandRows.select(col(idCol).as("id_2"), col("band"), col("bkey")),
-          Seq("band", "bkey"))
-        .filter(col("id_1") < col("id_2"))
-        .select("id_1", "id_2").distinct()
-      verifyJaccard2(candidates, index("sets"), index("sets"), idCol, threshold)
-    }
+    def nearDupPairs(index: Map[String, DataFrame], threshold: Double): DataFrame =
+      verifyJaccard(
+        bandSelfJoin(as => index("bands").select(col(idCol).as(as), col("band"), col("bkey")))
+          .distinct(),
+        index("sets"), index("sets"), idCol, threshold)
   }
 
   /** The decontamination index over a TRAIN corpus: `sets/` = its shingle
@@ -2190,8 +2107,12 @@ object Dedup {
           Part("df", "sk", _.groupBy("sk").agg(sum("df").as("df")))),
         Some(ShardedIndex.Tombstones("inv", "sk"))) {
 
-    def rows(train: DataFrame): Map[String, DataFrame] = {
-      val tsets = shingleSets(train, idCol, textCol, n)
+    def rows(train: DataFrame): Map[String, DataFrame] =
+      fromSets(shingleSets(train, idCol, textCol, n))
+
+    /** The parts over a prepared train shingle-set frame: the sets, their
+      * df table and the df-capped inverted index. */
+    private[Dedup] def fromSets(tsets: DataFrame): Map[String, DataFrame] = {
       val ti = ArrayOps.explodeDense(tsets, Seq(col(idCol).as("train_id")), col("shs"), "sk")
       val dfTab = ti.groupBy("sk").agg(count(lit(1)).as("df"))
       Map("sets" -> tsets, "df" -> dfTab,
@@ -2229,13 +2150,14 @@ object Dedup {
       graft.Caches.endLoan(bsets)
     }
 
-    /** [[decontaminationPairs]] probing the index: only the TEST
-      * (benchmark) side is shingled; train candidates come from `inv/`,
-      * exact containment verifies against `sets/` — the train corpus is
-      * never re-shingled or scanned. Result is identical to the one-shot
-      * form built with the same parameters (driver-gated,
-      * d7b_decon_replay). The TEST shingle-set frame is a [[graft.Caches]]
-      * loan.
+    /** The containment family's inverted-index candidate → exact verify
+      * body, over saved parts or in-memory ones ([[decontaminationPairs]]):
+      * only the TEST (benchmark) side is shingled; train candidates come
+      * from `inv`, exact containment verifies against `sets` — the train
+      * corpus is never re-shingled or scanned. A replay of the saved index
+      * is identical to the one-shot form built with the same parameters
+      * (Verify-gated, d7b_decon_replay). The TEST shingle-set frame is a
+      * [[graft.Caches]] loan.
       */
     def probe(test: DataFrame, index: Map[String, DataFrame],
               threshold: Double): DataFrame = {
@@ -2285,10 +2207,8 @@ object Dedup {
         .select("id_1", "id_2").distinct()
       val v1 = newVecs.select(col(idCol).as("id_1"), col(vecCol).as("v_1"))
       val v2 = index("vecs").select(col(idCol).as("id_2"), col(vecCol).as("v_2"))
-      val matched = candidates.join(v1, "id_1").join(v2, "id_2")
-        .filter(round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold)
-        .select("id_1").distinct()
-      newVecs.join(matched, newVecs(idCol) === matched("id_1"), "left_anti")
+      dropMatched(newVecs, idCol, candidates.join(v1, "id_1").join(v2, "id_2")
+        .filter(round(Vectors.cosine(col("v_1"), col("v_2")), 6) >= threshold))
     }
   }
   /** D5b — embedding near-dup pairs at cosine ≥ `threshold` for HIGH
@@ -2350,7 +2270,7 @@ object Dedup {
       // admitted candidate volume, so the verify exchanges run at the
       // kernel width it implies instead of the session default. The sketch
       // loan stays live for the (lazy) result — Caches.drain settles it.
-      embeddingLshBandedFromSketched(sk, threshold, pricedRows = pairCost)
+      bandedCosine(sk, None, threshold, pricedRows = pairCost)
     else {
       // the exact branch never reads the sketch again — settle now
       graft.Caches.endLoan(sk)
@@ -2365,22 +2285,10 @@ object Dedup {
     */
   private val AdmissionDenom = 10L
 
-  /** The banded self-join LSH body: [[embeddingNearDupsLSH]]'s under-gate
-    * branch, and the reference the d5b row and the specs call directly.
-    *
-    * VERIFY IN THE BAND JOIN: vectors ride the band rows (`bands`× the
-    * corpus, linear), the cosine evaluates inside the join stage, and only
-    * SURVIVORS reach the final distinct. The r16 sweep's find forced this
-    * shape: at 100× the gate correctly ADMITS ~1.2e9 candidates
-    * (sub-quadratic — the admission contract holds), but distinct-first
-    * then shipped a vector per candidate — the second id join's exchange
-    * alone priced ~400 GB and exhausted the probe box's disk, and no
-    * exchange WIDTH fixes a per-candidate payload. Kernel work matches
-    * the gate's bound exactly (a pair costs one cosine per colliding band
-    * — Σ b(b−1)/2 is precisely that count), and the band exchanges spread
-    * at [[kernelWidth]] of the gate's Σ b(b−1)/2 pricing so per-task
-    * in-join work stays at the quantum; this unpriced reference spreads
-    * them at the parallelism floor.
+  /** The banded self-join LSH plan: [[embeddingNearDupsLSH]]'s under-gate
+    * branch, and the reference the d5b row and the specs call directly
+    * ([[bandedCosine]]'s self form). Unpriced, the band exchanges spread
+    * at the parallelism floor.
     */
   private[graft] def embeddingLshBanded(df: DataFrame, idCol: String, vecCol: String,
                                  threshold: Double, dim: Int, bands: Int,
@@ -2388,26 +2296,46 @@ object Dedup {
     // the self-join reads the sketch once per side — persist it so the
     // bands × bits dim-length sketch folds run once per vector, not twice
     // (loan convention: lazy result, Caches.drain settles)
-    embeddingLshBandedFromSketched(
+    bandedCosine(
       graft.Caches.persistLoaned(Similarity.sketchedVecs(
         df, idCol, vecCol, dim, bands, bitsPerBand, ordinal)),
-      threshold, pricedRows = 0L)
+      None, threshold, pricedRows = 0L)
 
-  /** The banded self-join body over a prepared (persisted) sketch frame —
-    * both join sides derive from the ONE sketch evaluation.
+  /** The embedding family's one VERIFY-IN-THE-BAND-JOIN body over prepared
+    * sketch frames: vectors ride the band rows (`bands`× the corpus,
+    * linear), the cosine evaluates inside the join stage, and only
+    * SURVIVORS reach a dedup. The r16 sweep's find forced this shape: at
+    * 100× the LSH gate correctly ADMITS ~1.2e9 candidates (sub-quadratic
+    * — the admission contract holds), but distinct-first then shipped a
+    * vector per candidate — the second id join's exchange alone priced
+    * ~400 GB and exhausted the probe box's disk, and no exchange WIDTH
+    * fixes a per-candidate payload. Kernel work matches the gate's bound
+    * exactly (a pair costs one cosine per colliding band — Σ b(b−1)/2 is
+    * precisely that count), and the band exchanges spread at
+    * [[kernelWidth]] of `pricedRows` (the gate's pricing; 0 → the
+    * parallelism floor) so per-task in-join work stays at the quantum.
+    *
+    * Self form (`corpus = None`): `sk` joins itself; `id_1 < id_2` filters
+    * ahead of the cosine, so the kernel runs once per unordered pair and
+    * band, and the result is the distinct (id_1, id_2, cosine) pairs.
+    * Cross form (`corpus = Some(skC)`): the batch sketch `sk` probes the
+    * corpus sketch, and the result is the matched batch rows (`id_1`)
+    * for [[dropMatched]].
     */
-  private def embeddingLshBandedFromSketched(sk: DataFrame, threshold: Double,
-                                             pricedRows: Long): DataFrame = {
-    val w = 1L << 16
-    val l = spreadKernel(Similarity.bandRowsWithVecFromSketched(sk, "id_1", "v_1"),
-      pricedRows, w, col("band"), col("bkey"))
-    val r = spreadKernel(Similarity.bandRowsWithVecFromSketched(sk, "id_2", "v_2"),
-      pricedRows, w, col("band"), col("bkey"))
-    l.join(r, Seq("band", "bkey"))
-      .filter(col("id_1") < col("id_2"))
-      .withColumn("cosine", round(Vectors.cosine(col("v_1"), col("v_2")), 6))
-      .filter(col("cosine") >= threshold)
-      .select("id_1", "id_2", "cosine")
-      .distinct()
+  private def bandedCosine(sk: DataFrame, corpus: Option[DataFrame], threshold: Double,
+                           pricedRows: Long): DataFrame = {
+    def side(sketched: DataFrame, id: String, vec: String) =
+      spreadKernel(Similarity.bandRowsWithVecFromSketched(sketched, id, vec),
+        pricedRows, 1L << 16, col("band"), col("bkey"))
+    val met = side(sk, "id_1", "v_1")
+      .join(side(corpus.getOrElse(sk), "id_2", "v_2"), Seq("band", "bkey"))
+    val cosine = round(Vectors.cosine(col("v_1"), col("v_2")), 6)
+    if (corpus.isEmpty)
+      met.filter(col("id_1") < col("id_2"))
+        .withColumn("cosine", cosine)
+        .filter(col("cosine") >= threshold)
+        .select("id_1", "id_2", "cosine")
+        .distinct()
+    else met.filter(cosine >= threshold)
   }
 }

@@ -181,33 +181,6 @@ object Similarity {
     lshBandStatsFromSketched(
       sketchedVecs(df, idCol, vecCol, dim, bands, bitsPerBand, ordinal))
 
-  /** Per-(band, bucket) sketch-row counts — the cross-corpus pricing
-    * input ([[lshBandStats]]'s self-join form reduces these to per-band
-    * cost; the incremental-ingest gate joins two of these frames on the
-    * tiny bucket key space — ≤ bands·2^bits rows per side — and sums
-    * n_batch·n_corpus to price the probe join before running it).
-    */
-  def lshBucketCounts(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-                      bands: Int = 16, bitsPerBand: Int = 8,
-                      ordinal: Boolean = false): DataFrame =
-    lshBucketCountsFromSketched(
-      sketchedVecs(df, idCol, vecCol, dim, bands, bitsPerBand, ordinal))
-
-  /** Cross-corpus variant: candidate (id_1 ∈ a, id_2 ∈ b) pairs whose
-    * sketches collide in some band — the probe shape of incremental
-    * embedding ingest ([[graft.operators.Dedup.embeddingIncremental]]):
-    * the corpus side's band index is built once and only the (small)
-    * batch's band keys join against it.
-    */
-  def lshCandidatesCross(a: DataFrame, b: DataFrame, idCol: String,
-                         vecCol: String, dim: Int, bands: Int = 16,
-                         bitsPerBand: Int = 8,
-                         ordinal: Boolean = false): DataFrame =
-    bandRows(a, idCol, "id_1", vecCol, dim, bands, bitsPerBand, ordinal)
-      .join(bandRows(b, idCol, "id_2", vecCol, dim, bands, bitsPerBand, ordinal),
-        Seq("band", "bkey"))
-      .select("id_1", "id_2").distinct()
-
   /** Banded sketch rows under the ORIGINAL id column name — the
     * materialized-index form ([[graft.operators.Dedup.EmbeddingIndex]]
     * shards this frame to parquet between ingest batches). Same single
@@ -246,8 +219,12 @@ object Similarity {
       col("_bds"), "bd")
       .select(col(as), col("bd.band"), col("bd.bkey"))
 
-  /** [[bandRowsFromSketched]] carrying the vector (`vecAs`) — the
-    * verify-in-join input shape, from the shared sketch frame.
+  /** [[bandRowsFromSketched]] CARRYING the vector itself (`vecAs`) — the
+    * verify-in-join input of [[graft.operators.Dedup]]'s banded embedding
+    * body: vectors then shuffle once per BAND ROW (`bands`× the corpus —
+    * linear), never once per candidate, and the cosine evaluates inside
+    * the band-join stage so no candidate-sized exchange ever carries a
+    * payload.
     */
   private[graft] def bandRowsWithVecFromSketched(sk: DataFrame, as: String,
                                                  vecAs: String): DataFrame =
@@ -255,8 +232,11 @@ object Similarity {
       Seq(col("_sid").as(as), col("_svec").as(vecAs)), col("_bds"), "bd")
       .select(col(as), col(vecAs), col("bd.band"), col("bd.bkey"))
 
-  /** [[lshBucketCounts]] over a prepared [[sketchedVecs]] frame — the
-    * cross-ingest gate's pricing input without a second sketch pass.
+  /** Per-(band, bucket) sketch-row counts over a prepared [[sketchedVecs]]
+    * frame — the cross-corpus pricing input: the incremental-ingest gate
+    * joins two of these frames on the tiny bucket key space (≤
+    * bands·2^bits rows per side) and sums n_batch·n_corpus to price the
+    * probe join before running it.
     */
   private[graft] def lshBucketCountsFromSketched(sk: DataFrame): DataFrame =
     bandRowsFromSketched(sk, "id")
@@ -274,8 +254,8 @@ object Similarity {
         expr("sum(_b * (_b - 1) DIV 2)").as("pair_cost"))
 
   /** The ONE definition of banded sketch rows (id aliased to `as`, band,
-    * bkey) shared by the self-join and cross-corpus candidate forms so the
-    * banding scheme can never drift between them — expressed through
+    * bkey) shared by the candidate self-join and the saved index rows so
+    * the banding scheme can never drift between them — expressed through
     * [[sketchedVecs]], the single sketch-frame definition.
     */
   private def bandRows(df: DataFrame, idCol: String, as: String, vecCol: String,
@@ -285,11 +265,11 @@ object Similarity {
       sketchedVecs(df, idCol, vecCol, dim, bands, bitsPerBand, ordinal), as)
 
   /** The ONE band-struct array — seed base, struct layout, sketch choice —
-    * behind BOTH [[bandRows]] and [[bandRowsWithVec]]: extracting it is
-    * what makes "the two can never drift" structurally true rather than a
-    * doc claim (two parallel sketch definitions could silently diverge on
-    * a seed or field order and break the gated verify-in-join branches'
-    * recall relative to the reference plan).
+    * behind every banded row form, through [[sketchedVecs]]: extracting it
+    * is what makes "the forms can never drift" structurally true rather
+    * than a doc claim (two parallel sketch definitions could silently
+    * diverge on a seed or field order and break the gated verify-in-join
+    * branches' recall relative to the reference plan).
     */
   private def bandStructs(vecCol: String, dim: Int, bands: Int,
                           bitsPerBand: Int, ordinal: Boolean): Column = {
@@ -300,22 +280,6 @@ object Similarity {
       struct(lit(b).as("band"), sketch(b).as("bkey"))
     }: _*)
   }
-
-  /** [[bandRows]] CARRYING the vector itself (`vecAs`) — the verify-in-join
-    * input ([[graft.operators.Dedup]]'s gated banded branches): vectors
-    * then shuffle once per BAND ROW (`bands`× the corpus — linear), never
-    * once per candidate, and the cosine evaluates inside the band-join
-    * stage so no candidate-sized exchange ever carries a payload. Shares
-    * [[bandStructs]] with [[bandRows]] — one sketch definition, so the
-    * two genuinely cannot drift.
-    */
-  private[operators] def bandRowsWithVec(df: DataFrame, idCol: String, as: String,
-                                         vecAs: String, vecCol: String, dim: Int,
-                                         bands: Int, bitsPerBand: Int,
-                                         ordinal: Boolean): DataFrame =
-    bandRowsWithVecFromSketched(
-      sketchedVecs(df, idCol, vecCol, dim, bands, bitsPerBand, ordinal),
-      as, vecAs)
 
   /** Per-label embedding centroids in long format: (label, n_vecs,
     * dim_idx, centroid_val). One aggregation with `dim` per-coordinate

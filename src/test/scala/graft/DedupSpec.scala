@@ -532,7 +532,7 @@ class DedupSpec extends SparkTestBase {
       "cum_pair_cost is the running total by ascending cell size")
   }
 
-  test("fuzzyNearDupsBudget: unbounded budget reproduces fuzzyNearDups bit-for-bit (D9b)") {
+  test("fuzzyNearDups: unbounded pairsPerDoc reproduces the banded plan bit-for-bit (D9b)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect().toSet
@@ -543,7 +543,7 @@ class DedupSpec extends SparkTestBase {
     assert(unbounded == full, "no cell over an unbounded cap ⇒ identical result")
   }
 
-  test("fuzzyNearDupsBudget: a binding budget prunes a subset, keeps exact distances (D9b)") {
+  test("fuzzyNearDups: a binding budget prunes a subset, keeps exact distances (D9b)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect()
@@ -559,7 +559,7 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
-  test("fuzzyNearDupsAuto: non-binding gate takes the unbounded plan, identical result (D9e)") {
+  test("fuzzyNearDups: non-binding gate takes the unbounded plan, identical result (D9e)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val full = Dedup.fuzzyNearDupsBanded(docs, "doc_id", "text", maxDist = 40)
       .as[(Long, Long, Long)].collect().toSet
@@ -571,7 +571,7 @@ class DedupSpec extends SparkTestBase {
     assert(auto == full, "non-binding budget ⇒ identical to the full-admission plan")
   }
 
-  test("fuzzyNearDupsAuto: binding gate equals fuzzyNearDupsBudget at the derived budget (D9e)") {
+  test("fuzzyNearDups: binding gate equals the hand-derived capped admission (D9e)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val nDocs = docs.count()
     // pairsPerDoc = 1 forces the capped branch (total cost ~4k > 500)
@@ -940,7 +940,7 @@ class DedupSpec extends SparkTestBase {
     assert(pairs(unique) == pairs(Dedup.minhashNearDupsPlain(docs, "doc_id", "text", 0.5)))
   }
 
-  test("ngramJaccardPairsSparseAuto: unbounded budget = exact; binding budget = hand-derived ceiling (D4d)") {
+  test("ngramJaccardPairsSparse: unbounded = exact; binding = hand-derived ceiling (D4d)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // unbounded budget → ceiling = max df → candidates unrestricted; any
     // pair at jaccard >= t shares a shingle, so the result is the exact set

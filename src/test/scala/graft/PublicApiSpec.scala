@@ -39,21 +39,27 @@ class VerifyRowsSpec extends AnyFunSuite {
   * `private[graft]`); no operator takes a per-call cache-release switch,
   * because graft's caches live until `Caches.releaseAll` / `Caches.drain`;
   * Dedup's ingest indexes keep one lifecycle, `graft.sources.ShardedIndex`;
-  * and the modules deleted as outside the north star (media codecs, term
+  * each near-dup family keeps one candidate → verify body; and the modules deleted as outside the north star (media codecs, term
   * statistics, frequency sketches, extra file formats, chunking, JSON
   * lifting, the hot-head scale fixture) stay deleted.
   */
 class OperatorApiSpec extends AnyFunSuite {
 
   private val switches = Set("unbounded", "sliced", "dupFracGate", "expand", "admissionDenom",
-    "release", "releaseSets", "guardPairs", "quickPriceMinDocs")
+    "release", "releaseSets", "guardPairs", "quickPriceMinDocs", "labelPartitions")
   private val deletedNames = Set("minhashNearDupsAuto", "minhashNearDupsCollapsed",
     "fuzzyNearDupsAuto", "embedNearDupAuto", "embeddingIncrementalAuto",
     "asofJoinStreamingSliced", "exactIncrementalFromIndex", "ngramJaccardPairsSparseAuto",
-    "fuzzyNearDupsBudget", "shingleDfStatsSampled", "minhashSignatureFromSets")
+    "fuzzyNearDupsBudget", "shingleDfStatsSampled", "minhashSignatureFromSets",
+    "lshCandidatesCross", "lshBucketCounts", "bandKeysCarrying")
+  // second copies of a family's candidate/verify body, folded into one
+  // private def each: they fail at any visibility
+  private val mergedBodies = Set("bandKeysCarrying", "explodeBands", "verifyJaccard2",
+    "bandRowsWithVec", "embeddingLshBandedFromSketched", "embeddingIncrementalBandedSketched")
   private val files = Seq("src/main/scala/graft/operators/Dedup.scala",
     "src/main/scala/graft/streaming/StreamOps.scala",
-    "src/main/scala/graft/operators/Sampling.scala")
+    "src/main/scala/graft/operators/Sampling.scala",
+    "src/main/scala/graft/operators/Similarity.scala")
 
   // a def line with its modifiers; the parameter lists follow the name
   private val defLine =
@@ -96,12 +102,13 @@ class OperatorApiSpec extends AnyFunSuite {
       _ = assert(Files.isRegularFile(path), s"run from the repo root: ${path.toAbsolutePath}")
       src = Files.readString(path)
       m <- defLine.findAllMatchIn(src).toSeq
-      if !m.group(1).contains("private") && !m.group(1).contains("protected")
+      isPublic = !m.group(1).contains("private") && !m.group(1).contains("protected")
       name = m.group(2)
       line = src.substring(0, m.start).count(_ == '\n') + 1
-      bad <- (if (deletedNames(name)) Seq(s"public def $name") else Nil) ++
-        param.findAllMatchIn(paramLists(src, m.end)).map(_.group(1))
-          .filter(switches).map(p => s"$name($p)")
+      bad <- (if (mergedBodies(name)) Seq(s"def $name") else Nil) ++ (if (!isPublic) Nil
+        else (if (deletedNames(name)) Seq(s"public def $name") else Nil) ++
+          param.findAllMatchIn(paramLists(src, m.end)).map(_.group(1))
+            .filter(switches).map(p => s"$name($p)"))
     } yield s"$f:$line: $bad"
     assert(offending.isEmpty, offending.mkString("plan switches or deleted aliases:\n", "\n", ""))
   }
