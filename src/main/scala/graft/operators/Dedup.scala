@@ -875,8 +875,7 @@ object Dedup {
     * ([[graft.streaming.StreamOps.ingestDedupStreaming]]). Compose with
     * [[exact]] on the survivors to also dedup within the new batch.
     */
-  def exactIncremental(newDocs: DataFrame, corpus: DataFrame,
-                       idCol: String, textCol: String): DataFrame =
+  def exactIncremental(newDocs: DataFrame, corpus: DataFrame, textCol: String): DataFrame =
     graft.streaming.StreamOps.ingestDedupStreaming(newDocs,
       FingerprintIndex(textCol).rows(corpus)("fingerprint"), textCol)
 
@@ -2212,12 +2211,12 @@ object Dedup {
     }
   }
   /** D5b — embedding near-dup pairs at cosine ≥ `threshold` for HIGH
-    * thresholds: banded sketch LSH candidates ([[Similarity.lshCandidates]])
-    * + exact cosine verification. Sub-quadratic candidate generation;
-    * recall follows the sign-LSH S-curve 1-(1-p^r)^L with p = 1 -
-    * acos(cos)/π — pick bands/bits for the target threshold (e.g. 16×8
-    * gives recall ≈ 0.98 at cosine 0.9, and essentially 0 admission of
-    * the ~0.2-background pairs).
+    * thresholds: banded sketch LSH candidates (a pair is a candidate iff
+    * some band's sketch matches exactly) + exact cosine verification.
+    * Sub-quadratic candidate generation; recall follows the sign-LSH
+    * S-curve 1-(1-p^r)^L with p = 1 - acos(cos)/π — pick bands/bits for
+    * the target threshold (e.g. 16×8 gives recall ≈ 0.98 at cosine 0.9,
+    * and essentially 0 admission of the ~0.2-background pairs).
     *
     * The plan is chosen from the measured band-bucket structure (d5f/d5g,
     * the d4c→d4d pattern closing the d5e diagnostic loop): one narrow

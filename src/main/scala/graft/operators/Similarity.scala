@@ -144,23 +144,6 @@ object Similarity {
       when(element_at(vec, a + 1) > element_at(vec, b + 1), lit(1L << h)).otherwise(0L)
     }.reduce(_ + _)
 
-  /** Banded sign-sketch candidate pairs for high-threshold cosine
-    * similarity: `bands` independent `bitsPerBand`-bit sketches (one seed
-    * per band); a pair is a candidate iff some band matches exactly.
-    * P[candidate] = 1-(1-p^r)^L with p = 1 - acos(cosine)/π — the sign-LSH
-    * S-curve. Candidate generation is an equi-join on (band, sketch):
-    * only bucket-colliding pairs are ever materialized, never all pairs.
-    * Exact-verify downstream ([[Dedup.embeddingNearDupsLSH]]).
-    */
-  def lshCandidates(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-                    bands: Int = 16, bitsPerBand: Int = 8,
-                    ordinal: Boolean = false): DataFrame =
-    bandRows(df, idCol, "id_1", vecCol, dim, bands, bitsPerBand, ordinal)
-      .join(bandRows(df, idCol, "id_2", vecCol, dim, bands, bitsPerBand, ordinal),
-        Seq("band", "bkey"))
-      .filter(col("id_1") < col("id_2"))
-      .select("id_1", "id_2").distinct()
-
   /** D5e — band-bucket DIAGNOSTIC for the LSH candidate join (the
     * j6/d4c pattern: measure before you choose a physical plan): per
     * band, the bucket count, the largest bucket, and the exact candidate
@@ -184,12 +167,13 @@ object Similarity {
   /** Banded sketch rows under the ORIGINAL id column name — the
     * materialized-index form ([[graft.operators.Dedup.EmbeddingIndex]]
     * shards this frame to parquet between ingest batches). Same single
-    * banding definition as the candidate joins ([[bandRows]]), so a saved
-    * index and a live probe can never drift on the sketch scheme.
+    * sketch-frame definition as the candidate joins ([[sketchedVecs]]), so
+    * a saved index and a live probe can never drift on the sketch scheme.
     */
   def bandIndexRows(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                     bands: Int, bitsPerBand: Int, ordinal: Boolean): DataFrame =
-    bandRows(df, idCol, idCol, vecCol, dim, bands, bitsPerBand, ordinal)
+    bandRowsFromSketched(
+      sketchedVecs(df, idCol, vecCol, dim, bands, bitsPerBand, ordinal), idCol)
 
   /** The SKETCHED frame — `(_sid, _svec, _bds)` with the band-struct array
     * computed exactly once per vector — that every banded consumer below
@@ -252,17 +236,6 @@ object Similarity {
         count(lit(1)).as("n_buckets"),
         max("_b").as("max_bucket"),
         expr("sum(_b * (_b - 1) DIV 2)").as("pair_cost"))
-
-  /** The ONE definition of banded sketch rows (id aliased to `as`, band,
-    * bkey) shared by the candidate self-join and the saved index rows so
-    * the banding scheme can never drift between them — expressed through
-    * [[sketchedVecs]], the single sketch-frame definition.
-    */
-  private def bandRows(df: DataFrame, idCol: String, as: String, vecCol: String,
-                       dim: Int, bands: Int, bitsPerBand: Int,
-                       ordinal: Boolean): DataFrame =
-    bandRowsFromSketched(
-      sketchedVecs(df, idCol, vecCol, dim, bands, bitsPerBand, ordinal), as)
 
   /** The ONE band-struct array — seed base, struct layout, sketch choice —
     * behind every banded row form, through [[sketchedVecs]]: extracting it

@@ -1,174 +1,115 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Event-stream operators, batch and streaming forms with shared semantics.
+/** Event-stream operators.
   *
   * The `events` table models the stream; whatever physical encoding the
   * producer wrote `ts` in (bigint nanos, timestamp[us], …), Tables.events
   * normalizes it to a `ts_us` epoch-micros column, which is the event-time
-  * every operator here keys on. Batch forms are the oracle-checkable
-  * reference semantics; streaming forms run the same logic incrementally
-  * under Structured Streaming with watermarked state.
+  * every operator here keys on. Each event-window operator is ONE def
+  * whose plan runs on a batch frame and on a streaming one alike: it
+  * aggregates over Spark's `window`/`session_window` of `ts_us` under
+  * `withWatermark` (streaming bounds window state by the watermark and,
+  * in append mode, emits a window once the watermark closes it; Spark
+  * drops the watermark from a batch plan). Widths and gaps are `Long`
+  * microseconds, the oracle's unit, and the window keys come back in that
+  * unit: a FLOOR-division `bucket` for tumbling windows and an epoch-micros
+  * `win_start` for hopping ones, so pre-1970 timestamps key exactly as the
+  * oracle's `//` does. An event with a null `ts_us` falls in no window.
   */
 object StreamOps {
 
-  /** FLOOR division of `ts_us` by literal `n`, exact on longs: `div`
-    * truncates toward zero, which assigns a negative (pre-1970) timestamp
-    * to the bucket ABOVE its true window — floor semantics (what SQL `//`
-    * and every windowing engine use) round toward −∞. `ts - pmod(ts, n)`
-    * is the exact largest multiple of n ≤ ts (pmod is non-negative), so
-    * the `div` that follows is exact integer arithmetic, no doubles.
-    */
-  private def floorDivTs(tsCol: String, n: Long): org.apache.spark.sql.Column =
-    expr(s"($tsCol - pmod($tsCol, ${n}L)) div ${n}L")
-
-  /** Tumbling-window aggregate, BATCH form: bucket = floor(ts/width) —
-    * true floor, so negative (pre-1970) timestamps bucket identically to
-    * the oracle's `//`. Partial aggregation happens map-side; one shuffle
-    * of (bucket, type) partials regardless of event volume.
-    */
-  def tumblingCounts(events: DataFrame, widthUs: Long): DataFrame =
-    events
-      .withColumn("bucket", floorDivTs("ts_us", widthUs))
-      .groupBy(col("bucket"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("sum_value"))
-
-  /** Tumbling-window aggregate, STREAMING form: same semantics under a
-    * watermark — late events beyond the watermark are dropped and window
-    * state is evicted (bounded state at scale).
-    */
-  def tumblingCountsStreaming(events: DataFrame, width: String, watermark: String): DataFrame =
-    events
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
+  /** `events` with its `event_time` (= `ts_us`) under the watermark. */
+  private def watermarked(events: DataFrame, watermark: String): DataFrame =
+    events.withColumn("event_time", timestamp_micros(col("ts_us")))
       .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), width), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
 
-  /** E4 — HOPPING (sliding) window aggregate, batch form: windows of
-    * `widthUs` starting every `slideUs` (width must be a multiple of
-    * slide), so each event lands in width/slide windows. The replication
-    * is explicit — `sequence` + `explode` of the window-start list — and
-    * happens BEFORE the aggregation's partial phase, so the exchange
-    * carries (window, type) partials only, exactly like the tumbling
-    * form; at 100 TB the cost is the width/slide input blow-up every
-    * hopping-window engine pays, never a second shuffle. The hop index is
-    * a true floor ([[floorDivTs]]), so pre-1970 events assign identically
-    * to the oracle's `//`.
+  private def duration(us: Long): String = s"$us microseconds"
+
+  /** The tumbling window's floor index: `window.start` is an exact
+    * multiple of the width, so `div` is exact on negative starts too. */
+  private def bucket(widthUs: Long): Column =
+    expr(s"unix_micros(window.start) div ${widthUs}L").as("bucket")
+
+  /** E1 — tumbling-window aggregate: events and rounded value sum per
+    * (bucket, event_type). Partial aggregation happens map-side; one
+    * shuffle of (window, type) partials regardless of event volume.
     */
-  def hoppingCounts(events: DataFrame, widthUs: Long, slideUs: Long): DataFrame = {
+  def tumblingCounts(events: DataFrame, widthUs: Long, watermark: String): DataFrame = {
+    require(widthUs > 0, "tumblingCounts: width must be positive")
+    watermarked(events, watermark)
+      .groupBy(window(col("event_time"), duration(widthUs)), col("event_type"))
+      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
+      .select(bucket(widthUs), col("event_type"), col("n_events"), col("sum_value"))
+  }
+
+  /** E4 — HOPPING (sliding) window aggregate: windows of `widthUs`
+    * starting every `slideUs` (width must be a multiple of slide), so each
+    * event lands in width/slide windows, keyed by `win_start` in epoch
+    * micros. Spark's `window(col, width, slide)` replicates each event with
+    * an `Expand` BEFORE the aggregation's partial phase, so the exchange
+    * carries (window, type) partials only, exactly like the tumbling form;
+    * the cost is the width/slide input blow-up every hopping-window engine
+    * pays, never a second shuffle.
+    */
+  def hoppingCounts(events: DataFrame, widthUs: Long, slideUs: Long,
+                    watermark: String): DataFrame = {
     require(widthUs > 0 && slideUs > 0 && widthUs % slideUs == 0,
       "hoppingCounts: width must be a positive multiple of slide")
-    val k = widthUs / slideUs
-    val hop = floorDivTs("ts_us", slideUs)
-    events
-      .withColumn("win_start", explode(sequence(
-        (hop - lit(k - 1)) * lit(slideUs), hop * lit(slideUs), lit(slideUs))))
-      .groupBy(col("win_start"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(col("value")), 2).as("sum_value"))
-  }
-
-  /** E4 STREAMING form — Spark's `window(col, width, slide)` implements
-    * the same hop replication natively under a watermark (state evicted
-    * per closed window, as in [[tumblingCountsStreaming]]).
-    */
-  def hoppingCountsStreaming(events: DataFrame, width: String, slide: String,
-                             watermark: String): DataFrame =
-    events
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), width, slide), col("event_type"))
+    watermarked(events, watermark)
+      .groupBy(window(col("event_time"), duration(widthUs), duration(slideUs)),
+        col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
+      .select(expr("unix_micros(window.start)").as("win_start"), col("event_type"),
+        col("n_events"), col("sum_value"))
+  }
 
   /** E8 — per-window DISTINCT-user count (the canonical "hourly active
-    * users" metric), BATCH form: floor-bucket + exact `count_distinct`.
-    * The distinct rides Spark's Expand-based two-phase aggregate — the
-    * exchange carries (bucket, user) partials, bounded by distinct pairs
-    * per partition, not events.
+    * users" metric) as (bucket, n_users). Structured Streaming disallows
+    * distinct aggregates outright, so the one body is DEDUP-THEN-COUNT: a
+    * watermarked `dropDuplicates` on (window, user) — the window struct
+    * carries the event-time metadata, so dedup state evicts as the
+    * watermark passes each window — feeding a windowed count that sees
+    * every (window, user) pair exactly once. Streaming runs the two
+    * chained stateful operators in append mode only, which is also the
+    * right production mode (each window's count emits once, when the
+    * watermark closes it). Null users are dropped first, as SQL's
+    * `count(DISTINCT user_id)` skips them. The dedup discards event
+    * multiplicity; per-window event counts are [[tumblingCounts]] summed
+    * per bucket.
     */
-  def windowDistinctUsers(events: DataFrame, widthUs: Long): DataFrame = {
+  def windowDistinctUsers(events: DataFrame, widthUs: Long, watermark: String): DataFrame = {
     require(widthUs > 0, "windowDistinctUsers: width must be positive")
-    events
-      .withColumn("bucket", floorDivTs("ts_us", widthUs))
-      .groupBy(col("bucket"))
-      .agg(countDistinct(col("user_id")).as("n_users"),
-        count(lit(1)).as("n_events"))
-  }
-
-  /** E8 STREAMING form. Structured Streaming disallows distinct aggregates
-    * outright, so the real-world shape is DEDUP-THEN-COUNT: a watermarked
-    * `dropDuplicates` on (window, user) — the window struct carries the
-    * event-time metadata, so dedup state evicts as the watermark passes
-    * each window — feeding a windowed count that sees every (window, user)
-    * pair exactly once. Two CHAINED stateful operators; Spark supports the
-    * chain in append mode only, which is also the right production mode
-    * (each window's user count emits once, when the watermark closes it).
-    * Emits (window, n_users); n_events is not carried — the dedup that
-    * makes the count distinct necessarily discards event multiplicity
-    * (batch form reports both).
-    */
-  def windowDistinctUsersStreaming(events: DataFrame, width: String,
-                                   watermark: String): DataFrame =
-    events
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", watermark)
-      .select(window(col("event_time"), width).as("window"), col("user_id"))
+    watermarked(events.filter(col("user_id").isNotNull), watermark)
+      .select(window(col("event_time"), duration(widthUs)).as("window"), col("user_id"))
       .dropDuplicates("window", "user_id")
       .groupBy(col("window"))
       .agg(count(lit(1)).as("n_users"))
-
-  /** E8d — approximate per-window distinct users via HyperLogLog++
-    * (`approx_count_distinct`), batch and streaming from ONE definition.
-    * Streaming bans exact distinct aggregates (the dedup-then-count chain
-    * in [[windowDistinctUsersStreaming]] is the exact workaround, TWO
-    * stateful operators), but the HLL sketch is an ordinary partial
-    * aggregate — ONE stateful operator whose per-window state is a
-    * fixed-size sketch (~kilobytes at rsd 0.05) no matter how many
-    * distinct users the window sees. At 100 TB stream rates that
-    * bounded-state-per-window property is why dashboards run HLL and
-    * reconcile exact counts offline; `rsd` is the standard-error knob.
-    * Batch form for the differential gate (same sketch, same answer).
-    */
-  def windowApproxDistinctUsers(events: DataFrame, widthUs: Long,
-                                rsd: Double = 0.05): DataFrame = {
-    require(widthUs > 0, "windowApproxDistinctUsers: width must be positive")
-    events
-      .withColumn("bucket", floorDivTs("ts_us", widthUs))
-      .groupBy(col("bucket"))
-      .agg(approx_count_distinct(col("user_id"), rsd).as("n_users_approx"))
+      .select(bucket(widthUs), col("n_users"))
   }
 
-  def windowApproxDistinctUsersStreaming(events: DataFrame, width: String,
-                                         watermark: String,
-                                         rsd: Double = 0.05): DataFrame =
-    events
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), width).as("window"))
-      .agg(approx_count_distinct(col("user_id"), rsd).as("n_users_approx"))
-
-  /** E8c companion — plain watermarked per-window EVENT count (one
-    * stateful aggregate, no dedup): the multiplicity that
-    * [[windowDistinctUsersStreaming]]'s dedup necessarily discards. A
-    * production active-users dashboard runs BOTH queries over the same
-    * source and joins their append-mode outputs on the window — streaming
-    * forbids putting a distinct and a plain count in one aggregate, so
-    * the two-query fork IS the canonical shape (each emits a window once,
-    * when the watermark closes it; the join downstream is a plain batch
-    * join of two closed-window tables).
+  /** E8d — approximate per-window distinct users via HyperLogLog++
+    * (`approx_count_distinct`) as (bucket, n_users_approx). Unlike the
+    * exact dedup-then-count chain of [[windowDistinctUsers]] (TWO stateful
+    * operators), the HLL sketch is an ordinary partial aggregate — ONE
+    * stateful operator whose per-window state is a fixed-size sketch
+    * (~kilobytes at rsd 0.05) no matter how many distinct users the window
+    * sees. That bounded state per window is why dashboards run HLL and
+    * reconcile exact counts offline; `rsd` is the standard-error knob.
+    * Register merges are max-based, so the estimate does not depend on
+    * partitioning or arrival order.
     */
-  def windowEventCountsStreaming(events: DataFrame, width: String,
-                                 watermark: String): DataFrame =
-    events
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", watermark)
-      .groupBy(window(col("event_time"), width).as("window"))
-      .agg(count(lit(1)).as("n_events"))
+  def windowApproxDistinctUsers(events: DataFrame, widthUs: Long, watermark: String,
+                                rsd: Double = 0.05): DataFrame = {
+    require(widthUs > 0, "windowApproxDistinctUsers: width must be positive")
+    watermarked(events, watermark)
+      .groupBy(window(col("event_time"), duration(widthUs)))
+      .agg(approx_count_distinct(col("user_id"), rsd).as("n_users_approx"))
+      .select(bucket(widthUs), col("n_users_approx"))
+  }
 
   /** Spark's bundled RocksDB state-store provider. At production state
     * sizes (watermark horizon × active keys) the default HDFS-backed
@@ -183,9 +124,11 @@ object StreamOps {
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Gap-based sessionization, BATCH form: a session breaks when the gap
-    * from the previous event of the same user exceeds `gapUs`. Classic
-    * lag-diff + running-sum session ids; one shuffle to co-locate users.
+  /** E2 — gap-based sessionization by lag-diff + running-sum session ids:
+    * a session breaks when the gap from the previous event of the same
+    * user exceeds `gapUs`; one shuffle to co-locate users. Batch only (a
+    * stream cannot number a user's sessions); it is the reference
+    * [[sessionizeWindow]] is pinned against.
     */
   def sessionize(events: DataFrame, gapUs: Long): DataFrame = {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
@@ -202,22 +145,21 @@ object StreamOps {
         (max(col("ts_us")) - min(col("ts_us"))).as("duration_us"))
   }
 
-  /** Gap-based sessionization via Spark's BUILT-IN `session_window`
-    * aggregate — the declarative sibling of [[sessionize]] (and the common
-    * case [[sessionizeStreaming]]'s custom state machine generalizes).
-    * Works identically in batch and under a watermark in streaming; state
-    * merging/eviction is the engine's, not hand-rolled.
+  /** E2c — gap-based sessionization via Spark's BUILT-IN `session_window`
+    * aggregate: [[sessionize]]'s relation minus the session_id numbering,
+    * on a batch or a streaming frame. State merging and eviction are the
+    * engine's; in append mode a session emits once the watermark passes
+    * its end (last event + gap).
     *
     * Boundary semantics MATCH the lag-diff form exactly: the built-in
     * merges an event into the open session when it lands at or before
     * session-end (= last + gap), i.e. a break happens only when the gap is
     * STRICTLY exceeded — verified against [[sessionize]] in StreamOpsSpec,
-    * exact-boundary case included. Output matches [[sessionize]]'s shape
-    * minus the session_id numbering.
+    * exact-boundary case included.
     */
-  def sessionizeWindow(events: DataFrame, gap: String): DataFrame =
-    events.withColumn("event_time", timestamp_micros(col("ts_us")))
-      .groupBy(session_window(col("event_time"), gap), col("user_id"))
+  def sessionizeWindow(events: DataFrame, gapUs: Long, watermark: String): DataFrame =
+    watermarked(events, watermark)
+      .groupBy(session_window(col("event_time"), duration(gapUs)), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         min(col("ts_us")).as("session_start_us"),
         max(col("ts_us")).as("session_end_us"),
@@ -617,53 +559,5 @@ object StreamOps {
       graft.Session.withConf(spark,
         "spark.sql.shuffle.partitions" -> stateWidth.toString)(run())
     else run()
-  }
-
-  case class Ev(user_id: Long, ts_us: Long, event_id: Long)
-  case class SessionOut(user_id: Long, n_events: Long, session_start_us: Long,
-                        session_end_us: Long, duration_us: Long)
-  // public: Spark's state-store encoder codegen constructs it reflectively
-  case class SessionState(n: Long, start: Long, last: Long)
-
-  /** Gap-based sessionization, STREAMING form: custom state machine via
-    * flatMapGroupsWithState. State per user is O(1) (count/start/last);
-    * a session emits when a later event exceeds the gap, or on idle
-    * timeout — the scalable continuous analogue of [[sessionize]].
-    * (Spark's built-in `session_window` aggregate covers the common case;
-    * this demonstrates the custom-state escape hatch.)
-    *
-    * `withTimeout = false` disables the processing-time idle timeout:
-    * sessions then close only via a later event. Deterministic — the mode
-    * test harnesses use (wall-clock timeouts make `processAllAvailable`
-    * block on timer-driven batches).
-    */
-  def sessionizeStreaming(spark: SparkSession, events: DataFrame, gapUs: Long,
-                          timeoutMs: Long = 30000,
-                          withTimeout: Boolean = true): Dataset[SessionOut] = {
-    import spark.implicits._
-    def fn(userId: Long, rows: Iterator[Ev], state: GroupState[SessionState]): Iterator[SessionOut] = {
-      var out = List.empty[SessionOut]
-      var st = state.getOption.orNull
-      for (ev <- rows.toSeq.sortBy(e => (e.ts_us, e.event_id))) {
-        if (st == null) st = SessionState(1, ev.ts_us, ev.ts_us)
-        else if (ev.ts_us - st.last > gapUs) {
-          out ::= SessionOut(userId, st.n, st.start, st.last, st.last - st.start)
-          st = SessionState(1, ev.ts_us, ev.ts_us)
-        } else st = SessionState(st.n + 1, st.start, ev.ts_us)
-      }
-      if (state.hasTimedOut && st != null) {
-        out ::= SessionOut(userId, st.n, st.start, st.last, st.last - st.start)
-        state.remove()
-      } else {
-        state.update(st)
-        if (withTimeout) state.setTimeoutDuration(timeoutMs)
-      }
-      out.reverseIterator
-    }
-    val timeoutConf =
-      if (withTimeout) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-    events.select(col("user_id"), col("ts_us"), col("event_id")).as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(fn)
   }
 }

@@ -446,8 +446,7 @@ private[verify] object DedupRows {
       (s, d) => {
         val docs = Tables.documents(s, d)
         Dedup.exactIncremental(
-          docs.filter(col("doc_id") % 10 === 0), docs.filter(col("doc_id") % 10 =!= 0),
-          "doc_id", "text")
+          docs.filter(col("doc_id") % 10 === 0), docs.filter(col("doc_id") % 10 =!= 0), "text")
           .select("doc_id", "fingerprint").orderBy("doc_id")
       },
       d8OracleSql),
@@ -668,7 +667,8 @@ private[verify] object DedupRows {
           .orderBy("id_1", "id_2"),
       {
         // 32 bands × 4-bit ordinal band keys, seeds 1000+b — mirrors
-        // Similarity.lshCandidates(ordinal = true) + exact cosine verify
+        // Dedup.embeddingLshBanded's band join (ordinal sketches) + exact
+        // cosine verify
         val bandSelects = (0 until 32).map { b =>
           s"SELECT vec_id, $b AS band, " +
             ordinalSketchSql("embedding", dim = 64, bits = 4, seed = 1000L + b) +

@@ -226,29 +226,30 @@ private[graft] object RowHelpers {
           .filter(keep).orderBy("event_id")
     }
 
-  /** e8b/e8c staging: events + one far-future sentinel (user −1) whose
-    * watermark closes every real window (the sentinel's own window never
-    * closes, so it never emits — the e2b trick). Returns None when the
-    * events table is empty.
+  /** e8b/e8c staging: events (the columns the distinct-user and tumbling
+    * counts read) + one far-future sentinel (user −1) whose watermark
+    * closes every real window (the sentinel's own window never closes, so
+    * it never emits — the e2b trick). Returns None when the events table
+    * is empty.
     */
   def e8StageDir(s: SparkSession, d: String): Option[String] = {
     import s.implicits._
     val widthUs = 3600000000L
     val wmUs = 60000000L
-    val ev = Tables.events(s, d).select("user_id", "ts_us", "event_id")
+    val cols = Seq("user_id", "ts_us", "event_id", "event_type", "value")
+    val ev = Tables.events(s, d).select(cols.map(col): _*)
     val maxTsRow = ev.agg(max("ts_us")).head()
     if (maxTsRow.isNullAt(0)) None
     else {
       val srcFile = new java.io.File(s"$d/events.parquet")
-      val stageDir =
-        s"${scratchDir(d)}/e8b_events_${stageKey(srcFile, s"w${widthUs}wm$wmUs")}"
+      val stageDir = s"${scratchDir(d)}/e8b_events_" +
+        stageKey(srcFile, s"w${widthUs}wm${wmUs}_${cols.mkString("-")}")
       withStageLock(stageDir) {
         if (!new java.io.File(s"$stageDir/_SUCCESS").exists()) {
           val maxTs = maxTsRow.getLong(0)
-          val sentinel = Seq((-1L, maxTs + 2 * widthUs + wmUs + 1, -1L))
-            .toDF("user_id", "ts_us", "event_id")
-          ev.union(sentinel.select("user_id", "ts_us", "event_id"))
-            .coalesce(4).write.mode("overwrite").parquet(stageDir)
+          val sentinel = Seq((-1L, maxTs + 2 * widthUs + wmUs + 1, -1L, "sentinel", 0.0))
+            .toDF(cols: _*)
+          ev.union(sentinel).coalesce(4).write.mode("overwrite").parquet(stageDir)
         }
       }
       Some(stageDir)
@@ -417,7 +418,8 @@ private[graft] object RowHelpers {
     * probe (d5j), so the SQL surface can never drift from itself.
     * `ebatch(vec_id, embedding, label)`, `ebands(vec_id, band, bkey)` —
     * a single LATERAL VIEW explode scan, the plan shape the Scala
-    * bandRows takes, not 32 UNION ALL scans.
+    * banded rows (Similarity.bandRowsFromSketched) take, not 32 UNION ALL
+    * scans.
     */
   def embBandCtes(pred: String): String = {
     val structs = (0 until 32).map { b =>

@@ -13,10 +13,10 @@ import RowHelpers._
 private[verify] object StreamIndexRows {
 
   val rows: Seq[VerifyRow] = Seq(
-    // E1: tumbling-window event aggregation (batch form of the stream op)
+    // E1: tumbling-window event aggregation over the batch events table
     VerifyRow("e1_events_window",
       (s, d) =>
-        StreamOps.tumblingCounts(Tables.events(s, d), 3600000000L)
+        StreamOps.tumblingCounts(Tables.events(s, d), 3600000000L, "1 minute")
           .orderBy("bucket", "event_type"),
       "SELECT epoch_us(ts) // 3600000000 AS bucket, event_type, count(*) AS n_events, " +
         "round(sum(value), 2) AS sum_value FROM events GROUP BY 1, 2 ORDER BY bucket, event_type"),
@@ -27,7 +27,7 @@ private[verify] object StreamIndexRows {
     // each event belongs to width/slide = 2 hour-aligned windows
     VerifyRow("e4_hopping_window",
       (s, d) =>
-        StreamOps.hoppingCounts(Tables.events(s, d), 7200000000L, 3600000000L)
+        StreamOps.hoppingCounts(Tables.events(s, d), 7200000000L, 3600000000L, "1 minute")
           .orderBy("win_start", "event_type"),
       "SELECT ws AS win_start, event_type, count(*) AS n_events, " +
         "round(sum(value), 2) AS sum_value FROM (" +
@@ -37,10 +37,18 @@ private[verify] object StreamIndexRows {
         "GROUP BY 1, 2 ORDER BY win_start, event_type"),
 
     // E8: hourly distinct users (exact) — the canonical active-users metric
+    // — next to the hour's events (the tumbling counts summed per bucket).
+    // The left join keeps a bucket whose events all lack a user, with 0
+    // users, as count(DISTINCT) does.
     VerifyRow("e8_window_distinct",
-      (s, d) =>
-        StreamOps.windowDistinctUsers(Tables.events(s, d), 3600000000L)
-          .orderBy("bucket"),
+      (s, d) => {
+        val ev = Tables.events(s, d)
+        StreamOps.tumblingCounts(ev, 3600000000L, "1 minute")
+          .groupBy("bucket").agg(sum("n_events").as("n_events"))
+          .join(StreamOps.windowDistinctUsers(ev, 3600000000L, "1 minute"), Seq("bucket"), "left")
+          .select(col("bucket"), coalesce(col("n_users"), lit(0L)).as("n_users"), col("n_events"))
+          .orderBy("bucket")
+      },
       "SELECT epoch_us(ts) // 3600000000 AS bucket, count(DISTINCT user_id) AS n_users, " +
         "count(*) AS n_events FROM events GROUP BY 1 ORDER BY bucket"),
 
@@ -68,9 +76,8 @@ private[verify] object StreamIndexRows {
       (s, d) => {
         val ev = Tables.events(s, d)
         val rsd = 0.05
-        StreamOps.windowApproxDistinctUsers(ev, 3600000000L, rsd)
-          .join(StreamOps.windowDistinctUsers(ev, 3600000000L)
-            .select("bucket", "n_users"), Seq("bucket"))
+        StreamOps.windowApproxDistinctUsers(ev, 3600000000L, "1 minute", rsd)
+          .join(StreamOps.windowDistinctUsers(ev, 3600000000L, "1 minute"), Seq("bucket"))
           .select(col("bucket"), col("n_users"),
             (abs(col("n_users_approx") - col("n_users"))
               <= greatest(lit(3 * rsd) * col("n_users"), lit(4.0))).as("within_tol"))
@@ -79,15 +86,14 @@ private[verify] object StreamIndexRows {
       "SELECT epoch_us(ts) // 3600000000 AS bucket, count(DISTINCT user_id) AS n_users, " +
         "TRUE AS within_tol FROM events GROUP BY 1 ORDER BY bucket"),
 
-    // E8 STREAMING, oracle-gated via batch replay: the dedup-then-count
+    // E8 STREAMING, oracle-gated via batch replay: e8's dedup-then-count
     // chain (watermarked dropDuplicates on (window, user) feeding a
-    // windowed count — streaming forbids distinct aggregates, so this IS
-    // the production pattern; two chained stateful operators, append
-    // mode). Append emits a window only when the watermark closes it, so
-    // the staged copy appends one far-future sentinel event whose
+    // windowed count) run on a stream — two chained stateful operators,
+    // append mode. Append emits a window only when the watermark closes
+    // it, so the staged copy appends one far-future sentinel event whose
     // watermark passes every real window's end; the sentinel's own window
-    // never closes and never emits (the e2b trick). e8c replays the
-    // same staged source.
+    // never closes and never emits (the e2b trick). e8c replays the same
+    // staged source.
     //
     // the streaming dedup-then-count chain must reproduce the exact batch
     // distinct relation (sentinel window excluded by construction)
@@ -98,9 +104,7 @@ private[verify] object StreamIndexRows {
             s.emptyDataset[(Long, Long)].toDF("bucket", "n_users") }
           case Some(stageDir) =>
             e8Sink(s, stageDir, "e8b_stream_distinct_sink")(
-              StreamOps.windowDistinctUsersStreaming(_, "1 hour", "1 minute"))
-              .select(expr("unix_micros(window.start) div 3600000000").as("bucket"),
-                col("n_users"))
+              StreamOps.windowDistinctUsers(_, 3600000000L, "1 minute"))
               .orderBy("bucket")
         },
       "SELECT epoch_us(ts) // 3600000000 AS bucket, count(DISTINCT user_id) AS n_users " +
@@ -108,15 +112,13 @@ private[verify] object StreamIndexRows {
 
     // E8c STREAMING: the distinct-users row WITH event multiplicity
     // restored — the dedup that makes n_users exact necessarily discards
-    // n_events, so a SECOND watermarked windowed count (no dedup, one
-    // stateful op) runs over the same staged source and the two
-    // append-mode outputs join on the window. This two-query fork is the
-    // production active-users shape; the join is a plain batch join of
-    // closed windows (inner: both queries emit exactly the real windows —
-    // the sentinel's window never closes in either)
+    // n_events, so the tumbling count (no dedup, one stateful op) runs over
+    // the same staged source and the two append-mode outputs join on the
+    // bucket, as e8 joins them. This two-query fork is the production
+    // active-users shape; the join is a plain batch join of closed windows
+    // (the sentinel's window never closes in either query)
     //
-    // the two-query fork (dedup-then-count + plain count, joined on the
-    // window) must reproduce the batch form's BOTH-column relation
+    // the two-query fork must reproduce e8's BOTH-column relation
     VerifyRow("e8c_distinct_with_events",
       (s, d) =>
         e8StageDir(s, d) match {
@@ -124,18 +126,19 @@ private[verify] object StreamIndexRows {
             s.emptyDataset[(Long, Long, Long)].toDF("bucket", "n_users", "n_events") }
           case Some(stageDir) =>
             val users = e8Sink(s, stageDir, "e8c_distinct_users_sink")(
-              StreamOps.windowDistinctUsersStreaming(_, "1 hour", "1 minute"))
-            val counts = e8Sink(s, stageDir, "e8c_window_counts_sink")(
-              StreamOps.windowEventCountsStreaming(_, "1 hour", "1 minute"))
-            users.join(counts, "window")
-              .select(expr("unix_micros(window.start) div 3600000000").as("bucket"),
-                col("n_users"), col("n_events"))
+              StreamOps.windowDistinctUsers(_, 3600000000L, "1 minute"))
+            e8Sink(s, stageDir, "e8c_window_counts_sink")(
+                StreamOps.tumblingCounts(_, 3600000000L, "1 minute"))
+              .groupBy("bucket").agg(sum("n_events").as("n_events"))
+              .join(users, Seq("bucket"), "left")
+              .select(col("bucket"), coalesce(col("n_users"), lit(0L)).as("n_users"),
+                col("n_events"))
               .orderBy("bucket")
         },
       "SELECT epoch_us(ts) // 3600000000 AS bucket, count(DISTINCT user_id) AS n_users, " +
         "count(*) AS n_events FROM events GROUP BY 1 ORDER BY bucket"),
 
-    // E2: gap-based sessionization (batch form of the stream op)
+    // E2: gap-based sessionization, lag-diff form with session ids
     VerifyRow("e2_sessionize",
       (s, d) =>
         StreamOps.sessionize(Tables.events(s, d), 1800000000L)
@@ -178,11 +181,10 @@ private[verify] object StreamIndexRows {
         "FROM documents ORDER BY fingerprint"),
 
     // E1 STREAMING, oracle-gated via batch replay: the events table through
-    // the watermarked windowed aggregate. Complete output mode so the final
+    // e1's watermarked windowed aggregate. Complete output mode so the final
     // snapshot equals the batch result (append mode would hold back windows
     // newer than the final watermark — correct streaming semantics, but not
-    // comparable to a batch oracle). window.start maps back to the batch
-    // form's epoch-hour bucket.
+    // comparable to a batch oracle).
     //
     // streaming replay must equal the batch-form oracle exactly
     VerifyRow("e1b_stream_window",
@@ -191,11 +193,9 @@ private[verify] object StreamIndexRows {
         val src = s.readStream.schema(schema)
           .parquet(s"$d/events.*")
           .withColumn("ts_us", Tables.tsUsColumn(schema("ts").dataType))
-        val agg = StreamOps.tumblingCountsStreaming(src, "1 hour", "1 minute")
+        val agg = StreamOps.tumblingCounts(src, 3600000000L, "1 minute")
         StreamOps.runToMemoryTable(s, agg, "e1b_stream_window_sink", mode = "complete",
           stateWidth = stateWidthFor(s"$d/events.parquet"))
-          .select(expr("unix_micros(window.start) div 3600000000").as("bucket"),
-            col("event_type"), col("n_events"), col("sum_value"))
           .orderBy("bucket", "event_type")
       },
       "SELECT epoch_us(ts) // 3600000000 AS bucket, event_type, count(*) AS n_events, " +
@@ -228,28 +228,29 @@ private[verify] object StreamIndexRows {
         "USING (user_id) GROUP BY u.cohort ORDER BY u.cohort"),
 
     // E2 STREAMING, oracle-gated via batch replay: events replayed through
-    // the flatMapGroupsWithState sessionizer (AvailableNow, NoTimeout).
-    // Append-mode custom state only EMITS a session when a later event of
-    // the same user closes it, so each user's FINAL session would sit in
-    // state forever; the staging copy appends one sentinel event per user
-    // at global-max-ts + gap + 1 — it closes every real session and, never
-    // being followed, never emits itself. Output = exactly the batch
+    // e2c's session_window under a watermark (AvailableNow, append mode).
+    // Append mode EMITS a session only once the watermark passes its end
+    // (last event + gap), so each user's FINAL session would sit in state
+    // forever; the staging copy appends one sentinel event per user at
+    // global-max-ts + 2 gaps + the watermark delay — its watermark passes
+    // every real session's end (≤ max-ts + gap) by a whole gap, more than
+    // the engine's millisecond watermark rounds off, and the sentinel's own
+    // session never closes, so it never emits. Output = exactly the batch
     // session set (e2's relation minus the session_id numbering, which a
-    // streaming engine does not assign). Single AvailableNow batch over
-    // the staged files, so in-batch per-user sort fixes event order.
+    // streaming engine does not assign).
     //
     // the streaming replay must reproduce e2's batch sessions exactly,
     // minus the session_id numbering (a streaming engine does not assign
     // one); ordered by session start instead
     VerifyRow("e2b_stream_sessionize",
       (s, d) => {
-        import s.implicits._
         val gapUs = 1800000000L
+        val wmUs = 60000000L
         val ev = Tables.events(s, d).select("user_id", "ts_us", "event_id")
         val maxTsRow = ev.agg(max("ts_us")).head()
-        // empty events: nothing to replay — degrade to the empty session set
-        // (max over zero rows is NULL; getLong would NPE)
-        if (maxTsRow.isNullAt(0)) s.emptyDataset[StreamOps.SessionOut].toDF()
+        // empty events: nothing to replay — the same operator over the empty
+        // batch frame (max over zero rows is NULL; getLong would NPE)
+        if (maxTsRow.isNullAt(0)) StreamOps.sessionizeWindow(ev, gapUs, s"$wmUs microseconds")
         else {
           // staging is a pure function of the events table; the dir key folds
           // in the source file's (mtime, size) so regenerated testdata never
@@ -259,28 +260,27 @@ private[verify] object StreamIndexRows {
           // rows serially.)
           val srcFile = new java.io.File(s"$d/events.parquet")
           val stageDir =
-            s"${scratchDir(d)}/e2b_events_${stageKey(srcFile, s"gap$gapUs")}"
+            s"${scratchDir(d)}/e2b_events_${stageKey(srcFile, s"gap${gapUs}wm$wmUs")}"
           if (!new java.io.File(s"$stageDir/_SUCCESS").exists()) {
             val maxTs = maxTsRow.getLong(0)
             val sentinels = ev.select("user_id").distinct()
-              .withColumn("ts_us", lit(maxTs + gapUs + 1))
+              .withColumn("ts_us", lit(maxTs + 2 * gapUs + wmUs))
               .withColumn("event_id", lit(-1L))
             ev.union(sentinels.select("user_id", "ts_us", "event_id"))
               .coalesce(4).write.mode("overwrite").parquet(stageDir)
           }
           val src = s.readStream.schema(s.read.parquet(stageDir).schema).parquet(stageDir)
-          val sess = StreamOps.sessionizeStreaming(s, src, gapUs, withTimeout = false)
-          StreamOps.runToMemoryTable(s, sess.toDF(), "e2b_stream_sessionize_sink",
+          val sess = StreamOps.sessionizeWindow(src, gapUs, s"$wmUs microseconds")
+          StreamOps.runToMemoryTable(s, sess, "e2b_stream_sessionize_sink",
             stateWidth = stateWidthFor(stageDir))
             .orderBy("user_id", "session_start_us")
         }
       },
       sessionWindowOracleSql),
 
-    // E4 STREAMING, oracle-gated via batch replay: hopping windows through
-    // Spark's native window(width, slide) under a watermark, complete mode
-    // (as e1b), window.start mapped back to the batch form's epoch-us
-    // win_start — must reproduce e4's batch relation exactly
+    // E4 STREAMING, oracle-gated via batch replay: e4's hopping windows on
+    // a stream, complete mode (as e1b) — must reproduce e4's batch
+    // relation exactly
     //
     // hopping streaming replay must equal e4's batch relation exactly
     VerifyRow("e4b_stream_hopping",
@@ -289,11 +289,9 @@ private[verify] object StreamIndexRows {
         val src = s.readStream.schema(schema)
           .parquet(s"$d/events.*")
           .withColumn("ts_us", Tables.tsUsColumn(schema("ts").dataType))
-        val agg = StreamOps.hoppingCountsStreaming(src, "2 hours", "1 hour", "1 minute")
+        val agg = StreamOps.hoppingCounts(src, 7200000000L, 3600000000L, "1 minute")
         StreamOps.runToMemoryTable(s, agg, "e4b_stream_hopping_sink", mode = "complete",
           stateWidth = stateWidthFor(s"$d/events.parquet"))
-          .select(expr("unix_micros(window.start)").as("win_start"),
-            col("event_type"), col("n_events"), col("sum_value"))
           .orderBy("win_start", "event_type")
       },
       "SELECT ws AS win_start, event_type, count(*) AS n_events, " +
@@ -304,15 +302,16 @@ private[verify] object StreamIndexRows {
         "GROUP BY 1, 2 ORDER BY win_start, event_type"),
 
     // E2c: gap sessionization via Spark's BUILT-IN session_window aggregate
-    // — the declarative sibling of e2's lag-diff form; identical break
-    // semantics (strictly-exceeded gap), so it shares e2's session relation
+    // over the batch events table — the declarative sibling of e2's
+    // lag-diff form; identical break semantics (strictly-exceeded gap), so
+    // it shares e2's session relation
     //
     // the built-in session_window merges up to and INCLUDING session-end
     // (last + gap), so the break condition is e2's strict >; output drops
     // the session_id numbering
     VerifyRow("e2c_session_window",
       (s, d) =>
-        StreamOps.sessionizeWindow(Tables.events(s, d), "30 minutes")
+        StreamOps.sessionizeWindow(Tables.events(s, d), 1800000000L, "1 minute")
           .orderBy("user_id", "session_start_us"),
       sessionWindowOracleSql),
 

@@ -393,7 +393,7 @@ class DedupSpec extends SparkTestBase {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val batch = docs.filter(col("doc_id") % 5 === 0)
     val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-    val plain = Dedup.exactIncremental(batch, corpus, "doc_id", "text")
+    val plain = Dedup.exactIncremental(batch, corpus, "text")
       .select("doc_id").as[Long].collect().toSet
     val bloom = Dedup.exactIncrementalBloom(batch, corpus, "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
@@ -669,7 +669,7 @@ class DedupSpec extends SparkTestBase {
     fpIndex.write(corp, s"$dir/fp", shards = 2)
     val ex = StreamOps.ingestDedupStreaming(batch, fpIndex.read(spark, s"$dir/fp")("fingerprint"),
       "text").select("doc_id").as[Long].collect().toSet
-    val exDirect = Dedup.exactIncremental(batch, corp, "doc_id", "text")
+    val exDirect = Dedup.exactIncremental(batch, corp, "text")
       .select("doc_id").as[Long].collect().toSet
     assert(ex == exDirect, s"exact replay diverged: $ex vs $exDirect")
     // decontamination: train sets + df-capped inverted index round-trip ==
@@ -755,7 +755,7 @@ class DedupSpec extends SparkTestBase {
     fpIndex.append(fsurv, fp, shards = 2)
     val fUpdated = StreamOps.ingestDedupStreaming(e3, fpIndex.read(spark, fp)("fingerprint"),
       "text").select("doc_id").as[Long].collect().toSet
-    val fRebuilt = Dedup.exactIncremental(e3, day1.union(day2), "doc_id", "text")
+    val fRebuilt = Dedup.exactIncremental(e3, day1.union(day2), "text")
       .select("doc_id").as[Long].collect().toSet
     assert(fUpdated == fRebuilt && fUpdated == Set(301L, 303L),
       s"fingerprint updated-index probe $fUpdated != rebuild $fRebuilt")

@@ -19,7 +19,7 @@ class EmptyInputSpec extends SparkTestBase {
     assert(km.columns.contains("cell") && km.count() == 0)
     assert(Similarity.quantizedTopK(emptyVecs, emptyVecs, "vec_id", "embedding", 5).count() == 0)
     assert(Dedup.decontaminationPairs(emptyDocs, emptyDocs, "doc_id", "text", 3, 0.5, 50).count() == 0)
-    assert(Dedup.exactIncremental(emptyDocs, emptyDocs, "doc_id", "text").count() == 0)
+    assert(Dedup.exactIncremental(emptyDocs, emptyDocs, "text").count() == 0)
     val emptyNums = Seq.empty[Double].toDF("v")
     assert(Analytics.histogram(emptyNums, "v", 0.0, 1.0, 4).count() == 0)
     val prof = Analytics.profile(emptyNums, Seq("v")).collect()
@@ -34,7 +34,7 @@ class EmptyInputSpec extends SparkTestBase {
     assert(Dedup.minhashIncremental(emptyDocs, emptyDocs, "doc_id", "text", 0.5).count() == 0)
     // built-in session_window over no events
     val noEvents = Seq.empty[(Long, Long)].toDF("user_id", "ts_us")
-    assert(graft.streaming.StreamOps.sessionizeWindow(noEvents, "30 minutes").count() == 0)
+    assert(graft.streaming.StreamOps.sessionizeWindow(noEvents, 1800000000L, "1 minute").count() == 0)
   }
 
   test("round-7 additions: empty inputs degrade to empty/zero, never throw") {
@@ -178,7 +178,7 @@ class EmptyInputSpec extends SparkTestBase {
     // per-window distinct users over zero events: empty relation
     assert(graft.streaming.StreamOps.windowDistinctUsers(
       emptyDocs.select(col("doc_id").as("user_id"), col("doc_id").as("ts_us")),
-      3600000000L).count() == 0)
+      3600000000L, "1 minute").count() == 0)
     // changeset apply with both sides empty: empty, schema intact
     val emptyChanges = emptyDocs.withColumn("change", lit("added"))
       .select("doc_id", "change", "text")

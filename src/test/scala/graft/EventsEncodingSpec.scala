@@ -92,13 +92,12 @@ class EventsEncodingSpec extends SparkTestBase {
       val schema = spark.read.parquet(s"$d/events.parquet").schema
       val src = spark.readStream.schema(schema).parquet(s"$d/events.parquet")
         .withColumn("ts_us", Tables.tsUsColumn(schema("ts").dataType))
-      val agg = StreamOps.tumblingCountsStreaming(src, "1 hour", "1 minute")
+      val agg = StreamOps.tumblingCounts(src, 3600000000L, "1 minute")
       val q = agg.writeStream.format("memory").queryName(sink)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       try q.processAllAvailable() finally q.stop()
       collectSorted(spark.table(sink)
-        .select(expr("unix_micros(window.start)").as("win_start"),
-          col("event_type"), col("n_events"), col("sum_value")))
+        .select("bucket", "event_type", "n_events", "sum_value"))
     }
     assert(streamed(a, "enc_nanos_sink") == streamed(b, "enc_micros_sink"))
     assert(streamed(a, "enc_nanos_sink2").nonEmpty)
@@ -117,7 +116,7 @@ class EventsEncodingSpec extends SparkTestBase {
     }
     assert(collectSorted(asof(a)) == collectSorted(asof(b)))
     def tumble(d: String): DataFrame =
-      StreamOps.tumblingCounts(Tables.events(spark, d), 3600000000L)
+      StreamOps.tumblingCounts(Tables.events(spark, d), 3600000000L, "1 minute")
     assert(collectSorted(tumble(a)) == collectSorted(tumble(b)))
     assert(tumble(a).count() > 0)
   }

@@ -224,12 +224,15 @@ class PlanSpec extends SparkTestBase {
 
   test("hopping windows replicate BEFORE the partial aggregation (E4)") {
     val ev = Tables.events(spark, sf)
-    val p = plan(StreamOps.hoppingCounts(ev, 7200000000L, 3600000000L))
-    // the hop explode must exist, with partial+final agg phases above it
-    assert(p.contains("Generate") && p.contains("explode"),
-      s"expected the hop explode in:\n$p")
-    assert("\\(\\d+\\) HashAggregate".r.findAllIn(p).length >= 2,
-      s"partial+final phases after the replication:\n$p")
+    val p = plan(StreamOps.hoppingCounts(ev, 7200000000L, 3600000000L, "1 minute"))
+    // window(width, slide) replicates each event with an Expand; formatted
+    // mode prints the tree top-down, so the Expand line must follow both
+    // the final and the partial aggregate
+    val tree = p.split("\n\n").head.linesIterator.toSeq
+    val aggs = tree.zipWithIndex.collect { case (l, i) if l.contains("HashAggregate") => i }
+    val expand = tree.indexWhere(_.contains("Expand"))
+    assert(aggs.size >= 2 && expand > aggs.max,
+      s"expected the hop Expand below the partial aggregate in:\n$p")
   }
 
   test("l2Normalize computes the norm once per row — a single projection chain, no exchange (V2)") {

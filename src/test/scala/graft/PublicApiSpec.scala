@@ -39,19 +39,25 @@ class VerifyRowsSpec extends AnyFunSuite {
   * `private[graft]`); no operator takes a per-call cache-release switch,
   * because graft's caches live until `Caches.releaseAll` / `Caches.drain`;
   * Dedup's ingest indexes keep one lifecycle, `graft.sources.ShardedIndex`;
-  * each near-dup family keeps one candidate → verify body; and the modules deleted as outside the north star (media codecs, term
-  * statistics, frequency sketches, extra file formats, chunking, JSON
-  * lifting, the hot-head scale fixture) stay deleted.
+  * each near-dup family keeps one candidate → verify body; each
+  * event-window operator is one def for batch and streaming frames, with
+  * no `*Streaming` twin and no session-timeout switch; and the modules
+  * deleted as outside the north star (media codecs, term statistics,
+  * frequency sketches, extra file formats, chunking, JSON lifting, the
+  * hot-head scale fixture) stay deleted.
   */
 class OperatorApiSpec extends AnyFunSuite {
 
   private val switches = Set("unbounded", "sliced", "dupFracGate", "expand", "admissionDenom",
-    "release", "releaseSets", "guardPairs", "quickPriceMinDocs", "labelPartitions")
+    "release", "releaseSets", "guardPairs", "quickPriceMinDocs", "labelPartitions",
+    "withTimeout", "timeoutMs")
   private val deletedNames = Set("minhashNearDupsAuto", "minhashNearDupsCollapsed",
     "fuzzyNearDupsAuto", "embedNearDupAuto", "embeddingIncrementalAuto",
     "asofJoinStreamingSliced", "exactIncrementalFromIndex", "ngramJaccardPairsSparseAuto",
     "fuzzyNearDupsBudget", "shingleDfStatsSampled", "minhashSignatureFromSets",
-    "lshCandidatesCross", "lshBucketCounts", "bandKeysCarrying")
+    "lshCandidatesCross", "lshBucketCounts", "bandKeysCarrying", "lshCandidates",
+    "tumblingCountsStreaming", "hoppingCountsStreaming", "windowDistinctUsersStreaming",
+    "windowApproxDistinctUsersStreaming", "windowEventCountsStreaming", "sessionizeStreaming")
   // second copies of a family's candidate/verify body, folded into one
   // private def each: they fail at any visibility
   private val mergedBodies = Set("bandKeysCarrying", "explodeBands", "verifyJaccard2",

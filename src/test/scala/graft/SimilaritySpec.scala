@@ -430,14 +430,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(recall(reranked) >= 0.7, "a 5x shortlist reranked by exact cosine should be near-exact")
   }
 
-  test("lshCandidates emits unordered pairs, no self-pairs, subset of all pairs") {
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001").limit(100)
-    val cand = Similarity.lshCandidates(emb, "vec_id", "embedding", 64, bands = 8, bitsPerBand = 4)
-      .as[(Long, Long)].collect()
-    assert(cand.forall { case (a, b) => a < b })
-    assert(cand.distinct.length == cand.length)
-  }
-
   test("lshTopK: measured recall vs exact top-k (declared ANN tradeoff)") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = emb.filter(col("vec_id") < 10)
