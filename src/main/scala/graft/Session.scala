@@ -175,8 +175,9 @@ object Session {
       // with the raise: both builds zero spill.
       //
       // HAZARD (documented, deliberate): the conf is session-wide, so it
-      // equally lets UNBOUNDED-buffer ObjectHashAggregates — ExactMedian,
-      // collect_list, collect_set — hold up to 2048 buffers per task
+      // equally lets UNBOUNDED-buffer ObjectHashAggregates — `median` /
+      // `percentile` (a value → count map per group; Agg's median plans
+      // it), collect_list, collect_set — hold up to 2048 buffers per task
       // before falling back to sort. On a high-cardinality grouping with
       // wide per-group value sets that is an executor OOM risk the 128
       // default would have converted into (slow but safe) sort fallback.
@@ -185,7 +186,7 @@ object Session {
       // not when the DataFrame is built — so callers mixing graft's
       // bounded-buffer sketches with their own unbounded collects on
       // hot keys should bracket the latter with [[withConf]] restoring
-      // the 128 default (see ExactMedian's scaladoc).
+      // the 128 default.
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "2048",
       "spark.sql.session.timeZone" -> "UTC",
       // a whole-stage class is named after its codegen stage id, and AQE

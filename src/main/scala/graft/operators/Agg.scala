@@ -23,28 +23,18 @@ import org.apache.spark.sql.types.StringType
   *
   * Scale notes: all of count/sum/avg/min/max/std aggregate with partial
   * (map-side) combine before the shuffle — one exchange of tiny partial
-  * buffers regardless of input size. `median` has THREE paths (SURVEY
-  * §7.3), selected per call:
-  *   - default: built-in `median` — exact, but buffers each group's VALUES
-  *     (`percentile` keeps a per-group array), fine at test scale;
-  *   - `exactMedian = true`: [[graft.functions.ExactMedianAgg]] — still
-  *     exact, buffer is a (value → count) map, O(DISTINCT values/group)
-  *     instead of O(rows/group); the 100 TB path when the domain is
-  *     quantized (prices, quantities, scores) and exactness is demanded;
-  *   - `approxMedian = true`: `approx_percentile` — a fixed-size
-  *     QuantileSummaries sketch that merges map-side like any other
-  *     partial agg; the 100 TB path for unbounded-cardinality doubles.
+  * buffers regardless of input size. `median` is Spark's `percentile`,
+  * whose partial buffer is a (value → count) map: O(DISTINCT values per
+  * group), not O(rows), merged map-side like the rest. A caller that wants
+  * a fixed-size sketch instead writes Spark's `approx_percentile` (or
+  * `approx_count_distinct` for [[distinctCount]]) directly.
   */
 object Agg {
 
   val SupportedFns = Seq("count", "sum", "avg", "min", "max", "median", "std")
 
   /** One aggregate expression with reference naming + semantics. */
-  def aggExpr(df: DataFrame, fn: String, c: String,
-              approxMedian: Boolean = false,
-              exactMedian: Boolean = false): Column = {
-    require(!(approxMedian && exactMedian),
-      "aggExpr: approxMedian and exactMedian are mutually exclusive")
+  def aggExpr(df: DataFrame, fn: String, c: String): Column = {
     // §7.4.1 bridge: per-cell typed reference columns may arrive as
     // StringType; aggregate over try_cast-to-double so non-numerics skip.
     val isString = df.schema.find(_.name == c).exists(_.dataType == StringType)
@@ -55,9 +45,7 @@ object Agg {
       case "avg"    => avg(v)
       case "min"    => min(v)
       case "max"    => max(v)
-      case "median" => if (approxMedian) approx_percentile(v, lit(0.5), lit(10000))
-                       else if (exactMedian) graft.functions.ExactMedian.exactMedian(v)
-                       else median(v)
+      case "median" => median(v)
       case "std"    => stddev_samp(v)
       case other    => throw new IllegalArgumentException(s"unknown agg fn: $other")
     }
@@ -69,11 +57,8 @@ object Agg {
     * `/root/reference/app.py:130-139` — which §4.2 flags as waste).
     * Spec preserves insertion order of `spec` for output column order.
     */
-  def groupAgg(df: DataFrame, keys: Seq[String], spec: Seq[(String, Seq[String])],
-               approxMedian: Boolean = false,
-               exactMedian: Boolean = false): DataFrame = {
-    val exprs =
-      for ((c, fns) <- spec; fn <- fns) yield aggExpr(df, fn, c, approxMedian, exactMedian)
+  def groupAgg(df: DataFrame, keys: Seq[String], spec: Seq[(String, Seq[String])]): DataFrame = {
+    val exprs = for ((c, fns) <- spec; fn <- fns) yield aggExpr(df, fn, c)
     require(exprs.nonEmpty, "groupAgg: empty aggregation spec")
     df.groupBy(keys.map(col): _*).agg(exprs.head, exprs.tail: _*)
   }
@@ -82,11 +67,8 @@ object Agg {
     * in a dummy group (`/root/reference/app.py:938-988`); Spark aggregates
     * directly, no dummy key, no shuffle of raw rows (partial aggs only).
     */
-  def globalAgg(df: DataFrame, spec: Seq[(String, Seq[String])],
-                approxMedian: Boolean = false,
-                exactMedian: Boolean = false): DataFrame = {
-    val exprs =
-      for ((c, fns) <- spec; fn <- fns) yield aggExpr(df, fn, c, approxMedian, exactMedian)
+  def globalAgg(df: DataFrame, spec: Seq[(String, Seq[String])]): DataFrame = {
+    val exprs = for ((c, fns) <- spec; fn <- fns) yield aggExpr(df, fn, c)
     df.agg(exprs.head, exprs.tail: _*)
   }
 
@@ -103,17 +85,12 @@ object Agg {
   def minMax(df: DataFrame, c: String): DataFrame =
     df.agg(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))
 
-  /** Distinct-count per group — absent from the reference (SURVEY §2.3).
-    * `exact = true` plans a two-phase expand+aggregate (exact, heavier
-    * shuffle); `exact = false` uses HyperLogLog++ partial sketches
-    * (`approx_count_distinct`, fixed-size buffers — the 100 TB path, with
-    * `rsd` relative error).
+  /** Exact distinct-count per group — absent from the reference (SURVEY
+    * §2.3). Spark plans two aggregation rounds: (key, value) pairs are
+    * deduplicated, partially map-side, then counted per key.
     */
-  def distinctCount(df: DataFrame, keys: Seq[String], c: String,
-                    exact: Boolean = true, rsd: Double = 0.05): DataFrame = {
-    val e = if (exact) countDistinct(col(c)) else approx_count_distinct(col(c), rsd)
-    df.groupBy(keys.map(col): _*).agg(e.as(s"distinct_$c"))
-  }
+  def distinctCount(df: DataFrame, keys: Seq[String], c: String): DataFrame =
+    df.groupBy(keys.map(col): _*).agg(countDistinct(col(c)).as(s"distinct_$c"))
 
   /** Rollup aggregation (hierarchical subtotals + grand total) — absent
     * from the reference (SURVEY §2.3). Subtotal rows carry null group
@@ -121,24 +98,22 @@ object Agg {
     */
   private def groupingSetAgg(grouped: org.apache.spark.sql.RelationalGroupedDataset,
                              df: DataFrame, spec: Seq[(String, Seq[String])],
-                             approxMedian: Boolean, what: String): DataFrame = {
-    val exprs = for ((c, fns) <- spec; fn <- fns) yield aggExpr(df, fn, c, approxMedian)
+                             what: String): DataFrame = {
+    val exprs = for ((c, fns) <- spec; fn <- fns) yield aggExpr(df, fn, c)
     require(exprs.nonEmpty, s"$what: empty aggregation spec")
     grouped.agg(exprs.head, exprs.tail: _*)
   }
 
-  def rollupAgg(df: DataFrame, keys: Seq[String], spec: Seq[(String, Seq[String])],
-                approxMedian: Boolean = false): DataFrame =
-    groupingSetAgg(df.rollup(keys.map(col): _*), df, spec, approxMedian, "rollupAgg")
+  def rollupAgg(df: DataFrame, keys: Seq[String], spec: Seq[(String, Seq[String])]): DataFrame =
+    groupingSetAgg(df.rollup(keys.map(col): _*), df, spec, "rollupAgg")
 
   /** CUBE — every grouping-set combination of the keys (rollup's sibling;
     * SURVEY §2.3 free built-in). Same single-shuffle expansion: Spark
     * replicates each row once per grouping set map-side and partial-
     * aggregates before the exchange.
     */
-  def cubeAgg(df: DataFrame, keys: Seq[String], spec: Seq[(String, Seq[String])],
-              approxMedian: Boolean = false): DataFrame =
-    groupingSetAgg(df.cube(keys.map(col): _*), df, spec, approxMedian, "cubeAgg")
+  def cubeAgg(df: DataFrame, keys: Seq[String], spec: Seq[(String, Seq[String])]): DataFrame =
+    groupingSetAgg(df.cube(keys.map(col): _*), df, spec, "cubeAgg")
 
   /** X10 — MERGEABLE aggregate state, the primitive behind maintaining a
     * materialized aggregate over a growing corpus without recomputing it.

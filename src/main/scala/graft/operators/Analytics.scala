@@ -251,11 +251,11 @@ object Analytics {
     * group identical) → null score, as standardizeBy's degenerate rule.
     *
     * Scale shape: two grouped EXACT-median aggregates over the corpus
-    * (medians don't decompose into partials — two shuffles is the honest
-    * cost; `approxMedian` in [[graft.operators.Agg]] is the sketch
-    * escape), each producing a #groups-row stats frame broadcast back
-    * onto narrow projections. The corpus itself crosses each exchange as
-    * (keys, value) only.
+    * (a median's partial is a value → count map, not a fixed-size
+    * number — two shuffles is the honest cost; Spark's
+    * `approx_percentile` is the sketch escape), each producing a
+    * #groups-row stats frame broadcast back onto narrow projections. The
+    * corpus itself crosses each exchange as (keys, value) only.
     */
   def madScores(df: DataFrame, keys: Seq[String], c: String,
                 outCol: String = "mad_z"): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{TopK, Vectors}
+import graft.functions.Vectors
 import graft.sources.{ParquetSink, ShardedIndex}
 import graft.sources.ShardedIndex.Part
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * Two paths, per the standard large-scale recipe:
   *   - [[bruteForceTopK]]: exact. Queries are broadcast (Q is small);
   *     the corpus is scanned ONCE, never shuffled — the only exchange
-  *     carries Q×N scored pairs, pruned to top-k per query.
+  *     carries the Q×N scored pairs after a map-side cut to top-k per
+  *     query.
   *   - [[lshTopK]]: sign-random-projection LSH. Corpus is bucketed by an
   *     H-bit hyperplane-sign sketch; a query probes its own bucket plus all
   *     buckets at Hamming distance 1 (H+1 probes), then exact-scores only
@@ -21,43 +22,27 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Rank a (query_id, sn: struct<score,id>) frame to the top-k per query
-    * via the bounded-heap aggregate [[graft.functions.TopK]]: the map side
-    * prunes each partition to k before the shuffle, so the exchange carries
-    * Q×partitions×k rows instead of every scored pair (the window/
-    * row_number formulation ships Q×N). Identical output to the window
-    * form — ties break by ascending id inside the aggregator. Null-scored
-    * pairs (null embeddings) are dropped.
-    *
-    * The aggregator's buffer encoder is fixed at (double, long); non-
-    * integral id types (string doc ids) fall back to the window
-    * formulation rather than mis-casting.
+  /** Rank a (query_id, sn: struct<score,id>) frame to the top-k per query:
+    * `row_number()` over the query's pairs ordered by score desc, id asc,
+    * cut at `rank <= k`. Spark plans the cut as a `WindowGroupLimit`, and
+    * a Partial one runs map-side below the exchange (PlanSpec-pinned), so
+    * the exchange carries at most k rows per query per partition, never
+    * every scored pair. Null-scored pairs (null embeddings) are dropped.
     */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.types._
-    val idType = scored.schema("sn").dataType.asInstanceOf[StructType]("id").dataType
-    val clean = scored.filter(col("sn.score").isNotNull && col("sn.id").isNotNull)
-    idType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        clean.groupBy("query_id")
-          .agg(TopK.topK(k, col("sn.score"), col("sn.id").cast("long")).as("top"))
-          .select(col("query_id"), posexplode(col("top")))
-          .select(col("query_id"), col("col.id").cast(idType).as("neighbor_id"),
-            col("col.score").as("cosine"), (col("pos") + 1).as("rank"))
-      case _ =>
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("sn.score").desc, col("sn.id").asc)
-        clean.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("query_id"), col("sn.id").as("neighbor_id"),
-            col("sn.score").as("cosine"), col("rank"))
-    }
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sn.score").desc, col("sn.id").asc)
+    scored.filter(col("sn.score").isNotNull && col("sn.id").isNotNull)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("sn.id").as("neighbor_id"),
+        col("sn.score").as("cosine"), col("rank"))
   }
 
   /** Exact cosine top-k. Ties broken by ascending neighbor id on the
     * 6-decimal-rounded score (fully deterministic output). Queries are
     * broadcast; the corpus is scanned once and never shuffled — only
-    * k-bounded partial buffers cross the exchange.
+    * each partition's k best rows per query cross the exchange.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
@@ -68,22 +53,6 @@ object Similarity {
         struct(round(Vectors.cosine(col("q_vec"), col("c_vec")), 6).as("score"),
           col("neighbor_id").as("id")).as("sn"))
     rankTopK(scored, k)
-  }
-
-  /** Window/row_number formulation — kept for reference and differential
-    * tests; shuffles every scored pair. Prefer [[bruteForceTopK]] at scale.
-    */
-  def bruteForceTopKWindow(corpus: DataFrame, queries: DataFrame,
-                           idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(Vectors.cosine(col("q_vec"), col("c_vec")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
   }
 
   /** H-bit sign sketch under deterministic pseudo-random hyperplanes
@@ -328,7 +297,7 @@ object Similarity {
     * v/‖v‖₂ as `array<double>`), the preprocessing step that makes dot
     * product ≡ cosine so downstream ANN can use the cheaper kernel.
     * Zero-norm and NULL vectors yield NULL (no NaN rows poisoning top-k
-    * heaps downstream). Narrow, two projections per row, no shuffle; the
+    * ranks downstream). Narrow, two projections per row, no shuffle; the
     * norm lives in its own projection so the division lambda references an
     * ATTRIBUTE — the HOF-recompute pitfall (see [[quantizeInt8]]).
     */
@@ -367,8 +336,8 @@ object Similarity {
     * integer dot product ([[graft.functions.ByteDotProduct]] — a long, no
     * float accumulation at all, so scores and ranks are bit-identical in
     * any engine). Same scan shape as [[bruteForceTopK]] (queries broadcast,
-    * corpus scanned once, k-bounded partial buffers across the exchange)
-    * at a quarter of the memory bandwidth. Int8 symmetric quantization
+    * corpus scanned once, k rows per query per partition across the
+    * exchange) at a quarter of the memory bandwidth. Int8 symmetric quantization
     * preserves cosine ranking closely (recall measured in SimilaritySpec);
     * the standard rerank pattern is this as the wide pass + exact cosine
     * on the shortlist.
@@ -808,7 +777,7 @@ object Similarity {
   }
 
   /** LSH-bucketed approximate top-k with 1-bit multiprobe. Candidates from
-    * bucket collisions only; exact scores; the same k-bounded aggregate as
+    * bucket collisions only; exact scores; the same k-bounded window as
     * [[bruteForceTopK]] ranks them (multiprobe duplicates removed first so
     * one neighbor cannot occupy two top-k slots).
     *

@@ -1209,21 +1209,18 @@ private[verify] object CorpusRows {
         "WHERE cum <= (SELECT sum(n_tokens) FROM toks) // 4 " +
         "ORDER BY doc_id"),
 
-    // G9: exact median via the custom counts-map TypedImperativeAggregate
-    // (SURVEY 7.3's documented escape hatch, now closed) — must agree with
-    // DuckDB's median on both a low-cardinality column (quantity: dozens
-    // of distinct values, the buffer's sweet spot) and a high-cardinality
+    // G9: exact median via Spark's `median` (a value → count map per
+    // group) — must agree with DuckDB's median on both a low-cardinality
+    // column (quantity: dozens of distinct values) and a high-cardinality
     // one (extendedprice: ~rows/4 distinct — the stress case)
     //
-    // quantile_cont(0.5) = the interpolated median, exactly the custom
-    // aggregate's even-count mean-of-middles
+    // quantile_cont(0.5) = the interpolated median, exactly Spark's
+    // even-count lo + (hi - lo) / 2
     VerifyRow("g9_exact_median",
       (s, d) =>
         Tables.lineitem(s, d).groupBy("l_returnflag")
-          .agg(round(graft.functions.ExactMedian.exactMedian(col("l_quantity")), 4)
-              .as("med_qty"),
-            round(graft.functions.ExactMedian.exactMedian(col("l_extendedprice")), 4)
-              .as("med_price"))
+          .agg(round(median(col("l_quantity")), 4).as("med_qty"),
+            round(median(col("l_extendedprice")), 4).as("med_price"))
           .orderBy("l_returnflag"),
       "SELECT l_returnflag, " +
         "round(quantile_cont(l_quantity::DOUBLE, 0.5), 4) AS med_qty, " +

@@ -219,13 +219,10 @@ private[verify] object RelationalRows {
       "SELECT o_orderkey, o_custkey, o_totalprice FROM orders ORDER BY o_orderkey ASC NULLS LAST"),
 
     // G1+G2: hash groupBy + the 7 reference agg fns, {fn}_{col} naming.
-    // Runs under `exactMedian = true` so the oracle gate exercises the
-    // counts-map TypedImperativeAggregate on the reference's own flagship
-    // aggregate (the built-in-median form is pinned equal in AggSpec).
     VerifyRow("g2_group_agg",
       (s, d) => {
         val g = Agg.groupAgg(Tables.lineitem(s, d), Seq("l_returnflag", "l_linestatus"),
-          Seq("l_quantity" -> Agg.SupportedFns), exactMedian = true)
+          Seq("l_quantity" -> Agg.SupportedFns))
         g.select(col("l_returnflag"), col("l_linestatus"),
           col("count_l_quantity"), col("sum_l_quantity"),
           round(col("avg_l_quantity"), 4).as("avg_l_quantity"),

@@ -87,15 +87,11 @@ class AggSpec extends SparkTestBase {
     assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 10.0)
   }
 
-  test("distinctCount: exact per group; HLL sketch within rsd on larger data") {
+  test("distinctCount: exact per group") {
     val t = Seq(("a", 1), ("a", 1), ("a", 2), ("b", 9)).toDF("k", "v")
     val exact = Agg.distinctCount(t, Seq("k"), "v")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(exact == Map("a" -> 2L, "b" -> 1L))
-    val big = (1 to 20000).map(i => ("g", i % 5000)).toDF("k", "v")
-    val appr = Agg.distinctCount(big, Seq("k"), "v", exact = false, rsd = 0.02)
-      .collect()(0).getLong(1)
-    assert(math.abs(appr - 5000L) <= 5000 * 0.1, s"HLL estimate $appr too far from 5000")
   }
 
   test("rollupAgg emits subtotal rows with null keys plus a grand total") {
@@ -107,69 +103,16 @@ class AggSpec extends SparkTestBase {
       (Some("a"), None, 3.0), (Some("b"), None, 4.0), (None, None, 7.0)))
   }
 
-  test("approxMedian flag swaps in the sketch-based scale path (SURVEY 7.3)") {
-    val t = (1 to 1001).map(i => ("g", i.toDouble)).toDF("k", "v")
-    val exact = Agg.groupAgg(t, Seq("k"), Seq("v" -> Seq("median"))).collect()(0).getDouble(1)
-    val appr = Agg.groupAgg(t, Seq("k"), Seq("v" -> Seq("median")), approxMedian = true)
-      .collect()(0).getDouble(1)
-    assert(exact == 501.0 && math.abs(appr - exact) <= 5.0)
-  }
-
-  test("exactMedian (TypedImperativeAggregate) matches built-in median everywhere (SURVEY 7.3)") {
-    import graft.functions.ExactMedian.exactMedian
-    import org.apache.spark.sql.functions.{col, median}
-    // hand cases: odd group, even group (interpolated), nulls skipped,
-    // all-null group -> null
+  test("groupAgg median: nulls skipped, all-null group null, even n interpolated") {
     val hand = Seq(
       ("a", Some(1.0)), ("a", Some(3.0)), ("a", Some(2.0)),
       ("b", Some(1.0)), ("b", Some(2.0)), ("b", Some(3.0)), ("b", Some(10.0)),
       ("c", None), ("c", Some(7.0)),
       ("d", None)
     ).toDF("k", "v")
-    val got = hand.groupBy("k").agg(exactMedian(col("v")).as("em"))
-      .orderBy("k").collect()
+    val got = Agg.groupAgg(hand, Seq("k"), Seq("v" -> Seq("median"))).collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(got == Map("a" -> Some(2.0), "b" -> Some(2.5), "c" -> Some(7.0), "d" -> None))
-    // differential vs built-in median over duplicate-heavy random groups
-    // (exercises counts>1 per key, partial/merge across partitions, and
-    // the serialize/deserialize path through the shuffle)
-    val rnd = new scala.util.Random(7)
-    val big = (1 to 5000).map(_ => (rnd.nextInt(7), math.floor(rnd.nextDouble() * 50) / 2.0))
-      .toDF("k", "v").repartition(8)
-    big.groupBy("k").agg(exactMedian(col("v")).as("em"), median(col("v")).as("m"))
-      .collect().foreach { r =>
-        assert(r.getDouble(1) == r.getDouble(2),
-          s"group ${r.get(0)}: exactMedian ${r.getDouble(1)} != median ${r.getDouble(2)}")
-      }
-    // arbitrary (non-half-integer) doubles: pins the even-count formula
-    // lo + (hi-lo)/2 — the same interpolation Percentile evaluates — so the
-    // parity claim is bit-level, not just exact-at-half-integers
-    val ragged = (1 to 2000).map(_ => (rnd.nextInt(5), rnd.nextDouble() * 1e9))
-      .toDF("k", "v").repartition(8)
-    ragged.groupBy("k").agg(exactMedian(col("v")).as("em"), median(col("v")).as("m"))
-      .collect().foreach { r =>
-        assert(r.getDouble(1) == r.getDouble(2),
-          s"group ${r.get(0)}: exactMedian ${r.getDouble(1)} != median ${r.getDouble(2)}")
-      }
-  }
-
-  test("groupAgg(exactMedian = true) routes median through the counts-map aggregate (SURVEY 7.3)") {
-    val rnd = new scala.util.Random(11)
-    val t = (1 to 3000).map(_ => (rnd.nextInt(4).toString, rnd.nextDouble() * 100))
-      .toDF("k", "v").repartition(6)
-    val viaFlag = Agg.groupAgg(t, Seq("k"), Seq("v" -> Seq("count", "median", "std")),
-      exactMedian = true)
-    val builtin = Agg.groupAgg(t, Seq("k"), Seq("v" -> Seq("count", "median", "std")))
-    assert(viaFlag.columns.toSeq == builtin.columns.toSeq)
-    val a = viaFlag.orderBy("k").collect().map(_.toSeq)
-    val b = builtin.orderBy("k").collect().map(_.toSeq)
-    assert(a.toSeq == b.toSeq)
-    // the flag actually switches the aggregate (plan carries exact_median)
-    assert(viaFlag.queryExecution.optimizedPlan.toString.contains("exact_median"))
-    intercept[IllegalArgumentException] {
-      Agg.groupAgg(t, Seq("k"), Seq("v" -> Seq("median")),
-        approxMedian = true, exactMedian = true)
-    }
   }
 
   test("agg state: merge of disjoint batches == full recompute, any merge order (X10)") {

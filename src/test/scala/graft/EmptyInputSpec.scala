@@ -54,8 +54,7 @@ class EmptyInputSpec extends SparkTestBase {
     val ei = Dedup.EmbeddingIndex("vec_id", "embedding", dim = 4)
     assert(ei.probe(vb, ei.rows(noVecs7), 0.9).count() == 1)
     // exact median over an empty / all-null input yields a null (SQL agg)
-    val med = Seq.empty[Double].toDF("v")
-      .agg(graft.functions.ExactMedian.exactMedian(col("v"))).head
+    val med = Seq.empty[Double].toDF("v").agg(median(col("v"))).head
     assert(med.isNullAt(0))
   }
 

@@ -101,12 +101,31 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("codegen id"), s"expected codegen span in:\n$p")
   }
 
-  test("top-k ranks via partial aggregation, not a window over all scored pairs (SIM)") {
+  test("top-k plans a Partial WindowGroupLimit below its exchange (SIM)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    // the map-side cut: each partition ships at most k rows per query, so
+    // the exchange never carries every scored pair. Spark infers the limit
+    // only for k up to spark.sql.optimizer.windowGroupLimitThreshold (1000)
     val emb = Tables.embeddings(spark, sf)
-    val p = plan(Similarity.bruteForceTopK(emb, emb.limit(5), "vec_id", "embedding", 5))
-    assert(!p.contains("Window"), s"bounded-heap top-k must not plan a window:\n$p")
-    assert(p.contains("ObjectHashAggregate") || p.contains("SortAggregate") ||
-      p.contains("HashAggregate"), s"expected aggregate-based ranking in:\n$p")
+    val ivf = Similarity.IvfIndex("vec_id", "embedding", dim = 64, k = 4)
+    val k = 5
+    Seq(
+      "bruteForceTopK" -> Similarity.bruteForceTopK(emb, emb.limit(5), "vec_id", "embedding", k),
+      "IvfIndex.probe" -> ivf.probe(emb.limit(5), ivf.rows(emb), topK = k, probes = 2)
+    ).foreach { case (name, df) =>
+      val physical = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+      val cut = physical.collect { case e: ShuffleExchangeExec => e }.exists(_.child.exists {
+        case w: WindowGroupLimitExec => w.mode == Partial && w.limit == k
+        case _ => false
+      })
+      assert(cut, s"$name: expected a Partial WindowGroupLimit($k) below an exchange in:\n" +
+        physical.treeString)
+    }
   }
 
   test("label centroids aggregate before exploding to long format (V1)") {

@@ -41,16 +41,19 @@ class VerifyRowsSpec extends AnyFunSuite {
   * Dedup's ingest indexes keep one lifecycle, `graft.sources.ShardedIndex`;
   * each near-dup family keeps one candidate → verify body; each
   * event-window operator is one def for batch and streaming frames, with
-  * no `*Streaming` twin and no session-timeout switch; and the modules
+  * no `*Streaming` twin and no session-timeout switch; `Agg` has one
+  * median, Spark's, with no switch to another; and the modules
   * deleted as outside the north star (media codecs, term statistics,
   * frequency sketches, extra file formats, chunking, JSON lifting, the
-  * hot-head scale fixture) stay deleted.
+  * hot-head scale fixture) and the hand-written median and top-k
+  * aggregates that Spark's `median` and window limit replace stay
+  * deleted.
   */
 class OperatorApiSpec extends AnyFunSuite {
 
   private val switches = Set("unbounded", "sliced", "dupFracGate", "expand", "admissionDenom",
     "release", "releaseSets", "guardPairs", "quickPriceMinDocs", "labelPartitions",
-    "withTimeout", "timeoutMs")
+    "withTimeout", "timeoutMs", "approxMedian", "exactMedian")
   private val deletedNames = Set("minhashNearDupsAuto", "minhashNearDupsCollapsed",
     "fuzzyNearDupsAuto", "embedNearDupAuto", "embeddingIncrementalAuto",
     "asofJoinStreamingSliced", "exactIncrementalFromIndex", "ngramJaccardPairsSparseAuto",
@@ -65,7 +68,8 @@ class OperatorApiSpec extends AnyFunSuite {
   private val files = Seq("src/main/scala/graft/operators/Dedup.scala",
     "src/main/scala/graft/streaming/StreamOps.scala",
     "src/main/scala/graft/operators/Sampling.scala",
-    "src/main/scala/graft/operators/Similarity.scala")
+    "src/main/scala/graft/operators/Similarity.scala",
+    "src/main/scala/graft/operators/Agg.scala")
 
   // a def line with its modifiers; the parameter lists follow the name
   private val defLine =
@@ -146,7 +150,8 @@ class OperatorApiSpec extends AnyFunSuite {
   test("no library or benchmark source mentions a deleted module or SQL function") {
     val deleted = Seq("Multimodal", "TermStats", "FreqItems", "FreqSketch", "ColumnarSource",
       "Chunking", "SemiStructured", "graft_freq_", "maintainHeavyHitterState",
-      "generateDocumentsHot")
+      "generateDocumentsHot", "ExactMedian", "functions.TopK", "object TopK",
+      "bruteForceTopKWindow")
     val roots = Seq(Paths.get("src/main/scala"), Paths.get("perfbench/src"))
     roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
     val offending = for {

@@ -19,17 +19,7 @@ class SimilaritySpec extends SparkTestBase {
     assert(out == Seq(1L, 3L, 2L), "cosine ties broken by ascending neighbor id")
   }
 
-  test("bounded-heap top-k aggregate equals the window/row_number formulation") {
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val q = emb.filter(col("vec_id") < 20)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "neighbor_id", "cosine", "rank")
-        .collect().map(_.mkString("|")).toSeq.sorted
-    assert(canon(Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 7)) ==
-      canon(Similarity.bruteForceTopKWindow(emb, q, "vec_id", "embedding", 7)))
-  }
-
-  test("non-integral id types fall back to the window path with identical semantics") {
+  test("bruteForceTopK: string ids rank by score desc, ties by ascending id") {
     val vecs = Seq(
       ("q", Array(1.0f, 0.0f)), ("a", Array(0.9f, 0.1f)),
       ("b", Array(0.0f, 1.0f)), ("c", Array(0.9f, 0.1f))
