@@ -87,7 +87,7 @@ object Session {
 
   /** The one session factory: a minimal `local[cores]` builder (the
     * settings that only take effect at construction), then [[tune]] for
-    * graft's runtime confs, optimizer rules and `graft_*` SQL functions.
+    * graft's runtime confs, optimizer rule and `graft_*` SQL functions.
     *
     * Two construction-time settings [[tune]] cannot apply to a running
     * session:
@@ -146,12 +146,12 @@ object Session {
   /** Apply graft's runtime-settable defaults to a session: [[get]]'s own,
     * or one built outside graft (the library's adaptation point — see
     * `Tables.events`). Static confs are skipped by Spark automatically when
-    * already fixed. Also registers graft's optimizer rules and the `graft_*`
-    * SQL functions (idempotent — re-registration overwrites in place), so
-    * a tuned session plans the same shapes and has the same SQL surface as
-    * [[get]]. (`spark.sql.extensions=graft.plans.GraftExtensions` installs
-    * the rules and functions, not the confs; on a session built with them,
-    * tune adds only what they leave out, so no rule runs twice.) Also sets
+    * already fixed. Also registers graft's optimizer rule
+    * ([[graft.plans.CseFilterProject]], once) and the `graft_*` SQL
+    * functions (re-registration overwrites in place), so a tuned session
+    * plans the same shapes and has the same SQL surface as [[get]].
+    * (`spark.sql.extensions=graft.plans.GraftExtensions` installs the rule
+    * and functions, not the confs.) Also sets
     * the streaming confs ([[NoArtifactIsolation]], [[CheckpointManager]]);
     * they apply to the streaming queries started after this call. Two
     * things only a session's builder can set stay out of reach here: the
@@ -214,22 +214,10 @@ object Session {
       try spark.conf.set("spark.sql.optimizer.excludedRules",
         (merged :+ inferRule).mkString(","))
       catch { case _: org.apache.spark.sql.AnalysisException => () }
-    // the graft optimizer rules travel with tuning too: a session built
-    // outside graft must plan the same shapes as Session.get. A session
-    // built with GraftExtensions (its physical rule is the sign) already
-    // runs ArgmaxRewrite in the operator-optimization batches and has the
-    // functions; a second copy would run the rule in one more batch on
-    // every query.
-    val extended = spark.sessionState.columnarRules
-      .contains(graft.plans.BindFilterLiterals.columnar)
-    val rules = if (extended) Seq(graft.plans.CseFilterProject)
-      else Seq(graft.plans.ArgmaxRewrite, graft.plans.CseFilterProject)
-    rules.foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
-    }
-    if (!extended) graft.plans.GraftExtensions.registerFunctions(spark)
+    // the graft optimizer rule and functions travel with tuning too: a
+    // session built outside graft must plan the same shapes as Session.get
+    graft.plans.GraftExtensions.addOptimizerRule(spark)
+    graft.plans.GraftExtensions.registerFunctions(spark)
     spark
   }
 }

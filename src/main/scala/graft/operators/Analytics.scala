@@ -14,29 +14,23 @@ object Analytics {
     * (`/root/reference/app.py:711-729`).
     *
     * `tiebreak` columns make the winner deterministic when `orderCol` ties.
-    * Implementation is `max_by(struct(all columns), struct(order, tiebreak))`
-    * — a regular aggregate with map-side partial combine: ONE shuffle of
-    * one buffered row per (partition × group), strictly cheaper at scale
-    * than the window/row_number formulation (full shuffle of every row +
-    * per-group sort). SURVEY §4.3's suggested rewrite, applied directly.
+    * The ordering is `orderCol` then `tiebreak`, each descending with nulls
+    * last: a null order key loses to any value, and a group whose keys are
+    * all null still yields one of its rows. This is [[topNPerGroup]] with
+    * n = 1, so Spark cuts each partition to one row per group before the
+    * exchange (a Partial `WindowGroupLimit`; PlanSpec pins it). An argmax
+    * aggregate over a struct of every column ships the same one row per
+    * (partition × group), but its struct buffer cannot hash-aggregate, so
+    * it plans a `SortAggregate` on both sides of the exchange and measured
+    * slower.
     */
   def latestPerGroup(df: DataFrame, key: String, orderCol: String,
                      tiebreak: Seq[String] = Nil): DataFrame = {
-    val payload = struct(df.columns.toIndexedSeq.map(col): _*)
-    val ord = struct((orderCol +: tiebreak).map(col): _*)
-    val picked = df.groupBy(col(key))
-      .agg(max_by(payload, ord).as("_row"))
-    picked.select(df.columns.toIndexedSeq.map(c => col(s"_row.$c").as(c)): _*)
-  }
-
-  /** A8 (window form) — kept for ordering-sensitive callers; shuffles every
-    * row. Prefer [[latestPerGroup]] at scale.
-    */
-  def latestPerGroupWindow(df: DataFrame, key: String, orderCol: String,
-                           tiebreak: Seq[String] = Nil): DataFrame = {
-    val w = Window.partitionBy(col(key))
-      .orderBy((col(orderCol).desc +: tiebreak.map(col(_).desc)): _*)
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+    // the body's own `rank` column would overwrite an input column of that name
+    require(!df.columns.exists(_.equalsIgnoreCase("rank")),
+      "latestPerGroup: the input has a column named rank")
+    topNPerGroup(df, Seq(key), col(orderCol).desc +: tiebreak.map(col(_).desc), 1)
+      .drop("rank")
   }
 
   /** Top-N rows per group (the A8 argmax generalized from 1 to n): rank by

@@ -1210,9 +1210,13 @@ object Dedup {
     *
     * Scale shape: [[connectedComponents]] labels only ids that appear in
     * `pairs` (untouched rows never enter the label relation); the winner
-    * per component is ONE `max_by(id, (score, −id))` partial-agged
-    * aggregate over the labeled rows — the A8 argmax shape, no window —
-    * and survivors emerge from a single left_anti hash join. Everything
+    * per component is [[Analytics.topNPerGroup]] with n = 1 over the
+    * labeled rows, ordered by score descending with nulls last, then id
+    * ascending — the A8 argmax body, which Spark cuts to one row per
+    * component per partition before its exchange — and survivors emerge
+    * from a single left_anti hash join. A null score loses to any score,
+    * and an all-null cluster keeps its smallest id, so every cluster
+    * elects exactly one winner, as [[keepCanonical]] does. Everything
     * after the caller-supplied pair generation runs at matched-rows
     * scale, not corpus scale.
     */
@@ -1221,24 +1225,9 @@ object Dedup {
     val labels = connectedComponents(pairs)
     val scored = labels
       .join(df.select(col(idCol).as("id"), col(scoreCol).as("_s")), "id")
-    // argmax with mixed ordering (score DESC, id ASC): a single
-    // max_by struct cannot invert just the id leg for arbitrary id types,
-    // so: max(score) per component, equi-join back, min(id) among the
-    // max-scored — two narrow partial-agged aggregates, no window.
-    // The join-back is NULL-SAFE (<=>): max() ignores nulls, so an
-    // all-null-score cluster yields max = null, and a plain equi-join
-    // would elect NO winner — the whole cluster silently survived
-    // undeduplicated. With <=>, an all-null cluster still resolves to its
-    // min id (null <=> null matches every member), while a partially-null
-    // cluster keeps null-scored members out of contention (null <=> value
-    // is false) — every cluster elects exactly one winner, as
-    // keepCanonical does.
-    val best = scored.groupBy(col("component")).agg(max(col("_s")).as("_bs"))
-      .withColumnRenamed("component", "_bc") // disambiguate the self-join
-    val winners = scored.join(best,
-        col("component") === col("_bc") && col("_s") <=> col("_bs"))
-      .select(col("component"), col("id"))
-      .groupBy(col("component")).agg(min(col("id")).as("_win"))
+    val winners = Analytics.topNPerGroup(scored, Seq("component"),
+        Seq(col("_s").desc_nulls_last, col("id").asc), 1)
+      .select(col("component"), col("id").as("_win"))
     val losers = labels.join(winners, "component")
       .filter(col("id") =!= col("_win")).select("id")
     df.join(losers, df(idCol) === losers("id"), "left_anti")

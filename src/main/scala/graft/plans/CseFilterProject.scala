@@ -48,7 +48,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Registered ONLY via `experimental.extraOptimizations` (the final "User
   * Provided Optimizers" batch) — by Session.get/tune directly, and by
-  * [[GraftExtensions]] through its builder side effect. It must NOT run
+  * [[GraftExtensions]] through its check-rule builder. It must NOT run
   * inside the operator fixed-point batch: PushDownPredicates re-pushes the
   * filter through the inserted lower Project (re-inlining the kernel) and
   * CollapseProject re-merges the split, undoing the rewrite every

@@ -438,7 +438,7 @@ private[verify] object RelationalRows {
       (s, d) => Agg.minMax(Tables.orders(s, d), "o_orderdate"),
       "SELECT min(o_orderdate) AS min_o_orderdate, max(o_orderdate) AS max_o_orderdate FROM orders"),
 
-    // A8: argmax-per-group via max_by (single partial-aggregated shuffle)
+    // A8: argmax-per-group, the top-1 window Spark cuts map-side
     VerifyRow("a8_argmax",
       (s, d) =>
         Analytics.latestPerGroup(Tables.orders(s, d), "o_custkey", "o_orderdate",

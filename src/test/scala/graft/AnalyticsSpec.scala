@@ -9,25 +9,22 @@ class AnalyticsSpec extends SparkTestBase {
 
   test("latestPerGroup keeps the argmax row; tiebreak makes it deterministic (app.py:711-729)") {
     val t = Seq(
-      (1, "2020-01-01", 100, "a"),
-      (1, "2020-03-01", 300, "b"),
-      (1, "2020-03-01", 200, "c"),  // date tie -> higher id wins
-      (2, "2020-02-01", 50, "d")
+      (1, Some("2020-01-01"), 100, "a"),
+      (1, Some("2020-03-01"), 300, "b"),
+      (1, Some("2020-03-01"), 200, "c"),  // date tie -> higher id wins
+      (1, None, 900, "n"),                // a null date loses to any date
+      (2, Some("2020-02-01"), 50, "d"),
+      (3, None, 7, "e"),                  // all-null group: still one row,
+      (3, None, 8, "f")                   // the tiebreak picks it
     ).toDF("g", "date", "id", "payload")
     val out = Analytics.latestPerGroup(t, "g", "date", Seq("id"))
       .orderBy("g").collect()
-    assert(out(0).getString(3) == "b", "tie on date broken by max id")
-    assert(out(1).getString(3) == "d")
-  }
-
-  test("latestPerGroup (max_by) equals the window/row_number formulation") {
-    val t = Tables.nation(spark, "/root/testdata/sf0.001")
-      .withColumn("g", pmod(col("n_nationkey"), lit(5)))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.mkString("|")).toSeq.sorted
-    assert(
-      canon(Analytics.latestPerGroup(t, "g", "n_name", Seq("n_nationkey"))) ==
-        canon(Analytics.latestPerGroupWindow(t, "g", "n_name", Seq("n_nationkey"))))
+    assert(out.map(_.getString(3)).toSeq == Seq("b", "d", "f"),
+      "one row per group: ties broken by max id, null dates last")
+    assert(out(0).toSeq == Seq(1, "2020-03-01", 300, "b"), "every input column, in order")
+    // the body's rank column would silently replace an input column of that name
+    intercept[IllegalArgumentException](
+      Analytics.latestPerGroup(t.withColumnRenamed("payload", "rank"), "g", "date"))
   }
 
   test("pivotMax keeps MAX on key conflicts (app.py:1132)") {

@@ -27,6 +27,7 @@ class EmptyInputSpec extends SparkTestBase {
       "profile of an empty table reads (0 nulls, 0 distinct), not null")
     assert(Analytics.topNPerGroup(emptyNums.withColumn("k", lit(1)), Seq("k"),
       Seq(col("v").desc), 2).count() == 0)
+    assert(Analytics.latestPerGroup(emptyNums.withColumn("k", lit(1)), "k", "v").count() == 0)
   }
 
   test("round-6 additions: empty inputs degrade to empty/zero, never throw") {

@@ -73,14 +73,39 @@ class PlanSpec extends SparkTestBase {
       s"rank<=n over a window must map-side prune via WindowGroupLimit:\n$p")
   }
 
-  test("latestPerGroup aggregates with a map-side partial phase (A8)") {
-    val p = plan(Analytics.latestPerGroup(Tables.orders(spark, sf),
-      "o_custkey", "o_orderdate", Seq("o_orderkey")))
-    // partial + final aggregate phases around one exchange (max_by over a
-    // struct buffer plans as SortAggregate)
-    val aggs = "(?i)(hash|sort)aggregate".r.findAllIn(p).length
-    assert(aggs >= 2, s"expected partial+final aggregate phases in:\n$p")
-    assert(!p.contains("Window"), s"max_by formulation must not plan a window:\n$p")
+  test("argmax plans a Partial WindowGroupLimit below its exchange (A8)") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+    // latestPerGroup and a user's row_number() = 1 (the dashboard's
+    // sql_argmax query) plan the same top-1 window: each partition ships
+    // one row per group, and no struct-buffer SortAggregate appears
+    val orders = Tables.orders(spark, sf)
+    orders.createOrReplaceTempView("planspec_orders")
+    Seq(
+      "latestPerGroup" -> Analytics.latestPerGroup(orders, "o_custkey", "o_orderdate",
+        Seq("o_orderkey")),
+      "sql_argmax" -> spark.sql(
+        """SELECT o_custkey, o_orderkey, o_totalprice FROM (
+          |  SELECT o_custkey, o_orderkey, o_totalprice, row_number() OVER (
+          |    PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey DESC) AS rn
+          |  FROM planspec_orders WHERE o_orderdate BETWEEN '1995-01-01' AND '1995-12-31')
+          |WHERE rn = 1""".stripMargin)
+    ).foreach { case (name, df) =>
+      val physical = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+      val cut = physical.collect { case e: ShuffleExchangeExec => e }.exists(_.child.exists {
+        case w: WindowGroupLimitExec => w.mode == Partial && w.limit == 1
+        case _ => false
+      })
+      assert(cut, s"$name: expected a Partial WindowGroupLimit(1) below an exchange in:\n" +
+        physical.treeString)
+      assert(!physical.exists(_.isInstanceOf[SortAggregateExec]),
+        s"$name: no SortAggregate in:\n${physical.treeString}")
+    }
   }
 
   test("grouped aggregation partial-aggregates before the exchange (G2)") {

@@ -1,123 +1,12 @@
 package graft
 
-import graft.operators.Analytics
-import graft.plans.ArgmaxRewrite
 import org.apache.spark.sql.DataFrame
 
-/** ArgmaxRewrite optimizer rule: plan shape + semantic preservation. */
+/** CseFilterProject optimizer rule: plan shape + semantic preservation. */
 class PlansSpec extends SparkTestBase {
 
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).toSeq.sorted
-
-  private def withRule[T](body: => T): T = {
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = Seq(ArgmaxRewrite)
-    try body
-    finally spark.experimental.extraOptimizations = prev // restore, don't wipe:
-    // the shared session registers graft's rules at creation and later
-    // suites rely on them (a `= Nil` reset silently de-registered
-    // CseFilterProject for every suite ordered after this one)
-  }
-
-  test("rewrites window-argmax (rn=1, all-desc) to max_by; results unchanged") {
-    val orders = Tables.orders(spark, "/root/testdata/sf0.001")
-    val expected = canon(Analytics.latestPerGroupWindow(orders,
-      "o_custkey", "o_orderdate", Seq("o_orderkey")))
-    withRule {
-      val win = Analytics.latestPerGroupWindow(orders,
-        "o_custkey", "o_orderdate", Seq("o_orderkey"))
-      val opt = win.queryExecution.optimizedPlan.toString
-      assert(!opt.contains("Window [") && !opt.contains("WindowGroupLimit"),
-        s"window must be rewritten away:\n$opt")
-      assert(opt.contains("max_by"), s"expected max_by aggregate:\n$opt")
-      assert(canon(win) == expected, "rewrite must not change results")
-    }
-  }
-
-  test("null order keys: rewrite matches the window form; nulls-first windows are left alone") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // group a: mixed null/non-null order keys; group b: ALL-null order keys
-    val t = Seq(("a", Some(3), 1), ("a", None, 2), ("a", Some(7), 3),
-      ("b", None, 4), ("b", None, 5)).toDF("k", "o", "id")
-    def argmax = t.withColumn("rn", row_number().over(
-      Window.partitionBy("k").orderBy(col("o").desc, col("id").desc)))
-      .filter(col("rn") === 1).drop("rn")
-    val expected = argmax.collect().map(_.toString).sorted.toSeq
-    withRule {
-      val a = argmax
-      assert(!a.queryExecution.optimizedPlan.toString.contains("Window ["),
-        "desc (nulls-last default) must rewrite")
-      assert(a.collect().map(_.toString).sorted.toSeq == expected,
-        "null-flag ordering must reproduce nulls-last; all-null group keeps a real row")
-      val nf = t.withColumn("rn", row_number().over(
-        Window.partitionBy("k").orderBy(col("o").desc_nulls_first)))
-        .filter(col("rn") === 1)
-      assert(nf.queryExecution.optimizedPlan.toString.contains("Window ["),
-        "nulls-first ordering is not expressible as max_by; window must remain")
-    }
-  }
-
-  test("does not fire on rank<=k windows or mixed sort directions") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val orders = Tables.orders(spark, "/root/testdata/sf0.001")
-    withRule {
-      val topk = orders.withColumn("rn", row_number().over(
-        Window.partitionBy("o_custkey").orderBy(col("o_orderdate").desc)))
-        .filter(col("rn") <= 3)
-      assert(topk.queryExecution.optimizedPlan.toString.contains("Window ["),
-        "rn <= 3 is not argmax; window must remain")
-      val mixed = orders.withColumn("rn", row_number().over(
-        Window.partitionBy("o_custkey")
-          .orderBy(col("o_orderdate").desc, col("o_orderkey").asc)))
-        .filter(col("rn") === 1)
-      assert(mixed.queryExecution.optimizedPlan.toString.contains("Window ["),
-        "mixed asc/desc ordering is not expressible as max_by; window must remain")
-    }
-  }
-
-  test("global (no PARTITION BY) window is left alone — empty input must stay empty") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val empty = Seq.empty[(Int, Int)].toDF("o", "id")
-    withRule {
-      val globalArgmax = empty.withColumn("rn", row_number().over(
-        Window.orderBy(col("o").desc)))
-        .filter(col("rn") === 1)
-      // a grouping-less max_by over empty input would fabricate one all-null
-      // row; the rule must not fire on an empty partition spec
-      assert(globalArgmax.count() == 0,
-        "global window argmax over empty input must yield 0 rows")
-    }
-  }
-
-  test("ascending order rewrites to min_by (argmin)") {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val orders = Tables.orders(spark, "/root/testdata/sf0.001")
-    // queryExecution is cached per DataFrame — build a fresh frame inside
-    // withRule or the pre-rule plan is reused
-    // asc must be NULLS LAST for the rewrite to fire (asc default is
-    // nulls-first, which min_by cannot reproduce)
-    def earliest = orders.withColumn("rn", row_number().over(
-      Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate").asc_nulls_last, col("o_orderkey").asc_nulls_last)))
-      .filter(col("rn") === 1).drop("rn")
-    val expected = canon(earliest)
-    withRule {
-      val e = earliest
-      val opt = e.queryExecution.optimizedPlan.toString
-      assert(!opt.contains("Window [") && opt.contains("min_by"),
-        s"expected min_by rewrite:\n$opt")
-      assert(canon(e) == expected)
-    }
-  }
-
-  // ------------------------------------------------------- CseFilterProject
 
   private def kernelCount(df: DataFrame,
                           core: org.apache.spark.sql.catalyst.expressions.Expression => Boolean): Int =

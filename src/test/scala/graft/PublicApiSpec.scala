@@ -151,7 +151,7 @@ class OperatorApiSpec extends AnyFunSuite {
     val deleted = Seq("Multimodal", "TermStats", "FreqItems", "FreqSketch", "ColumnarSource",
       "Chunking", "SemiStructured", "graft_freq_", "maintainHeavyHitterState",
       "generateDocumentsHot", "ExactMedian", "functions.TopK", "object TopK",
-      "bruteForceTopKWindow")
+      "bruteForceTopKWindow", "ArgmaxRewrite", "latestPerGroupWindow")
     val roots = Seq(Paths.get("src/main/scala"), Paths.get("perfbench/src"))
     roots.foreach(r => assert(Files.isDirectory(r), s"run from the repo root: ${r.toAbsolutePath}"))
     val offending = for {

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionSpec extends SparkTestBase {
 
   private val inferRule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-  private val rules = Seq(graft.plans.ArgmaxRewrite, graft.plans.CseFilterProject)
+  private val rules = Seq(graft.plans.CseFilterProject)
 
   test("tune gives a plain session every graft conf, optimizer rule and graft_* function") {
     outsideGraft() { plain =>
@@ -107,17 +107,11 @@ class SessionSpec extends SparkTestBase {
   }
 
   test("tune adds no second copy of a rule GraftExtensions installed") {
-    import graft.plans.{ArgmaxRewrite, CseFilterProject, GraftExtensions}
-    // an injected operator rule sits in both of Spark's operator-optimization
-    // batches (before and after filter inference)
-    val installed = outsideGraft(Some(new GraftExtensions))(batchesHolding(_, ArgmaxRewrite))
-    assert(installed > 0)
+    import graft.plans.{CseFilterProject, GraftExtensions}
     Session.tune(spark)
-    assert(batchesHolding(spark, ArgmaxRewrite) == installed, "get")
     assert(batchesHolding(spark, CseFilterProject) == 1, "get")
     outsideGraft(Some(new GraftExtensions)) { ext =>
       Session.tune(ext)
-      assert(batchesHolding(ext, ArgmaxRewrite) == installed, "extensions + tune")
       assert(batchesHolding(ext, CseFilterProject) == 1, "extensions + tune")
       assert(GraftExtensions.functions.forall(f => ext.sessionState.functionRegistry.functionExists(f._1)))
     }
